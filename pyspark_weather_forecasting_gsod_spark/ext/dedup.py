@@ -5,10 +5,11 @@ design:
 
   * exact dedup — hash-aggregate on a fingerprint column; one shuffle keyed
     by the fingerprint, no driver data.
-  * n-gram Jaccard — EXACT pairwise similarity, but candidate pairs come from
-    an inverted shingle index (docs sharing ≥1 shingle), never a cross join.
-    Cost is Σ_bucket |bucket|², so it is for capped/small corpora or as the
-    verification stage after LSH banding.
+  * n-gram set similarity (Jaccard, containment) — EXACT pairwise scores
+    from one core of three kernels (inverted shingle index, rarest-first
+    prefix filter, dense block BLAS) plus an auto router; never a cross
+    join. The inverted index costs Σ_posting |posting|², so it is for
+    capped/small corpora or as the verification stage after LSH banding.
   * MinHash+LSH — the 100 TB path: shingle → minhash signature (permutation
     hashes of xxhash64 values) → band buckets → candidate join inside
     buckets only → exact Jaccard verification of candidates. Fully
@@ -18,6 +19,9 @@ design:
 """
 
 from __future__ import annotations
+
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -69,13 +73,6 @@ def widen_for_fanout(df: DataFrame, target: int | None = None) -> DataFrame:
     if 0 < n_files < target:
         return df.repartition(target)
     return df
-
-
-def exact_dedup(df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Drop exact duplicates by ``keys`` (default: all columns). Spark plans
-    this as a hash aggregate keyed on ``keys`` — one shuffle, fully
-    distributed."""
-    return df.dropDuplicates(keys) if keys else df.dropDuplicates()
 
 
 def exact_dedup_by_fingerprint(
@@ -182,6 +179,475 @@ def _is_bounded(df: DataFrame, max_rows: int = 1_000_000) -> bool:
     return res
 
 
+# ---------------------------------------------------------------------------
+# Exact n-gram set similarity: one core, two measures.
+#
+# Three kernels, each written once, read checkpointed ``shingle_arrays``
+# frames: the inverted index (``_index_pairs``, the reference the others are
+# tested against), the rarest-first prefix filter (``_prefix_pairs``) and
+# the dense block BLAS (``_dense_pair_blocks``). A ``_Measure`` row holds all
+# a measure changes: its score, its output columns and orientation, and its
+# prefix candidate rule. ``ngram_{jaccard,containment}_pairs{,_prefix,
+# _dense,_auto}`` and ``exact_cross_jaccard`` are thin calls into the core.
+# ---------------------------------------------------------------------------
+
+
+def _prefix_x_prefix(
+    prefix: DataFrame, postings: DataFrame, id_col: str, t: float
+) -> DataFrame:
+    """Jaccard candidate rule: J(A,B) ≥ t makes both prefixes share a
+    shingle, and forces ``t·|A| ≤ |B| ≤ |A|/t`` (the AllPairs length
+    filter, which drops cross-length candidates before the verify join).
+    The -1e-9 cushion keeps borderline pairs for the exact verify; it
+    never drops one."""
+    pa = prefix.select(
+        F.col(id_col).alias("doc_a"), "shingle", F.col("__sz").alias("__sza")
+    )
+    pb = prefix.select(
+        F.col(id_col).alias("doc_b"), "shingle", F.col("__sz").alias("__szb")
+    )
+    return (
+        pa.join(pb, "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .filter(
+            (F.col("__szb").cast("double") >= F.col("__sza") * t - 1e-9)
+            & (F.col("__sza").cast("double") >= F.col("__szb") * t - 1e-9)
+        )
+    )
+
+
+def _prefix_x_full(
+    prefix: DataFrame, postings: DataFrame, id_col: str, t: float
+) -> DataFrame:
+    """Containment candidate rule: ``|A∩B| / min(|A|,|B|) ≥ t`` is only
+    sure to show in the SMALLER set's prefix, so prefixes probe the full
+    postings, not the other prefixes. Still bounded: a hot shingle almost
+    never sits in a prefix, so its posting list is never enumerated
+    quadratically."""
+    pa = prefix.select(F.col(id_col).alias("__p"), "shingle")
+    pb = postings.select(F.col(id_col).alias("__q"), "shingle")
+    return (
+        pa.join(pb, "shingle")
+        .filter(F.col("__p") != F.col("__q"))
+        .select(
+            F.least("__p", "__q").alias("doc_a"),
+            F.greatest("__p", "__q").alias("doc_b"),
+        )
+    )
+
+
+class _Measure(NamedTuple):
+    """One exact set-similarity measure, as every pair kernel reads it.
+    ``score`` and ``orient`` run on Spark Columns and on numpy arrays alike
+    (``least``/``where`` name the backend's elementwise min and select)."""
+
+    name: str  # score column; the entry points are ngram_{name}_pairs*
+    cols: tuple[str, str]  # output id columns
+    score: Callable  # (common, |a|, |b|, least) -> score
+    orient: Callable  # (a, b, |a|, |b|, where) -> output ids, given a < b
+    candidates: Callable  # prefix rule -> (doc_a, doc_b), doc_a < doc_b
+
+
+_JACCARD = _Measure(
+    name="jaccard",
+    cols=("doc_a", "doc_b"),
+    score=lambda c, sa, sb, least: c / (sa + sb - c),
+    orient=lambda a, b, sa, sb, where: (a, b),
+    candidates=_prefix_x_prefix,
+)
+# Broder's containment: a doc wholly quoted inside a larger one scores 1.0
+# where its Jaccard is ≈ |A|/|B|. The smaller set is the contained side
+# (a < b, so equal sizes go to the lower id); big-in-small is bounded above
+# by small-in-big, so only the latter is reported.
+_CONTAINMENT = _Measure(
+    name="containment",
+    cols=("doc_small", "doc_big"),
+    score=lambda c, sa, sb, least: c / least(sa, sb),
+    orient=lambda a, b, sa, sb, where: (
+        where(sa <= sb, a, b),
+        where(sa <= sb, b, a),
+    ),
+    candidates=_prefix_x_full,
+)
+
+
+def _when(cond, x, y):
+    return F.when(cond, x).otherwise(y)
+
+
+def _scored(pairs: DataFrame, m: _Measure, t: float, sz_a, sz_b) -> DataFrame:
+    """Score (doc_a, doc_b, common) pairs, keep those at or above ``t`` and
+    project them onto the measure's output columns."""
+    lo, hi = m.orient(F.col("doc_a"), F.col("doc_b"), sz_a, sz_b, _when)
+    return (
+        pairs.withColumn(m.name, m.score(F.col("common"), sz_a, sz_b, F.least))
+        .filter(F.col(m.name) >= t)
+        .select(lo.alias(m.cols[0]), hi.alias(m.cols[1]), "common", m.name)
+    )
+
+
+def _prepared(
+    df: DataFrame, id_col: str, text_col: str, n: int, arrs: DataFrame | None = None
+) -> DataFrame:
+    """The shingle arrays a kernel reads: ``arrs`` when the caller hands
+    over an eager ``shingle_arrays(df, id_col, text_col, n)`` checkpoint,
+    else one shingle pass materialized here. A checkpoint, not a persist:
+    the kernels return frames that stay lazy over it, so no unpersist could
+    pair with a persist inside the function."""
+    if arrs is not None:
+        return arrs
+    return shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=True)
+
+
+def _index_pairs(
+    left: DataFrame, right: DataFrame, id_col: str, m: _Measure, t: float
+) -> DataFrame:
+    """Inverted-index kernel: every (left, right) pair sharing ≥1 shingle
+    is counted by one equi-join on the shingle key, then scored. Cost is
+    Σ|posting|², not output-proportional. ``right is left`` is the
+    self-join, which keeps doc_a < doc_b; otherwise doc_a is the left id
+    and doc_b the right one."""
+
+    def postings(arrs: DataFrame, name: str) -> DataFrame:
+        return arrs.select(
+            F.col(id_col).alias(name), F.explode("shingles").alias("shingle")
+        )
+
+    def sizes(arrs: DataFrame) -> DataFrame:
+        return arrs.select(
+            F.col(id_col), F.size("shingles").cast("long").alias("sz")
+        )
+
+    common = postings(left, "doc_a").join(postings(right, "doc_b"), on="shingle")
+    if right is left:
+        common = common.filter(F.col("doc_a") < F.col("doc_b"))
+    common = common.groupBy("doc_a", "doc_b").agg(
+        F.count(F.lit(1)).alias("common")
+    )
+    ls = sizes(left)
+    rs = ls if right is left else sizes(right)
+    za = ls.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
+    zb = rs.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
+    # probe-gated broadcast (see _maybe_broadcast); the self-join's two
+    # views share one size table, so one memoized probe covers both
+    if _is_bounded(ls) and _is_bounded(rs):
+        za, zb = F.broadcast(za), F.broadcast(zb)
+    return _scored(
+        common.join(za, on="doc_a").join(zb, on="doc_b"),
+        m, t, F.col("sz_a"), F.col("sz_b"),
+    )
+
+
+def _prefix_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    m: _Measure,
+    t: float,
+    arrs: DataFrame | None = None,
+) -> DataFrame:
+    """Rarest-first prefix kernel (AllPairs/PPJoin, Bayardo et al.,
+    WWW'07): the inverted index's output at a fraction of its cost when
+    shingles have hot posting lists.
+
+    Under any global total order on shingles, a pair scoring ≥ t must
+    share an element among the first ``|S| - ceil(t·|S|) + 1`` shingles
+    (the "prefix") of the set(s) the measure's candidate rule names.
+    Ordering by ASCENDING global frequency puts the rare shingles in the
+    prefixes, so the candidate join never touches hot posting lists (the
+    Σ|posting|² blowup, measured 10× on 2-gram shingles at sf0.1).
+    Candidates are verified exactly with one JVM ``array_intersect`` per
+    pair. Plan: one frequency aggregate, one window rank per doc, one
+    candidate equi-join, one verify join carrying arrays for candidates
+    only; nothing quadratic in the corpus."""
+    t = float(t)
+    if not 0.0 < t <= 1.0:
+        raise ValueError(f"prefix filtering requires 0 < min_{m.name} <= 1")
+    arrs = _prepared(df, id_col, text_col, n, arrs)
+    sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
+    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
+    wrk = Window.partitionBy(id_col).orderBy("__df", "shingle")
+    wsz = Window.partitionBy(id_col)
+    ranked = (
+        sh.join(freq, "shingle")
+        .withColumn("__rk", F.row_number().over(wrk))
+        .withColumn("__sz", F.count(F.lit(1)).over(wsz))
+    )
+    # the -1e-9 guards ceil against float error rounding an exact integer
+    # product UP (which would shorten the prefix and break exactness);
+    # overshooting the prefix is always safe, undershooting is not
+    prefix = ranked.filter(
+        F.col("__rk")
+        <= F.col("__sz") - F.ceil(F.col("__sz") * t - 1e-9) + 1
+    ).select(F.col(id_col), "shingle", "__sz")
+    cand = m.candidates(prefix, sh, id_col, t).select("doc_a", "doc_b").distinct()
+    aa = arrs.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("__sh_a"))
+    bb = arrs.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("__sh_b"))
+    pairs = (
+        cand.join(aa, "doc_a")
+        .join(bb, "doc_b")
+        .withColumn(
+            "common", F.size(F.array_intersect("__sh_a", "__sh_b")).cast("long")
+        )
+    )
+    return _scored(pairs, m, t, F.size("__sh_a"), F.size("__sh_b"))
+
+
+def _id_dtype(df: DataFrame, id_col: str) -> str | None:
+    # case-insensitive lookup, matching Spark's default column resolution
+    lc = id_col.lower()
+    for name, dt in df.dtypes:
+        if name.lower() == lc:
+            return dt
+    return None
+
+
+def _integral_id_dtype(df: DataFrame, id_col: str) -> bool:
+    return _id_dtype(df, id_col) in ("tinyint", "smallint", "int", "bigint")
+
+
+class _Corpus(NamedTuple):
+    """A corpus as the dense admission probe leaves it. The auto routers
+    hand it to whichever kernel wins, so no probe or shingle pass runs
+    twice."""
+
+    # dense regime: integral ids, ≤ max_rows docs, ≤ max_vocab shingles
+    admit: bool
+    n_docs: int  # raw row count: an upper bound on shingle-bearing docs
+    vidx: DataFrame | None  # (shingle, __idx) column index; set iff admit
+    # checkpointed shingle arrays; None after a cheap early reject
+    arrs: DataFrame | None
+
+
+def _dense_admission(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    max_rows: int,
+    max_vocab: int,
+    sample_docs: int = 2_000,
+    arrs: DataFrame | None = None,
+) -> _Corpus:
+    """Dense-regime admission test shared by the auto routers and the
+    dense kernel. The decision is IDENTICAL to probing the full corpus
+    (pytest-asserted); only the probe cost changes:
+
+    * the doc-count probe runs on the RAW input (``shingle_arrays`` only
+      ever DROPS rows — docs shorter than ``n`` tokens — so the raw count
+      is a sound upper bound for both the guard and dense block sizing)
+      and skips the shingling regex;
+    * the vocab probe first counts distinct shingles over a
+      ``sample_docs`` subset — distinct-shingle count is monotone in the
+      corpus, so a sample exceeding ``max_vocab`` PROVES the full corpus
+      does, and the Zipf-vocabulary regime (the common one at scale) is
+      rejected without any full map pass.
+
+    Past the cheap rejects, the corpus-wide shingle pass is materialized
+    HERE (eager localCheckpoint) and returned; the full vocab probe, the
+    dense kernel and the prefix fallback all read that one
+    materialization. A caller that already holds a checkpointed
+    ``shingle_arrays(df)`` frame passes it as ``arrs`` and no shingle pass
+    runs here at all.
+    """
+    if not _integral_id_dtype(df, id_col):
+        return _Corpus(False, 0, None, arrs)
+    n_docs = df.limit(max_rows + 1).count()
+    if n_docs > max_rows:
+        return _Corpus(False, n_docs, None, arrs)
+    if arrs is None:
+        if n_docs > sample_docs:
+            sample_probe = (
+                shingle_arrays(df.limit(sample_docs), id_col, text_col, n)
+                .select(F.explode("shingles").alias("shingle"))
+                .distinct()
+                .limit(max_vocab + 1)
+                .count()
+            )
+            if sample_probe > max_vocab:
+                return _Corpus(False, n_docs, None, None)
+        arrs = _prepared(df, id_col, text_col, n)
+    # full-corpus vocab probe over the materialized arrays: when it
+    # admits, this ≤ max_vocab slice IS the complete distinct vocabulary
+    # (the window and the checkpoint are bounded) and doubles as the
+    # dense path's column index
+    vs = (
+        arrs.select(F.explode("shingles").alias("shingle"))
+        .distinct()
+        .limit(max_vocab + 1)
+        .localCheckpoint(eager=True)
+    )
+    if vs.count() > max_vocab:
+        return _Corpus(False, n_docs, None, arrs)
+    vidx = vs.withColumn(
+        "__idx", F.row_number().over(Window.orderBy("shingle")) - 1
+    )
+    return _Corpus(True, n_docs, vidx, arrs)
+
+
+def _dense_pair_blocks(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    t: float,
+    max_rows: int,
+    max_vocab: int,
+    m: _Measure,
+    corpus: _Corpus | None = None,
+) -> DataFrame:
+    """Dense block-BLAS kernel, for a small shingle UNIVERSE: there every
+    posting list is hot, so the inverted index and prefix filtering both
+    degenerate to all-pairs work with giant shuffles (measured: the bitset
+    path is ~8× faster than the inverted index on a ~900-bigram universe
+    at sf0.1).
+
+    Each doc's distinct-shingle set becomes a |vocab|-dim binary row of a
+    block matrix; common counts are ONE BLAS matmul (``A @ B.T``) per
+    unordered block pair — the same block decomposition as
+    ``ext.similarity.cosine_allpairs_blocked`` (B·(B+1)/2 independent
+    tasks, O(N·B) shuffle, no driver collect). Integer counts in float64
+    are exact (set sizes ≪ 2^53). The quadratic pair loop is inherent to
+    exact all-pairs; BLAS makes it ~vector-width·cores parallel.
+
+    Guards, each raising with a pointer to the prefix path: ``t > 0``, an
+    integral id column (ids are packed into int64 matrices), ≤
+    ``max_rows`` docs and ≤ ``max_vocab`` distinct shingles. The doc and
+    vocab probes are ``_dense_admission``'s; the auto routers hand their
+    ``corpus`` over so neither runs twice.
+    """
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    t = float(t)
+    alt = f"ngram_{m.name}_pairs_prefix"
+    if t <= 0.0:
+        # at t=0 the dense path would emit zero-overlap pairs the inverted
+        # index never materializes — keep the outputs identical. (A t=0 /
+        # common≥1 dense mode for unthresholded enumeration was measured
+        # and REJECTED: with output ≈ all pairs, Arrow-serializing the pair
+        # rows out of the Python worker costs 3× the JVM inverted-index
+        # join+agg — dense only wins when the threshold keeps output small.)
+        raise ValueError(f"dense {m.name} requires min_{m.name} > 0")
+    if not _integral_id_dtype(df, id_col):
+        # a cast('long') on a string id yields NULLs that collapse every
+        # row into one block and crash densify in the Python worker; the
+        # inverted index and prefix paths handle any id type
+        raise ValueError(
+            f"dense {m.name} requires an integral id column "
+            f"({id_col} is {_id_dtype(df, id_col)}); use {alt}"
+        )
+    if corpus is None:
+        corpus = _dense_admission(df, id_col, text_col, n, max_rows, max_vocab)
+    if corpus.n_docs > max_rows:
+        raise ValueError(
+            f"dense {m.name} is guarded at {max_rows} docs; use "
+            f"{alt} or a sampled audit subset"
+        )
+    if not corpus.admit:
+        raise ValueError(
+            f"dense {m.name} is guarded at {max_vocab} distinct shingles "
+            f"(the universe is no longer 'small'); use {alt}"
+        )
+    vsize = corpus.vidx.count()
+    # block count scales with the corpus so per-task memory stays bounded:
+    # the C = A @ B.T common-count matrix is (rows/B)² float64 per task, so
+    # a FIXED B=8 at the 200k-doc guard limit would allocate 25k² ≈ 5 GB.
+    # Capping block rows at ~4096 bounds C (and each densified side) at
+    # ~134 MB; block-pair task count grows as B²/2 (all independent) and
+    # shuffle as O(N·B) — the right trade for an exact all-pairs path.
+    n_blocks = max(8, -(-corpus.n_docs // 4096))
+    block_pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
+
+    # per-doc index lists, built ONCE and materialized: both matmul roles
+    # read this table
+    tagged = (
+        corpus.arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
+        .join(F.broadcast(corpus.vidx), "shingle")
+        .groupBy(id_col)
+        .agg(F.collect_list("__idx").alias("__idxs"))
+        .select(F.col(id_col).cast("long").alias("id"), "__idxs")
+        .withColumn(
+            "blk", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
+        )
+        .localCheckpoint(eager=True)
+    )
+    # one-slice local frame: the default parallelization spun 32 pickle
+    # slices for ~36 rows per kernel invocation (see session.local_rows_df)
+    pair_df = local_rows_df(df.sparkSession, block_pairs, "ba int, bb int")
+    # role-tagged self-UNION instead of a two-sided cogroup: joining the
+    # same checkpointed table twice into cogroup trips the ambiguous-self-
+    # join analyzer; a union is unambiguous and needs only ONE grouped
+    # exchange (the function splits roles per block pair)
+    a_side = tagged.join(
+        F.broadcast(pair_df), F.col("blk") == F.col("ba")
+    ).select("ba", "bb", F.lit(0).alias("role"), "id", "__idxs")
+    b_side = tagged.join(
+        F.broadcast(pair_df), F.col("blk") == F.col("bb")
+    ).select("ba", "bb", F.lit(1).alias("role"), "id", "__idxs")
+    both = a_side.unionByName(b_side)
+    (lo_col, hi_col), score_col = m.cols, m.name
+    out_schema = T.StructType(
+        [
+            T.StructField(lo_col, T.LongType()),
+            T.StructField(hi_col, T.LongType()),
+            T.StructField("common", T.LongType()),
+            T.StructField(score_col, T.DoubleType()),
+        ]
+    )
+    empty = pd.DataFrame(
+        {lo_col: [], hi_col: [], "common": [], score_col: []}
+    ).astype(
+        {lo_col: "int64", hi_col: "int64", "common": "int64", score_col: "float64"}
+    )
+    # plain locals: the worker unpickles these lambdas by value
+    score, orient = m.score, m.orient
+
+    def block_common(key, pdf):
+        ba, bb = key
+        a_pdf = pdf[pdf["role"] == 0]
+        b_pdf = pdf[pdf["role"] == 1]
+        if a_pdf.empty or b_pdf.empty:
+            return empty
+
+        def densify(pdf):
+            ids = pdf["id"].to_numpy(dtype=np.int64)
+            mat = np.zeros((len(pdf), vsize), dtype=np.float64)
+            for r, ix in enumerate(pdf["__idxs"]):
+                mat[r, np.asarray(ix, dtype=np.int64)] = 1.0
+            return ids, mat
+
+        a_ids, A = densify(a_pdf)
+        b_ids, B = densify(b_pdf)
+        C = A @ B.T  # exact integer intersection counts in float64
+        sza, szb = A.sum(axis=1), B.sum(axis=1)
+        sc = score(C, sza[:, None], szb[None, :], np.minimum)
+        mask = sc >= t
+        if ba == bb:
+            mask &= a_ids[:, None] < b_ids[None, :]
+        ai, bi = np.nonzero(mask)
+        # blocks are hash-assigned: put each pair in id order, then orient
+        # it exactly as the Spark kernels do
+        ida, idb, sa, sb = a_ids[ai], b_ids[bi], sza[ai], szb[bi]
+        sw = ida > idb
+        lo, hi = orient(
+            np.where(sw, idb, ida), np.where(sw, ida, idb),
+            np.where(sw, sb, sa), np.where(sw, sa, sb), np.where,
+        )
+        return pd.DataFrame(
+            {
+                lo_col: lo,
+                hi_col: hi,
+                "common": C[ai, bi].astype(np.int64),
+                score_col: sc[ai, bi],
+            }
+        )
+
+    return both.groupBy("ba", "bb").applyInPandas(block_common, out_schema)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -195,6 +661,8 @@ def ngram_jaccard_pairs(
     Returns (doc_a, doc_b, common, jaccard) with doc_a < doc_b. The
     inverted-index join means cost concentrates in hot shingles — at scale,
     run after LSH banding (``minhash_lsh_pairs``) or cap the corpus slice.
+    This is the reference the prefix and dense strategies are tested
+    against.
 
     ``max_docs`` is a limit-probe guard (the same pattern as the dense
     path's ``max_rows``): with ``min_jaccard == 0.0`` this enumerates EVERY
@@ -217,44 +685,8 @@ def ngram_jaccard_pairs(
                 "minhash_lsh_pairs (banded), or pass max_docs=None for a "
                 "pre-bounded slice."
             )
-    # eager localCheckpoint instead of bare persist: the returned frame is
-    # lazy over arrs, so a paired unpersist inside this function is
-    # impossible — checkpointing materializes the (small) shingle table
-    # once and truncates lineage without holding a cache-pool entry.
-    arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=True)
-    # set sizes are free from the array — no extra groupBy pass
-    sizes = arrs.select(F.col(id_col), F.size("shingles").cast("long").alias("sz"))
-    sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        a.join(b, on="shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-    # probe-gated broadcast (r10, see _maybe_broadcast): corpus-sized size
-    # tables must not carry an unconditional hint (driver OOM at 10^8+
-    # docs, VERDICT r09 #1), but hint-free they sometimes SortMergeJoin
-    # the giant `common` table (checkpoint scans carry no stats for the
-    # static planner; AQE's rescue is materialization-order-dependent —
-    # measured 411 s vs 208 s on the 25k zipf corpus). One probe covers
-    # both renamed views of the same sizes table.
-    if _is_bounded(sizes):
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    out = (
-        common.join(sa, on="doc_a")
-        .join(sb, on="doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "common", "jaccard")
-    )
-    return out
+    arrs = _prepared(df, id_col, text_col, n)
+    return _index_pairs(arrs, arrs, id_col, _JACCARD, min_jaccard)
 
 
 def ngram_jaccard_pairs_prefix(
@@ -264,339 +696,15 @@ def ngram_jaccard_pairs_prefix(
     n: int = 3,
     min_jaccard: float = 0.5,
     _arrs: DataFrame | None = None,
-    _size_filter: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard self-join with AllPairs/PPJoin prefix filtering
-    (Bayardo et al., WWW'07): identical output to ``ngram_jaccard_pairs``
-    at a fraction of the cost when shingles have hot posting lists.
-
-    Key fact: under any global total order on shingles, two sets with
-    J(A,B) ≥ t must share an element among the first
-    ``|A| - ceil(t·|A|) + 1`` elements of each (the "prefix"). Ordering
-    shingles by ASCENDING global frequency puts the RARE shingles in the
-    prefix, so the candidate join never touches hot posting lists — the
-    Σ|posting|² blowup of the naive inverted-index join (measured 10× on
-    2-gram shingles at sf0.1) simply doesn't occur. Candidates are then
-    verified exactly with one JVM ``array_intersect`` per pair.
-
-    Plan shape: one df-count aggregate on the shingle key, one window rank
-    per doc, one equi-join on prefix shingles, one verify join carrying
-    arrays for candidates only. Everything hash-partitioned; nothing
-    quadratic in the corpus.
-
-    r12: the candidate join also applies the AllPairs LENGTH filter —
-    ``J(A,B) ≥ t`` forces ``t·|A| ≤ |B| ≤ |A|/t`` (with |A| ≤ |B|,
-    ``J ≤ |A|/|B|``), so a size-ratio-violating candidate provably fails
-    verification and is dropped BEFORE the distinct + verify join at the
-    cost of one int riding each prefix row. On equal-length corpora (the
-    sf1 replica clumps) it prunes nothing and measures as noise; on
-    skewed-length corpora (the truncation fixture in the sf1 rehearsal)
-    it prunes the cross-length candidate mass. ``_size_filter=False``
-    pins the old join for A/B measurement; output is identical either
-    way (pytest-asserted).
-    """
-    t = float(min_jaccard)
-    if not 0.0 < t <= 1.0:
-        raise ValueError("prefix filtering requires 0 < min_jaccard <= 1")
-    # eager localCheckpoint, not persist: the returned frame stays lazy over
-    # arrs, so no in-function unpersist is possible — checkpoint + truncate
-    # avoids an unreleasable cache-pool entry (house pattern, see :1005).
-    # A handed ``_arrs`` (the auto router's admission pass, or a
-    # caller-shared frame) is already checkpointed — reuse it (r12).
-    if _arrs is None:
-        arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(
-            eager=True
-        )
-    else:
-        arrs = _arrs
-    sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    wrk = Window.partitionBy(id_col).orderBy("__df", "shingle")
-    wsz = Window.partitionBy(id_col)
-    # the -1e-9 guards ceil against float error rounding an exact integer
-    # product UP (which would shorten the prefix and break exactness);
-    # overshooting the prefix is always safe, undershooting is not
-    ranked = (
-        sh.join(freq, "shingle")
-        .withColumn("__rk", F.row_number().over(wrk))
-        .withColumn("__sz", F.count(F.lit(1)).over(wsz))
-    )
-    prefix = ranked.filter(
-        F.col("__rk")
-        <= F.col("__sz") - F.ceil(F.col("__sz") * t - 1e-9) + 1
-    ).select(F.col(id_col), "shingle", "__sz")
-    pa = prefix.select(
-        F.col(id_col).alias("doc_a"), "shingle", F.col("__sz").alias("__sza")
-    )
-    pb = prefix.select(
-        F.col(id_col).alias("doc_b"), "shingle", F.col("__sz").alias("__szb")
-    )
-    cand = pa.join(pb, "shingle").filter(F.col("doc_a") < F.col("doc_b"))
-    if _size_filter:
-        # AllPairs length filter: J ≥ t ⟹ each side ≥ t × the other
-        # (necessary condition — overshooting via the -1e-9 cushion keeps
-        # borderline pairs for the exact verify join, never drops them)
-        cand = cand.filter(
-            (F.col("__szb").cast("double") >= F.col("__sza") * t - 1e-9)
-            & (F.col("__sza").cast("double") >= F.col("__szb") * t - 1e-9)
-        )
-    cand = cand.select("doc_a", "doc_b").distinct()
-    aa = arrs.select(F.col(id_col).alias("doc_a"), F.col("shingles").alias("__sh_a"))
-    bb = arrs.select(F.col(id_col).alias("doc_b"), F.col("shingles").alias("__sh_b"))
-    return (
-        cand.join(aa, "doc_a")
-        .join(bb, "doc_b")
-        .withColumn(
-            "common", F.size(F.array_intersect("__sh_a", "__sh_b")).cast("long")
-        )
-        .withColumn(
-            "jaccard",
-            F.col("common")
-            / (F.size("__sh_a") + F.size("__sh_b") - F.col("common")),
-        )
-        .filter(F.col("jaccard") >= t)
-        .select("doc_a", "doc_b", "common", "jaccard")
-    )
-
-
-
-def _id_dtype(df: DataFrame, id_col: str) -> str | None:
-    # case-insensitive lookup, matching Spark's default column resolution
-    lc = id_col.lower()
-    for name, dt in df.dtypes:
-        if name.lower() == lc:
-            return dt
-    return None
-
-
-def _integral_id_dtype(df: DataFrame, id_col: str) -> bool:
-    return _id_dtype(df, id_col) in ("tinyint", "smallint", "int", "bigint")
-
-
-def _dense_pair_blocks(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    threshold: float,
-    max_rows: int,
-    max_vocab: int,
-    kind: str,
-    n_docs: int | None = None,
-    vocab_checked: bool = False,
-    vidx: DataFrame | None = None,
-    arrs: DataFrame | None = None,
-) -> DataFrame:
-    """Shared block BLAS core behind ``ngram_jaccard_pairs_dense``
-    and ``ngram_containment_pairs_dense`` (r06 review: the two paths were
-    ~120 duplicated lines differing only in denominator and output
-    orientation — one core keeps the guards, blocking, vocab indexing, and
-    densify logic in one place).
-
-    Each doc's distinct-shingle set becomes a |vocab|-dim binary row of a
-    block matrix; common counts are ONE BLAS matmul (``A @ B.T``) per
-    unordered block pair — the same block decomposition as
-    ``ext.similarity.cosine_allpairs_blocked`` (B·(B+1)/2 independent
-    tasks, O(N·B) shuffle, no driver collect). Integer counts in float64
-    are exact (set sizes ≪ 2^53). The quadratic pair loop is inherent to
-    exact all-pairs; BLAS just makes it ~vector-width·cores parallel where
-    the SQL-expression formulation (BroadcastNestedLoopJoin) runs
-    interpreted, one pair at a time.
-
-    ``n_docs``/``vocab_checked``/``vidx``/``arrs`` let the auto routers
-    hand over their already-run limit-probes (and the shingle→column
-    index + materialized shingle arrays the probes built as side effects)
-    instead of paying them a second time inside this function (r06
-    review; r11 guide-§2.3 pass elimination; r12 arrs handover).
-
-    r11 single-pass restructuring (guide §1.2/§2.3 — don't compute things
-    twice, shuffle fewer bytes): the corpus-wide shingle regex pass runs
-    ONCE into an eager ``localCheckpoint`` and the per-doc index-list table
-    (``tagged``) is built ONCE from it; both matmul roles are served by
-    role-tagged SELECTs over that one checkpointed table, combined through
-    a self-union (legal where the old two-sided cogroup flagged the shared
-    frame as an ambiguous self-join) into a single grouped
-    ``applyInPandas``. Before: 4 full shingle passes (admission probe,
-    vidx build, one per cogroup side) + 2 collect_list shuffles + a
-    two-sided cogroup. After: 1 full shingle pass + 1 collect_list shuffle
-    + 1 grouped exchange. Measured at sf0.1 (5k docs, 900-bigram
-    universe): dense pairs 4.2-5.2 s → 3.1 s, identical output. r12:
-    on the auto route even that one pass is the ADMISSION's materialized
-    pass, handed in via ``arrs`` (an eagerly checkpointed
-    ``shingle_arrays(df, id_col, text_col, n)`` frame) — zero shingle
-    passes run inside this function then.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    alt, (col_lo, col_hi, score_col) = {
-        "jaccard": (
-            "ngram_jaccard_pairs_prefix",
-            ("doc_a", "doc_b", "jaccard"),
-        ),
-        "containment": (
-            "ngram_containment_pairs_prefix",
-            ("doc_small", "doc_big", "containment"),
-        ),
-    }[kind]
-    t = float(threshold)
-    if t <= 0.0:
-        # at t=0 the dense path would emit zero-overlap pairs the inverted
-        # index never materializes — keep the outputs identical. (r11
-        # measured a t=0 / common≥1 dense mode for ngram_best_match's
-        # unthresholded enumeration and REJECTED it: with output ≈ all
-        # pairs, Arrow-serializing 2.6M pair rows out of the Python worker
-        # costs 3× the JVM inverted-index join+agg — dense only wins when
-        # the threshold keeps the output small.)
-        param = "min_jaccard" if kind == "jaccard" else "min_containment"
-        raise ValueError(f"dense {kind} requires {param} > 0")
-    if not _integral_id_dtype(df, id_col):
-        # ids are packed into int64 block matrices; a cast('long') on a
-        # string id yields NULLs that collapse every row into one block and
-        # crash densify in the Python worker (r06 review) — the inverted
-        # index and prefix paths handle any id type
-        raise ValueError(
-            f"dense {kind} requires an integral id column "
-            f"({id_col} is {_id_dtype(df, id_col)}); use {alt}"
-        )
-    spark = df.sparkSession
-    handed_arrs = arrs is not None
-    if not handed_arrs:
-        arrs = shingle_arrays(df, id_col, text_col, n)
-    # bounded-corpus guards: O(limit) probes, not full counts — probed on
-    # the LAZY lineage so an over-limit corpus raises before any
-    # checkpoint materializes it
-    if n_docs is None:
-        n_docs = arrs.limit(max_rows + 1).count()
-    if n_docs > max_rows:
-        raise ValueError(
-            f"dense {kind} is guarded at {max_rows} docs; use "
-            f"{alt} or a sampled audit subset"
-        )
-    if not handed_arrs:
-        # ONE corpus-wide shingle pass, materialized: vidx (when not
-        # handed over), tagged, and nothing else re-runs the regex
-        # lineage. A handed `arrs` is already an eager checkpoint (the
-        # admission probe's, or a caller-shared one) — re-checkpointing
-        # it would copy |corpus| rows for nothing.
-        arrs = arrs.localCheckpoint(eager=True)
-    sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-    if vidx is None:
-        # probe and index in one pass: the ≤ max_vocab+1 distinct slice IS
-        # the guard probe, and (when under the cap) the full distinct
-        # vocabulary — the separate probe pass the old code paid is gone
-        vs = (
-            sh.select("shingle")
-            .distinct()
-            .limit(max_vocab + 1)
-            .localCheckpoint(eager=True)
-        )
-        if vs.count() > max_vocab:
-            raise ValueError(
-                f"dense {kind} is guarded at {max_vocab} distinct shingles "
-                f"(the universe is no longer 'small'); use {alt}"
-            )
-        # ≤ max_vocab rows: the single-partition window is bounded
-        vidx = vs.withColumn(
-            "__idx", F.row_number().over(Window.orderBy("shingle")) - 1
-        )
-    vsize = vidx.count()
-    # block count scales with the corpus so per-task memory stays bounded:
-    # the C = A @ B.T common-count matrix is (rows/B)² float64 per task, so
-    # a FIXED B=8 at the 200k-doc guard limit would allocate 25k² ≈ 5 GB.
-    # Capping block rows at ~4096 bounds C (and each densified side) at
-    # ~134 MB; block-pair task count grows as B²/2 (all independent) and
-    # shuffle as O(N·B) — the right trade for an exact all-pairs path.
-    n_blocks = max(8, -(-n_docs // 4096))
-    block_pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
-
-    # per-doc index lists, built ONCE and materialized: both matmul roles
-    # read this table (the old code built it per cogroup side — one full
-    # shingle pass + collect_list shuffle each)
-    tagged = (
-        sh.join(F.broadcast(vidx), "shingle")
-        .groupBy(id_col)
-        .agg(F.collect_list("__idx").alias("__idxs"))
-        .select(F.col(id_col).cast("long").alias("id"), "__idxs")
-        .withColumn(
-            "blk", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
-        )
-        .localCheckpoint(eager=True)
-    )
-    # one-slice local frame: the default parallelization spun 32 pickle
-    # slices for ~36 rows per kernel invocation (see session.local_rows_df)
-    pair_df = local_rows_df(spark, block_pairs, "ba int, bb int")
-    # role-tagged self-UNION instead of a two-sided cogroup: joining the
-    # same checkpointed table twice into cogroup trips the ambiguous-self-
-    # join analyzer; a union is unambiguous and needs only ONE grouped
-    # exchange (the function splits roles per block pair)
-    a_side = tagged.join(
-        F.broadcast(pair_df), F.col("blk") == F.col("ba")
-    ).select("ba", "bb", F.lit(0).alias("role"), "id", "__idxs")
-    b_side = tagged.join(
-        F.broadcast(pair_df), F.col("blk") == F.col("bb")
-    ).select("ba", "bb", F.lit(1).alias("role"), "id", "__idxs")
-    both = a_side.unionByName(b_side)
-    out_schema = T.StructType(
-        [
-            T.StructField(col_lo, T.LongType()),
-            T.StructField(col_hi, T.LongType()),
-            T.StructField("common", T.LongType()),
-            T.StructField(score_col, T.DoubleType()),
-        ]
-    )
-    empty = pd.DataFrame(
-        {col_lo: [], col_hi: [], "common": [], score_col: []}
-    ).astype(
-        {col_lo: "int64", col_hi: "int64", "common": "int64", score_col: "float64"}
-    )
-
-    def block_common(key, pdf):
-        ba, bb = key
-        a_pdf = pdf[pdf["role"] == 0]
-        b_pdf = pdf[pdf["role"] == 1]
-        if a_pdf.empty or b_pdf.empty:
-            return empty
-
-        def densify(pdf):
-            ids = pdf["id"].to_numpy(dtype=np.int64)
-            m = np.zeros((len(pdf), vsize), dtype=np.float64)
-            for r, ix in enumerate(pdf["__idxs"]):
-                m[r, np.asarray(ix, dtype=np.int64)] = 1.0
-            return ids, m
-
-        a_ids, A = densify(a_pdf)
-        b_ids, B = densify(b_pdf)
-        C = A @ B.T  # exact integer intersection counts in float64
-        sza, szb = A.sum(axis=1), B.sum(axis=1)
-        if kind == "jaccard":
-            score = C / (sza[:, None] + szb[None, :] - C)
-        else:
-            score = C / np.minimum(sza[:, None], szb[None, :])
-        mask = score >= t
-        if ba == bb:
-            mask &= a_ids[:, None] < b_ids[None, :]
-        ai, bi = np.nonzero(mask)
-        ida, idb = a_ids[ai], b_ids[bi]
-        if kind == "jaccard":
-            lo, hi = np.minimum(ida, idb), np.maximum(ida, idb)
-        else:
-            # orientation parity with the inverted index: smaller set is
-            # the contained side; equal sizes break toward the lower id
-            sa, sb = sza[ai], szb[bi]
-            a_small = (sa < sb) | ((sa == sb) & (ida < idb))
-            lo, hi = np.where(a_small, ida, idb), np.where(a_small, idb, ida)
-        return pd.DataFrame(
-            {
-                col_lo: lo,
-                col_hi: hi,
-                "common": C[ai, bi].astype(np.int64),
-                score_col: score[ai, bi],
-            }
-        )
-
-    return both.groupBy("ba", "bb").applyInPandas(block_common, out_schema)
+    and the AllPairs length filter (``_prefix_pairs``): output identical
+    to ``ngram_jaccard_pairs`` at a fraction of the cost when shingles have
+    hot posting lists. Requires ``0 < min_jaccard <= 1``. ``_arrs`` takes
+    a caller's eager ``shingle_arrays(df, id_col, text_col, n)``
+    checkpoint (the auto router's admission pass) in place of a fresh
+    shingle pass."""
+    return _prefix_pairs(df, id_col, text_col, n, _JACCARD, min_jaccard, _arrs)
 
 
 def ngram_jaccard_pairs_dense(
@@ -607,28 +715,20 @@ def ngram_jaccard_pairs_dense(
     min_jaccard: float = 0.5,
     max_rows: int = 200_000,
     max_vocab: int = 4096,
-    _n_docs: int | None = None,
-    _vocab_checked: bool = False,
-    _vidx: DataFrame | None = None,
-    _arrs: DataFrame | None = None,
+    _corpus: _Corpus | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard via dense bitset intersection — the right plan
-    when the shingle UNIVERSE is small (every posting list hot, so both the
-    inverted-index join and prefix filtering degenerate to all-pairs work
-    with giant shuffles; measured: the bitset path is ~8× faster than the
-    inverted index on a ~900-bigram-universe corpus at sf0.1).
-
-    Thin wrapper over ``_dense_pair_blocks`` (block BLAS; see that
-    docstring for the decomposition, guards, and memory bounds). Requires
-    an integral id column (ids are packed into int64 matrices); guards at
-    ``max_rows`` docs / ``max_vocab`` distinct shingles with a pointer to
+    when the shingle UNIVERSE is small (block BLAS; see
+    ``_dense_pair_blocks`` for the decomposition, guards and memory
+    bounds). Requires an integral id column; guards at ``max_rows`` docs /
+    ``max_vocab`` distinct shingles with a pointer to
     ``ngram_jaccard_pairs_prefix`` (Zipf vocab at scale) or a sampled
     audit subset. Output is identical to ``ngram_jaccard_pairs``
-    (doc_a, doc_b, common, jaccard), pytest-verified.
-    """
+    (doc_a, doc_b, common, jaccard), pytest-verified. ``_corpus`` is the
+    auto router's admission result."""
     return _dense_pair_blocks(
         df, id_col, text_col, n, min_jaccard, max_rows, max_vocab,
-        "jaccard", _n_docs, _vocab_checked, _vidx, _arrs,
+        _JACCARD, _corpus,
     )
 
 
@@ -645,123 +745,34 @@ def ngram_jaccard_pairs_auto(
     """Exact n-gram Jaccard with automatic strategy selection: the same
     output contract as ``ngram_jaccard_pairs``/_prefix/_dense (all three
     pytest-verified identical), choosing the cost regime by two bounded
-    probes:
+    probes (``_dense_admission``):
 
     * integral id AND corpus ≤ ``max_rows`` AND shingle universe ≤
-      ``max_vocab`` → **dense** (block BLAS; every posting is hot
-      in a small universe, so inverted indexes degenerate — measured 6.7×
-      here); the id-type precondition exists because dense packs ids into
-      int64 matrices (r06 review);
+      ``max_vocab`` → **dense** (block BLAS; every posting is hot in a
+      small universe, so inverted indexes degenerate — measured 6.7×);
     * otherwise → **prefix** (AllPairs filtering; on a Zipf vocabulary the
       rare-shingle prefixes keep hot postings out of the candidate join —
       and it handles any id type).
 
-    Probe cost (see ``_dense_admission``): the doc-count probe is a raw
-    ``limit(k+1).count()`` on the un-shingled input — O(k) work; the vocab
-    probe tries a bounded-sample early reject first and pays a full
-    distinct pass only when the sample stays under the cap (i.e. only on
-    corpora already headed for the dense regime, whose admission bound
-    caps the pass). Probe results — including the single materialized
-    corpus-wide shingle pass (r12; see ``_dense_admission``) — are handed
-    to whichever strategy wins so nothing re-runs them. The plain
-    inverted index remains available by name for corpora known to have
-    uniformly short posting lists. ``_arrs`` lets a caller that already
-    holds a checkpointed ``shingle_arrays(df, id_col, text_col, n)``
-    frame share it (the incremental clustering query shares one between
-    this enumeration and ``exact_cross_jaccard``).
+    The admission's probes and its one materialized shingle pass are
+    handed to whichever strategy wins. The plain inverted index remains
+    available by name for corpora known to have uniformly short posting
+    lists. ``_arrs`` lets a caller that already holds a checkpointed
+    ``shingle_arrays(df, id_col, text_col, n)`` frame share it (the
+    incremental clustering query shares one between this enumeration and
+    its endpoint-class split).
     """
-    admit, n_docs, vidx, arrs = _dense_admission(
+    corpus = _dense_admission(
         df, id_col, text_col, n, max_rows, max_vocab, arrs=_arrs
     )
-    if admit:
+    if corpus.admit:
         return ngram_jaccard_pairs_dense(
-            df, id_col, text_col, n, min_jaccard, max_rows,
-            max_vocab, _n_docs=n_docs, _vocab_checked=True, _vidx=vidx,
-            _arrs=arrs,
+            df, id_col, text_col, n, min_jaccard, max_rows, max_vocab,
+            _corpus=corpus,
         )
     return ngram_jaccard_pairs_prefix(
-        df, id_col, text_col, n, min_jaccard, _arrs=arrs
+        df, id_col, text_col, n, min_jaccard, _arrs=corpus.arrs
     )
-
-
-def _dense_admission(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    max_rows: int,
-    max_vocab: int,
-    sample_docs: int = 2_000,
-    arrs: DataFrame | None = None,
-) -> tuple[bool, int, DataFrame | None, DataFrame | None]:
-    """Shared dense-regime admission test for the Jaccard/containment auto
-    routers: (admit, n_docs_upper_bound, vidx, arrs). Decision is IDENTICAL
-    to probing the full corpus (pytest-asserted); only the probe cost
-    changes:
-
-    * doc-count probe runs on the RAW input (``shingle_arrays`` only ever
-      DROPS rows — docs shorter than ``n`` tokens — so the raw count is a
-      sound upper bound for both the guard and dense block sizing) and
-      skips the shingling regex the old probe paid for nothing;
-    * vocab probe first counts distinct shingles over a ``sample_docs``
-      subset — distinct-shingle count is monotone in the corpus, so a
-      sample exceeding ``max_vocab`` PROVES the full corpus does, and the
-      Zipf-vocabulary regime (the common one at scale) is rejected without
-      any full map pass. Only a sample that stays under the cap pays the
-      full corpus-wide pass.
-
-    r12 single-pass handover (guide §1.2; closes the r11 off-by-one the
-    ADVICE flagged — the admission vocab probe was one full shingle pass
-    and the dense kernel's arrs checkpoint a second): once the sample
-    probe admits the corpus PAST the cheap rejects, the corpus-wide
-    shingle pass is materialized HERE (eager localCheckpoint) and
-    returned; the full vocab probe, the dense kernel, and the prefix
-    fallback all consume that one materialization instead of re-running
-    the regex lineage. Callers that already hold a checkpointed
-    ``shingle_arrays(df)`` frame (the incremental query shares one
-    between its pair enumeration and the cross-jaccard) pass it in via
-    ``arrs`` and no shingle pass runs here at all. The returned ``arrs``
-    is None only when admission rejected before the pass was needed
-    (non-integral id, too many docs, sample-probe reject with no
-    handover); ``vidx`` is None whenever admission fails.
-    """
-    if not _integral_id_dtype(df, id_col):
-        return False, 0, None, arrs
-    n_docs = df.limit(max_rows + 1).count()
-    if n_docs > max_rows:
-        return False, n_docs, None, arrs
-    if arrs is None:
-        if n_docs > sample_docs:
-            sample_probe = (
-                shingle_arrays(df.limit(sample_docs), id_col, text_col, n)
-                .select(F.explode("shingles").alias("shingle"))
-                .distinct()
-                .limit(max_vocab + 1)
-                .count()
-            )
-            if sample_probe > max_vocab:
-                return False, n_docs, None, None
-        # THE corpus-wide shingle pass: materialized once, consumed by the
-        # vocab probe below and handed to whichever strategy wins
-        arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(
-            eager=True
-        )
-    # full-corpus vocab probe over the materialized arrays: when it
-    # admits, this ≤ max_vocab slice IS the complete distinct vocabulary
-    # (the window and the checkpoint are bounded) and doubles as the
-    # dense path's column index
-    vs = (
-        arrs.select(F.explode("shingles").alias("shingle"))
-        .distinct()
-        .limit(max_vocab + 1)
-        .localCheckpoint(eager=True)
-    )
-    if vs.count() > max_vocab:
-        return False, n_docs, None, arrs
-    vidx = vs.withColumn(
-        "__idx", F.row_number().over(Window.orderBy("shingle")) - 1
-    )
-    return True, n_docs, vidx, arrs
 
 
 def ngram_best_match(
@@ -1851,55 +1862,20 @@ def exact_cross_jaccard(
     regime as ``ngram_jaccard_pairs``: fine at gate scale, post-LSH or
     sampled (``similarity.sampled_pair_audit``) at 100 TB.
 
-    ``_batch_arrs``/``_store_arrs`` (r12, guide §1.2): a caller that
-    already holds an eagerly materialized
-    ``shingle_arrays(side, id_col, text_col, n)`` frame passes it here so
-    the side's shingle pass is not re-run — the incremental clustering
-    query shares ONE store-side (and one batch-side) checkpoint between
-    its own pair enumerations and this cross join.
+    ``_batch_arrs``/``_store_arrs``: a caller that already holds an
+    eagerly materialized ``shingle_arrays(side, id_col, text_col, n)``
+    frame passes it here so that side's shingle pass is not re-run.
 
-    Returns (bid, sid, jaccard)."""
-    own_b = _batch_arrs is None
-    own_s = _store_arrs is None
-    ba = (
-        shingle_arrays(batch, id_col, text_col, n).persist()
-        if own_b
-        else _batch_arrs
+    Returns (bid, sid, jaccard), materialized: the pair set is
+    threshold-bounded and callers read it more than once."""
+    pairs = _index_pairs(
+        _prepared(batch, id_col, text_col, n, _batch_arrs),
+        _prepared(store, id_col, text_col, n, _store_arrs),
+        id_col, _JACCARD, min_jaccard,
     )
-    sa = (
-        shingle_arrays(store, id_col, text_col, n).persist()
-        if own_s
-        else _store_arrs
-    )
-    bs = ba.select(F.col(id_col).alias("bid"), F.explode("shingles").alias("s"))
-    ss = sa.select(F.col(id_col).alias("sid"), F.explode("shingles").alias("s"))
-    inter = (
-        bs.join(ss, on="s")
-        .groupBy("bid", "sid")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    bsz = ba.select(F.col(id_col).alias("bid"), F.size("shingles").cast("long").alias("bsz"))
-    ssz = sa.select(F.col(id_col).alias("sid"), F.size("shingles").cast("long").alias("ssz"))
-    out = (
-        inter.join(bsz, "bid")
-        .join(ssz, "sid")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("bsz") + F.col("ssz") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("bid", "sid", "jaccard")
-    )
-    # materialize the (candidate-bounded) pair set, then release the two
-    # cached shingle frames — same leak fix as neardup_probe (r04 ADVICE).
-    # Handed-in frames are the caller's to manage (checkpointed, not
-    # persisted here).
-    out = out.localCheckpoint(eager=True)
-    if own_b:
-        ba.unpersist()
-    if own_s:
-        sa.unpersist()
-    return out
+    return pairs.select(
+        F.col("doc_a").alias("bid"), F.col("doc_b").alias("sid"), "jaccard"
+    ).localCheckpoint(eager=True)
 
 
 def update_components(
@@ -2487,49 +2463,13 @@ def ngram_containment_pairs(
     containment pair, and the reason extraction pipelines dedup chunks
     against full documents with containment, not Jaccard).
 
-    Same inverted-shingle-index shape and cost regime as
+    Same inverted-shingle-index kernel and cost regime as
     ``ngram_jaccard_pairs`` (post-LSH or capped slices at 100 TB).
     Returns (doc_small, doc_big, common, containment): the SMALLER set is
-    the contained side; ties by id. Both directions are checked; only the
-    small-in-big containment is reported (big-in-small is bounded above
-    by it)."""
-    arrs = shingle_arrays(widen_for_fanout(df), id_col, text_col, n).persist()
-    sizes = arrs.select(F.col(id_col), F.size("shingles").cast("long").alias("sz"))
-    sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-    a = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    b = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        a.join(b, on="shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    sa = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-    smaller_first = F.col("sz_a") <= F.col("sz_b")
-    # corpus-sized size tables: probe-gated broadcast (r10, see
-    # _maybe_broadcast)
-    if _is_bounded(sizes):
-        sa, sb = F.broadcast(sa), F.broadcast(sb)
-    out = (
-        common.join(sa, on="doc_a")
-        .join(sb, on="doc_b")
-        .select(
-            F.when(smaller_first, F.col("doc_a")).otherwise(F.col("doc_b")).alias("doc_small"),
-            F.when(smaller_first, F.col("doc_b")).otherwise(F.col("doc_a")).alias("doc_big"),
-            "common",
-            (
-                F.col("common")
-                / F.when(smaller_first, F.col("sz_a")).otherwise(F.col("sz_b"))
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= min_containment)
-    )
-    # materialize the (threshold-bounded) pair set, release the shingle
-    # cache — the same persist/unpersist pairing as exact_cross_jaccard
-    out = out.localCheckpoint(eager=True)
-    arrs.unpersist()
-    return out
+    the contained side; ties by id. Only the small-in-big containment is
+    reported (big-in-small is bounded above by it)."""
+    arrs = _prepared(df, id_col, text_col, n)
+    return _index_pairs(arrs, arrs, id_col, _CONTAINMENT, min_containment)
 
 
 def ngram_containment_pairs_dense(
@@ -2540,22 +2480,17 @@ def ngram_containment_pairs_dense(
     min_containment: float = 0.8,
     max_rows: int = 200_000,
     max_vocab: int = 4096,
-    _n_docs: int | None = None,
-    _vocab_checked: bool = False,
-    _vidx: DataFrame | None = None,
-    _arrs: DataFrame | None = None,
+    _corpus: _Corpus | None = None,
 ) -> DataFrame:
     """``ngram_containment_pairs`` via dense bitset intersection — the
-    small-shingle-universe regime. Thin wrapper over
-    ``_dense_pair_blocks`` (same block BLAS decomposition, guards,
-    integral-id precondition, and rationale as
-    ``ngram_jaccard_pairs_dense``; the common-count matrix is identical,
-    only the denominator changes to ``min(|A|,|B|)``). Output contract
-    matches the inverted index (doc_small, doc_big, common, containment),
-    pytest-verified identical."""
+    small-shingle-universe regime (``_dense_pair_blocks``: the same block
+    BLAS kernel, guards and integral-id precondition as
+    ``ngram_jaccard_pairs_dense``; only the score and orientation
+    differ). Output contract matches the inverted index (doc_small,
+    doc_big, common, containment), pytest-verified identical."""
     return _dense_pair_blocks(
         df, id_col, text_col, n, min_containment, max_rows, max_vocab,
-        "containment", _n_docs, _vocab_checked, _vidx, _arrs,
+        _CONTAINMENT, _corpus,
     )
 
 
@@ -2570,25 +2505,22 @@ def ngram_containment_pairs_auto(
     _arrs: DataFrame | None = None,
 ) -> DataFrame:
     """Containment with the same regime selection as
-    ``ngram_jaccard_pairs_auto`` (shared ``_dense_admission`` probe:
-    raw-count doc probe + sample-first monotone vocab reject) picking
-    **dense** (small universe — every posting hot; the sf1 rehearsal
-    measured the inverted index at 239× the sf0.1 wall on 10× docs of a
-    ~1k-bigram universe) or **prefix** (Zipf universe at scale, any id
-    type). Probe results — including the single materialized corpus-wide
-    shingle pass (r12) — are handed to whichever strategy wins so nothing
-    re-runs them."""
-    admit, n_docs, vidx, arrs = _dense_admission(
+    ``ngram_jaccard_pairs_auto`` (shared ``_dense_admission`` probe)
+    picking **dense** (small universe — every posting hot; the sf1
+    rehearsal measured the inverted index at 239× the sf0.1 wall on 10×
+    docs of a ~1k-bigram universe) or **prefix** (Zipf universe at scale,
+    any id type). The admission's probes and its one materialized shingle
+    pass are handed to whichever strategy wins."""
+    corpus = _dense_admission(
         df, id_col, text_col, n, max_rows, max_vocab, arrs=_arrs
     )
-    if admit:
+    if corpus.admit:
         return ngram_containment_pairs_dense(
-            df, id_col, text_col, n, min_containment, max_rows,
-            max_vocab, _n_docs=n_docs, _vocab_checked=True, _vidx=vidx,
-            _arrs=arrs,
+            df, id_col, text_col, n, min_containment, max_rows, max_vocab,
+            _corpus=corpus,
         )
     return ngram_containment_pairs_prefix(
-        df, id_col, text_col, n, min_containment, _arrs=arrs
+        df, id_col, text_col, n, min_containment, _arrs=corpus.arrs
     )
 
 
@@ -2600,93 +2532,19 @@ def ngram_containment_pairs_prefix(
     min_containment: float = 0.8,
     _arrs: DataFrame | None = None,
 ) -> DataFrame:
-    """``ngram_containment_pairs`` with AllPairs/PPJoin-style prefix
-    filtering adapted to the ASYMMETRIC containment constraint — identical
+    """``ngram_containment_pairs`` with prefix filtering adapted to the
+    ASYMMETRIC containment constraint (``_prefix_pairs``): identical
     output, a fraction of the candidates (sf1 rehearsal finding: the plain
     inverted-index join ran 239× the sf0.1 wall at 10× the docs, because
     candidate pairs grow with Σ|posting|², not with output size).
 
-    Adapted prefix principle: ``C(A,B) = |A∩B| / min(|A|,|B|) ≥ t`` forces
-    the SMALLER set S to share ≥ ``ceil(t·|S|)`` elements with the other
-    side, so S must hit it within S's first ``|S| - ceil(t·|S|) + 1``
-    shingles under any global total order (else the remaining
-    ``ceil(t·|S|) - 1`` shingles cannot reach the required overlap).
-    Rarest-first ordering keeps hot posting lists out of the prefixes.
-    Because only the smaller side's prefix is guaranteed to witness the
-    pair, prefixes join against the FULL posting index (not prefix ×
-    prefix as in the symmetric Jaccard case) — still bounded: a hot
-    shingle almost never appears in any prefix, so its full posting list
-    is never enumerated quadratically. Candidates are verified exactly
-    with one ``array_intersect`` per pair; the output contract matches
-    ``ngram_containment_pairs`` (doc_small, doc_big, common, containment).
+    ``C(A,B) = |A∩B| / min(|A|,|B|) ≥ t`` forces the SMALLER set S to
+    share ≥ ``ceil(t·|S|)`` elements with the other side, so S must hit it
+    within its first ``|S| - ceil(t·|S|) + 1`` rarest shingles; those
+    prefixes join the FULL posting index (not prefix × prefix as for
+    Jaccard). Requires ``0 < min_containment <= 1``. ``_arrs`` is as for
+    ``ngram_jaccard_pairs_prefix``.
     """
-    t = float(min_containment)
-    if not 0.0 < t <= 1.0:
-        raise ValueError("prefix filtering requires 0 < min_containment <= 1")
-    # a handed ``_arrs`` (the auto router's admission pass) is already an
-    # eager checkpoint — no persist to pair with an unpersist then (r12)
-    if _arrs is None:
-        arrs = shingle_arrays(
-            widen_for_fanout(df), id_col, text_col, n
-        ).persist()
-    else:
-        arrs = _arrs
-    sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
-    wrk = Window.partitionBy(id_col).orderBy("__df", "shingle")
-    wsz = Window.partitionBy(id_col)
-    ranked = (
-        sh.join(freq, "shingle")
-        .withColumn("__rk", F.row_number().over(wrk))
-        .withColumn("__sz", F.count(F.lit(1)).over(wsz))
+    return _prefix_pairs(
+        df, id_col, text_col, n, _CONTAINMENT, min_containment, _arrs
     )
-    # -1e-9: same ceil float guard as the Jaccard prefix — overshooting
-    # the prefix is safe, undershooting breaks exactness
-    prefix = ranked.filter(
-        F.col("__rk") <= F.col("__sz") - F.ceil(F.col("__sz") * t - 1e-9) + 1
-    ).select(F.col(id_col), "shingle")
-    pp = prefix.select(F.col(id_col).alias("__dp"), "shingle")
-    ff = sh.select(F.col(id_col).alias("__df_id"), "shingle")
-    cand = (
-        pp.join(ff, "shingle")
-        .filter(F.col("__dp") != F.col("__df_id"))
-        .select(
-            F.least("__dp", "__df_id").alias("doc_a"),
-            F.greatest("__dp", "__df_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    aa = arrs.select(
-        F.col(id_col).alias("doc_a"), F.col("shingles").alias("__sh_a")
-    )
-    bb = arrs.select(
-        F.col(id_col).alias("doc_b"), F.col("shingles").alias("__sh_b")
-    )
-    smaller_first = F.size("__sh_a") <= F.size("__sh_b")
-    out = (
-        cand.join(aa, "doc_a")
-        .join(bb, "doc_b")
-        .withColumn(
-            "common", F.size(F.array_intersect("__sh_a", "__sh_b")).cast("long")
-        )
-        .select(
-            F.when(smaller_first, F.col("doc_a"))
-            .otherwise(F.col("doc_b"))
-            .alias("doc_small"),
-            F.when(smaller_first, F.col("doc_b"))
-            .otherwise(F.col("doc_a"))
-            .alias("doc_big"),
-            "common",
-            (
-                F.col("common")
-                / F.least(
-                    F.size("__sh_a").cast("long"), F.size("__sh_b").cast("long")
-                )
-            ).alias("containment"),
-        )
-        .filter(F.col("containment") >= t)
-    )
-    out = out.localCheckpoint(eager=True)
-    if _arrs is None:
-        arrs.unpersist()
-    return out

@@ -30,10 +30,6 @@ DOT = (
 NORM = "sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
 
-def with_norm(df: DataFrame, vec_col: str = "embedding", out_col: str = "norm") -> DataFrame:
-    return df.withColumn(out_col, F.expr(NORM.format(a=vec_col)))
-
-
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,

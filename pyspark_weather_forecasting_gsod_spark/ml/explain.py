@@ -2,18 +2,12 @@
 
 The reference saves the Spark XGBoost model, reloads it as a native booster,
 pulls the FULL test feature matrix to the driver with ``toPandas`` and runs
-SHAP single-process. Two changes here:
-
-  * the driver export is sample-limited (``max_rows``) — pulling an unsampled
-    100 TB feature matrix to the driver is the reference's scale bug;
-  * shap/xgboost are optional deps (absent in this container), so the SHAP
-    path is import-gated; the no-extra-deps explain path is MLlib tree
-    ``featureImportances``.
+SHAP single-process. Here shap/xgboost are optional deps, so the SHAP path is
+import-gated; the no-extra-deps explain path is MLlib tree
+``featureImportances``.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import DataFrame
 
 
 def feature_importances(model: object, feature_names: list[str]) -> list[tuple[str, float]]:
@@ -22,30 +16,6 @@ def feature_importances(model: object, feature_names: list[str]) -> list[tuple[s
     imp = model.featureImportances
     pairs = [(feature_names[i], float(imp[i])) for i in range(len(feature_names))]
     return sorted(pairs, key=lambda p: (-p[1], p[0]))
-
-
-def sampled_feature_pandas(
-    df: DataFrame, features_col: str = "features", max_rows: int = 10_000, seed: int = 42
-):
-    """Bounded driver export for explainability tooling: seeded sample →
-    hard ``limit`` → Arrow ``toPandas`` (reference pulls the full matrix,
-    ipynb:1829). The limit is the actual bound — a Bernoulli fraction has
-    binomial variance, so sample() alone routinely exceeds max_rows (r06
-    review); the fraction's 10% headroom keeps the limit from biasing
-    toward early partitions more than a seeded sample already does."""
-    n = df.count()
-    if n > max_rows:
-        # always sample when over the cap: in the window where the
-        # 1.1-inflated fraction clamps to 1.0, fall back to the exact
-        # ratio — otherwise the export degraded to a scan-order prefix
-        # with no randomness at all (r06 review)
-        frac = 1.1 * max_rows / n
-        if frac >= 1.0:
-            frac = max_rows / n
-        sampled = df.sample(fraction=frac, seed=seed)
-    else:
-        sampled = df
-    return sampled.limit(max_rows).select(features_col).toPandas()
 
 
 def shap_values(model_path: str, features_pdf) -> object:

@@ -13,7 +13,7 @@ fallback SURVEY.md §7 (risk 8) prescribes. All estimators are seeded.
 
 from __future__ import annotations
 
-from pyspark.ml.classification import GBTClassifier, RandomForestClassifier
+from pyspark.ml.classification import GBTClassifier
 from pyspark.ml.evaluation import (
     BinaryClassificationEvaluator,
     MulticlassClassificationEvaluator,
@@ -60,18 +60,10 @@ def train_gbt_classifier(
     max_iter: int = 20,
     seed: int = 42,
 ) -> object:
-    """M8 capability via MLlib GBT (RandomForest variant below — present but
-    commented out in the reference, ipynb:1666-1672)."""
+    """M8 capability via MLlib GBT (the reference's RandomForest variant is
+    commented out there, ipynb:1666-1672)."""
     return GBTClassifier(
         featuresCol=features_col, labelCol=label_col, maxIter=max_iter, seed=seed
-    ).fit(train)
-
-
-def train_random_forest_classifier(
-    train: DataFrame, label_col: str, features_col: str = "features", seed: int = 42
-) -> object:
-    return RandomForestClassifier(
-        featuresCol=features_col, labelCol=label_col, seed=seed
     ).fit(train)
 
 

@@ -2017,7 +2017,6 @@ def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..ext.dedup import (
         minhash_lsh_pairs,
         ngram_jaccard_pairs_auto,
-        ngram_jaccard_pairs_dense,
         shingle_arrays,
     )
     from ..ext.similarity import pair_recall_summary, sampled_pair_audit
@@ -2063,11 +2062,11 @@ def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
             sample_pct=_AUDIT_SAMPLE_PCT,
         )
     else:
-        # ground truth via the dense-BLAS exact join: this corpus's 2-gram
-        # universe is tiny (~900 shingles), the regime where the inverted
-        # index degenerates (every posting hot, measured 6.7× slower); the
-        # guards inside raise with the scale-path pointer on a real corpus
-        exact = ngram_jaccard_pairs_dense(
+        # exact ground truth over the shared checkpoint: this corpus's
+        # 2-gram universe is tiny (~900 shingles), so the router admits
+        # the dense-BLAS kernel, the regime where the inverted index
+        # degenerates (every posting hot, measured 6.7× slower)
+        exact = ngram_jaccard_pairs_auto(
             docs, "doc_id", "text", n=2, min_jaccard=0.5, _arrs=arrs
         )
         summary = pair_recall_summary(approx, exact, "doc_a", "doc_b")

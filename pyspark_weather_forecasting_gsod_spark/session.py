@@ -111,12 +111,18 @@ def local_rows_df(spark: SparkSession, rows, schema):
 
     ``schema`` must be an explicit DDL string or StructType: skipping
     inference also skips the sampling job createDataFrame would run.
+
+    A Spark Connect session has no ``sparkContext``; there the rows go
+    straight to ``createDataFrame``, which ships them as one local
+    relation.
     """
     if not rows:
         return spark.createDataFrame(rows, schema)
-    rdd = spark.sparkContext.parallelize(
-        rows, numSlices=max(1, -(-len(rows) // 100_000))
-    )
+    try:
+        sc = spark.sparkContext
+    except AttributeError:  # Spark Connect: JVM attributes are unsupported
+        return spark.createDataFrame(rows, schema)
+    rdd = sc.parallelize(rows, numSlices=max(1, -(-len(rows) // 100_000)))
     return spark.createDataFrame(rdd, schema)
 
 

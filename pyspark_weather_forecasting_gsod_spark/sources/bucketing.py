@@ -66,7 +66,3 @@ def write_bucketed(
         writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(table)
 
-
-def bucketed_join_ready(spark: SparkSession, table_a: str, table_b: str) -> bool:
-    """True when both tables exist in the catalog (smoke check for tests)."""
-    return spark.catalog.tableExists(table_a) and spark.catalog.tableExists(table_b)

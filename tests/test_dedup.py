@@ -257,11 +257,16 @@ def test_dense_jaccard_guards_raise(spark, sf_dir):
 
 def test_property_jaccard_strategies_match_brute_force(spark):
     """Property: on randomized small-vocab corpora, all three exact
-    strategies agree with a pure-Python brute-force Jaccard — an oracle
-    independent of every Spark expression involved."""
+    strategies agree with a pure-Python brute force — an oracle
+    independent of every Spark expression involved — for both measures:
+    Jaccard, and containment (smaller set is the contained side, ties go
+    to the lower id)."""
     from hypothesis import given, settings, strategies as st
 
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
+        ngram_containment_pairs,
+        ngram_containment_pairs_dense,
+        ngram_containment_pairs_prefix,
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_dense,
         ngram_jaccard_pairs_prefix,
@@ -281,7 +286,7 @@ def test_property_jaccard_strategies_match_brute_force(spark):
             return {" ".join(w[i : i + 2]) for i in range(len(w) - 1)}
 
         sets = {i: shingles(s) for i, s in rows if len(s.split()) >= 2}
-        want = set()
+        want, want_c = set(), set()
         for a in sets:
             for b in sets:
                 if a < b:
@@ -289,6 +294,11 @@ def test_property_jaccard_strategies_match_brute_force(spark):
                     union = len(sets[a] | sets[b])
                     if union and inter / union >= t:
                         want.add((a, b, inter, round(inter / union, 9)))
+                    small, big = (a, b) if len(sets[a]) <= len(sets[b]) else (b, a)
+                    if inter / len(sets[small]) >= t:
+                        want_c.add(
+                            (small, big, inter, round(inter / len(sets[small]), 9))
+                        )
 
         for fn in (
             ngram_jaccard_pairs,
@@ -300,6 +310,16 @@ def test_property_jaccard_strategies_match_brute_force(spark):
                 for r in fn(df, "doc_id", "text", n=2, min_jaccard=t).collect()
             }
             assert got == want, (fn.__name__, t, texts)
+        for fn in (
+            ngram_containment_pairs,
+            ngram_containment_pairs_prefix,
+            ngram_containment_pairs_dense,
+        ):
+            got = {
+                (r.doc_small, r.doc_big, r.common, round(r.containment, 9))
+                for r in fn(df, "doc_id", "text", n=2, min_containment=t).collect()
+            }
+            assert got == want_c, (fn.__name__, t, texts)
 
     check()
 
@@ -1002,10 +1022,11 @@ def test_dense_admission_probe_matches_full_decision(spark):
 
 
 def test_prefix_size_filter_identical_on_skewed_lengths(spark):
-    """r12 AllPairs length filter: on a corpus with heavy length skew
-    (full docs + truncations at 1/2, 1/4, 1/8) the size-ratio pruning
-    must change NOTHING about the output — it is a necessary condition
-    of J >= t — while the inverted index pins ground truth."""
+    """AllPairs length filter: on a corpus with heavy length skew (full
+    docs + truncations at 1/2, 1/4, 1/8) the size-ratio pruning must
+    change NOTHING about the output — it is a necessary condition of
+    J >= t — so the prefix route equals the plain inverted index, the
+    reference."""
     from pyspark.sql import Row
 
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
@@ -1033,12 +1054,7 @@ def test_prefix_size_filter_identical_on_skewed_lengths(spark):
     filtered = key(
         ngram_jaccard_pairs_prefix(docs, "doc_id", "text", n=2, min_jaccard=0.4)
     )
-    unfiltered = key(
-        ngram_jaccard_pairs_prefix(
-            docs, "doc_id", "text", n=2, min_jaccard=0.4, _size_filter=False
-        )
-    )
-    assert filtered == unfiltered == truth and truth
+    assert filtered == truth and truth
 
 
 def test_shared_arrs_handover_identical_outputs(spark):

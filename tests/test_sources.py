@@ -57,6 +57,31 @@ def test_topandas_arrow_export(spark, sf_dir):
     assert list(pdf.columns) == ["event_id", "value"]
 
 
+def test_local_rows_df_without_sparkcontext(spark):
+    """A Spark Connect session raises on ``sparkContext``; local_rows_df
+    must fall back to ``createDataFrame(rows, schema)`` instead."""
+    from pyspark.errors import PySparkAttributeError
+
+    from pyspark_weather_forecasting_gsod_spark.session import local_rows_df
+
+    class ConnectLike:
+        @property
+        def sparkContext(self):
+            raise PySparkAttributeError(
+                errorClass="JVM_ATTRIBUTE_NOT_SUPPORTED",
+                messageParameters={"attr_name": "sparkContext"},
+            )
+
+        def createDataFrame(self, data, schema):
+            assert isinstance(data, list)
+            return spark.createDataFrame(data, schema)
+
+    rows = [(0, 1), (0, 2), (1, 1)]
+    got = local_rows_df(ConnectLike(), rows, "ba int, bb int")
+    assert sorted(map(tuple, got.collect())) == rows
+    assert local_rows_df(ConnectLike(), [], "ba int, bb int").count() == 0
+
+
 def test_model_sink_and_source_roundtrip(spark, scratch):
     """S6/S7: persist a fitted model, reload, identical predictions."""
     from pyspark.ml.regression import LinearRegressionModel
