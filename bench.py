@@ -74,27 +74,26 @@ _MODULE_AST_HASHES: dict[str, str] = {}
 _MODULE_PKG_IMPORTS: dict[str, list[str]] = {}
 
 
-def _resolve_pkg_import(node, current_pkg: str) -> str | None:
-    """Map an ast.Import/ImportFrom node to an engine-package module name
-    (or None when it targets a third-party module). Relative imports
-    resolve against ``current_pkg`` (the importing module's package)."""
+def _resolve_pkg_import(node, current_pkg: str) -> list[str]:
+    """Map an ast.Import/ImportFrom node to the engine-package module
+    names it imports — every one of ``import a, b`` — and to none for
+    third-party modules or other nodes. Relative imports resolve against
+    ``current_pkg`` (the importing module's package)."""
     import ast
 
     if isinstance(node, ast.ImportFrom):
         if node.level:
             parts = current_pkg.split(".")
             if node.level > len(parts):
-                return None
+                return []
             base = ".".join(parts[: len(parts) - node.level + 1])
             mod = f"{base}.{node.module}" if node.module else base
         else:
             mod = node.module or ""
-        return mod if mod.startswith(_ENGINE_PKG) else None
+        return [mod] if mod.startswith(_ENGINE_PKG) else []
     if isinstance(node, ast.Import):
-        for alias in node.names:
-            if alias.name.startswith(_ENGINE_PKG):
-                return alias.name
-    return None
+        return [a.name for a in node.names if a.name.startswith(_ENGINE_PKG)]
+    return []
 
 
 def _module_ast_hash(modname: str) -> str:
@@ -116,9 +115,7 @@ def _module_ast_hash(modname: str) -> str:
         imports = []
         pkg = modname.rsplit(".", 1)[0] if "." in modname else modname
         for node in ast.walk(tree):
-            target = _resolve_pkg_import(node, pkg)
-            if target:
-                imports.append(target)
+            imports.extend(_resolve_pkg_import(node, pkg))
         _MODULE_PKG_IMPORTS[modname] = imports
     except Exception:
         h = "unavailable"
@@ -130,8 +127,8 @@ def _module_ast_hash(modname: str) -> str:
 def _closure_hash(fn) -> str:
     """Hash of the query function's CODE CLOSURE: the ast.dump of its own
     source plus the AST hashes of every engine-package module reachable
-    from it (imports in the function body + each module's own
-    package-internal imports, transitively).
+    from it (its defining module, imports in the function body, and each
+    module's own package-internal imports, transitively).
 
     Closes the r11 residual (OPTIMIZATION_r11.md item 12 hand-off, r11
     VERDICT #7): queries whose measured frame is localCheckpoint-rooted
@@ -152,13 +149,13 @@ def _closure_hash(fn) -> str:
         fn_tree = ast.parse(src)
     except (OSError, TypeError, SyntaxError):
         return "unavailable"
-    pkg = getattr(fn, "__module__", _ENGINE_PKG)
-    pkg = pkg.rsplit(".", 1)[0] if "." in pkg else pkg
-    seeds = []
+    own_mod = getattr(fn, "__module__", None) or _ENGINE_PKG
+    pkg = own_mod.rsplit(".", 1)[0] if "." in own_mod else own_mod
+    # the defining module seeds the closure: same-module helpers (and its
+    # module-level imports) feed the query without appearing in its body
+    seeds = [own_mod] if own_mod.startswith(_ENGINE_PKG) else []
     for node in ast.walk(fn_tree):
-        target = _resolve_pkg_import(node, pkg)
-        if target:
-            seeds.append(target)
+        seeds.extend(_resolve_pkg_import(node, pkg))
     seen: set[str] = set()
     frontier = list(seeds)
     while frontier:

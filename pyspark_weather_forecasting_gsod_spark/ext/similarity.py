@@ -6,19 +6,23 @@ North-star extension (BASELINE.json). Three tiers:
     set against the full corpus; dot products are JVM-side ``zip_with`` +
     ``aggregate`` expressions (no Python). O(|Q|·N) — the correctness
     baseline and fine whenever |Q| is bounded.
-  * ``brp_lsh_ann`` — MLlib BucketedRandomProjectionLSH approximate NN: the
-    at-scale path (hash once, bucket-join, refine) for large query sets.
+  * ``brp_lsh_ann`` — MLlib BucketedRandomProjectionLSH approximate NN
+    between a query set and the corpus (hash once, bucket-join, refine).
   * ``ivf_topk`` — inverted-file ANN: KMeans centroids (seeded), probe the
     ``nprobe`` nearest centroids only — corpus is bucketed by centroid so the
     scan touches ~nprobe/k of the data. The classic FAISS-IVF shape on
-    DataFrames.
+    DataFrames. ``build_ivfpq_index`` adds PQ codes per cell; plain PQ is
+    its one-cell case.
+
+Every exact cosine score is ``_cosine`` and every per-query cosine top-k
+is ``_rank_topk``, so all tiers share one score and one tie-break
+contract.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ..session import local_rows_df
@@ -28,6 +32,37 @@ DOT = (
     "0D, (acc, v) -> acc + v)"
 )
 NORM = "sqrt(aggregate({a}, 0D, (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+#: {a} scaled to unit length; the floor keeps a zero vector at zero
+#: instead of dividing by zero. The one-element outer ``transform`` binds
+#: the norm once per row: written inside the element lambda, Spark would
+#: re-run the interpreted norm aggregate per element, O(d²) per row.
+UNIT = (
+    f"transform(array(greatest({NORM}, 1e-30D)), "
+    f"n -> transform({{a}}, x -> CAST(x AS DOUBLE) / n))[0]"
+)
+
+
+def _cosine(a: str, b: str):
+    """``dot(a, b) / (|a|·|b|)`` over two array columns. A zero-norm side
+    gives NULL (``try_divide``), as DuckDB's ``0.0/0.0`` does, instead of
+    an ANSI divide-by-zero error; NULL ranks last under ``_rank_topk``."""
+    return F.try_divide(
+        F.expr(DOT.format(a=a, b=b)),
+        F.expr(NORM.format(a=a)) * F.expr(NORM.format(a=b)),
+    )
+
+
+def _rank_topk(pairs: DataFrame, k: int, cols: list[str]) -> DataFrame:
+    """Per-``qid`` top-``k`` of ``pairs`` by ``cos_raw``: ranked on the
+    9-dp-rounded score with ``nid`` tie-break, so results are deterministic
+    across engines and runs. Returns ``cols`` + (cosine@6dp, rk). The
+    ``row_number ≤ k`` filter plans as ``WindowGroupLimit``."""
+    w = Window.partitionBy("qid").orderBy(F.round(F.col("cos_raw"), 9).desc(), F.col("nid"))
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select(*cols, F.round("cos_raw", 6).alias("cosine"), "rk")
+    )
 
 
 def cosine_topk(
@@ -41,24 +76,17 @@ def cosine_topk(
 
     Returns (qid, nid, cosine, rk). Queries are broadcast (they must be the
     small side); ranking uses round(cosine, 9) with id tie-break so results
-    are deterministic across engines and runs.
+    are deterministic across engines and runs. A zero vector scores NULL
+    and ranks last.
     """
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"))
     c = corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("ne"))
-    dot = F.expr(DOT.format(a="qe", b="ne"))
-    nq = F.expr(NORM.format(a="qe"))
-    nn = F.expr(NORM.format(a="ne"))
     pairs = (
         c.join(F.broadcast(q))
         .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", (dot / (nq * nn)).alias("cos_raw"))
+        .select("qid", "nid", _cosine("qe", "ne").alias("cos_raw"))
     )
-    w = Window.partitionBy("qid").orderBy(F.round(F.col("cos_raw"), 9).desc(), F.col("nid"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("qid", "nid", F.round("cos_raw", 6).alias("cosine"), "rk")
-    )
+    return _rank_topk(pairs, k, ["qid", "nid"])
 
 
 def hard_negatives_topk(
@@ -96,27 +124,62 @@ def hard_negatives_topk(
         F.col(vec_col).alias("ne"),
         F.col(label_col).alias("n_label"),
     )
-    dot = F.expr(DOT.format(a="qe", b="ne"))
-    nq = F.expr(NORM.format(a="qe"))
-    nn = F.expr(NORM.format(a="ne"))
     pairs = (
         c.join(F.broadcast(q))
         .filter((F.col("qid") != F.col("nid")) & (F.col("q_label") != F.col("n_label")))
-        .select("qid", "q_label", "nid", "n_label", (dot / (nq * nn)).alias("cos_raw"))
+        .select("qid", "q_label", "nid", "n_label", _cosine("qe", "ne").alias("cos_raw"))
     )
-    w = Window.partitionBy("qid").orderBy(F.round(F.col("cos_raw"), 9).desc(), F.col("nid"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("qid", "q_label", "nid", "n_label", F.round("cos_raw", 6).alias("cosine"), "rk")
-    )
+    return _rank_topk(pairs, k, ["qid", "q_label", "nid", "n_label"])
 
 
 #: ``cosine_allpairs`` refuses corpora larger than this (driver-collect +
 #: broadcast matrix ≈ 8 B × rows × dim; 200k × 128-d ≈ 200 MB — the upper
 #: end of what a driver/executor broadcast should carry). The unbounded
-#: path is ``embedding_neardup_pairs`` (LSH bucket join, never all-pairs).
+#: exact path is ``cosine_allpairs_blocked`` (no collect).
 ALLPAIRS_MAX_ROWS = 200_000
+
+
+def _pairs_above(a_ids, A, b_ids, B, min_cosine, round_digits, ordered):
+    """The exact all-pairs kernel: one BLAS matmul of row blocks ``A`` × ``B``
+    and the ``round(cosine, 9) >= min_cosine`` decision of the SQL oracle.
+    ``ordered`` keeps only ``a_id < b_id`` (both sides hold the same rows);
+    otherwise each hit is written with the smaller id first. Ids may be any
+    numpy-comparable type (int64 or object strings)."""
+    import numpy as np
+    import pandas as pd
+
+    # a zero-norm row scores NaN, which never passes the threshold (SQL
+    # drops its NULL score the same way)
+    with np.errstate(invalid="ignore", divide="ignore"):
+        C = (A @ B.T) / (
+            np.linalg.norm(A, axis=1)[:, None] * np.linalg.norm(B, axis=1)[None, :]
+        )
+    mask = np.round(C, 9) >= min_cosine
+    if ordered:
+        mask &= a_ids[:, None] < b_ids[None, :]
+    ai, bi = np.nonzero(mask)
+    ida, idb = a_ids[ai], b_ids[bi]
+    return pd.DataFrame(
+        {
+            "id_a": np.minimum(ida, idb),
+            "id_b": np.maximum(ida, idb),
+            "cosine": np.round(C[ai, bi], round_digits),
+        }
+    )
+
+
+def _pairs_schema(corpus: DataFrame, id_col: str):
+    """(id_a, id_b, cosine) with the ids in ``id_col``'s own type."""
+    from pyspark.sql import types as T
+
+    id_type = corpus.schema[id_col].dataType
+    return T.StructType(
+        [
+            T.StructField("id_a", id_type),
+            T.StructField("id_b", id_type),
+            T.StructField("cosine", T.DoubleType()),
+        ]
+    )
 
 
 def cosine_allpairs(
@@ -133,23 +196,24 @@ def cosine_allpairs(
     INTERPRETED, not codegen'd — at |corpus|² pairs they are ~100× slower
     than this vectorized path: the corpus matrix is broadcast once
     (8 bytes × n × dim — bounded-corpus operator by definition, like any
-    exact all-pairs computation; LSH is the unbounded path) and each
-    partition computes a (batch × corpus) matmul in one BLAS call.
+    exact all-pairs computation) and each partition computes a
+    (batch × corpus) matmul in one BLAS call.
 
     Guarded: a corpus over ``max_rows`` raises ``ValueError`` instead of
-    OOMing the driver — at that size use ``embedding_neardup_pairs``
-    (LSH bucket join) and verify only its candidates exactly.
+    OOMing the driver — at that size use ``cosine_allpairs_blocked``.
 
-    Returns (id_a, id_b, cosine) with id_a < id_b, matching the
-    ``dot/(|a||b|)`` formula bit-for-bit within round_digits.
+    Returns (id_a, id_b, cosine) with id_a < id_b in the id column's own
+    type, matching the ``dot/(|a||b|)`` formula bit-for-bit within
+    round_digits. Rows with a NULL id never pair (as ``a.id < b.id`` drops
+    them in SQL).
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
+    corpus = corpus.select(id_col, vec_col).filter(F.col(id_col).isNotNull())
     # limit(n+1).count() stops the scan after max_rows+1 rows — O(max_rows)
     # even on a 100 TB corpus, unlike a full count().
-    n_probe = corpus.select(id_col).limit(max_rows + 1).count()
+    n_probe = corpus.limit(max_rows + 1).count()
     if n_probe > max_rows:
         raise ValueError(
             f"cosine_allpairs: corpus exceeds max_rows={max_rows} "
@@ -158,42 +222,20 @@ def cosine_allpairs(
             f"semantic_dedup / the IVF index family for corpora this size"
         )
 
-    rows = corpus.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    rows = corpus.collect()
+    ids = pd.Series([r[0] for r in rows]).to_numpy()
     M = np.array([list(r[1]) for r in rows], dtype=np.float64)
-    norms = np.linalg.norm(M, axis=1)
-    bc = corpus.sparkSession.sparkContext.broadcast((ids, M, norms))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+    bc = corpus.sparkSession.sparkContext.broadcast((ids, M))
 
     def gen(batches):
-        ids_b, Mb, nb = bc.value
+        ids_b, Mb = bc.value
         for pdf in batches:
-            a_ids = pdf[id_col].to_numpy(dtype=np.int64)
             A = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            na = np.linalg.norm(A, axis=1)
-            C = (A @ Mb.T) / (na[:, None] * nb[None, :])
-            # id_a < id_b plus the threshold on the 9-dp-rounded value
-            # (identical decision rule to the SQL oracle)
-            mask = (a_ids[:, None] < ids_b[None, :]) & (
-                np.round(C, 9) >= min_cosine
-            )
-            ai, bi = np.nonzero(mask)
-            yield pd.DataFrame(
-                {
-                    "id_a": a_ids[ai],
-                    "id_b": ids_b[bi],
-                    "cosine": np.round(C[ai, bi], round_digits),
-                }
+            yield _pairs_above(
+                pdf[id_col].to_numpy(), A, ids_b, Mb, min_cosine, round_digits, True
             )
 
-    return corpus.select(id_col, vec_col).mapInPandas(gen, out_schema)
+    return corpus.mapInPandas(gen, _pairs_schema(corpus, id_col))
 
 
 def embedding_neardup_pairs(
@@ -201,134 +243,53 @@ def embedding_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     min_cosine: float = 0.95,
-    bucket_length: float = 0.25,
-    num_hash_tables: int = 3,
-    method: str = "auto",
     exact_cutover_docs: int = 100_000,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: (id_a < id_b, cosine@6dp)
-    for every pair with cosine ≥ ``min_cosine``.
+    for every pair with cosine ≥ ``min_cosine``, ids in their own type.
 
-    ``method`` (r10):
-
-    * ``'exact'`` — the blocked BLAS matmul
-      (``cosine_allpairs_blocked``): exact, distributed, no collect.
-    * ``'brp'`` — MLlib BucketedRandomProjectionLSH
-      ``approxSimilarityJoin`` on normalized vectors (Euclidean threshold
-      sqrt(2 − 2·min_cosine) ⇔ the cosine bound). Seed-dependent recall.
-    * ``'auto'`` (default) — ``'exact'`` up to ``exact_cutover_docs``
-      (limit-probe); ABOVE the cutover it raises rather than silently
-      selecting a dominated regime (r11): the measurements below show
-      BRP at d ≲ 100 enumerates ~half of all |corpus|² pairs through a
-      per-pair deserializing UDF — strictly worse than the exact matmul
-      at the same pair count — so past the exact path's flops budget the
-      correct tool is ``semantic_dedup`` (KMeans-cell bucketed exact) or
-      ``build_ivf_index``/``ivf_search``, and the raise says so. The
-      ``'brp'`` leg stays reachable by explicit name for its
-      recall-gated ANN coverage.
-
-    Id contract (r11): the exact route delegates to
-    ``cosine_allpairs_blocked``, which casts ``id_col`` to ``long`` —
-    non-integral ids (e.g. strings) would silently become NULL and
-    collapse the output. ``'auto'`` therefore routes non-integral-id
-    frames to ``'brp'`` (which preserves arbitrary id types, matching
-    pre-r10 behavior), and an explicit ``method='exact'`` with a
-    non-integral id column raises.
-
-    Routing rationale — measured, r10: Spark's BRP is ONE random
-    projection per table with OR-amplification only, and a unit vector's
-    projection spread is 1/√d (0.125 at d=64), so equal-width buckets
-    cannot cut the central mass: ``brp_bucket_occupancy`` measures
-    collision_frac ≈ 0.48 PER TABLE at the calibrated 0.25 geometry —
-    the join enumerates ~half of all |corpus|² candidate pairs, each
-    paying a per-pair UDF distance with two VectorUDT deserializations
-    (jstack-confirmed hot path). At the sf1 rehearsal's 20k vectors
-    that is ~1900 s, while the exact blocked matmul computes ALL pairs
-    in 2.8 s — BLAS flops are ~600× cheaper than per-pair UDF calls at
-    equal pair counts, so at d ≲ 100 the "approximate" path is strictly
-    dominated at any corpus size where either is feasible. (The r09
-    bucketLength recalibration — 0.5 ≈ 4σ put the whole corpus in ONE
-    bucket — fixed a silent degeneracy but cannot fix the ~0.5 per-table
-    collision floor; sweep: 0.125/4 → recall 0.823, 0.25/3 → 0.934.)
-    At corpora past the exact path's quadratic-flops budget, neither
-    regime here is the answer: use ``semantic_dedup`` (KMeans-cell
-    bucketed exact) or the IVF index family — cell joins are the
-    embedding analogue of MinHash banding, with measured sf1 walls of
-    23.6 s / 10.8 s."""
-    import math
-
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-    from pyspark.ml.linalg import VectorUDT  # noqa: F401  (documents the type)
-
-    if method not in ("auto", "exact", "brp"):
-        raise ValueError("embedding_neardup_pairs: method must be auto|exact|brp")
-    id_integral = isinstance(
-        df.schema[id_col].dataType,
-        (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
-    )
-    if method == "exact" and not id_integral:
-        raise TypeError(
-            f"embedding_neardup_pairs(method='exact'): id column {id_col!r} "
-            f"is {df.schema[id_col].dataType.simpleString()}, but the exact "
-            f"block-matmul path casts ids to long — non-integral ids would "
-            f"silently become NULL. Use an integral id, or method='brp' "
-            f"(preserves arbitrary id types)."
+    Up to ``exact_cutover_docs`` vectors (limit-probe) this is the exact
+    blocked BLAS matmul (``cosine_allpairs_blocked``): distributed, no
+    collect. Above the cutover it raises: the exact path's work is
+    quadratic, and Spark's BRP-LSH is no way out — one random projection
+    per table leaves ~0.48 of all pairs colliding per table at d=64
+    (``brp_bucket_occupancy``), so its self-join enumerates about half of
+    all pairs through a per-pair UDF (~1900 s against 2.8 s for the exact
+    matmul at 20k vectors). Corpora that size belong to ``semantic_dedup``
+    (KMeans-cell bucketed exact) or ``build_ivf_index``/``ivf_search``."""
+    probed = df.select(id_col).limit(exact_cutover_docs + 1).count()
+    if probed > exact_cutover_docs:
+        raise ValueError(
+            f"embedding_neardup_pairs: corpus exceeds "
+            f"exact_cutover_docs={exact_cutover_docs}, past the exact "
+            f"all-pairs flops budget. For corpora this size use "
+            f"semantic_dedup (KMeans-cell bucketed exact near-dup) or "
+            f"build_ivf_index/ivf_search (partition-pruned ANN)."
         )
-    if method == "auto":
-        if not id_integral:
-            # pre-r10 behavior for arbitrary id types: the BRP leg carries
-            # ids through untouched. Documented in the id contract above.
-            method = "brp"
-        else:
-            probed = df.select(id_col).limit(exact_cutover_docs + 1).count()
-            if probed > exact_cutover_docs:
-                # Guard doctrine (cf. ngram_jaccard_pairs max_docs raise,
-                # semantic_dedup giant-cell raise): above the exact flops
-                # budget, silently routing to BRP would enumerate ~half of
-                # all |corpus|^2 pairs through a per-pair deserializing UDF
-                # (collision_frac ~= 0.48/table at d=64, measured by
-                # brp_bucket_occupancy) — a 100x-scale-up killer, not an
-                # approximation. Refuse and point at the scale paths.
-                raise ValueError(
-                    f"embedding_neardup_pairs(method='auto'): corpus exceeds "
-                    f"exact_cutover_docs={exact_cutover_docs} and Spark's BRP "
-                    f"LSH is structurally non-pruning at this dimensionality "
-                    f"(collision_frac ~0.48 per table at d=64 — see "
-                    f"brp_bucket_occupancy). For corpora this size use "
-                    f"semantic_dedup (KMeans-cell bucketed exact near-dup) or "
-                    f"build_ivf_index/ivf_search (partition-pruned ANN); pass "
-                    f"method='brp' explicitly only if you accept the "
-                    f"near-quadratic candidate join."
-                )
-            method = "exact"
-    if method == "exact":
-        return cosine_allpairs_blocked(
-            df, min_cosine, id_col=id_col, vec_col=vec_col
-        ).select("id_a", "id_b", "cosine")
+    return cosine_allpairs_blocked(df, min_cosine, id_col=id_col, vec_col=vec_col)
 
-    unit = F.expr(
-        f"transform({vec_col}, x -> CAST(x AS DOUBLE) / ({NORM.format(a=vec_col)}))"
+
+def _unit_features(df: DataFrame, id_col: str, vec_col: str, id_alias: str) -> DataFrame:
+    """(id_alias, features): ``vec_col`` as a unit-length ml Vector, the BRP
+    input — Euclidean distance between unit vectors orders by cosine."""
+    from pyspark.ml.functions import array_to_vector
+
+    return df.select(
+        F.col(id_col).alias(id_alias),
+        array_to_vector(F.expr(UNIT.format(a=vec_col))).alias("features"),
     )
-    feat = df.select(F.col(id_col), array_to_vector(unit).alias("features"))
-    lsh = BucketedRandomProjectionLSH(
+
+
+def _brp_model(feat: DataFrame, bucket_length: float, num_hash_tables: int, seed: int = 42):
+    from pyspark.ml.feature import BucketedRandomProjectionLSH
+
+    return BucketedRandomProjectionLSH(
         inputCol="features",
         outputCol="hashes",
         bucketLength=bucket_length,
         numHashTables=num_hash_tables,
-        seed=42,
-    )
-    model = lsh.fit(feat)
-    thresh = math.sqrt(max(2.0 - 2.0 * min_cosine, 0.0))
-    joined = model.approxSimilarityJoin(feat, feat, thresh, distCol="dist")
-    return (
-        joined.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.round(1.0 - F.col("dist") * F.col("dist") / 2.0, 6).alias("cosine"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
+        seed=seed,
+    ).fit(feat)
 
 
 def brp_bucket_occupancy(
@@ -345,33 +306,21 @@ def brp_bucket_occupancy(
     ``collision_frac`` (Σ(cᵢ/N)² — the fraction of all vector pairs the
     in-bucket candidate join would enumerate in that table).
 
-    Exists because the r09 degeneracy was SILENT: ``bucketLength=0.5``
-    (~4σ of a unit vector's 1/√d projection spread) collapsed every table
-    to essentially one bucket, which made ``approxSimilarityJoin`` an
-    in-bucket cross join — recall looked perfect at gate scale precisely
-    because the join was exhaustive, and nothing structural failed until
-    the sf1 rehearsal measured 1711 s. This surface makes the degeneracy
-    class a loud, assertable property (see
-    ``test_brp_bucket_occupancy_guards_geometry``): a healthy geometry
-    keeps ``n_buckets`` well above 1 and ``collision_frac`` ≪ 1 per
-    table. Cost: one LSH fit + transform + two bounded aggs — run it at a
-    gate SF whenever the geometry, seed, or embedding dimension changes."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector, vector_to_array
+    A degenerate geometry is SILENT otherwise: a ``bucketLength`` near 4σ
+    of a unit vector's 1/√d projection spread (0.5 at d=64) collapses every
+    table to essentially one bucket, which makes ``approxSimilarityJoin``
+    an in-bucket cross join — recall looks perfect precisely because the
+    join is exhaustive. This surface makes that a loud, assertable
+    property (see ``test_brp_bucket_occupancy_guards_geometry``, which
+    guards ``brp_lsh_ann``'s geometry): a healthy geometry keeps
+    ``n_buckets`` well above 1 and ``collision_frac`` ≪ 1 per table.
+    Cost: one LSH fit + transform + two bounded aggs — run it at a gate SF
+    whenever the geometry, seed, or embedding dimension changes."""
+    from pyspark.ml.functions import vector_to_array
 
-    unit = F.expr(
-        f"transform({vec_col}, x -> CAST(x AS DOUBLE) / ({NORM.format(a=vec_col)}))"
-    )
-    feat = df.select(F.col(id_col), array_to_vector(unit).alias("features"))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    )
+    feat = _unit_features(df, id_col, vec_col, id_col)
     buckets = (
-        lsh.fit(feat)
+        _brp_model(feat, bucket_length, num_hash_tables, seed)
         .transform(feat)
         .select(F.posexplode("hashes").alias("tbl", "h"))
         .select("tbl", vector_to_array(F.col("h"))[0].alias("bucket"))
@@ -401,37 +350,22 @@ def brp_lsh_ann(
     """Approximate NN via BucketedRandomProjectionLSH approxSimilarityJoin
     between the query set and corpus (normalized → cosine ordering).
 
-    Bucket geometry follows the ``embedding_neardup_pairs`` r09
-    calibration (projection std ≈ 1/√d for unit vectors): 0.25-wide
-    buckets with 6 OR-tables measure recall 0.980 avg / 0.800 min at the
-    sf0.01 gate — identical to the old 0.5/4 (which put most of the
-    corpus in one bucket per table, hiding the join's selectivity) —
-    while keeping per-table buckets cluster-sized so the candidate join
-    stays output-proportional on dense corpora."""
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    unit = F.expr(
-        f"transform({vec_col}, x -> CAST(x AS DOUBLE) / ({NORM.format(a=vec_col)}))"
-    )
-    feat_c = corpus.select(F.col(id_col).alias("nid"), array_to_vector(unit).alias("features"))
-    feat_q = queries.select(F.col(id_col).alias("qid"), array_to_vector(unit).alias("features"))
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features", outputCol="hashes", bucketLength=0.25, numHashTables=6, seed=42
-    )
-    model = lsh.fit(feat_c)
+    Bucket geometry is calibrated to the projection spread of unit
+    vectors (std ≈ 1/√d): 0.25-wide buckets with 6 OR-tables measure
+    recall 0.980 avg / 0.800 min at the sf0.01 gate while keeping
+    per-table buckets cluster-sized, so the candidate join stays
+    output-proportional on dense corpora."""
+    feat_c = _unit_features(corpus, id_col, vec_col, "nid")
+    feat_q = _unit_features(queries, id_col, vec_col, "qid")
+    model = _brp_model(feat_c, 0.25, 6)
     joined = model.approxSimilarityJoin(feat_q, feat_c, 2.0, distCol="dist")
+    # unit vectors: |a − b|² = 2 − 2·cos(a, b)
     pairs = joined.select(
         F.col("datasetA.qid").alias("qid"),
         F.col("datasetB.nid").alias("nid"),
-        F.col("dist"),
+        (1.0 - F.col("dist") * F.col("dist") / 2.0).alias("cos_raw"),
     ).filter(F.col("qid") != F.col("nid"))
-    w = Window.partitionBy("qid").orderBy(F.col("dist").asc(), F.col("nid"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("qid", "nid", F.round(1.0 - F.col("dist") * F.col("dist") / 2.0, 6).alias("cosine"), "rk")
-    )
+    return _rank_topk(pairs, k, ["qid", "nid"])
 
 
 def build_ivf_index(
@@ -508,10 +442,9 @@ def ivf_search(
     """
     centers_df = spark.read.parquet(f"{index_dir}/centroids")
     q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"))
-    qc = q.join(F.broadcast(centers_df))
-    cdot = F.expr(DOT.format(a="qe", b="cvec"))
-    cnq, cnc = F.expr(NORM.format(a="qe")), F.expr(NORM.format(a="cvec"))
-    qc = qc.select("qid", "qe", "centroid", (cdot / (cnq * cnc)).alias("ccos"))
+    qc = q.join(F.broadcast(centers_df)).select(
+        "qid", "qe", "centroid", _cosine("qe", "cvec").alias("ccos")
+    )
     wq = Window.partitionBy("qid").orderBy(F.col("ccos").desc(), F.col("centroid"))
     probes = qc.withColumn("prk", F.row_number().over(wq)).filter(F.col("prk") <= nprobe)
 
@@ -522,16 +455,12 @@ def ivf_search(
         F.col("centroid").isin(probed_cells)
     )
 
-    pairs = probes.join(assigned, on="centroid").filter(F.col("qid") != F.col("nid"))
-    dot = F.expr(DOT.format(a="qe", b="ne"))
-    nq, nn = F.expr(NORM.format(a="qe")), F.expr(NORM.format(a="ne"))
-    scored = pairs.select("qid", "nid", (dot / (nq * nn)).alias("cos_raw"))
-    w = Window.partitionBy("qid").orderBy(F.round(F.col("cos_raw"), 9).desc(), F.col("nid"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("qid", "nid", F.round("cos_raw", 6).alias("cosine"), "rk")
+    pairs = (
+        probes.join(assigned, on="centroid")
+        .filter(F.col("qid") != F.col("nid"))
+        .select("qid", "nid", _cosine("qe", "ne").alias("cos_raw"))
     )
+    return _rank_topk(pairs, k, ["qid", "nid"])
 
 
 def ivf_topk(
@@ -596,15 +525,9 @@ def hard_negatives_ann(
         cand.join(F.broadcast(q_lab), "qid")
         .join(n_lab, "nid")
         .filter(F.col("q_label") != F.col("n_label"))
+        .withColumnRenamed("cosine", "cos_raw")
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.round(F.col("cosine"), 9).desc(), F.col("nid")
-    )
-    return (
-        filt.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("qid", "q_label", "nid", "n_label", "cosine", "rk")
-    )
+    return _rank_topk(filt, k, ["qid", "q_label", "nid", "n_label"])
 
 
 def sampled_pair_audit(
@@ -945,32 +868,29 @@ def cosine_allpairs_blocked(
     shuffle volume is O(N·B) while per-task memory is O((N/B)·dim) —
     pick ``n_blocks`` ≈ corpus_bytes / executor_budget and the operator
     scales to corpora that could never be broadcast. The quadratic
-    compute is inherent to EXACT all-pairs (use the LSH path
-    ``embedding_neardup_pairs`` when approximate recall is acceptable);
-    this shape just makes it embarrassingly parallel: B²/2 independent
-    matmul tasks, no task ever sees more than two blocks.
+    compute is inherent to EXACT all-pairs (``semantic_dedup`` and the
+    IVF family are the approximate, cell-bucketed paths); this shape just
+    makes it embarrassingly parallel: B²/2 independent matmul tasks, no
+    task ever sees more than two blocks.
 
-    Decision rule (round to 9 dp, then compare) and output schema
-    (id_a < id_b, cosine rounded to ``round_digits``) are bit-identical
-    to ``cosine_allpairs`` and its SQL oracle.
+    Decision rule (round to 9 dp, then compare), output schema (id_a <
+    id_b in the id column's own type, cosine rounded to
+    ``round_digits``) and NULL-id handling are identical to
+    ``cosine_allpairs`` and its SQL oracle.
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     spark = corpus.sparkSession
     block_pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
 
-    # one lineage, role-tagged self-UNION (r11, same restructuring as
-    # ext.dedup._dense_pair_blocks): the old per-side fresh lineage
-    # re-executed the corpus subtree per cogroup side (expensive when the
-    # caller passes a derived frame, e.g. a sampled audit slice), and the
-    # two-sided cogroup needed two grouped exchanges where the union
-    # needs one; the block function splits roles per block pair
-    tagged = corpus.select(
-        F.col(id_col).cast("long").alias("id"), F.col(vec_col).alias("vec")
-    ).withColumn(
-        "blk", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int")
+    # one lineage, role-tagged self-UNION (same shape as
+    # ext.dedup._dense_pair_blocks): the corpus subtree runs once and the
+    # union needs one grouped exchange; the block function splits roles
+    tagged = (
+        corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
+        .filter(F.col("id").isNotNull())
+        .withColumn("blk", F.pmod(F.xxhash64(F.col("id")), F.lit(n_blocks)).cast("int"))
     )
     # one-slice local frame (see session.local_rows_df)
     pair_df = local_rows_df(spark, block_pairs, "ba int, bb int")
@@ -981,40 +901,24 @@ def cosine_allpairs_blocked(
         F.broadcast(pair_df), F.col("blk") == F.col("bb")
     ).select("ba", "bb", F.lit(1).alias("role"), "id", "vec")
     both = a_side.unionByName(b_side)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", T.LongType()),
-            T.StructField("id_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
+    out_schema = _pairs_schema(corpus, id_col)
 
     def block_matmul(key, pdf):
         ba, bb = key
         a_pdf = pdf[pdf["role"] == 0]
         b_pdf = pdf[pdf["role"] == 1]
         if a_pdf.empty or b_pdf.empty:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
-            )
-        a_ids = a_pdf["id"].to_numpy(dtype=np.int64)
-        b_ids = b_pdf["id"].to_numpy(dtype=np.int64)
-        A = np.array(a_pdf["vec"].tolist(), dtype=np.float64)
-        B = np.array(b_pdf["vec"].tolist(), dtype=np.float64)
-        C = (A @ B.T) / (
-            np.linalg.norm(A, axis=1)[:, None] * np.linalg.norm(B, axis=1)[None, :]
-        )
+            return pd.DataFrame(columns=out_schema.names)
         # within-block pairs would otherwise appear twice (and self-pairs
         # once); id ordering picks each unordered pair exactly once
-        mask = np.round(C, 9) >= min_cosine
-        if ba == bb:
-            mask &= a_ids[:, None] < b_ids[None, :]
-        ai, bi = np.nonzero(mask)
-        ida, idb = a_ids[ai], b_ids[bi]
-        lo, hi = np.minimum(ida, idb), np.maximum(ida, idb)
-        return pd.DataFrame(
-            {"id_a": lo, "id_b": hi, "cosine": np.round(C[ai, bi], round_digits)}
+        return _pairs_above(
+            a_pdf["id"].to_numpy(),
+            np.array(a_pdf["vec"].tolist(), dtype=np.float64),
+            b_pdf["id"].to_numpy(),
+            np.array(b_pdf["vec"].tolist(), dtype=np.float64),
+            min_cosine,
+            round_digits,
+            ba == bb,
         )
 
     return both.groupBy("ba", "bb").applyInPandas(block_matmul, out_schema)
@@ -1159,10 +1063,19 @@ def pca_project(
 # sub-space codes (m bytes at k≤256) instead of d floats, scored against a
 # per-query lookup table (asymmetric distance computation, Jégou et al.
 # 2011, "Product Quantization for Nearest Neighbor Search" — public paper).
+#
+# IVF-PQ is the production composition (FAISS IndexIVFPQ): the inner
+# product decomposes exactly, <q, x> = <q, centroid> + <q, residual>, so
+# ADC scores the residual codes and adds the cell bias. Plain PQ is its
+# one-cell case: a single zero centroid makes the residual the vector
+# itself and the bias 0, so both share one trainer, encoder and scorer.
 # ---------------------------------------------------------------------------
 
+#: Lloyd iterations per PQ sub-space codebook
+_PQ_ITERS = 10
 
-def _pq_kmeans(x, k: int, seed: int, iters: int):
+
+def _pq_kmeans(x, k: int, seed: int):
     """Deterministic Lloyd k-means for one PQ sub-space, run on the
     driver over a BOUNDED training sample (the FAISS practice: codebooks
     train on a sample, never the corpus). Seeded init, fixed iteration
@@ -1172,7 +1085,7 @@ def _pq_kmeans(x, k: int, seed: int, iters: int):
 
     rng = np.random.RandomState(seed)
     cent = x[rng.choice(len(x), size=k, replace=len(x) < k)].copy()
-    for _ in range(iters):
+    for _ in range(_PQ_ITERS):
         d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
         assign = d2.argmin(axis=1)
         for c in range(k):
@@ -1182,188 +1095,20 @@ def _pq_kmeans(x, k: int, seed: int, iters: int):
     return cent
 
 
-def build_pq_index(
+def _build_ivfpq(
     corpus: DataFrame,
     index_dir: str,
-    m: int = 16,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    train_rows: int = 2048,
-    iters: int = 10,
+    n_centroids: int | None,
+    m: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    seed: int,
+    train_rows: int,
 ) -> None:
-    """Build a persistent PQ index:
-
-    * ``{index_dir}/codebooks`` — m·k rows (subspace, code, cvec), trained
-      by driver-side Lloyd over a deterministic bounded sample
-      (``ORDER BY id LIMIT train_rows`` — sample size is a config constant,
-      never corpus-sized; same legitimacy class as ``pca_fit``'s d²
-      collect);
-    * ``{index_dir}/codes`` — one (nid, codes array<m tinyint-range ints>)
-      row per corpus vector, encoded DISTRIBUTED via an Arrow
-      ``mapInPandas`` pass (vectorized argmin per sub-space).
-
-    Vectors are L2-normalized before coding so ADC inner products rank by
-    cosine. At 100 TB the corpus pass happens once; the scan a query pays
-    afterward is m small ints per vector — a 16× I/O reduction at d=64.
-    """
-    import numpy as np
-    import pandas as pd
-
-    d_probe = len(
-        corpus.select(F.col(vec_col).alias("e")).first()["e"]
-    )
-    if d_probe % m:
-        raise ValueError(f"m={m} must divide embedding dim {d_probe}")
-    dsub = d_probe // m
-
-    sample = np.array(
-        corpus.select(F.col(vec_col).alias("e"))
-        .orderBy(F.col(id_col))
-        .limit(train_rows)
-        .toPandas()["e"]
-        .tolist(),
-        dtype=np.float64,
-    )
-    norms = np.linalg.norm(sample, axis=1, keepdims=True)
-    sample = sample / np.where(norms == 0, 1.0, norms)
-    books = np.stack(
-        [
-            _pq_kmeans(sample[:, j * dsub : (j + 1) * dsub], k, seed + j, iters)
-            for j in range(m)
-        ]
-    )  # (m, k, dsub)
-
-    spark = corpus.sparkSession
-    rows = [
-        (j, c, [float(x) for x in books[j, c]])
-        for j in range(m)
-        for c in range(k)
-    ]
-    local_rows_df(
-        spark, rows, "subspace bigint, code bigint, cvec array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/codebooks")
-
-    def encode(batches):
-        for pdf in batches:
-            x = np.array(pdf["e"].tolist(), dtype=np.float64)
-            n = np.linalg.norm(x, axis=1, keepdims=True)
-            x = x / np.where(n == 0, 1.0, n)
-            codes = np.empty((len(x), m), dtype=np.int32)
-            for j in range(m):
-                xj = x[:, j * dsub : (j + 1) * dsub]
-                d2 = (
-                    (xj**2).sum(axis=1, keepdims=True)
-                    - 2.0 * xj @ books[j].T
-                    + (books[j] ** 2).sum(axis=1)[None, :]
-                )
-                codes[:, j] = d2.argmin(axis=1)
-            yield pd.DataFrame(
-                {"nid": pdf["nid"], "codes": [list(map(int, c)) for c in codes]}
-            )
-
-    corpus.select(
-        F.col(id_col).alias("nid"), F.col(vec_col).alias("e")
-    ).mapInPandas(encode, "nid long, codes array<int>").write.mode(
-        "overwrite"
-    ).parquet(f"{index_dir}/codes")
-
-
-def pq_search(
-    spark,
-    index_dir: str,
-    queries: DataFrame,
-    topk: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ADC search over a PQ index built by ``build_pq_index``: each query
-    precomputes an m×k table of sub-space inner products against the
-    codebooks (bounded: |query batch| × m × k floats, broadcast in the
-    task closure), then every corpus CODE row scores as m table lookups —
-    no float vectors are ever read at search time.
-
-    Per-partition pre-top-k inside the Arrow pass (the map-side-combine
-    shape) means the exchange carries ≤ partitions × |queries| × topk
-    candidate rows, never corpus-sized traffic; one window rank finishes
-    the global top-k. Returns (qid, nid, score_adc, rank)."""
-    import numpy as np
-    import pandas as pd
-
-    books_rows = spark.read.parquet(f"{index_dir}/codebooks").collect()
-    m = max(r["subspace"] for r in books_rows) + 1
-    k = max(r["code"] for r in books_rows) + 1
-    dsub = len(books_rows[0]["cvec"])
-    books = np.zeros((m, k, dsub))
-    for r in books_rows:
-        books[r["subspace"], r["code"]] = r["cvec"]
-
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("qe")
-    ).collect()  # bounded query batch, same contract as cosine_topk
-    qids = [r["qid"] for r in q_rows]
-    qv = np.array([r["qe"] for r in q_rows], dtype=np.float64)
-    qn = np.linalg.norm(qv, axis=1, keepdims=True)
-    qv = qv / np.where(qn == 0, 1.0, qn)
-    # tables[q, j, c] = <q_j, codebook[j][c]>
-    tables = np.einsum("qjd,jkd->qjk", qv.reshape(len(qv), m, dsub), books)
-
-    def score(batches):
-        jj = np.arange(m)
-        for pdf in batches:
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (B, m)
-            nids = pdf["nid"].to_numpy()
-            out_q, out_n, out_s = [], [], []
-            for qi, qid in enumerate(qids):
-                s = tables[qi][jj[None, :], codes].sum(axis=1)  # (B,)
-                keep = np.argsort(-s)[:topk]
-                out_q.extend([qid] * len(keep))
-                out_n.extend(nids[keep])
-                out_s.extend(s[keep])
-            yield pd.DataFrame({"qid": out_q, "nid": out_n, "score_adc": out_s})
-
-    partials = (
-        spark.read.parquet(f"{index_dir}/codes")
-        .mapInPandas(score, "qid long, nid long, score_adc double")
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("score_adc").desc(), F.col("nid"))
-    return (
-        partials.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-    )
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ: the production ANN composition (FAISS IndexIVFPQ) — IVF prunes
-# WHICH cells a probe reads, PQ shrinks what each vector in them COSTS,
-# and the inner product decomposes exactly: <q, x> = <q, centroid> +
-# <q, residual>, so ADC scores the residual codes and adds the cell bias.
-# ---------------------------------------------------------------------------
-
-
-def build_ivfpq_index(
-    corpus: DataFrame,
-    index_dir: str,
-    n_centroids: int = 16,
-    m: int = 16,
-    k: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    train_rows: int = 2048,
-) -> None:
-    """Build a persistent IVF-PQ index: seeded coarse KMeans over the
-    L2-NORMALIZED corpus (one distributed fit), PQ codebooks trained on a
-    bounded sample of RESIDUALS (vector − its centroid; driver Lloyd, the
-    FAISS practice), then one distributed Arrow pass encodes every
-    residual to m small ints and writes
-
-      * ``{index_dir}/centroids`` — n_centroids (centroid, cvec) rows,
-      * ``{index_dir}/codes`` — (nid, codes) parquet PARTITIONED BY
-        centroid, so a probe scan is partition-pruned AND reads m bytes
-        per vector instead of d floats — both scale levers at once.
-    """
+    """Shared body of ``build_ivfpq_index`` and ``build_pq_index``;
+    ``n_centroids=None`` writes the single zero centroid of plain PQ and
+    fits no KMeans."""
     import numpy as np
     import pandas as pd
     from pyspark.ml.clustering import KMeans
@@ -1374,32 +1119,26 @@ def build_ivfpq_index(
         raise ValueError(f"m={m} must divide embedding dim {d_probe}")
     dsub = d_probe // m
 
-    norm_expr = (
-        f"transform({vec_col}, x -> CAST(x AS DOUBLE) / "
-        f"greatest({NORM.format(a=vec_col)}, 1e-30D))"
-    )
     feat = corpus.select(
-        F.col(id_col).alias("nid"),
-        F.expr(norm_expr).alias("ne"),
-    ).withColumn("features", array_to_vector("ne"))
-    km = KMeans(
-        k=n_centroids, seed=seed, maxIter=5,
-        featuresCol="features", predictionCol="centroid",
+        F.col(id_col).alias("nid"), F.expr(UNIT.format(a=vec_col)).alias("ne")
     )
-    model = km.fit(feat)
-    centers = np.array([list(c) for c in model.clusterCenters()])
-    assigned = model.transform(feat).select("nid", "ne", "centroid")
+    if n_centroids is None:
+        centers = np.zeros((1, d_probe))
+        assigned = feat.withColumn("centroid", F.lit(0))
+    else:
+        feat = feat.withColumn("features", array_to_vector("ne"))
+        model = KMeans(
+            k=n_centroids, seed=seed, maxIter=5,
+            featuresCol="features", predictionCol="centroid",
+        ).fit(feat)
+        centers = np.array([list(c) for c in model.clusterCenters()])
+        assigned = model.transform(feat).select("nid", "ne", "centroid")
 
-    sample = assigned.orderBy("nid").limit(train_rows).collect()
-    res = np.array(
-        [np.array(r["ne"]) - centers[r["centroid"]] for r in sample]
-    )
+    sample = assigned.orderBy("nid").limit(train_rows).select("ne", "centroid").toPandas()
+    res = np.array(sample["ne"].tolist()) - centers[sample["centroid"].to_numpy()]
     books = np.stack(
-        [
-            _pq_kmeans(res[:, j * dsub : (j + 1) * dsub], k, seed + j, 10)
-            for j in range(m)
-        ]
-    )
+        [_pq_kmeans(res[:, j * dsub : (j + 1) * dsub], k, seed + j) for j in range(m)]
+    )  # (m, k, dsub)
 
     spark = corpus.sparkSession
     local_rows_df(
@@ -1446,6 +1185,82 @@ def build_ivfpq_index(
     )
 
 
+def build_pq_index(
+    corpus: DataFrame,
+    index_dir: str,
+    m: int = 16,
+    k: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+    train_rows: int = 2048,
+) -> None:
+    """Build a persistent PQ index — the one-cell IVF-PQ index (one zero
+    centroid, no KMeans fit):
+
+    * ``{index_dir}/codebooks`` — m·k rows (subspace, code, cvec), trained
+      by driver-side Lloyd over a deterministic bounded sample
+      (``ORDER BY id LIMIT train_rows`` — sample size is a config constant,
+      never corpus-sized; same legitimacy class as ``pca_fit``'s d²
+      collect);
+    * ``{index_dir}/codes`` — one (nid, codes array<m small ints>) row per
+      corpus vector, encoded DISTRIBUTED via an Arrow ``mapInPandas`` pass
+      (vectorized argmin per sub-space), under the single ``centroid=0``
+      partition;
+    * ``{index_dir}/centroids`` — the one zero centroid.
+
+    Vectors are L2-normalized before coding so ADC inner products rank by
+    cosine. At 100 TB the corpus pass happens once; the scan a query pays
+    afterward is m small ints per vector — a 16× I/O reduction at d=64.
+    """
+    _build_ivfpq(corpus, index_dir, None, m, k, id_col, vec_col, seed, train_rows)
+
+
+def pq_search(
+    spark,
+    index_dir: str,
+    queries: DataFrame,
+    topk: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """ADC search over a PQ index built by ``build_pq_index``: the
+    one-cell ``ivfpq_search`` (``nprobe=1``, cell bias 0). Each query
+    precomputes an m×k table of sub-space inner products against the
+    codebooks, then every corpus CODE row scores as m table lookups — no
+    float vectors are ever read at search time. Returns
+    (qid, nid, score_adc, rank)."""
+    return ivfpq_search(spark, index_dir, queries, topk, 1, id_col, vec_col)
+
+
+def build_ivfpq_index(
+    corpus: DataFrame,
+    index_dir: str,
+    n_centroids: int = 16,
+    m: int = 16,
+    k: int = 16,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    seed: int = 42,
+    train_rows: int = 2048,
+) -> None:
+    """Build a persistent IVF-PQ index: seeded coarse KMeans over the
+    L2-NORMALIZED corpus (one distributed fit), PQ codebooks trained on a
+    bounded sample of RESIDUALS (vector − its centroid; driver Lloyd, the
+    FAISS practice), then one distributed Arrow pass encodes every
+    residual to m small ints and writes
+
+      * ``{index_dir}/centroids`` — n_centroids (centroid, cvec) rows,
+      * ``{index_dir}/codebooks`` — m·k (subspace, code, cvec) rows,
+      * ``{index_dir}/codes`` — (nid, codes) parquet PARTITIONED BY
+        centroid, so a probe scan is partition-pruned AND reads m bytes
+        per vector instead of d floats — both scale levers at once.
+    """
+    _build_ivfpq(
+        corpus, index_dir, n_centroids, m, k, id_col, vec_col, seed, train_rows
+    )
+
+
 def ivfpq_search(
     spark,
     index_dir: str,
@@ -1461,8 +1276,9 @@ def ivfpq_search(
     filter on the codes scan — which then costs m bytes per vector. ADC
     scores ``<q, x> ≈ <q, centroid> + Σ_j table[j, code_j]`` (the inner
     product decomposes exactly over the residual; only the residual is
-    quantized) with per-partition pre-top-k. Returns
-    (qid, nid, score_adc, rank)."""
+    quantized) with per-partition pre-top-k, so the exchange carries
+    ≤ partitions × |queries| × topk candidate rows; one window rank
+    finishes the global top-k. Returns (qid, nid, score_adc, rank)."""
     import numpy as np
     import pandas as pd
 
@@ -1489,6 +1305,7 @@ def ivfpq_search(
     cell_scores = qv @ centers.T  # (Q, n_cent): the <q, centroid> bias
     probe_cells = np.argsort(-cell_scores, axis=1)[:, :nprobe]
     probed = sorted({int(c) for row in probe_cells for c in row})
+    # tables[q, j, c] = <q_j, codebook[j][c]>
     tables = np.einsum("qjd,jkd->qjk", qv.reshape(len(qv), m, dsub), books)
 
     def score(batches):

@@ -2388,21 +2388,15 @@ def hard_negatives_ann_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return approx.join(topk_recall(approx, exact), "qid")
 
 
-@query("embedding_neardup", None)  # brp leg seed-dependent; auto route's exact leg is oracle'd by the _exact/_blocked twins
+@query("embedding_neardup", None)  # the audit columns are rows-only; its pair set is oracle'd by the _exact/_blocked twins
 def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup pairs via the ROUTED constructor
-    (``embedding_neardup_pairs(method='auto')``, r10), with the quality
-    signal in the output: (recall_vs_exact, n_false_positive) measured
-    in-query against the exact all-pairs companion at the same threshold.
-    Below the 100k-doc cutover the route is the exact blocked
-    matmul — measured strictly dominant over BRP-LSH at d=64 (2.8 s vs
-    ~1900 s at the sf1 rehearsal's 20k vectors; Spark's single-projection
-    BRP leaves collision_frac ≈ 0.48 per table, so its join enumerates
-    ~half of all pairs through a per-pair UDF) — making the audit a
-    structural identity check (recall 1.0, FP 0). The BRP leg keeps its
-    own recall gate in pytest (``test_embedding_neardup_brp_recall_gate``)
-    and its ANN coverage via ``ann_lsh_topk``. Above
-    ``_AUDIT_CUTOVER_DOCS`` vectors the truth routes through
+    """Embedding near-dup pairs via ``embedding_neardup_pairs``, with the
+    quality signal in the output: (recall_vs_exact, n_false_positive)
+    measured in-query against the exact all-pairs companion at the same
+    threshold. Below the 100k-doc cutover the constructor is the exact
+    blocked matmul (it raises above), so the audit is a structural
+    identity check (recall 1.0, FP 0) between the two exact kernels.
+    Above ``_AUDIT_CUTOVER_DOCS`` vectors the truth routes through
     ``sampled_pair_audit`` (r08 VERDICT #2) so the all-pairs companion
     never outgrows its guard; gate SFs (≤2000 vectors) keep the full
     exact denominator."""
@@ -2415,7 +2409,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = _t(spark, sf_dir, "embeddings")
-    # near-dup pair set is tiny; materialize so the LSH join runs once
+    # near-dup pair set is tiny; materialize so the matmul runs once
     approx = embedding_neardup_pairs(emb, min_cosine=0.35).localCheckpoint(eager=True)
     if _route_recall_truth(emb, "vec_id"):
         # blocked, not broadcast (r09 self-review): a 10% sample of a

@@ -195,6 +195,38 @@ def test_query_fingerprint_closure_resets_on_library_edit(spark, monkeypatch):
     }
 
 
+def test_closure_hash_covers_same_module_helpers(monkeypatch):
+    """The query's defining module seeds its closure: ml_regression_metrics
+    builds its input through the same-module helper _events_feature_frame,
+    which no import in its body names, so an edit to plans/queries.py
+    must still reset its floor."""
+    import bench
+    from pyspark_weather_forecasting_gsod_spark.plans import queries as Q
+
+    fn = Q()["ml_regression_metrics"]
+    base = bench._closure_hash(fn)
+    assert base != "unavailable"
+    monkeypatch.setitem(bench._MODULE_AST_HASHES, fn.__module__, "0" * 16)
+    assert bench._closure_hash(fn) != base
+
+
+def test_resolve_pkg_import_returns_every_engine_alias():
+    """``import a, b`` contributes every engine module it names, not only
+    the first; third-party names contribute none."""
+    import ast
+
+    from bench import _ENGINE_PKG, _resolve_pkg_import
+
+    node = ast.parse(
+        f"import {_ENGINE_PKG}.ext.dedup, os, {_ENGINE_PKG}.ext.similarity"
+    ).body[0]
+    assert _resolve_pkg_import(node, _ENGINE_PKG) == [
+        f"{_ENGINE_PKG}.ext.dedup",
+        f"{_ENGINE_PKG}.ext.similarity",
+    ]
+    assert _resolve_pkg_import(ast.parse("import os, json").body[0], _ENGINE_PKG) == []
+
+
 def test_closure_hash_comment_blind(spark):
     """r11 ADVICE #3: comment-only differences must NOT reset floors —
     the hash is over the AST, not the raw source."""

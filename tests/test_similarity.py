@@ -25,13 +25,19 @@ def _emb(spark):
 
 
 def test_cosine_topk_exact_ordering(spark):
-    emb = _emb(spark)
-    out = cosine_topk(emb, emb.filter("vec_id = 0"), k=3)
+    # a zero vector has no direction: its cosine is NULL (as DuckDB's
+    # 0.0/0.0) and ranks last, instead of failing under ANSI mode
+    emb = _emb(spark).unionByName(
+        spark.createDataFrame([Row(vec_id=5, embedding=[0.0, 0.0, 0.0, 0.0])])
+    )
+    out = cosine_topk(emb, emb.filter("vec_id = 0"), k=5)
     got = [(r.nid, r.cosine, r.rk) for r in out.orderBy("rk").collect()]
-    assert [g[0] for g in got] == [1, 3, 2]  # parallel, near, orthogonal
+    # parallel, near, orthogonal, opposite, zero
+    assert [g[0] for g in got] == [1, 3, 2, 4, 5]
     assert got[0][1] == 1.0
     assert abs(got[1][1] - 1 / math.sqrt(1.01)) < 1e-4
     assert got[2][1] == 0.0
+    assert got[4][1] is None
 
 
 def test_cosine_topk_excludes_self(spark):
@@ -41,15 +47,12 @@ def test_cosine_topk_excludes_self(spark):
 
 
 def test_embedding_neardup_pairs_threshold(spark):
-    # both routes must implement the same threshold semantics: auto
-    # (exact blocked matmul at this size) and the explicit BRP leg
-    for method in ("auto", "brp"):
-        out = embedding_neardup_pairs(_emb(spark), min_cosine=0.95, method=method)
-        pairs = {(r.id_a, r.id_b) for r in out.collect()}
-        assert (0, 1) in pairs, method  # identical direction
-        assert (0, 3) in pairs, method  # cos ≈ 0.995
-        assert (0, 2) not in pairs, method  # orthogonal
-        assert (0, 4) not in pairs, method  # opposite
+    out = embedding_neardup_pairs(_emb(spark), min_cosine=0.95)
+    pairs = {(r.id_a, r.id_b) for r in out.collect()}
+    assert (0, 1) in pairs  # identical direction
+    assert (0, 3) in pairs  # cos ≈ 0.995
+    assert (0, 2) not in pairs  # orthogonal
+    assert (0, 4) not in pairs  # opposite
 
 
 def test_brp_lsh_ann_returns_ranked_neighbors(spark):
@@ -86,9 +89,12 @@ def test_cosine_allpairs_guard_refuses_oversized_corpus(spark):
 
 
 def test_cosine_allpairs_blocked_equals_broadcast_path(spark):
+    """Both exact kernels equal a numpy brute force; a NULL id never pairs
+    (SQL's ``a.id < b.id`` drops it) and string ids come back intact."""
     import random
 
-    from pyspark.sql import Row
+    import numpy as np
+    from pyspark.sql import functions as F
 
     from pyspark_weather_forecasting_gsod_spark.ext.similarity import (
         cosine_allpairs,
@@ -96,26 +102,36 @@ def test_cosine_allpairs_blocked_equals_broadcast_path(spark):
     )
 
     rng = random.Random(7)
-    rows = [
-        Row(vec_id=i, embedding=[rng.uniform(-1, 1) for _ in range(16)])
-        for i in range(120)
-    ]
-    df = spark.createDataFrame(rows)
+    rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(120)]
+    # a NULL id whose vector duplicates row 0 (cosine 1.0 with it)
+    df = spark.createDataFrame(
+        rows + [(None, rows[0][1])], "vec_id long, embedding array<double>"
+    )
+    m = np.array([v for _, v in rows])
+    c = (m @ m.T) / np.outer(np.linalg.norm(m, axis=1), np.linalg.norm(m, axis=1))
     want = {
-        (r.id_a, r.id_b): r.cosine
-        for r in cosine_allpairs(df, min_cosine=0.2).collect()
+        (a, b): round(float(c[a, b]), 6)
+        for a in range(120)
+        for b in range(a + 1, 120)
+        if round(float(c[a, b]), 9) >= 0.2
     }
-    got = {
-        (r.id_a, r.id_b): r.cosine
-        for r in cosine_allpairs_blocked(df, min_cosine=0.2, n_blocks=5).collect()
-    }
-    assert got == want and len(got) > 50
+    assert len(want) > 50
+
+    def pairs(out):
+        return {(r.id_a, r.id_b): r.cosine for r in out.collect()}
+
+    assert pairs(cosine_allpairs(df, min_cosine=0.2)) == want
+    assert pairs(cosine_allpairs_blocked(df, min_cosine=0.2, n_blocks=5)) == want
     # single block degenerates to one within-block task; still exact
-    one = {
-        (r.id_a, r.id_b): r.cosine
-        for r in cosine_allpairs_blocked(df, min_cosine=0.2, n_blocks=1).collect()
-    }
-    assert one == want
+    assert pairs(cosine_allpairs_blocked(df, min_cosine=0.2, n_blocks=1)) == want
+
+    # string ids (the NULL id stays NULL): the same pairs, same order
+    sdf = df.withColumn(
+        "vec_id", F.concat(F.lit("v"), F.lpad(F.col("vec_id").cast("string"), 3, "0"))
+    )
+    want_s = {(f"v{a:03d}", f"v{b:03d}"): cos for (a, b), cos in want.items()}
+    assert pairs(cosine_allpairs(sdf, min_cosine=0.2)) == want_s
+    assert pairs(cosine_allpairs_blocked(sdf, min_cosine=0.2, n_blocks=5)) == want_s
 
 
 def test_build_ivf_index_then_search_probes_without_refit(spark, tmp_path):
@@ -214,27 +230,6 @@ def test_embedding_neardup_quality_gate(spark):
     assert rows[0].n_false_positive == 0
 
 
-def test_embedding_neardup_brp_recall_gate(spark):
-    """The BRP leg's recall gate (r10: moved out of the declared query,
-    which now routes exact below the cutover): the calibrated 0.25/3
-    geometry must keep ≥ 0.85 recall vs the exact truth at the gate SF,
-    with zero false positives (approxSimilarityJoin refines candidates
-    on true distance)."""
-    from pyspark_weather_forecasting_gsod_spark.ext.similarity import (
-        cosine_allpairs,
-        embedding_neardup_pairs,
-        pair_recall_summary,
-    )
-
-    emb = spark.read.parquet(f"{SF_GATE}/embeddings.parquet")
-    approx = embedding_neardup_pairs(emb, min_cosine=0.35, method="brp")
-    exact = cosine_allpairs(emb, 0.35)
-    row = pair_recall_summary(approx, exact, "id_a", "id_b").collect()[0]
-    assert row.n_exact > 0
-    assert row.recall_vs_exact >= 0.85
-    assert row.n_false_positive == 0
-
-
 def test_minhash_neardup_quality_gate(spark):
     rows = _declared("minhash_neardup")(spark, SF_GATE).collect()
     assert rows, "no near-dup pairs found"
@@ -253,9 +248,8 @@ def test_brp_bucket_occupancy_guards_geometry(spark):
     the bucketLength=0.5 bug was SILENT — collapsing each hash table to
     ~one bucket made the candidate join exhaustive, so recall gates
     passed while the join went quadratic. Assert the production geometry
-    (0.25, the default of embedding_neardup_pairs; 6 tables covers the
-    ANN path's table count too) keeps every table meaningfully
-    partitioned at gate scale, and prove the assert DISCRIMINATES by
+    (0.25 × 6 tables, the geometry of brp_lsh_ann) keeps every table
+    meaningfully partitioned at gate scale, and prove the assert DISCRIMINATES by
     checking the old broken geometry fails it."""
     from pyspark_weather_forecasting_gsod_spark.ext.similarity import (
         brp_bucket_occupancy,
@@ -680,41 +674,29 @@ def test_property_hard_negatives_match_python_oracle(spark):
 
 
 def test_embedding_neardup_auto_raises_above_exact_cutover(spark):
-    """r11 (VERDICT r10 #1): above the exact cutover, method='auto' must
-    REFUSE rather than silently route to BRP — the module's own
-    brp_bucket_occupancy measurements show the BRP candidate join
-    enumerates ~half of all |corpus|^2 pairs at d <~ 100, i.e. a
-    100x-scale-up killer, not an approximation. The raise must point the
-    caller at the designated scale paths. (Cutover shrunk to 3 so the
-    probe trips on a 5-row frame — no 100k-vector corpus needed.)"""
+    """Above the exact cutover, embedding_neardup_pairs must REFUSE rather
+    than run a quadratic job, and the raise must point the caller at the
+    designated scale paths. (Cutover shrunk to 3 so the probe trips on a
+    5-row frame — no 100k-vector corpus needed.)"""
     import pytest
 
     with pytest.raises(ValueError, match="semantic_dedup"):
         embedding_neardup_pairs(_emb(spark), exact_cutover_docs=3)
-    # the explicit BRP leg stays reachable by name (recall-gated ANN
-    # coverage) even past the cutover
-    out = embedding_neardup_pairs(
-        _emb(spark), min_cosine=0.95, method="brp", exact_cutover_docs=3
-    )
-    assert {(r.id_a, r.id_b) for r in out.collect()} >= {(0, 1), (0, 3)}
 
 
 def test_embedding_neardup_id_type_contract(spark):
-    """r11 (ADVICE r10): the exact route casts ids to long, so string ids
-    would silently NULL out and collapse the output. method='exact' must
-    raise on a non-integral id; method='auto' must preserve the pre-r10
-    arbitrary-id behavior by routing to BRP (and actually return pairs
-    with the string ids intact)."""
-    import pytest
+    """Non-integral ids (strings) get the exact pair set, with the ids
+    intact rather than cast to long."""
     from pyspark.sql import functions as F
 
     emb_str = _emb(spark).withColumn(
         "vec_id", F.concat(F.lit("doc-"), F.col("vec_id").cast("string"))
     )
-    with pytest.raises(TypeError, match="integral"):
-        embedding_neardup_pairs(emb_str, method="exact")
-    out = embedding_neardup_pairs(emb_str, min_cosine=0.95, method="auto")
-    pairs = {(r.id_a, r.id_b) for r in out.collect()}
-    assert ("doc-0", "doc-1") in pairs
-    assert ("doc-0", "doc-3") in pairs
-    assert all(isinstance(a, str) and isinstance(b, str) for a, b in pairs)
+    out = embedding_neardup_pairs(emb_str, min_cosine=0.95)
+    got = {(r.id_a, r.id_b): r.cosine for r in out.collect()}
+    want = {
+        (f"doc-{r.id_a}", f"doc-{r.id_b}"): r.cosine
+        for r in embedding_neardup_pairs(_emb(spark), min_cosine=0.95).collect()
+    }
+    assert got == want
+    assert set(got) == {("doc-0", "doc-1"), ("doc-0", "doc-3"), ("doc-1", "doc-3")}

@@ -54,7 +54,7 @@ REASONS = {
     "semantic_dedup": "KMeans fit + CC loop per call",
     "ivf_ann_topk": "KMeans index build per call (amortized across probes in production via build_ivf_index)",
     "ann_lsh_topk": "LSH model fit per call + in-query recall audit vs exact truth",
-    "embedding_neardup": "LSH fit + exact-verify of candidates + in-query recall audit",
+    "embedding_neardup": "exact blocked matmul + in-query recall audit against the broadcast exact kernel",
     "minhash_neardup": "signature computation + banded join + in-query exact-recall audit",
     "simhash_fingerprints": "fingerprint fold + pigeonhole band join + in-query recall audit",
     # --- iterative algorithms: per-iteration distributed jobs have a
