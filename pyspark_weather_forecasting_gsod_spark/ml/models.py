@@ -26,7 +26,15 @@ def seeded_split(
     df: DataFrame, weights: list[float] | None = None, seed: int = 42
 ) -> list[DataFrame]:
     """R1 randomSplit, always seeded (the reference's unseeded split,
-    ipynb:1376, makes its published metrics unreproducible)."""
+    ipynb:1376, makes its published metrics unreproducible).
+
+    Membership depends on the seed *and* on the input's partition layout:
+    each partition is sampled with its own seeded stream over its row
+    order. Under AQE the layout is picked at runtime from shuffle sizes
+    (the 10k-row GSOD bench fixture coalesces to one partition), so split
+    metrics reproduce only for the same data size and confs, and
+    repartitioning the input moves the split. A partition-independent split
+    (for example on a hash of a row key) would lift that."""
     return df.randomSplit(weights or [0.8, 0.2], seed=seed)
 
 

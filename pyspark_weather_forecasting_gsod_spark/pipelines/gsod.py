@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml.features import build_feature_pipeline
@@ -30,13 +30,14 @@ from ..ml.models import (
     train_linear_regression,
 )
 from ..operators.impute import (
+    proximity_impute_fixed_schedule,
     proximity_mean_impute,
     run_impute_strategy,
     seasonal_median_impute,
     seasonal_median_impute_multi,
     zero_impute,
 )
-from ..operators.quality import missing_census, normalize_sentinels
+from ..operators.quality import normalize_sentinels
 from ..operators.windows import lead_labels
 
 # The reference's sentinel map (ipynb:239-243).
@@ -213,78 +214,49 @@ def run_gsod_pipeline(
     norm = normalize_sentinels(df, GSOD_SENTINELS)
     slim = norm.drop(*GSOD_DROPS)
     if fast:
-        # lazy fixed-schedule variant: independent proximity columns impute
-        # through ONE shared window exchange per pass instead of a full
-        # shuffle per column per iteration (the reference's cost shape)
-        from ..operators.impute import proximity_impute_fixed_schedule
-
-        def prox_fb(col):
-            return lambda m: proximity_impute_fixed_schedule(
-                m, col, group_by="stn", order_by=["date"], schedule=(4, 8)
-            )
-
-        # Stage materialization (r11, guide §1.2/§5): every imputer stage
-        # branches its input — the global-median aggregate, the seasonal
-        # (stn, month) aggregate, and the main when-merge chain each
-        # re-execute the full upstream lineage in one lazy plan, so the
-        # fixture + normalize + earlier stages replayed multiplicatively
-        # (the reference's 1,462-stage pathology in miniature; measured
-        # 14.6-25.4 s for the impute phase at the 365k-row bench fixture).
-        # An eager localCheckpoint at each branch point executes each
-        # stage exactly once; values are bit-identical (same computation,
-        # materialized). Measured: impute phase → ~3 s.
-        # r12 (r11 VERDICT #3): the separate slim checkpoint is gone —
-        # the first proximity stage's only branch off its input is the
-        # NARROW global-median aggregate (3 columns), so replaying
-        # fixture+normalize once for that agg is cheaper than a full
-        # 365k-row × 25-col materialization (measured: first-checkpoint
-        # phase 1.2 s + 0.9 s → 1.5-1.9 s fused, one fewer
-        # materialization; values identical — same exact medians).
-        imputed = proximity_impute_fixed_schedule(
-            slim, ["visib", "wdsp", "mxpsd"], group_by="stn", order_by=["date"],
-            schedule=(4, 8),
-        )
-        imputed = zero_impute(imputed, {"prcp": 0.0}).localCheckpoint(eager=True)
-        # ONE seasonal stage for max+min (r11): the columns are mutually
-        # independent (each stage reads/writes only its own column), so
-        # the fused operator's per-column output equals the old
-        # seasonal(max) → prox(max) → seasonal(min) → prox(min) chain
-        # bit for bit — with one (stn, month) aggregate + one broadcast
-        # join + one shared fallback window chain instead of two of each.
-        # r12: temp/stp ride the SAME fallback chain — proximity imputes
-        # each column independently through shared window specs, and
-        # temp/stp are untouched by the seasonal merge, so folding them
-        # into the fallback is bit-identical to the separate trailing
-        # stage it replaces while saving one full materialization and a
-        # second two-window pass (the whole chain is now two checkpoints:
-        # post-zero and final).
+        # One lazy plan. Every imputed column reads and writes only itself,
+        # so all seven proximity columns can share the seasonal stage's
+        # fallback window chain and each value still equals what the
+        # ordered strategy computes.
         imputed = seasonal_median_impute_multi(
-            imputed, ["max", "min"], group_by="stn", date_col="date",
+            zero_impute(slim, {"prcp": 0.0}), ["max", "min"],
+            group_by="stn", date_col="date",
             fallback=lambda m: proximity_impute_fixed_schedule(
-                m, ["max", "min", "temp", "stp"], group_by="stn",
-                order_by=["date"], schedule=(4, 8),
+                m, ["visib", "wdsp", "mxpsd", "max", "min", "temp", "stp"],
+                group_by="stn", order_by=["date"], schedule=(4, 8),
             ),
         )
     else:
         imputed = run_impute_strategy(
             slim, gsod_impute_strategy(fast), checkpoint_every=3
         )
-    imputed = imputed.localCheckpoint(eager=True)  # truncate the impute lineage
-    _mark("impute_sec")
 
+    # One checkpoint suffices: every branch of the plan (the (stn, month)
+    # and global-median aggregates, the window chain) reads the same input,
+    # and the lead window has the proximity passes' (stn) / date spec, so it
+    # shares their exchange and sort. The census is observed before the
+    # label filter drops each station's last row. The imputed table, the
+    # labeled table and every feature/model pass read the checkpoint.
     measure_cols = ["temp", "stp", "max", "min", "visib", "wdsp", "mxpsd", "prcp"]
-    census = missing_census(imputed, measure_cols).collect()[0]
+    census_obs = Observation("census")
+    labels = {"max": "next_day_max", "rain_drizzle": "next_day_rain"}
+    both = lead_labels(
+        imputed.observe(
+            census_obs,
+            F.count(F.lit(1)).alias("n_rows"),
+            *[F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}")
+              for c in measure_cols],
+        ),
+        group_by="stn", order_by="date", labels=labels, drop_null_labels=False,
+    ).localCheckpoint(eager=True)
+    _mark("impute_sec")
+    census = census_obs.get
     _mark("census_sec")
 
-    labeled = lead_labels(
-        imputed, group_by="stn", order_by="date",
-        labels={"max": "next_day_max", "rain_drizzle": "next_day_rain"},
-    ).withColumn("next_day_rain", F.col("next_day_rain").cast("double"))
-    # materialized once (r11, guide §1.2): the label window re-executed for
-    # every downstream consumer — the indexer pass, the scaler pass, each
-    # model fit, and each eval all replay lead_labels otherwise (the
-    # feature transform itself stays lazy: it is a map-only projection)
-    labeled = labeled.localCheckpoint(eager=True)
+    imputed = both.drop(*labels.values())
+    labeled = both.dropna(subset=list(labels.values())).withColumn(
+        "next_day_rain", F.col("next_day_rain").cast("double")
+    )
 
     pipeline = build_feature_pipeline(
         categorical=INDICATORS,
@@ -292,24 +264,14 @@ def run_gsod_pipeline(
     )
     feat_model = pipeline.fit(labeled)
     _mark("feature_fit_sec")
-    # r12 (r11 VERDICT #3 — "measure LR's two-pass summary cost"):
-    # LinearRegression.fit is NOT a single pass — the WLS normal-equation
-    # aggregation and the training-summary metrics each traverse the
-    # input, and on the lazy frame every traversal replayed the feature
-    # transform + split lineage (measured: fit 1.9-4.3 s lazy vs
-    # 0.35-0.7 s on a materialized input at the 365k-row bench fixture;
-    # the eval's transform(test) pass was another 1.1 s replay). ONE
-    # cached frame — projected to exactly the fit columns, so the cache
-    # holds vectors + labels instead of the full 25-column table — feeds
-    # the split's both sides and every fit/eval pass. persist (evictable,
-    # spillable, released in the finally) rather than localCheckpoint:
-    # checkpoint blocks are non-recomputable and pinned, and pinning the
-    # vector table starved execution memory in a default-heap driver
-    # (measured: SparkOutOfMemoryError in the 1g vanilla-session drive —
-    # the correctness driver's environment — where persist survives by
-    # eviction). randomSplit membership is unchanged by the projection
-    # or the cache: both preserve partitioning and row order, and the
-    # seeded per-partition sampling is a pure function of that order.
+    # LinearRegression.fit traverses its input more than once (the
+    # normal-equation aggregate and the training summary), and so does the
+    # eval, so one cached frame of exactly the fit columns feeds both sides
+    # of the split. persist rather than localCheckpoint: checkpoint blocks
+    # are pinned and not recomputable, and pinning the vector table can
+    # starve execution memory in a default-heap driver, where persisted
+    # blocks are evicted instead. The projection and the cache keep
+    # partitioning and row order, so randomSplit membership is unchanged.
     featurized = feat_model.transform(labeled).select(
         "features", "next_day_max", "next_day_rain"
     )
@@ -323,7 +285,7 @@ def run_gsod_pipeline(
 
         out: dict[str, object] = {
             "imputed": imputed,
-            "census": census.asDict(),
+            "census": census,
             "regression": reg_metrics,
         }
         if with_classifier:

@@ -186,6 +186,95 @@ def test_gsod_pipeline_end_to_end(spark):
     assert out["regression"]["rmse"] < 20.0
 
 
+def test_gsod_fast_pipeline_equals_staged_impute_chain(spark, monkeypatch):
+    """The fast path's one-checkpoint plan gives exactly, with no tolerance,
+    what the staged chain gives: proximity(visib, wdsp, mxpsd) → zero(prcp)
+    → seasonal(max, min) with the (max, min, temp, stp) proximity fallback,
+    then next-day labels. The fixture keeps the all-sentinel visib station,
+    the all-sentinel (stn 1, Feb) max/min cells, date gaps and the
+    single-row station. The census is taken before the label filter, so it
+    counts every imputed row, each station's last row included."""
+    from pyspark.sql import functions as F
+
+    from pyspark_weather_forecasting_gsod_spark.operators.impute import (
+        proximity_impute_fixed_schedule,
+        seasonal_median_impute_multi,
+        zero_impute,
+    )
+    from pyspark_weather_forecasting_gsod_spark.operators.quality import normalize_sentinels
+    from pyspark_weather_forecasting_gsod_spark.operators.windows import lead_labels
+    from pyspark_weather_forecasting_gsod_spark.pipelines import gsod as G
+
+    fit_inputs = []
+    build = G.build_feature_pipeline
+
+    def recording_build(**kw):
+        pipe = build(**kw)
+        fit = pipe.fit
+
+        def recording_fit(df, *a, **k):
+            fit_inputs.append(df)
+            return fit(df, *a, **k)
+
+        pipe.fit = recording_fit
+        return pipe
+
+    monkeypatch.setattr(G, "build_feature_pipeline", recording_build)
+    wx = G.weather_fixture(spark, 12, 120)
+    out = G.run_gsod_pipeline(wx, fast=True, with_classifier=False)
+
+    def prox(d, cols):
+        return proximity_impute_fixed_schedule(
+            d, cols, group_by="stn", order_by=["date"], schedule=(4, 8)
+        )
+
+    slim = normalize_sentinels(wx, G.GSOD_SENTINELS).drop(*G.GSOD_DROPS)
+    staged = zero_impute(prox(slim, ["visib", "wdsp", "mxpsd"]), {"prcp": 0.0})
+    staged = seasonal_median_impute_multi(
+        staged, ["max", "min"], group_by="stn", date_col="date",
+        fallback=lambda m: prox(m, ["max", "min", "temp", "stp"]),
+    )
+    imputed = out["imputed"]
+    assert imputed.columns == staged.columns
+    expected = sorted(tuple(r) for r in staged.collect())
+    assert sorted(tuple(r) for r in imputed.collect()) == expected
+
+    label_cols = ["stn", "date", "next_day_max", "next_day_rain"]
+    want = lead_labels(
+        staged, group_by="stn", order_by="date",
+        labels={"max": "next_day_max", "rain_drizzle": "next_day_rain"},
+    ).withColumn("next_day_rain", F.col("next_day_rain").cast("double"))
+    (labeled,) = fit_inputs
+    got = sorted(tuple(r) for r in labeled.select(*label_cols).collect())
+    assert got == sorted(tuple(r) for r in want.select(*label_cols).collect())
+    assert len(got) < len(expected)
+
+    assert out["census"]["n_rows"] == len(expected)
+    assert all(v == 0 for k, v in out["census"].items() if k.startswith("null_"))
+
+
+def test_gsod_fast_pipeline_job_count(spark):
+    """Impute, census and labels run as one materialization, so the whole
+    fast pipeline without the classifier stays within 15 Spark jobs; each
+    extra checkpoint or census pass adds jobs (three checkpoints and a
+    census collect run 23)."""
+    from pyspark_weather_forecasting_gsod_spark.pipelines.gsod import (
+        run_gsod_pipeline,
+        weather_fixture,
+    )
+
+    wx = weather_fixture(spark, 12, 120).localCheckpoint(eager=True)
+    sc = spark.sparkContext
+    group = "test-gsod-fast-pipeline-job-count"
+    sc.setJobGroup(group, "gsod fast pipeline job count")
+    try:
+        run_gsod_pipeline(wx, fast=True, with_classifier=False)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 15
+
+
 def test_gsod_pipeline_from_csv_end_to_end(spark, tmp_path):
     """The reference's literal entry leg (S1, ipynb:187): CSV → explicit
     StructType → sentinel normalization → full pipeline (r09 VERDICT #7).
