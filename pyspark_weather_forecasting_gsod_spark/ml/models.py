@@ -30,11 +30,12 @@ def seeded_split(
 
     Membership depends on the seed *and* on the input's partition layout:
     each partition is sampled with its own seeded stream over its row
-    order. Under AQE the layout is picked at runtime from shuffle sizes
-    (the 10k-row GSOD bench fixture coalesces to one partition), so split
-    metrics reproduce only for the same data size and confs, and
-    repartitioning the input moves the split. A partition-independent split
-    (for example on a hash of a row key) would lift that."""
+    order. Under AQE the layout is picked at runtime from shuffle sizes, so
+    split metrics reproduce only for the same data size and confs, and
+    repartitioning the input moves the split. The GSOD pipeline therefore
+    splits on an md5 bucket of its ``(stn, date)`` key instead
+    (``operators.sampling.hash_bucket``), whose membership is a pure
+    function of the row."""
     return df.randomSplit(weights or [0.8, 0.2], seed=seed)
 
 

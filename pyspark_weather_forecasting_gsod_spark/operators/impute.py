@@ -217,10 +217,23 @@ def proximity_impute_fixed_schedule(
     specs, so Catalyst plans one exchange + one sort per pass no matter how
     many columns fill — the reference pays the full shuffle per column per
     iteration.
+
+    Layout invariant: the window input is hash-partitioned by ``group_by``
+    into ``spark.sql.shuffle.partitions`` partitions with an explicit
+    repartition, which AQE does not coalesce. Window cost scales with rows
+    × frame width × columns, not with shuffle bytes, so AQE's byte-based
+    coalescing of the exchange the windows would add anyway must not
+    collapse this stage into one task (a ~1 MiB shuffle of a 10k-row table
+    coalesced to one partition). Any later window over the same
+    ``(group_by) / order_by`` spec, such as ``lead_labels``, reuses the
+    layout. The global-median branch reads the un-repartitioned input, so
+    it adds no exchange.
     """
     columns = [column] if isinstance(column, str) else list(column)
     cur: dict[str, F.Column] = {c: F.col(c) for c in columns}
-    work = df
+    work = df.repartition(
+        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")), group_by
+    )
     for i, n in enumerate(schedule):
         w = (
             Window.partitionBy(group_by)

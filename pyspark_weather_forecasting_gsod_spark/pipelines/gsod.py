@@ -4,8 +4,8 @@ This is the full jmayank23/PySpark-Weather-Forecasting-GSOD capability
 surface in one place (SURVEY.md §2.10/§2.11): sentinel normalization →
 column drops → ordered imputation strategy (proximity / zero / seasonal
 median, ipynb:947-956) → next-day label build (ipynb:1251-1260) → one
-ml.Pipeline of feature stages → seeded split → LR + GBT train/eval
-(DataFrame-native metrics).
+ml.Pipeline of feature stages → (stn, date) key-hash split → LR + GBT
+train/eval (DataFrame-native metrics).
 
 ``weather_fixture`` synthesizes a GSOD-shaped table per FIXTURES.md §A —
 generated DISTRIBUTED (spark.range + hash-based deterministic uniforms, no
@@ -25,7 +25,6 @@ from ..ml.features import build_feature_pipeline
 from ..ml.models import (
     evaluate_classification,
     evaluate_regression,
-    seeded_split,
     train_gbt_classifier,
     train_linear_regression,
 )
@@ -38,6 +37,7 @@ from ..operators.impute import (
     zero_impute,
 )
 from ..operators.quality import normalize_sentinels
+from ..operators.sampling import hash_bucket
 from ..operators.windows import lead_labels
 
 # The reference's sentinel map (ipynb:239-243).
@@ -254,9 +254,14 @@ def run_gsod_pipeline(
     _mark("census_sec")
 
     imputed = both.drop(*labels.values())
-    labeled = both.dropna(subset=list(labels.values())).withColumn(
-        "next_day_rain", F.col("next_day_rain").cast("double")
-    )
+    # The 80/20 split is a pure function of the (stn, date) key, so its
+    # membership does not depend on partition layout or row order.
+    labeled = both.dropna(subset=list(labels.values())).withColumns({
+        "next_day_rain": F.col("next_day_rain").cast("double"),
+        "is_train": hash_bucket(
+            F.concat_ws("|", F.col("stn"), F.col("date").cast("string"))
+        ) < 80,
+    })
 
     pipeline = build_feature_pipeline(
         categorical=INDICATORS,
@@ -266,17 +271,19 @@ def run_gsod_pipeline(
     _mark("feature_fit_sec")
     # LinearRegression.fit traverses its input more than once (the
     # normal-equation aggregate and the training summary), and so does the
-    # eval, so one cached frame of exactly the fit columns feeds both sides
-    # of the split. persist rather than localCheckpoint: checkpoint blocks
-    # are pinned and not recomputable, and pinning the vector table can
-    # starve execution memory in a default-heap driver, where persisted
-    # blocks are evicted instead. The projection and the cache keep
-    # partitioning and row order, so randomSplit membership is unchanged.
+    # eval, so one cached frame of exactly the fit columns and the split
+    # flag feeds both sides of the split, which are plain filters on it.
+    # persist rather than localCheckpoint: checkpoint blocks are pinned and
+    # not recomputable, and pinning the vector table can starve execution
+    # memory in a default-heap driver, where persisted blocks are evicted
+    # instead. The cache keeps the checkpoint's partitioning, so the fit
+    # and eval passes run one task per impute window partition.
     featurized = feat_model.transform(labeled).select(
-        "features", "next_day_max", "next_day_rain"
+        "features", "next_day_max", "next_day_rain", "is_train"
     )
     featurized = featurized.persist()
-    train, test = seeded_split(featurized)
+    train = featurized.filter(F.col("is_train"))
+    test = featurized.filter(~F.col("is_train"))
     try:
         lr = train_linear_regression(train, "next_day_max")
         _mark("lr_fit_sec")

@@ -9,6 +9,7 @@ that imputation never modifies non-null values.
 """
 
 import datetime as dt
+import re
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -16,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark_weather_forecasting_gsod_spark.operators.impute import (
     fixed_proximity_impute,
     impute_with_group_median,
+    proximity_impute_fixed_schedule,
     proximity_mean_impute,
     run_impute_strategy,
     seasonal_median_impute,
@@ -344,3 +346,31 @@ def test_group_median_broadcast_guard_modes_agree(spark):
     # the 1-row global-median join is always broadcast; the group join must
     # not be FORCED to broadcast in these modes
     assert "SortMergeJoin" in plan_merge
+
+
+def test_proximity_fixed_schedule_keeps_shuffle_width(spark):
+    """The window stage runs one task per ``spark.sql.shuffle.partitions``
+    partition: window cost follows rows, not shuffle bytes, and AQE would
+    coalesce this small ``stn`` shuffle into one partition. The executed
+    plan has exactly one hash exchange, on the group key; the global-median
+    branch reads the input without one."""
+    rows = [
+        Row(stn=f"s{i % 6}", date=D(2023, 1, 1) + dt.timedelta(days=i // 6),
+            x=None if i % 4 == 0 else float(i))
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n > 1
+    out = proximity_impute_fixed_schedule(
+        df, "x", group_by="stn", order_by=["date"], schedule=(2, 4)
+    )
+    assert out.rdd.getNumPartitions() == n
+    assert all(r.x is not None for r in out.collect())
+    final = out._jdf.queryExecution().executedPlan().toString().split(
+        "== Initial Plan =="
+    )[0]
+    assert re.findall(r"hashpartitioning\((\w+)#\d+, (\d+)\)", final) == [("stn", str(n))]
+    median_branch = final[final.index("BroadcastExchange"):]
+    assert "percentile" in median_branch
+    assert "hashpartitioning" not in median_branch

@@ -2,11 +2,12 @@
 
 Runs the named declared queries in a fresh session with the bench's
 environment (48g heap, local[$SPARK_GRAFT_CPUS], JVM warm-up pass), times
-each with the noop sink, and optionally writes ``explain("formatted")`` to
-``plans/<plandir>/<name>_<tag>.txt`` so plan claims are auditable.
+each with the noop sink, and, only when ``--tag`` is given, writes
+``explain("formatted")`` to ``plans/<plandir>/<name>_<tag>.txt`` so plan
+claims are auditable.
 
 Usage:
-    python tools/profile_query.py [--sf DIR] [--runs N] [--tag before] [--no-plan] q1 q2 ...
+    python tools/profile_query.py [--sf DIR] [--runs N] [--tag TAG [--plandir DIR]] q1 q2 ...
 Prints one JSON line per query: {"name":..., "walls":[...], "min":...}.
 """
 
