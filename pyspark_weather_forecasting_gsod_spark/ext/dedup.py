@@ -127,30 +127,25 @@ def word_shingles(
     )
 
 
-def _maybe_broadcast(df: DataFrame, max_rows: int = 1_000_000) -> DataFrame:
-    """Probe-gated broadcast hint for the per-doc shingle-size tables.
-
-    Why not a plain hint: corpus-sized — one row per doc, a forced
-    broadcast is a driver OOM at 10^8-10^9 docs (VERDICT r09 #1). Why not
-    NO hint: these frames derive from checkpointed scans with no size
-    statistics, so the static planner cannot broadcast them and whether
-    AQE rescues the join depends on stage materialization order —
-    measured r10: the unhinted plan sometimes SortMergeJoins the ~10^8-row
-    `common` pair table against a 25k-row size table (zipf fallback
-    411 s + heartbeat-starving sorts vs 208 s with BHJ). An O(max_rows)
-    limit-probe restores a GUARANTEED BroadcastHashJoin whenever the
-    table is provably bounded (1M rows ≈ 16 MB of (long, long)) and
-    degrades to the hint-free join — AQE may still convert — beyond."""
-    return F.broadcast(df) if _is_bounded(df, max_rows) else df
-
-
 _BOUNDED_MEMO: dict[int, dict[int, bool]] = {}
 
 
 def _is_bounded(df: DataFrame, max_rows: int = 1_000_000) -> bool:
     """O(max_rows) limit-probe: True iff df provably has ≤ max_rows rows.
-    Shared by the probe-gated broadcast sites so one probe can cover both
-    renamed views of the same sizes table.
+    It gates the broadcast of ``_index_pairs``' per-doc size tables, and
+    one memoized probe covers both renamed views of a self-join's table.
+
+    Why not a plain hint: the size tables are corpus-sized — one row per
+    doc, a forced broadcast is a driver OOM at 10^8-10^9 docs. Why not NO
+    hint: they derive from checkpointed scans with no size statistics, so
+    the static planner cannot broadcast them and whether AQE rescues the
+    join depends on stage materialization order — measured on the sf1
+    Zipf rehearsal corpus: the unhinted plan sometimes SortMergeJoins the
+    ~10^8-row ``common`` pair table against a 25k-row size table (tiered
+    fallback 411 s + heartbeat-starving sorts vs 208 s with BHJ). The
+    probe restores a GUARANTEED BroadcastHashJoin whenever the table is
+    provably bounded (1M rows ≈ 16 MB of (long, long)) and degrades to the
+    hint-free join — AQE may still convert — beyond.
 
     Memoized per DataFrame OBJECT (r11, VERDICT r10 #7): each probe is an
     eager limit-count job, so builders invoked repeatedly on the same
@@ -189,6 +184,14 @@ def _is_bounded(df: DataFrame, max_rows: int = 1_000_000) -> bool:
 # a measure changes: its score, its output columns and orientation, and its
 # prefix candidate rule. ``ngram_{jaccard,containment}_pairs{,_prefix,
 # _dense,_auto}`` and ``exact_cross_jaccard`` are thin calls into the core.
+#
+# The banded near-dup paths filter, then verify: ``_band_pairs`` turns
+# (band_no, bucket) tables into candidate pairs, and ``_index_pairs``
+# restricted to those candidates scores them exactly. ``minhash_lsh_pairs``,
+# ``ngram_best_match``'s banded regime and ``neardup_probe`` take both
+# steps; ``simhash_neardup_pairs`` takes the candidates and verifies by
+# Hamming distance; the tiered best match's tier 2 is ``_index_pairs`` over
+# the docs tier 1 left unmatched.
 # ---------------------------------------------------------------------------
 
 
@@ -300,13 +303,26 @@ def _prepared(
 
 
 def _index_pairs(
-    left: DataFrame, right: DataFrame, id_col: str, m: _Measure, t: float
+    left: DataFrame,
+    right: DataFrame,
+    id_col: str,
+    m: _Measure,
+    t: float,
+    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Inverted-index kernel: every (left, right) pair sharing ≥1 shingle
     is counted by one equi-join on the shingle key, then scored. Cost is
     Σ|posting|², not output-proportional. ``right is left`` is the
     self-join, which keeps doc_a < doc_b; otherwise doc_a is the left id
-    and doc_b the right one."""
+    and doc_b the right one.
+
+    ``candidates`` (doc_a, doc_b) restricts the count to those pairs — the
+    verify step of the banded paths: candidates ⋈ postings(left) on doc_a
+    ⋈ postings(right) on (doc_b, shingle), so the cost is Σ_candidate
+    |shingles| and the pairs keep the orientation the caller gave them.
+    The shingle explode-join beats an ``array_intersect`` per pair where
+    candidates are many (sf0.1, 4 cores: 1.4 s vs 3.6 s on 227k); on a
+    few hundred both take under 0.3 s."""
 
     def postings(arrs: DataFrame, name: str) -> DataFrame:
         return arrs.select(
@@ -318,9 +334,14 @@ def _index_pairs(
             F.col(id_col), F.size("shingles").cast("long").alias("sz")
         )
 
-    common = postings(left, "doc_a").join(postings(right, "doc_b"), on="shingle")
-    if right is left:
-        common = common.filter(F.col("doc_a") < F.col("doc_b"))
+    if candidates is None:
+        common = postings(left, "doc_a").join(postings(right, "doc_b"), on="shingle")
+        if right is left:
+            common = common.filter(F.col("doc_a") < F.col("doc_b"))
+    else:
+        common = candidates.join(postings(left, "doc_a"), on="doc_a").join(
+            postings(right, "doc_b"), on=["doc_b", "shingle"]
+        )
     common = common.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("common")
     )
@@ -328,14 +349,32 @@ def _index_pairs(
     rs = ls if right is left else sizes(right)
     za = ls.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
     zb = rs.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-    # probe-gated broadcast (see _maybe_broadcast); the self-join's two
-    # views share one size table, so one memoized probe covers both
+    # probe-gated broadcast (see _is_bounded); the self-join's two views
+    # share one size table, so one memoized probe covers both
     if _is_bounded(ls) and _is_bounded(rs):
         za, zb = F.broadcast(za), F.broadcast(zb)
     return _scored(
         common.join(za, on="doc_a").join(zb, on="doc_b"),
         m, t, F.col("sz_a"), F.col("sz_b"),
     )
+
+
+def _band_pairs(
+    buckets: DataFrame, id_col: str, other: DataFrame | None = None
+) -> DataFrame:
+    """Distinct (doc_a, doc_b) candidate pairs: docs sharing any
+    (band_no, bucket) key. Alone, ``buckets`` is self-joined and keeps
+    doc_a < doc_b; with ``other``, doc_a is the ``buckets`` id and doc_b
+    the ``other`` id. The work is Σ_bucket |bucket|², set by the banding,
+    never by the corpus's shingle postings."""
+    a = buckets.select(F.col(id_col).alias("doc_a"), "band_no", "bucket")
+    b = (buckets if other is None else other).select(
+        F.col(id_col).alias("doc_b"), "band_no", "bucket"
+    )
+    pairs = a.join(b, on=["band_no", "bucket"])
+    if other is None:
+        pairs = pairs.filter(F.col("doc_a") < F.col("doc_b"))
+    return pairs.select("doc_a", "doc_b").distinct()
 
 
 def _prefix_pairs(
@@ -815,10 +854,9 @@ def ngram_best_match(
     resolve to the smallest partner id in ALL regimes, so regime choice
     never breaks determinism of the ties it does see.
 
-    **'tiered' is exact-1-NN-by-construction at any scale** (r08 VERDICT
-    "What's wrong" #1 — the scale path for callers that need provable
-    exactness, e.g. oracle-checked deletion clustering, without the
-    unthresholded Σ|posting|² join):
+    **'tiered' is exact-1-NN-by-construction at any scale** — the scale
+    path for callers that need provable exactness, e.g. oracle-checked
+    deletion clustering, without the unthresholded Σ|posting|² join:
 
     * tier 1: ALL pairs with jaccard ≥ ``tier_jaccard`` via the exact
       threshold auto-router (``ngram_jaccard_pairs_auto`` — dense
@@ -840,7 +878,7 @@ def ngram_best_match(
       tail; on small corpora the router picks plain exact anyway.
       Tier-2 scores are full exact enumeration for those docs, so their
       argmax is the true 1-NN too.
-    * mostly-unique fallback (r10, VERDICT r09 #5): tier 2 enumerates
+    * mostly-unique fallback: tier 2 enumerates
       DIRECTED pairs, so its cost is ~2 × unmatched_fraction × the plain
       exact join — on a mostly-UNIQUE corpus (the adversarial case for
       this regime) tiered degenerates to worse-than-exact. Measured on a
@@ -874,155 +912,55 @@ def ngram_best_match(
         probed = df.select(id_col).limit(max_exact_docs + 1).count()
         regime = "exact" if probed <= max_exact_docs else "banded"
     if regime == "exact":
-        # NOTE (r11): routing this unthresholded enumeration through the
-        # dense block-BLAS core (t=0 / common≥1 mode) was measured and
-        # REJECTED — with output ≈ all overlapping pairs (2.6M rows at
-        # sf0.1) the Arrow serialization out of the Python worker costs
-        # ~3× the JVM inverted-index join+agg (5.2 s vs 1.7 s). Dense
-        # wins only when a threshold keeps the output small.
+        # the JVM inverted index, not the dense block-BLAS core: unthresholded
+        # output is ≈ every overlapping pair (2.6M rows at sf0.1), and Arrow
+        # serialization out of the Python worker costs ~3× the join + agg
+        # (5.2 s vs 1.7 s); dense wins only when a threshold keeps it small
         pairs = ngram_jaccard_pairs(
             df, id_col, text_col, n, min_jaccard=0.0, max_docs=None
         )
-    elif regime == "tiered":
-        # ONE corpus-wide shingle checkpoint (r12, guide §1.2): tier 2's
-        # inverted index needs the materialized arrays anyway, and handing
-        # the same frame to the auto-router replaces its admission pass —
-        # previously tier 1's router and this checkpoint each ran the
-        # full shingle regex.
-        arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(
-            eager=True
-        )
-        # tier 1: exact thresholded pairs via the dense/prefix auto-router.
-        # Checkpointed because BOTH the matched-id derivation and the final
-        # union re-reference it (and either regime's plan is multi-join).
-        t1 = ngram_jaccard_pairs_auto(
-            df, id_col, text_col, n, min_jaccard=tier_jaccard, _arrs=arrs
-        ).localCheckpoint(eager=True)
-        matched = (
-            t1.select(F.col("doc_a").alias(id_col))
-            .unionAll(t1.select(F.col("doc_b").alias(id_col)))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # Mostly-unique fallback (r10, measured on the 25k Zipf rehearsal
-        # corpus — BENCH_sf1 zipf_* rows): tier 2 enumerates DIRECTED
-        # pairs (doc_a must be the unmatched side, so each undirected
-        # pair is scored from both ends when both are unmatched), costing
-        # ~2 × unmatched_fraction × the exact join. When tier 1 matches
-        # nothing (tier1_matched_docs=0 at 25k docs), tiered measured
-        # 798 s vs plain exact's 209 s. The crossover is analytic:
-        # 2·uf·E > E ⟺ uf > 0.5 — above it, re-running the plain
-        # UNDIRECTED enumeration is provably cheaper and identically
-        # exact, so route there. Both counts are O(1)-ish: arrs is
-        # checkpointed, matched is tiny-or-it-doesn't-matter.
-        n_all = arrs.count()
-        n_matched = matched.count()
-        if n_all - n_matched > tier2_max_unmatched_frac * n_all:
-            pairs = ngram_jaccard_pairs(
-                df, id_col, text_col, n, min_jaccard=0.0, max_docs=None
-            )
-            return _best_match_tail(pairs)
-        sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-        # tier 2: shingle rows of the UNMATCHED docs only, joined against
-        # the full inverted index — every pair touching an unmatched doc
-        # is scored exactly, nothing else is enumerated
-        sh2 = sh.join(matched, on=id_col, how="left_anti")
-        pa = sh2.select(F.col(id_col).alias("doc_a"), "shingle")
-        pb = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-        common2 = (
-            pa.join(pb, on="shingle")
-            .filter(F.col("doc_a") != F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-        sizes = arrs.select(
-            F.col(id_col), F.size("shingles").cast("long").alias("sz")
-        )
-        # za is only ever probed by doc_a ∈ unmatched (tier-2 docs), so
-        # restrict it to that set BEFORE the join — but its size is only
-        # bounded by tier2_max_unmatched_frac × corpus (up to half the
-        # corpus by default, the WHOLE corpus when callers pass 1.0), so
-        # a forced broadcast is the same 10^8-doc driver-OOM class as
-        # VERDICT r09 #1. Both sides probe-gated (r11, ADVICE r10):
-        # _maybe_broadcast's limit-probe is cheap here since sizes
-        # derives from the eagerly checkpointed arrs.
-        za = _maybe_broadcast(
-            sizes.join(matched, on=id_col, how="left_anti")
-            .select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-        )
-        zb = _maybe_broadcast(
-            sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-        )
-        pairs2 = (
-            common2.join(za, on="doc_a")
-            .join(zb, on="doc_b")
-            .withColumn(
-                "jaccard",
-                F.col("common")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
-            )
-            .select("doc_a", "doc_b", "common", "jaccard")
-        )
-        # pairs2 rows are already directional (doc_a = the unmatched doc);
-        # the shared symmetrize/window tail below re-swaps them, which only
-        # adds rows that LOSE the per-doc window (a matched doc_b's tier-1
-        # best is ≥ tier_jaccard, strictly above any pair with an unmatched
-        # partner) or duplicate an existing tier-2 row (both ends
-        # unmatched: identical values, row_number keeps one) — output
-        # provably unchanged either way.
-        # checkpoint: the shared symmetrize tail below references `pairs`
-        # twice, and replaying the tier-2 inverted-index join per
-        # reference doubles the regime's dominant cost. The materialized
-        # frame is output-proportional by construction (thresholded pairs
-        # + pairs touching unmatched docs).
-        pairs = (
-            t1.select("doc_a", "doc_b", "common", "jaccard")
-            .unionByName(pairs2)
-            .localCheckpoint(eager=True)
-        )
-    else:
-        # see the note in ngram_jaccard_pairs for checkpoint-over-persist
-        arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(
-            eager=True
-        )
+        return _best_match_tail(pairs)
+    # one corpus-wide shingle checkpoint: each leg below reads the arrays
+    # more than once, and tier 1's router takes it in place of its own
+    # admission pass, so the shingle regex runs once per call
+    arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=True)
+    if regime == "banded":
         sig = minhash_signatures(arrs, id_col, num_hashes, seed)
         bucket = minhash_band_buckets(sig, id_col, num_hashes, bands)
-        ba = bucket.select(F.col(id_col).alias("doc_a"), "band_no", "bucket")
-        bb = bucket.select(F.col(id_col).alias("doc_b"), "band_no", "bucket")
-        candidates = (
-            ba.join(bb, on=["band_no", "bucket"])
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
-            .distinct()
-        )
-        sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-        sizes = arrs.select(
-            F.col(id_col), F.size("shingles").cast("long").alias("sz")
-        )
-        sa = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-        sb = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-        common = (
-            candidates.join(sa, on="doc_a")
-            .join(sb, on=["doc_b", "shingle"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("common"))
-        )
-        # corpus-sized size tables: probe-gated broadcast — see the r10
-        # note in ngram_jaccard_pairs
-        za = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-        zb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-        if _is_bounded(sizes):
-            za, zb = F.broadcast(za), F.broadcast(zb)
-        pairs = (
-            common.join(za, on="doc_a")
-            .join(zb, on="doc_b")
-            .withColumn(
-                "jaccard",
-                F.col("common")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
+        return _best_match_tail(
+            _index_pairs(
+                arrs, arrs, id_col, _JACCARD, 0.0,
+                candidates=_band_pairs(bucket, id_col),
             )
-            .select("doc_a", "doc_b", "common", "jaccard")
         )
+    # tier 1: exact thresholded pairs via the dense/prefix auto-router,
+    # checkpointed because the matched ids and the final union both read it
+    t1 = ngram_jaccard_pairs_auto(
+        df, id_col, text_col, n, min_jaccard=tier_jaccard, _arrs=arrs
+    ).localCheckpoint(eager=True)
+    matched = (
+        t1.select(F.col("doc_a").alias(id_col))
+        .unionAll(t1.select(F.col("doc_b").alias(id_col)))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    # tier 2 scores DIRECTED pairs (doc_a unmatched), ~2 × the unmatched
+    # fraction × the exact join; above the crossover the undirected
+    # enumeration is cheaper and returns the identical exact output
+    n_all = arrs.count()
+    n_matched = matched.count()
+    if n_all - n_matched > tier2_max_unmatched_frac * n_all:
+        return _best_match_tail(_index_pairs(arrs, arrs, id_col, _JACCARD, 0.0))
+    # tier 2: every pair touching an unmatched doc, nothing else
+    pairs2 = _index_pairs(
+        arrs.join(matched, on=id_col, how="left_anti"), arrs, id_col, _JACCARD, 0.0
+    ).filter(F.col("doc_a") != F.col("doc_b"))
+    # the tail re-swaps the directional tier-2 rows; a swapped row either
+    # loses its doc's window (a matched doc_b's tier-1 best is ≥
+    # tier_jaccard, above any pair with an unmatched partner) or repeats a
+    # tier-2 row with identical values, so the output is unchanged. The
+    # checkpoint keeps the tail's two reads from replaying the tier-2 join.
+    pairs = t1.unionByName(pairs2).localCheckpoint(eager=True)
     return _best_match_tail(pairs)
 
 
@@ -1055,11 +993,8 @@ def minhash_signature_col(
     """Minhash signature as a single array-fold expression over a shingle
     array — MAP-ONLY: no explode, no shuffle, no UDF. Each row folds its
     shingle hashes through all permutations at once."""
-    import random
-
     p = MINHASH_PRIME
-    rng = random.Random(seed)
-    ab = [(rng.randrange(1, p), rng.randrange(0, p)) for _ in range(num_hashes)]
+    ab = minhash_permutations(num_hashes, seed)
     a_lit = "array(" + ", ".join(f"{a}L" for a, _ in ab) + ")"
     b_lit = "array(" + ", ".join(f"{b}L" for _, b in ab) + ")"
     hashes = f"transform({shingles_col}, s -> pmod(xxhash64({seed}, s), {p}L))"
@@ -1129,91 +1064,40 @@ def minhash_lsh_pairs(
     controlled by bands/rows-per-band (8 bands × 4 rows ≈ s-curve threshold
     ~0.5), and verification touches only candidates.
 
-    ``_arrs`` (r12): a caller that already holds a materialized
+    ``_arrs``: a caller that already holds a materialized
     ``shingle_arrays(df, id_col, text_col, n)`` frame — e.g. a query that
     also runs the exact truth companion over the same corpus — hands it
     in; the signature pass reads the materialized arrays instead of
     re-running the regex, and candidate verification becomes a semi-join
-    over them instead of a second raw-doc regex pass. Deliberately still
-    NOT checkpointed when self-built (r07: materializing the full corpus
-    upfront costs more than the lazy pipeline when nothing else reuses
-    it).
+    over them instead of a second raw-doc regex pass. A self-built corpus
+    pass stays lazy: materializing every shingle array upfront costs more
+    than the lazy pipeline when nothing else reuses it (+2 s at sf0.1).
     """
-    # signature + band keys: ONE map-only projection (fold expression), then
-    # explode only `bands` small rows per doc for the bucket join.
     arrs = _arrs if _arrs is not None else shingle_arrays(df, id_col, text_col, n)
     sig = minhash_signatures(arrs, id_col, num_hashes, seed)
     bucket = minhash_band_buckets(sig, id_col, num_hashes, bands)
-    a = bucket.select(F.col(id_col).alias("doc_a"), "band_no", "bucket")
-    b = bucket.select(F.col(id_col).alias("doc_b"), "band_no", "bucket")
-    # eager localCheckpoint of the CANDIDATE PAIRS, not the corpus shingles
-    # (r07: the old full-corpus arrs checkpoint materialized every shingle
-    # array upfront — measured +2s at sf0.1 — when downstream only ever
-    # reuses the candidate docs): the pair list is output-proportional and
-    # tiny, it is consumed by three subtrees (cand_ids twice + the common
-    # join), and truncating here means the whole LSH pipeline runs exactly
-    # once with zero cache-pool footprint.
-    candidates = (
-        a.join(b, on=["band_no", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # exact verification: re-run the map-only shingle pass on CANDIDATE
-    # docs only — semi-join the RAW docs first so the regex never touches
-    # non-candidates; set sizes come free from the array.
+    # the candidate pairs, not the corpus, are what gets materialized: the
+    # list is output-proportional and read three times (both id sides and
+    # the verify join), so the banding runs exactly once
+    candidates = _band_pairs(bucket, id_col).localCheckpoint(eager=True)
     cand_ids = (
         candidates.select(F.col("doc_a").alias(id_col))
         .union(candidates.select(F.col("doc_b").alias(id_col)))
         .distinct()
     )
+    # verify reads the CANDIDATE docs' arrays only (the raw docs are
+    # semi-joined before the regex), four times over — checkpointed, and
+    # candidate-proportional so the checkpoint is bounded
     if _arrs is not None:
-        # the corpus arrays are already materialized: candidate slice is
-        # a regex-free semi-join over them
-        cand_arrs = _arrs.join(
-            cand_ids, on=id_col, how="left_semi"
-        ).localCheckpoint(eager=True)
+        cand_arrs = _arrs.join(cand_ids, on=id_col, how="left_semi")
     else:
         cand_arrs = shingle_arrays(
             df.join(cand_ids, on=id_col, how="left_semi"), id_col, text_col, n
-        ).localCheckpoint(eager=True)
-    # ^ materialized once (r11, guide §1.2): the verification join reads
-    # this frame FOUR times (shingle rows for each pair side + a size
-    # table per side), and each reference of the lazy plan re-ran the
-    # raw-doc semi-join + shingle regex. Candidate-proportional by
-    # construction, so the checkpoint is bounded.
-    sh = cand_arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-    sizes = cand_arrs.select(F.col(id_col), F.size("shingles").cast("long").alias("sz"))
-    sa = sh.select(F.col(id_col).alias("doc_a"), "shingle")
-    sb = sh.select(F.col(id_col).alias("doc_b"), "shingle")
-    common = (
-        candidates.join(sa, on="doc_a")
-        .join(sb, on=["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    # candidate-population-sized size tables — corpus-proportional in the
-    # worst case, so probe-gated broadcast (r10, see _maybe_broadcast).
-    # r11 (ADVICE r10): probe cand_ids — one row per candidate doc, same
-    # cardinality as sizes, but derived from the eagerly checkpointed
-    # candidates frame — so the probe never re-executes the uncached
-    # cand_arrs lineage (raw-doc semi-join + shingle regex), which the
-    # verification join below will compute once on its own.
-    za = sizes.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
-    zb = sizes.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-    if _is_bounded(cand_ids):
-        za, zb = F.broadcast(za), F.broadcast(zb)
-    return (
-        common.join(za, "doc_a")
-        .join(zb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("common") / (F.col("sz_a") + F.col("sz_b") - F.col("common")),
         )
-        .filter(F.col("jaccard") >= min_jaccard)
-        .select("doc_a", "doc_b", "jaccard")
-    )
+    cand_arrs = cand_arrs.localCheckpoint(eager=True)
+    return _index_pairs(
+        cand_arrs, cand_arrs, id_col, _JACCARD, min_jaccard, candidates=candidates
+    ).select("doc_a", "doc_b", "jaccard")
 
 
 def simhash64(
@@ -1569,15 +1453,7 @@ def simhash_neardup_pairs(
     # eager localCheckpoint, not persist: returned frame is lazy over sim
     # (no paired unpersist possible); see the note in ngram_jaccard_pairs.
     sim = simhash64(df, id_col, text_col).localCheckpoint(eager=True)
-    buckets = simhash_band_buckets(sim, id_col, band_bits)
-    a = buckets.select(F.col(id_col).alias("doc_a"), "band_no", "bucket")
-    b = buckets.select(F.col(id_col).alias("doc_b"), "band_no", "bucket")
-    candidates = (
-        a.join(b, on=["band_no", "bucket"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    candidates = _band_pairs(simhash_band_buckets(sim, id_col, band_bits), id_col)
     fa = sim.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("__fp_a"))
     fb = sim.select(F.col(id_col).alias("doc_b"), F.col("simhash").alias("__fp_b"))
     return (
@@ -1728,7 +1604,7 @@ def build_neardup_index(
     * ``{index_dir}/buckets`` — the (id, band_no, bucket) LSH table,
       bucketed-by-key on disk via a ``bucket``-range sort so probe joins
       scan clustered keys;
-    * ``{index_dir}/shingles`` — (id, shingles, sz) for the exact-verify
+    * ``{index_dir}/shingles`` — (id, shingles) for the exact-verify
       stage, so probing never re-reads or re-shingles the corpus text.
 
     At 100 TB this happens once per corpus snapshot; each arriving batch
@@ -1742,11 +1618,7 @@ def build_neardup_index(
     buckets.repartitionByRange(8, "band_no", "bucket").write.mode(
         "overwrite"
     ).parquet(f"{index_dir}/buckets")
-    arrs.select(
-        F.col(id_col),
-        "shingles",
-        F.size("shingles").cast("long").alias("sz"),
-    ).write.mode("overwrite").parquet(f"{index_dir}/shingles")
+    arrs.write.mode("overwrite").parquet(f"{index_dir}/shingles")
     arrs.unpersist()
 
 
@@ -1778,51 +1650,26 @@ def neardup_probe(
     sig = minhash_signatures(arrs, id_col, num_hashes, seed)
     probe_buckets = minhash_band_buckets(sig, id_col, num_hashes, bands)
     store_buckets = spark.read.parquet(f"{index_dir}/buckets")
-    cand = (
-        probe_buckets.select(F.col(id_col).alias("bid"), "band_no", "bucket")
-        .join(
-            store_buckets.select(
-                F.col(id_col).alias("sid"), "band_no", "bucket"
-            ),
-            on=["band_no", "bucket"],
-        )
-        .select("bid", "sid")
-        .distinct()
-        .persist()
-    )
+    cand = _band_pairs(probe_buckets, id_col, store_buckets).persist()
     store_sh = spark.read.parquet(f"{index_dir}/shingles").join(
-        cand.select(F.col("sid").alias(id_col)).distinct(), on=id_col, how="left_semi"
+        cand.select(F.col("doc_b").alias(id_col)).distinct(), on=id_col, how="left_semi"
     )
-    bs = arrs.select(F.col(id_col).alias("bid"), F.explode("shingles").alias("s"))
-    ss = store_sh.select(
-        F.col(id_col).alias("sid"), F.explode("shingles").alias("s")
+    verified = _index_pairs(
+        arrs, store_sh, id_col, _JACCARD, min_jaccard, candidates=cand
     )
-    inter = (
-        cand.join(bs, on="bid")
-        .join(ss, on=["sid", "s"])
-        .groupBy("bid", "sid")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    bsz = arrs.select(
-        F.col(id_col).alias("bid"), F.size("shingles").cast("long").alias("bsz")
-    )
-    ssz = store_sh.select(F.col(id_col).alias("sid"), "sz")
-    verified = (
-        inter.join(bsz, "bid")
-        .join(ssz, "sid")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("bsz") + F.col("sz") - F.col("inter")),
-        )
-        .filter(F.col("jaccard") >= min_jaccard)
-    )
-    w = Window.partitionBy("bid").orderBy(F.col("jaccard").desc(), F.col("sid"))
+    w = Window.partitionBy("doc_a").orderBy(F.col("jaccard").desc(), F.col("doc_b"))
     best = (
         verified.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
-        .select("bid", F.col("sid").alias("best_match"), F.col("jaccard").alias("best_jaccard"))
+        .select(
+            F.col("doc_a").alias("bid"),
+            F.col("doc_b").alias("best_match"),
+            F.col("jaccard").alias("best_jaccard"),
+        )
     )
-    ncand = cand.groupBy("bid").agg(F.count(F.lit(1)).alias("n_candidates"))
+    ncand = cand.groupBy(F.col("doc_a").alias("bid")).agg(
+        F.count(F.lit(1)).alias("n_candidates")
+    )
     out = (
         batch.select(F.col(id_col).alias("bid"))
         .join(ncand, "bid", "left")
@@ -1838,8 +1685,7 @@ def neardup_probe(
     )
     # materialize the (one-row-per-batch-doc) result, then release the
     # cached intermediates — a long-lived session probing many batches
-    # otherwise accumulates executor cache (r04 ADVICE), unlike the
-    # persist/unpersist pairing everywhere else in this module
+    # otherwise accumulates executor cache
     out = out.localCheckpoint(eager=True)
     arrs.unpersist()
     cand.unpersist()
@@ -2257,7 +2103,6 @@ def edit_distance_pairs(
     max_dist: int = 2,
     q: int = 3,
     max_short: int = 10_000,
-    method: str = "prefix",
 ) -> DataFrame:
     """EXACT edit-distance similarity join — all (id_a, id_b, dist) pairs
     with Levenshtein distance ≤ ``max_dist`` — WITHOUT an all-pairs
@@ -2289,31 +2134,19 @@ def edit_distance_pairs(
     ``max_short`` and raising with guidance instead of exploding, with
     ``least(La,Lb) ≤ cut`` keeping the two paths disjoint.
 
-    Scale shape (``method='prefix'``, the default): explode ≤ L−q+1 gram
-    rows per string, ONE frequency agg, prefix join against the posting
-    index — hot grams almost never appear in any rarest-first prefix, so
-    their posting lists are never enumerated quadratically (the same
-    reason the AllPairs/PPJoin prefix paths scale); the candidate dedup
-    exchange carries (id_a, id_b) pairs ONLY — strings re-attach via an
-    id equi-join (broadcast when the candidate set is small) and each
-    candidate pair is levenshtein-verified exactly once.
-
-    ``method='count'`` instead joins ALL positional grams and applies the
-    Gravano count filter (shared grams ≥ max(La,Lb)−q+1−q·d) before
-    verification. On SMALL-vocabulary corpora where every gram is hot
-    (part names at sf0.1: count 5.8 s vs prefix 7.5 s — the count bound
-    prunes harder than a 1-shared-rare-gram prefix hit), it wins; its
-    candidate cost is Σ|posting|², so at open-vocabulary scale it is the
-    wrong default — the same inverted-vs-prefix trade as
-    ``ngram_jaccard_pairs`` vs ``_prefix``, kept available by name.
-    Both methods are property-tested identical to brute force.
+    Scale shape: explode ≤ L−q+1 gram rows per string, ONE frequency
+    agg, prefix join against the posting index — hot grams almost never
+    appear in any rarest-first prefix, so their posting lists are never
+    enumerated quadratically (the same reason the AllPairs/PPJoin prefix
+    paths scale); the candidate dedup exchange carries (id_a, id_b) pairs
+    ONLY — strings re-attach via an id equi-join (broadcast when the
+    candidate set is small) and each candidate pair is levenshtein-
+    verified exactly once. Property-tested identical to brute force.
     """
     if max_dist < 0:
         raise ValueError("edit_distance_pairs: max_dist must be >= 0")
     if q < 2:
         raise ValueError("edit_distance_pairs: q must be >= 2")
-    if method not in ("prefix", "count"):
-        raise ValueError("edit_distance_pairs: method must be 'prefix'|'count'")
     d = int(max_dist)
     short_cut = q * (d + 1) - 1
     base = df.select(
@@ -2324,97 +2157,62 @@ def edit_distance_pairs(
     # overlapping positional q-grams via the shingle_arrays lookahead
     # trick at char granularity; posexplode index IS the gram position.
     # (?s): dot must cross newlines or multi-line strings silently lose
-    # grams and the count filter loses completeness
+    # grams and the prefix filter loses completeness
     grams_expr = F.expr(f"regexp_extract_all(__s, '(?s)(?=(.{{{q}}})).', 1)")
     long_side = base.filter(F.col("__l") > short_cut)
     g = long_side.select(
         "__id", "__s", "__l", F.posexplode(grams_expr).alias("__pos", "__gram")
     )
-    if method == "prefix":
-        # rarest-first prefix: q·d+1 grams per string under the global
-        # (frequency, gram, pos) order — deterministic, hot grams excluded
-        freq = g.groupBy("__gram").agg(F.count(F.lit(1)).alias("__df"))
-        w_pref = Window.partitionBy("__id").orderBy("__df", "__gram", "__pos")
-        prefix = (
-            g.join(freq, "__gram")
-            .withColumn("__rk", F.row_number().over(w_pref))
-            .filter(F.col("__rk") <= q * d + 1)
-            .select(
-                F.col("__id").alias("__pid"), F.col("__s").alias("__ps"),
-                F.col("__l").alias("__pl"), F.col("__pos").alias("__pp"), "__gram",
-            )
+    # rarest-first prefix: q·d+1 grams per string under the global
+    # (frequency, gram, pos) order — deterministic, hot grams excluded
+    freq = g.groupBy("__gram").agg(F.count(F.lit(1)).alias("__df"))
+    w_pref = Window.partitionBy("__id").orderBy("__df", "__gram", "__pos")
+    prefix = (
+        g.join(freq, "__gram")
+        .withColumn("__rk", F.row_number().over(w_pref))
+        .filter(F.col("__rk") <= q * d + 1)
+        .select(
+            F.col("__id").alias("__pid"), F.col("__s").alias("__ps"),
+            F.col("__l").alias("__pl"), F.col("__pos").alias("__pp"), "__gram",
         )
-        full = g.select(
-            F.col("__id").alias("__fid"), F.col("__s").alias("__fs"),
-            F.col("__l").alias("__fl"), F.col("__pos").alias("__fp"), "__gram",
-        )
-        hit = prefix.join(full, "__gram").filter(
-            (F.col("__pid") != F.col("__fid"))
-            & (F.abs(F.col("__pl") - F.col("__fl")) <= d)
-            & (F.abs(F.col("__pp") - F.col("__fp")) <= d)
-        )
-        # ids-only distinct, then re-attach strings (r07 advice, measured
-        # twice): the original distinct carried both FULL strings per
-        # candidate through its exchange — 2× shuffle bytes on
-        # document-length strings for zero pruning benefit. The first fix
-        # (verify-then-distinct) kept strings out of the exchange but ran
-        # levenshtein once per HIT instead of once per PAIR — a pair
-        # re-hit by k shared rare grams costs k O(|s|²) verifications,
-        # and the sf1 document corpus measured that 68% SLOWER (126 s vs
-        # 75 s). This shape wins on both axes: the dedup exchange carries
-        # (id_a, id_b) only, strings re-attach via an id equi-join (AQE
-        # broadcasts the candidate set when it is small, so base strings
-        # never shuffle at all; at candidate volumes past broadcast it
-        # shuffles each candidate DOC's string once — ≤ the old 2×-per-
-        # pair), and levenshtein runs exactly once per candidate pair.
-        lo = F.col("__pid") < F.col("__fid")
-        cand_ids = hit.select(
-            F.when(lo, F.col("__pid")).otherwise(F.col("__fid")).alias("id_a"),
-            F.when(lo, F.col("__fid")).otherwise(F.col("__pid")).alias("id_b"),
-        ).distinct()
-        str_a = long_side.select(
-            F.col("__id").alias("id_a"), F.col("__s").alias("__sa")
-        )
-        str_b = long_side.select(
-            F.col("__id").alias("id_b"), F.col("__s").alias("__sb")
-        )
-        verified = (
-            cand_ids.join(str_a, "id_a")
-            .join(str_b, "id_b")
-            .select("id_a", "id_b", F.levenshtein("__sa", "__sb").alias("dist"))
-            .filter(F.col("dist") <= d)
-        )
-    else:
-        # count filter: every matching positional gram, pairs meeting the
-        # Gravano bound survive (over-counted matches only ADD candidates)
-        ga = g.select(
-            F.col("__id").alias("id_a"), F.col("__s").alias("__sa"),
-            F.col("__l").alias("__la"), F.col("__pos").alias("__pa"), "__gram",
-        )
-        gb = g.select(
-            F.col("__id").alias("id_b"), F.col("__s").alias("__sb"),
-            F.col("__l").alias("__lb"), F.col("__pos").alias("__pb"), "__gram",
-        )
-        thresh = F.greatest("__la", "__lb") - F.lit(q) + F.lit(1) - F.lit(q * d)
-        cand = (
-            ga.join(gb, "__gram")
-            .filter(
-                (F.col("id_a") < F.col("id_b"))
-                & (F.abs(F.col("__la") - F.col("__lb")) <= d)
-                & (F.abs(F.col("__pa") - F.col("__pb")) <= d)
-            )
-            .groupBy("id_a", "id_b", "__sa", "__sb", "__la", "__lb")
-            .agg(F.count(F.lit(1)).alias("__matches"))
-            .filter(F.col("__matches") >= thresh)
-        )
-        # the count filter must see the per-pair match total BEFORE any
-        # verification, so its group keys (and exchange) carry the strings
-        # — acceptable in this method's documented regime (small-vocab,
-        # SHORT strings); the prefix default never ships strings through
-        # a shuffle past the posting join
-        verified = cand.select(
-            "id_a", "id_b", F.levenshtein("__sa", "__sb").alias("dist")
-        ).filter(F.col("dist") <= d)
+    )
+    full = g.select(
+        F.col("__id").alias("__fid"), F.col("__s").alias("__fs"),
+        F.col("__l").alias("__fl"), F.col("__pos").alias("__fp"), "__gram",
+    )
+    hit = prefix.join(full, "__gram").filter(
+        (F.col("__pid") != F.col("__fid"))
+        & (F.abs(F.col("__pl") - F.col("__fl")) <= d)
+        & (F.abs(F.col("__pp") - F.col("__fp")) <= d)
+    )
+    # ids-only distinct, then re-attach strings: a distinct carrying both
+    # FULL strings per candidate doubles shuffle bytes on document-length
+    # strings for zero pruning benefit, and verify-then-distinct runs
+    # levenshtein once per HIT instead of once per PAIR — a pair re-hit by
+    # k shared rare grams costs k O(|s|²) verifications (measured 68%
+    # slower on the sf1 document corpus, 126 s vs 75 s). This shape wins
+    # on both axes: the dedup exchange carries (id_a, id_b) only, strings
+    # re-attach via an id equi-join (AQE broadcasts the candidate set when
+    # it is small, so base strings never shuffle at all; past broadcast it
+    # shuffles each candidate DOC's string once), and levenshtein runs
+    # exactly once per candidate pair.
+    lo = F.col("__pid") < F.col("__fid")
+    cand_ids = hit.select(
+        F.when(lo, F.col("__pid")).otherwise(F.col("__fid")).alias("id_a"),
+        F.when(lo, F.col("__fid")).otherwise(F.col("__pid")).alias("id_b"),
+    ).distinct()
+    str_a = long_side.select(
+        F.col("__id").alias("id_a"), F.col("__s").alias("__sa")
+    )
+    str_b = long_side.select(
+        F.col("__id").alias("id_b"), F.col("__s").alias("__sb")
+    )
+    verified = (
+        cand_ids.join(str_a, "id_a")
+        .join(str_b, "id_b")
+        .select("id_a", "id_b", F.levenshtein("__sa", "__sb").alias("dist"))
+        .filter(F.col("dist") <= d)
+    )
     # dense cohort: every string within d of the short cut (see cohort
     # split above); limit-probe guarded; `least <= cut` keeps it disjoint
     # from the q-gram path

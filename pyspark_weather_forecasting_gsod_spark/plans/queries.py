@@ -2353,12 +2353,8 @@ def fuzzy_name_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     rarest grams witness every true pair) — never all-pairs — then exact
     verification. The oracle IS the brute-force quadratic join on the
     same slice, so the hash match proves the prefix filter lost nothing.
-    Served by the prefix path — the open-vocabulary at-scale default;
-    the Gravano count-filter path (`method='count'`) prunes harder on
-    THIS hot-vocab slice and stays available by name, both
-    property-tested identical to brute force. The fuzzy-matching sibling
-    of the set-similarity family: entity/name resolution, typo-tolerant
-    record linkage."""
+    The fuzzy-matching sibling of the set-similarity family: entity/name
+    resolution, typo-tolerant record linkage."""
     from ..ext.dedup import edit_distance_pairs
 
     parts = _t(spark, sf_dir, "part").filter(F.col("p_partkey") % 10 == 0)

@@ -858,12 +858,10 @@ def test_ngram_best_match_router_and_banded_parity(spark, sf_dir):
         for r in ngram_best_match(docs, "doc_id", "text", n=2, force="exact").collect()
     }
     # max_exact_docs=1 forces the probe over the cutover → banded regime
-    banded = {
-        r.doc_a: (r.doc_b, round(r.jaccard, 9))
-        for r in ngram_best_match(
-            docs, "doc_id", "text", n=2, max_exact_docs=1
-        ).collect()
-    }
+    banded_rows = ngram_best_match(
+        docs, "doc_id", "text", n=2, max_exact_docs=1
+    ).collect()
+    banded = {r.doc_a: (r.doc_b, round(r.jaccard, 9)) for r in banded_rows}
     assert exact, "degenerate test: exact 1-NN found nothing"
     # the banded contract is near-dup-grade recall: docs whose TRUE best
     # match is j ≥ 0.5 must be reproduced ≥90% (s-curve ~0.99 there); a
@@ -874,6 +872,16 @@ def test_ngram_best_match_router_and_banded_parity(spark, sf_dir):
     assert agree / len(strong) >= 0.9, (agree, len(strong))
     for d, (b, j) in banded.items():
         assert j <= exact[d][1] + 1e-9  # banded can miss, never overshoot
+    # every banded row is an exactly scored pair: its common count and
+    # jaccard are the full enumeration's, in either orientation
+    full = set()
+    for r in ngram_jaccard_pairs(
+        docs, "doc_id", "text", n=2, min_jaccard=0.0, max_docs=None
+    ).collect():
+        full.add((r.doc_a, r.doc_b, r.common, r.jaccard))
+        full.add((r.doc_b, r.doc_a, r.common, r.jaccard))
+    missing = [r for r in banded_rows if tuple(r) not in full]
+    assert not missing, missing[:5]
     import pytest
 
     with pytest.raises(ValueError, match="force"):
@@ -1152,6 +1160,57 @@ def test_shared_arrs_handover_identical_outputs(spark):
     assert c_shared == c_plain == c_half and c_plain
 
 
+def test_neardup_probe_against_index(spark, tmp_path):
+    """A batch probed against a ``build_neardup_index`` store: an exact
+    copy reports its store doc at 1.0 (the smaller store id on a tie), a
+    doc sharing no shingle reports NULLs, and every reported best is an
+    exactly scored pair of ``exact_cross_jaccard``."""
+    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
+        build_neardup_index,
+        exact_cross_jaccard,
+        neardup_probe,
+    )
+
+    greek = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    count = "one two three four five six seven eight nine ten eleven twelve"
+    store = spark.createDataFrame(
+        [
+            Row(doc_id=1, text="the quick brown fox jumps over the lazy dog"),
+            Row(doc_id=2, text=greek),
+            Row(doc_id=3, text=greek),  # ties doc 2 for any probe
+            Row(doc_id=4, text=count),
+            Row(doc_id=5, text="red orange yellow green blue indigo violet"),
+        ]
+    )
+    batch = spark.createDataFrame(
+        [
+            Row(doc_id=101, text=greek),
+            Row(doc_id=102, text="nothing here is shared with any stored doc"),
+            Row(doc_id=103, text=count.replace("twelve", "thirteen")),
+        ]
+    )
+    index_dir = str(tmp_path / "index")
+    build_neardup_index(store, index_dir, "doc_id")
+    got = {
+        r.doc_id: r
+        for r in neardup_probe(spark, index_dir, batch, "doc_id").collect()
+    }
+    assert set(got) == {101, 102, 103}
+    assert (got[101].best_match, got[101].best_jaccard) == (2, 1.0)
+    assert got[101].n_candidates >= 2  # both copies were candidates
+    assert got[102].best_match is None and got[102].best_jaccard is None
+    exact = {
+        (r.bid, r.sid): round(r.jaccard, 6)
+        for r in exact_cross_jaccard(
+            batch, store, "doc_id", min_jaccard=0.5
+        ).collect()
+    }
+    reported = [r for r in got.values() if r.best_match is not None]
+    assert reported
+    for r in reported:
+        assert exact[(r.doc_id, r.best_match)] == r.best_jaccard, r
+
+
 def test_edit_distance_pairs_equals_brute_force(spark):
     """The Ed-Join positional q-gram prefix filter must lose NOTHING:
     output == brute-force Levenshtein join across thresholds, q sizes,
@@ -1185,7 +1244,7 @@ def test_edit_distance_pairs_equals_brute_force(spark):
     # dense-cohort material: empty, sub-q, and the len-8/len-9 boundary
     # pair that must cross the short/long cohort split (q=3, d=2); plus
     # multi-line strings — (?s) grams must cross the newline or the
-    # count filter loses completeness
+    # prefix filter loses completeness
     strs += ["", "a", "ab", "abc", "abd", "abcdefgh", "abcdefghi",
              "alpha\nbeta gamma", "alpha\nbeta gamme"]
     rows = [(i, s) for i, s in enumerate(strs)]
@@ -1196,14 +1255,11 @@ def test_edit_distance_pairs_equals_brute_force(spark):
             for (i, a), (j, b) in itertools.combinations(rows, 2)
             if lev(a, b) <= d
         }
-        for method in ("prefix", "count"):
-            got = {
-                (r.id_a, r.id_b, r.dist)
-                for r in edit_distance_pairs(
-                    df, "id", "s", max_dist=d, q=q, method=method
-                ).collect()
-            }
-            assert got == want, (d, q, method, len(got), len(want))
+        got = {
+            (r.id_a, r.id_b, r.dist)
+            for r in edit_distance_pairs(df, "id", "s", max_dist=d, q=q).collect()
+        }
+        assert got == want, (d, q, len(got), len(want))
 
     import pytest
 
@@ -1211,8 +1267,6 @@ def test_edit_distance_pairs_equals_brute_force(spark):
         edit_distance_pairs(df, "id", "s", max_dist=2, q=3, max_short=3)
     with pytest.raises(ValueError, match="q must be"):
         edit_distance_pairs(df, "id", "s", q=1)
-    with pytest.raises(ValueError, match="method"):
-        edit_distance_pairs(df, "id", "s", method="bogus")
 
 
 def test_edit_distance_prefix_dedup_ships_no_strings(spark):

@@ -640,12 +640,13 @@ def main() -> None:
             .save(),
         )
 
-    # --- r7: edit-distance join, prefix (default) vs count regime -------
+    # --- r7: edit-distance join (Ed-Join prefix filter) ----------------
     # slice = replicas 1-4 of every clump (4-member clumps whose rtag
     # digits differ pairwise by exactly 1 edit): real planted structure,
     # 20k strings of ~160 chars — the open-vocabulary regime the Ed-Join
-    # prefix path exists for, with the count path forced on the identical
-    # slice so the crossover claim is measured, not asserted.
+    # prefix path exists for. (The all-grams Gravano count filter, since
+    # removed, was measured-aborted on this slice at >1385 s against 75.3 s
+    # for the prefix path, and at >570 s against 10.5 s on a 5k slice.)
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
         edit_distance_pairs,
     )
@@ -662,33 +663,9 @@ def main() -> None:
     timed(
         "edit_distance_prefix",
         lambda: edit_distance_pairs(
-            ed_slice, "doc_id", "text", max_dist=1, q=3, method="prefix"
+            ed_slice, "doc_id", "text", max_dist=1, q=3
         ).count(),
     )
-    # method='count' is NOT run by default: on this document-corpus gram
-    # profile (157-char docs over a tiny word vocabulary -> every char
-    # trigram posting is hot) its all-grams join was measured-aborted in
-    # the r7 rehearsal at >1385s on the 20k slice (prefix: 75.3s) and
-    # >570s on a 5k slice (prefix: 10.5s) — the sigma-|posting|^2 blow-up
-    # the prefix default exists to avoid. Short-string hot-vocab corpora
-    # (part names) remain the regime where count wins (5.8s vs 7.5s at
-    # sf0.1, BENCH notes). Set SPARK_GRAFT_ED_COUNT=1 to re-measure here.
-    if os.environ.get("SPARK_GRAFT_ED_COUNT"):
-        routes["edit_distance_count"] = f"n_strings={n_ed} max_dist=1 q=3 method=count"
-        timed(
-            "edit_distance_count",
-            lambda: edit_distance_pairs(
-                ed_slice, "doc_id", "text", max_dist=1, q=3, method="count"
-            ).count(),
-        )
-    elif not only:
-        timings["edit_distance_count"] = None  # NOT RUN -> null (r10 VERDICT #6)
-        routes["edit_distance_count"] = (
-            f"n_strings={n_ed} NOT RUN by default: measured-aborted >1385s "
-            "(prefix 75.3s on the identical slice) and >570s at 5k docs "
-            "(prefix 10.5s) — hot-gram sigma-|posting|^2 blow-up; "
-            "SPARK_GRAFT_ED_COUNT=1 re-measures"
-        )
 
     # --- r7: bucketed vs shuffled fact-fact join at sf1 ------------------
     # pay-the-shuffle-once evidence at 10x: write orders/lineitem bucketed
