@@ -7,6 +7,13 @@ pass over all categorical columns), OneHotEncoder, numeric VectorAssembler,
 StandardScaler (unit-stddev, no mean centering — the reference's default,
 ipynb:1321), final assembler to ``features``. ``stringOrderType`` is pinned
 for determinism (SURVEY.md §7 risk 7).
+
+The design is full rank: a column with k categories gets k−1 one-hot slots
+(``dropLast``, no invalid bucket), so with LinearRegression's intercept the
+normal equations solve by Cholesky instead of falling back to L-BFGS. The
+GSOD pipeline does not use this Pipeline: its categorical columns are
+already 0/1 integers, so ``pipelines.gsod.featurize`` assembles them as
+numerics and needs no fitted stage.
 """
 
 from __future__ import annotations
@@ -23,7 +30,12 @@ def build_feature_pipeline(
 ) -> Pipeline:
     """M1-M5 as a single Pipeline: index → one-hot → assemble → scale →
     final assemble. Fit = 2 passes (indexers batch into one, scaler one);
-    the reference spends one job per categorical column."""
+    the reference spends one job per categorical column.
+
+    The indexer runs with ``handleInvalid="error"``: a NULL or unseen
+    category raises Spark's StringIndexer error naming the column and
+    value, rather than landing in an extra bucket. That bucket made the
+    one-hot slots of each column sum to 1, a copy of the intercept."""
     stages = []
     vec_inputs: list[str] = []
     if categorical:
@@ -32,7 +44,7 @@ def build_feature_pipeline(
                 inputCols=categorical,
                 outputCols=[f"{c}_index" for c in categorical],
                 stringOrderType="frequencyDesc",
-                handleInvalid="keep",
+                handleInvalid="error",
             )
         )
         stages.append(

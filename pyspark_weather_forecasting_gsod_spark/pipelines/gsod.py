@@ -4,8 +4,10 @@ This is the full jmayank23/PySpark-Weather-Forecasting-GSOD capability
 surface in one place (SURVEY.md §2.10/§2.11): sentinel normalization →
 column drops → ordered imputation strategy (proximity / zero / seasonal
 median, ipynb:947-956) → next-day label build (ipynb:1251-1260) → one
-ml.Pipeline of feature stages → (stn, date) key-hash split → LR + GBT
-train/eval (DataFrame-native metrics).
+VectorAssembler over the 0/1 weather flags and the numerics, with no fitted
+feature stage (``featurize``) → (stn, date) key-hash split → LR + GBT
+train/eval (DataFrame-native metrics). The design is full rank, so the LR
+fit is one normal-equation (Cholesky) pass plus one eval pass.
 
 ``weather_fixture`` synthesizes a GSOD-shaped table per FIXTURES.md §A —
 generated DISTRIBUTED (spark.range + hash-based deterministic uniforms, no
@@ -18,10 +20,10 @@ from __future__ import annotations
 
 import math
 
+from pyspark.ml.feature import VectorAssembler
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..ml.features import build_feature_pipeline
 from ..ml.models import (
     evaluate_classification,
     evaluate_regression,
@@ -52,6 +54,19 @@ GSOD_DROPS = ["dewp", "wban", "gust", "flag_max", "flag_min", "flag_prcp", "sndp
 
 INDICATORS = ["fog", "rain_drizzle", "snow_ice_pellets", "hail", "thunder",
               "tornado_funnel_cloud"]
+
+# The imputed measures the census counts and the model reads.
+MEASURES = ["temp", "stp", "max", "min", "visib", "wdsp", "mxpsd", "prcp"]
+
+# The regression design: 16 columns. The indicators are already 0/1
+# integers; with an intercept a 0/1 column spans what its one-hot pair
+# did, so no indexer or encoder is fitted. No scaler is fitted either:
+# LinearRegression standardizes inside its normal-equation solve, and GBT
+# is scale-invariant. ``year`` is left out by name: the pipeline is defined
+# on one GSOD year (the reference loads gsod-2023 only), so ``year`` is
+# constant and collinear with the intercept, and would make the normal
+# equations singular.
+FEATURES = INDICATORS + MEASURES + ["mo", "da"]
 
 
 def gsod_csv_schema():
@@ -193,6 +208,12 @@ def gsod_impute_strategy(fast: bool = False):
     }
 
 
+def featurize(labeled: DataFrame) -> DataFrame:
+    """Add the ``features`` vector of the ``FEATURES`` columns. A plain
+    VectorAssembler transform: nothing is fitted, so it runs no job."""
+    return VectorAssembler(inputCols=FEATURES, outputCol="features").transform(labeled)
+
+
 def run_gsod_pipeline(
     df: DataFrame, fast: bool = False, with_classifier: bool = True
 ) -> dict[str, object]:
@@ -237,7 +258,6 @@ def run_gsod_pipeline(
     # shares their exchange and sort. The census is observed before the
     # label filter drops each station's last row. The imputed table, the
     # labeled table and every feature/model pass read the checkpoint.
-    measure_cols = ["temp", "stp", "max", "min", "visib", "wdsp", "mxpsd", "prcp"]
     census_obs = Observation("census")
     labels = {"max": "next_day_max", "rain_drizzle": "next_day_rain"}
     both = lead_labels(
@@ -245,7 +265,7 @@ def run_gsod_pipeline(
             census_obs,
             F.count(F.lit(1)).alias("n_rows"),
             *[F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}")
-              for c in measure_cols],
+              for c in MEASURES],
         ),
         group_by="stn", order_by="date", labels=labels, drop_null_labels=False,
     ).localCheckpoint(eager=True)
@@ -263,25 +283,21 @@ def run_gsod_pipeline(
         ) < 80,
     })
 
-    pipeline = build_feature_pipeline(
-        categorical=INDICATORS,
-        numerical=measure_cols + ["year", "mo", "da"],
-    )
-    feat_model = pipeline.fit(labeled)
-    _mark("feature_fit_sec")
-    # LinearRegression.fit traverses its input more than once (the
-    # normal-equation aggregate and the training summary), and so does the
-    # eval, so one cached frame of exactly the fit columns and the split
-    # flag feeds both sides of the split, which are plain filters on it.
+    # One cached frame of exactly the fit columns and the split flag feeds
+    # both sides of the split, which are plain filters on it: the LR fit
+    # (one normal-equation aggregate plus its training summary) and the
+    # eval each read it. Dropping the persist and assembling per pass was
+    # measured slower (perfbench gsod_pipeline wall_s on 4 vCPUs, seeds 1
+    # and 2: 0.75/0.76 s → 0.93/0.91 s).
     # persist rather than localCheckpoint: checkpoint blocks are pinned and
     # not recomputable, and pinning the vector table can starve execution
     # memory in a default-heap driver, where persisted blocks are evicted
     # instead. The cache keeps the checkpoint's partitioning, so the fit
     # and eval passes run one task per impute window partition.
-    featurized = feat_model.transform(labeled).select(
+    featurized = featurize(labeled).select(
         "features", "next_day_max", "next_day_rain", "is_train"
-    )
-    featurized = featurized.persist()
+    ).persist()
+    _mark("feature_fit_sec")
     train = featurized.filter(F.col("is_train"))
     test = featurized.filter(~F.col("is_train"))
     try:

@@ -35,9 +35,11 @@ def get_spark(
     """Build (or fetch) a SparkSession with scale-sane defaults.
 
     ``master`` defaults to ``$SPARK_MASTER`` or ``local[*]``;
-    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_CPUS`` or 32. On a real
-    cluster pass the cluster master URL and a shuffle partition count sized to
-    ~2-3x total executor cores (AQE coalesces the excess at runtime).
+    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_CPUS`` or else the
+    number of cores this process may run on (``os.sched_getaffinity``), the
+    width ``local[*]`` gets. On a real cluster pass the cluster master URL
+    and a shuffle partition count sized to ~2-3x total executor cores (AQE
+    coalesces the excess at runtime).
     """
     master = master or os.environ.get("SPARK_MASTER", "local[*]")
     # remember whether the caller actually expressed a parallelism intent:
@@ -47,7 +49,9 @@ def get_spark(
         shuffle_partitions is not None or "SPARK_GRAFT_CPUS" in os.environ
     )
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        shuffle_partitions = int(
+            os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+        )
     # getOrCreate can also hand back the DEFAULT (last-instantiated)
     # session when none is active in the calling thread (r06 advice) —
     # check both, or an unrequested default shuffle width would clobber a
@@ -66,7 +70,6 @@ def get_spark(
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
@@ -76,12 +79,12 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # getOrCreate silently IGNORES every builder config when a session
-    # already exists — a notebook/test that built one first would get
-    # local-time date parts and an unreadable NANOS events table (r06
-    # review). Re-assert the runtime-settable confs on whatever came back;
-    # the static ones (driver memory, UI) genuinely can't change
-    # post-start, which is fine — they don't affect results.
+    # On a live session getOrCreate keeps the static confs (driver memory,
+    # UI), which do not affect results; re-assert the runtime-settable ones
+    # so a session built first elsewhere still gets UTC date parts and a
+    # readable NANOS events table. The shuffle width is not a builder
+    # option: getOrCreate copies builder options onto a live session, so an
+    # unrequested default there would overwrite a configured width.
     tune(spark)
     if not pre_existing or explicit_shuffle:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))

@@ -25,12 +25,33 @@ def _frame(spark, n=200):
     return spark.createDataFrame(rows)
 
 
+def _record(monkeypatch, module, name, sink):
+    """Wrap ``module.name`` so each call appends its first argument."""
+    fn = getattr(module, name)
+
+    def recording(df, *a, **k):
+        sink.append(df)
+        return fn(df, *a, **k)
+
+    monkeypatch.setattr(module, name, recording)
+
+
 def test_feature_pipeline_dimensions(spark):
     feat = assemble_features(_frame(spark), categorical=["cat"], numerical=["x", "y"])
     row = feat.select("features").first()
-    # 2 one-hot slots (2 cats, keep-invalid adds one dropped-last) + 2 scaled
-    assert row.features.size >= 4
+    # 1 one-hot slot (2 cats, last dropped, no invalid bucket) + 2 scaled
+    assert row.features.size == 3
     assert "scaled_numerical_features" in feat.columns
+
+
+def test_feature_pipeline_design_is_full_rank(spark):
+    """With k−1 one-hot slots per categorical column the design has full
+    rank next to the intercept, so LinearRegression solves the normal
+    equations by Cholesky (0 iterations) instead of falling back to
+    L-BFGS."""
+    feat = assemble_features(_frame(spark), categorical=["cat"], numerical=["x", "y"])
+    model = train_linear_regression(feat, "label")
+    assert model.summary.totalIterations == 0
 
 
 def test_linear_regression_learns_linear_signal(spark):
@@ -206,20 +227,7 @@ def test_gsod_fast_pipeline_equals_staged_impute_chain(spark, monkeypatch):
     from pyspark_weather_forecasting_gsod_spark.pipelines import gsod as G
 
     fit_inputs = []
-    build = G.build_feature_pipeline
-
-    def recording_build(**kw):
-        pipe = build(**kw)
-        fit = pipe.fit
-
-        def recording_fit(df, *a, **k):
-            fit_inputs.append(df)
-            return fit(df, *a, **k)
-
-        pipe.fit = recording_fit
-        return pipe
-
-    monkeypatch.setattr(G, "build_feature_pipeline", recording_build)
+    _record(monkeypatch, G, "featurize", fit_inputs)
     wx = G.weather_fixture(spark, 12, 120)
     out = G.run_gsod_pipeline(wx, fast=True, with_classifier=False)
 
@@ -254,10 +262,12 @@ def test_gsod_fast_pipeline_equals_staged_impute_chain(spark, monkeypatch):
 
 
 def test_gsod_fast_pipeline_job_count(spark):
-    """Impute, census and labels run as one materialization, so the whole
-    fast pipeline without the classifier stays within 15 Spark jobs; each
-    extra checkpoint or census pass adds jobs (three checkpoints and a
-    census collect run 23)."""
+    """Impute, census and labels run as one materialization, and the
+    features are one assembler with no fitted stage, so the whole fast
+    pipeline without the classifier stays within 10 Spark jobs. Each extra
+    checkpoint or census pass adds jobs (three checkpoints and a census
+    collect run 23), and so does each fitted feature stage (the
+    indexer/one-hot/scaler Pipeline ran 15)."""
     from pyspark_weather_forecasting_gsod_spark.pipelines.gsod import (
         run_gsod_pipeline,
         weather_fixture,
@@ -272,7 +282,52 @@ def test_gsod_fast_pipeline_job_count(spark):
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 15
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
+
+
+def test_gsod_regression_design_is_full_rank_and_equivalent(spark, monkeypatch):
+    """The GSOD LR fit solves the normal equations by Cholesky (0
+    iterations) on 16 features, and its test-side predictions equal those
+    of the reference-shaped featurization over the same rows (one-hot
+    flags, scaled numerics, full rank, ``year`` dropped): with an
+    intercept both designs span the same columns, so the removed indexer,
+    encoder and scaler fits did not change the model."""
+    from pyspark.sql import functions as F
+
+    from pyspark_weather_forecasting_gsod_spark.ml.features import build_feature_pipeline
+    from pyspark_weather_forecasting_gsod_spark.pipelines import gsod as G
+
+    labeled_in, models = [], []
+    _record(monkeypatch, G, "featurize", labeled_in)
+    fit = G.train_linear_regression
+
+    def recording_fit(*a, **k):
+        models.append(fit(*a, **k))
+        return models[-1]
+
+    monkeypatch.setattr(G, "train_linear_regression", recording_fit)
+    wx = G.weather_fixture(spark, 12, 120)
+    G.run_gsod_pipeline(wx, fast=True, with_classifier=False)
+    (labeled,), (model,) = labeled_in, models
+    assert model.summary.totalIterations == 0
+    assert len(model.coefficients) == 16
+
+    ref_feat = build_feature_pipeline(
+        categorical=G.INDICATORS, numerical=G.MEASURES + ["mo", "da"]
+    ).fit(labeled).transform(labeled)
+    ref = train_linear_regression(ref_feat.filter("is_train"), "next_day_max")
+    assert ref.summary.totalIterations == 0
+
+    def predictions(m, feat):
+        rows = m.transform(feat.filter(~F.col("is_train"))).select(
+            "stn", "date", "prediction"
+        ).collect()
+        return {(r.stn, r.date): r.prediction for r in rows}
+
+    got = predictions(model, G.featurize(labeled))
+    want = predictions(ref, ref_feat)
+    assert got.keys() == want.keys() and got
+    assert max(abs(got[k] - want[k]) for k in got) < 1e-9
 
 
 def test_gsod_pipeline_split_is_layout_independent(spark, monkeypatch):
@@ -284,31 +339,9 @@ def test_gsod_pipeline_split_is_layout_independent(spark, monkeypatch):
     from pyspark_weather_forecasting_gsod_spark.pipelines import gsod as G
 
     fit_inputs, trains, tests = [], [], []
-    build = G.build_feature_pipeline
-
-    def recording_build(**kw):
-        pipe = build(**kw)
-        fit = pipe.fit
-
-        def recording_fit(df, *a, **k):
-            fit_inputs.append(df)
-            return fit(df, *a, **k)
-
-        pipe.fit = recording_fit
-        return pipe
-
-    def record(name, sink):
-        fn = getattr(G, name)
-
-        def recording(df, *a, **k):
-            sink.append(df)
-            return fn(df, *a, **k)
-
-        monkeypatch.setattr(G, name, recording)
-
-    monkeypatch.setattr(G, "build_feature_pipeline", recording_build)
-    record("train_linear_regression", trains)
-    record("evaluate_regression", tests)
+    _record(monkeypatch, G, "featurize", fit_inputs)
+    _record(monkeypatch, G, "train_linear_regression", trains)
+    _record(monkeypatch, G, "evaluate_regression", tests)
     wx = G.weather_fixture(spark, 12, 120).localCheckpoint(eager=True)
 
     def labels(frame):
