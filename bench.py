@@ -1,6 +1,7 @@
 """Benchmark harness: runs the declared headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the cores this process may run on) and
+prints ONE JSON line:
 {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query is materialized with a noop-format write (full distributed
@@ -16,6 +17,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from perfbench import box  # noqa: E402
 from pyspark_weather_forecasting_gsod_spark.plans import queries  # noqa: E402
 from pyspark_weather_forecasting_gsod_spark.session import get_spark  # noqa: E402
 
@@ -233,12 +235,14 @@ def update_ledger(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    # Size the single-JVM heap to the bench box (128 GiB): a 178-query
-    # sweep in the 8g default accumulates enough tenured garbage that
-    # late-sweep queries pay 2-3x in GC churn (measured: neardup_clusters
-    # 11.9 s at 8g vs 4.2 s at 48g, same code). Overridable via env.
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
+    # Size the session to the box by the benchmark's own rule
+    # (perfbench/box.py): every core this process may run on, and a
+    # quarter of RAM between 1 and 4 GiB for the single-JVM heap. Both are
+    # overridable via env; a larger box can take a larger heap (a 178-query
+    # sweep on a 128 GiB box read neardup_clusters 11.9 s at 8g vs 4.2 s at
+    # 48g, from tenured garbage late in the sweep).
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(box.cpus()))
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", f"{box.heap_mib(box.mem_total_mib())}m")
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     try:
         sf_val: float | str = float(sf)

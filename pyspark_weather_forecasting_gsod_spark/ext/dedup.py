@@ -23,7 +23,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -377,6 +377,17 @@ def _band_pairs(
     return pairs.select("doc_a", "doc_b").distinct()
 
 
+def _shingle_freq(arrs: DataFrame) -> DataFrame:
+    """(shingle, __df): each distinct shingle and its document frequency —
+    the rarest-first order of the prefix kernel and, on a dense admit, the
+    column index's vocabulary."""
+    return (
+        arrs.select(F.explode("shingles").alias("shingle"))
+        .groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("__df"))
+    )
+
+
 def _prefix_pairs(
     df: DataFrame,
     id_col: str,
@@ -384,7 +395,7 @@ def _prefix_pairs(
     n: int,
     m: _Measure,
     t: float,
-    arrs: DataFrame | None = None,
+    corpus: _Corpus | None = None,
 ) -> DataFrame:
     """Rarest-first prefix kernel (AllPairs/PPJoin, Bayardo et al.,
     WWW'07): the inverted index's output at a fraction of its cost when
@@ -397,15 +408,21 @@ def _prefix_pairs(
     prefixes, so the candidate join never touches hot posting lists (the
     Σ|posting|² blowup, measured 10× on 2-gram shingles at sf0.1).
     Candidates are verified exactly with one JVM ``array_intersect`` per
-    pair. Plan: one frequency aggregate, one window rank per doc, one
+    pair. Plan: one window rank per doc over the frequency table, one
     candidate equi-join, one verify join carrying arrays for candidates
-    only; nothing quadratic in the corpus."""
+    only; nothing quadratic in the corpus. A prepared ``corpus`` supplies
+    both the shingle arrays and the frequency table (the auto routers'
+    admission pass); without one, the arrays are materialized here and the
+    frequency aggregate stays part of the plan."""
     t = float(t)
     if not 0.0 < t <= 1.0:
         raise ValueError(f"prefix filtering requires 0 < min_{m.name} <= 1")
-    arrs = _prepared(df, id_col, text_col, n, arrs)
+    if corpus is None:
+        arrs = _prepared(df, id_col, text_col, n)
+        freq = _shingle_freq(arrs)
+    else:
+        arrs, freq = corpus.arrs, corpus.freq
     sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-    freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("__df"))
     wrk = Window.partitionBy(id_col).orderBy("__df", "shingle")
     wsz = Window.partitionBy(id_col)
     ranked = (
@@ -447,16 +464,17 @@ def _integral_id_dtype(df: DataFrame, id_col: str) -> bool:
 
 
 class _Corpus(NamedTuple):
-    """A corpus as the dense admission probe leaves it. The auto routers
-    hand it to whichever kernel wins, so no probe or shingle pass runs
-    twice."""
+    """A shingled corpus, prepared once: the auto routers build it in
+    ``_dense_admission`` and hand it to whichever kernel wins, so neither
+    the shingle pass nor the frequency aggregate runs twice."""
 
     # dense regime: integral ids, ≤ max_rows docs, ≤ max_vocab shingles
     admit: bool
-    n_docs: int  # raw row count: an upper bound on shingle-bearing docs
+    n_docs: int  # shingle-bearing docs (rows of arrs)
+    n_vocab: int  # distinct shingles (rows of freq)
     vidx: DataFrame | None  # (shingle, __idx) column index; set iff admit
-    # checkpointed shingle arrays; None after a cheap early reject
-    arrs: DataFrame | None
+    arrs: DataFrame  # checkpointed shingle_arrays(df, id_col, text_col, n)
+    freq: DataFrame  # checkpointed (shingle, __df) document frequencies
 
 
 def _dense_admission(
@@ -466,63 +484,63 @@ def _dense_admission(
     n: int,
     max_rows: int,
     max_vocab: int,
-    sample_docs: int = 2_000,
     arrs: DataFrame | None = None,
 ) -> _Corpus:
-    """Dense-regime admission test shared by the auto routers and the
-    dense kernel. The decision is IDENTICAL to probing the full corpus
-    (pytest-asserted); only the probe cost changes:
+    """Prepare the corpus and decide the dense regime in one pass.
 
-    * the doc-count probe runs on the RAW input (``shingle_arrays`` only
-      ever DROPS rows — docs shorter than ``n`` tokens — so the raw count
-      is a sound upper bound for both the guard and dense block sizing)
-      and skips the shingling regex;
-    * the vocab probe first counts distinct shingles over a
-      ``sample_docs`` subset — distinct-shingle count is monotone in the
-      corpus, so a sample exceeding ``max_vocab`` PROVES the full corpus
-      does, and the Zipf-vocabulary regime (the common one at scale) is
-      rejected without any full map pass.
+    The shingle arrays (``arrs`` when the caller hands over an eager
+    ``shingle_arrays(df, id_col, text_col, n)`` checkpoint, else one
+    materialized here) feed one ``(shingle, __df)`` frequency aggregate,
+    materialized by an eager localCheckpoint whose job also counts, through
+    two ``DataFrame.observe`` counters, the shingle-bearing docs and the
+    vocabulary. Dense is admitted for integral ids, ≤ ``max_rows`` docs
+    and ≤ ``max_vocab`` shingles; the column index is then the frequency
+    table's shingles in sorted order.
 
-    Past the cheap rejects, the corpus-wide shingle pass is materialized
-    HERE (eager localCheckpoint) and returned; the full vocab probe, the
-    dense kernel and the prefix fallback all read that one
-    materialization. A caller that already holds a checkpointed
-    ``shingle_arrays(df)`` frame passes it as ``arrs`` and no shingle pass
-    runs here at all.
+    Either route reads the frequency table: the prefix kernel ranks
+    shingles by it, so a rejected corpus has paid for nothing the prefix
+    path would not compute anyway. The cheap early rejects (raw-count and
+    sample-vocab probes) belong to the standalone dense entries, the one
+    caller they save a full pass for. In the Zipf regime the table holds
+    the whole vocabulary, one row per distinct shingle.
     """
-    if not _integral_id_dtype(df, id_col):
-        return _Corpus(False, 0, None, arrs)
-    n_docs = df.limit(max_rows + 1).count()
-    if n_docs > max_rows:
-        return _Corpus(False, n_docs, None, arrs)
-    if arrs is None:
-        if n_docs > sample_docs:
-            sample_probe = (
-                shingle_arrays(df.limit(sample_docs), id_col, text_col, n)
-                .select(F.explode("shingles").alias("shingle"))
-                .distinct()
-                .limit(max_vocab + 1)
-                .count()
-            )
-            if sample_probe > max_vocab:
-                return _Corpus(False, n_docs, None, None)
-        arrs = _prepared(df, id_col, text_col, n)
-    # full-corpus vocab probe over the materialized arrays: when it
-    # admits, this ≤ max_vocab slice IS the complete distinct vocabulary
-    # (the window and the checkpoint are bounded) and doubles as the
-    # dense path's column index
-    vs = (
-        arrs.select(F.explode("shingles").alias("shingle"))
-        .distinct()
-        .limit(max_vocab + 1)
+    arrs = _prepared(df, id_col, text_col, n, arrs)
+    docs_obs, vocab_obs = Observation(), Observation()
+    freq = (
+        _shingle_freq(arrs.observe(docs_obs, F.count(F.lit(1)).alias("n")))
+        .observe(vocab_obs, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
-    if vs.count() > max_vocab:
-        return _Corpus(False, n_docs, None, arrs)
-    vidx = vs.withColumn(
-        "__idx", F.row_number().over(Window.orderBy("shingle")) - 1
+    n_docs, n_vocab = docs_obs.get["n"], vocab_obs.get["n"]
+    admit = (
+        _integral_id_dtype(df, id_col) and n_docs <= max_rows and n_vocab <= max_vocab
     )
-    return _Corpus(True, n_docs, vidx, arrs)
+    vidx = None
+    if admit:
+        vidx = freq.select(
+            "shingle", (F.row_number().over(Window.orderBy("shingle")) - 1).alias("__idx")
+        )
+    return _Corpus(admit, n_docs, n_vocab, vidx, arrs, freq)
+
+
+_VOCAB_SAMPLE_DOCS = 2_000
+
+
+def _sample_vocab_exceeds(
+    df: DataFrame, id_col: str, text_col: str, n: int, max_vocab: int
+) -> bool:
+    """True when the first ``_VOCAB_SAMPLE_DOCS`` docs alone hold more than
+    ``max_vocab`` distinct shingles. The distinct count is monotone in the
+    corpus, so a True PROVES the full corpus exceeds the cap too: the
+    Zipf-vocabulary regime is rejected without a full map pass."""
+    return (
+        shingle_arrays(df.limit(_VOCAB_SAMPLE_DOCS), id_col, text_col, n)
+        .select(F.explode("shingles").alias("shingle"))
+        .distinct()
+        .limit(max_vocab + 1)
+        .count()
+        > max_vocab
+    )
 
 
 def _dense_pair_blocks(
@@ -552,9 +570,13 @@ def _dense_pair_blocks(
 
     Guards, each raising with a pointer to the prefix path: ``t > 0``, an
     integral id column (ids are packed into int64 matrices), ≤
-    ``max_rows`` docs and ≤ ``max_vocab`` distinct shingles. The doc and
-    vocab probes are ``_dense_admission``'s; the auto routers hand their
-    ``corpus`` over so neither runs twice.
+    ``max_rows`` docs and ≤ ``max_vocab`` distinct shingles. The auto
+    routers hand their admitted ``corpus`` over, so no probe runs here.
+    Called without one, the cheap rejects run first: a raw-row
+    ``limit(max_rows + 1)`` count (shingling only ever drops rows, so it
+    bounds the shingle-bearing docs from above) and the sample-vocab probe
+    (``_sample_vocab_exceeds``); only a corpus passing both pays for
+    ``_dense_admission``'s full pass.
     """
     import numpy as np
     import pandas as pd
@@ -578,19 +600,29 @@ def _dense_pair_blocks(
             f"dense {m.name} requires an integral id column "
             f"({id_col} is {_id_dtype(df, id_col)}); use {alt}"
         )
+    rows_error = ValueError(
+        f"dense {m.name} is guarded at {max_rows} docs; use "
+        f"{alt} or a sampled audit subset"
+    )
+    vocab_error = ValueError(
+        f"dense {m.name} is guarded at {max_vocab} distinct shingles "
+        f"(the universe is no longer 'small'); use {alt}"
+    )
     if corpus is None:
+        n_raw = df.limit(max_rows + 1).count()
+        if n_raw > max_rows:
+            raise rows_error
+        # a corpus no larger than the sample is decided by the full pass
+        if n_raw > _VOCAB_SAMPLE_DOCS and _sample_vocab_exceeds(
+            df, id_col, text_col, n, max_vocab
+        ):
+            raise vocab_error
         corpus = _dense_admission(df, id_col, text_col, n, max_rows, max_vocab)
     if corpus.n_docs > max_rows:
-        raise ValueError(
-            f"dense {m.name} is guarded at {max_rows} docs; use "
-            f"{alt} or a sampled audit subset"
-        )
+        raise rows_error
     if not corpus.admit:
-        raise ValueError(
-            f"dense {m.name} is guarded at {max_vocab} distinct shingles "
-            f"(the universe is no longer 'small'); use {alt}"
-        )
-    vsize = corpus.vidx.count()
+        raise vocab_error
+    vsize = corpus.n_vocab
     # block count scales with the corpus so per-task memory stays bounded:
     # the C = A @ B.T common-count matrix is (rows/B)² float64 per task, so
     # a FIXED B=8 at the 200k-doc guard limit would allocate 25k² ≈ 5 GB.
@@ -734,16 +766,16 @@ def ngram_jaccard_pairs_prefix(
     text_col: str = "text",
     n: int = 3,
     min_jaccard: float = 0.5,
-    _arrs: DataFrame | None = None,
+    _corpus: _Corpus | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard self-join with AllPairs/PPJoin prefix filtering
     and the AllPairs length filter (``_prefix_pairs``): output identical
     to ``ngram_jaccard_pairs`` at a fraction of the cost when shingles have
-    hot posting lists. Requires ``0 < min_jaccard <= 1``. ``_arrs`` takes
-    a caller's eager ``shingle_arrays(df, id_col, text_col, n)``
-    checkpoint (the auto router's admission pass) in place of a fresh
-    shingle pass."""
-    return _prefix_pairs(df, id_col, text_col, n, _JACCARD, min_jaccard, _arrs)
+    hot posting lists. Requires ``0 < min_jaccard <= 1``. ``_corpus`` is
+    the auto router's prepared corpus: its shingle arrays and frequency
+    table replace a fresh shingle pass and the kernel's own frequency
+    aggregate."""
+    return _prefix_pairs(df, id_col, text_col, n, _JACCARD, min_jaccard, _corpus)
 
 
 def ngram_jaccard_pairs_dense(
@@ -783,18 +815,21 @@ def ngram_jaccard_pairs_auto(
 ) -> DataFrame:
     """Exact n-gram Jaccard with automatic strategy selection: the same
     output contract as ``ngram_jaccard_pairs``/_prefix/_dense (all three
-    pytest-verified identical), choosing the cost regime by two bounded
-    probes (``_dense_admission``):
+    pytest-verified identical), choosing the cost regime from one
+    materialized shingle-frequency pass (``_dense_admission``):
 
-    * integral id AND corpus ≤ ``max_rows`` AND shingle universe ≤
-      ``max_vocab`` → **dense** (block BLAS; every posting is hot in a
-      small universe, so inverted indexes degenerate — measured 6.7×);
+    * integral id AND ≤ ``max_rows`` shingle-bearing docs AND shingle
+      universe ≤ ``max_vocab`` → **dense** (block BLAS; every posting is
+      hot in a small universe, so inverted indexes degenerate — measured
+      6.7×);
     * otherwise → **prefix** (AllPairs filtering; on a Zipf vocabulary the
       rare-shingle prefixes keep hot postings out of the candidate join —
       and it handles any id type).
 
-    The admission's probes and its one materialized shingle pass are
-    handed to whichever strategy wins. The plain inverted index remains
+    The prepared corpus (shingle arrays, frequency table, counts) is handed
+    to whichever public strategy entry wins: the prefix kernel ranks by the
+    same frequency table that decided the route, and the dense kernel
+    indexes its columns from it. The plain inverted index remains
     available by name for corpora known to have uniformly short posting
     lists. ``_arrs`` lets a caller that already holds a checkpointed
     ``shingle_arrays(df, id_col, text_col, n)`` frame share it (the
@@ -810,7 +845,7 @@ def ngram_jaccard_pairs_auto(
             _corpus=corpus,
         )
     return ngram_jaccard_pairs_prefix(
-        df, id_col, text_col, n, min_jaccard, _arrs=corpus.arrs
+        df, id_col, text_col, n, min_jaccard, _corpus=corpus
     )
 
 
@@ -1257,12 +1292,15 @@ def connected_components(
     component = smallest node id in the component (a deterministic canonical
     representative — the doc to KEEP in near-dup dedup).
 
-    Two regimes, probed like every router in this module (r11):
+    Two regimes, decided by one bounded fetch:
 
-    * **bounded graph** (≤ ``driver_max_edges`` edges by an O(limit)
-      probe): one Arrow transfer of the two long columns (~16 MB at the
-      1M-edge cap) and a vectorized numpy min-label + pointer-jumping
-      solve on the driver. Near-dup edge lists at gate scales are a few
+    * **bounded graph** (≤ ``driver_max_edges`` edges): the edge list is
+      fetched as ``limit(driver_max_edges + 1)`` in one Arrow transfer of
+      the two long columns (~16 MB at the 1M-edge cap); when the frame
+      holds no more than the cap it IS the whole edge list, and a
+      vectorized numpy min-label + pointer-jumping solve runs on the
+      driver. The fetch is the decision, so no separate count probe
+      runs. Near-dup edge lists at gate scales are a few
       thousand rows, and the incremental/deletion paths call CC on
       contracted or subgraph frames that are delta-sized by construction
       — paying one distributed join + agg + localCheckpoint PER ROUND for
@@ -1300,12 +1338,13 @@ def connected_components(
     und = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     ).persist()
-    if driver_max_edges and _is_bounded(und, driver_max_edges):
-        pdf = und.toPandas()  # Arrow: two int64 columns, probe-bounded
+    if driver_max_edges:
+        # Arrow: two int64 columns, at most one row past the cap
+        pdf = und.limit(driver_max_edges + 1).toPandas()
         # NULL endpoints (non-integral ids cast to long) would need the
         # distributed loop's NULL-propagation semantics — don't guess,
         # fall through to the loop for those
-        if not pdf.isnull().values.any():
+        if len(pdf) <= driver_max_edges and not pdf.isnull().values.any():
             und.unpersist()
             return _cc_driver_solve(edges.sparkSession, pdf)
     adj = und.union(
@@ -2303,12 +2342,13 @@ def ngram_containment_pairs_auto(
     _arrs: DataFrame | None = None,
 ) -> DataFrame:
     """Containment with the same regime selection as
-    ``ngram_jaccard_pairs_auto`` (shared ``_dense_admission`` probe)
+    ``ngram_jaccard_pairs_auto`` (one ``_dense_admission`` frequency pass)
     picking **dense** (small universe — every posting hot; the sf1
     rehearsal measured the inverted index at 239× the sf0.1 wall on 10×
     docs of a ~1k-bigram universe) or **prefix** (Zipf universe at scale,
-    any id type). The admission's probes and its one materialized shingle
-    pass are handed to whichever strategy wins."""
+    any id type). The prepared corpus is handed to whichever strategy
+    entry wins, so the frequency table that routed is the one the prefix
+    kernel ranks by."""
     corpus = _dense_admission(
         df, id_col, text_col, n, max_rows, max_vocab, arrs=_arrs
     )
@@ -2318,7 +2358,7 @@ def ngram_containment_pairs_auto(
             _corpus=corpus,
         )
     return ngram_containment_pairs_prefix(
-        df, id_col, text_col, n, min_containment, _arrs=corpus.arrs
+        df, id_col, text_col, n, min_containment, _corpus=corpus
     )
 
 
@@ -2328,7 +2368,7 @@ def ngram_containment_pairs_prefix(
     text_col: str = "text",
     n: int = 3,
     min_containment: float = 0.8,
-    _arrs: DataFrame | None = None,
+    _corpus: _Corpus | None = None,
 ) -> DataFrame:
     """``ngram_containment_pairs`` with prefix filtering adapted to the
     ASYMMETRIC containment constraint (``_prefix_pairs``): identical
@@ -2340,9 +2380,9 @@ def ngram_containment_pairs_prefix(
     share ≥ ``ceil(t·|S|)`` elements with the other side, so S must hit it
     within its first ``|S| - ceil(t·|S|) + 1`` rarest shingles; those
     prefixes join the FULL posting index (not prefix × prefix as for
-    Jaccard). Requires ``0 < min_containment <= 1``. ``_arrs`` is as for
-    ``ngram_jaccard_pairs_prefix``.
+    Jaccard). Requires ``0 < min_containment <= 1``. ``_corpus`` is as
+    for ``ngram_jaccard_pairs_prefix``.
     """
     return _prefix_pairs(
-        df, id_col, text_col, n, _CONTAINMENT, min_containment, _arrs
+        df, id_col, text_col, n, _CONTAINMENT, min_containment, _corpus
     )

@@ -211,10 +211,11 @@ def cosine_allpairs(
     import pandas as pd
 
     corpus = corpus.select(id_col, vec_col).filter(F.col(id_col).isNotNull())
-    # limit(n+1).count() stops the scan after max_rows+1 rows — O(max_rows)
-    # even on a 100 TB corpus, unlike a full count().
-    n_probe = corpus.limit(max_rows + 1).count()
-    if n_probe > max_rows:
+    # one bounded fetch is both the guard and the driver matrix: the limit
+    # stops the scan after max_rows+1 rows — O(max_rows) even on a 100 TB
+    # corpus — and a fetch within the cap is the whole corpus
+    rows = corpus.limit(max_rows + 1).collect()
+    if len(rows) > max_rows:
         raise ValueError(
             f"cosine_allpairs: corpus exceeds max_rows={max_rows} "
             f"(driver-collect + broadcast matrix would not fit); use "
@@ -222,7 +223,6 @@ def cosine_allpairs(
             f"semantic_dedup / the IVF index family for corpora this size"
         )
 
-    rows = corpus.collect()
     ids = pd.Series([r[0] for r in rows]).to_numpy()
     M = np.array([list(r[1]) for r in rows], dtype=np.float64)
     bc = corpus.sparkSession.sparkContext.broadcast((ids, M))

@@ -146,8 +146,9 @@ def bpe_train(
 
     Auto-routed like ``ngram_jaccard_pairs_auto``: the corpus pass always
     reduces to the (word, count, symbols) table first; when that table is
-    ≤ ``max_driver_vocab`` rows (an O(k) limit-probe, never a full count)
-    the merge loop runs DRIVER-SIDE over the collected table — the
+    ≤ ``max_driver_vocab`` rows (one fetch of at most
+    ``max_driver_vocab + 1`` rows decides it, never a full count) the
+    merge loop runs DRIVER-SIDE over the fetched table — the
     bounded-artifact class (every practical BPE trainer holds word counts
     in memory; 100k words ≈ a few MB), and measured ~8× faster than
     paying a scheduled round per merge. Larger vocabularies fall back to
@@ -161,11 +162,10 @@ def bpe_train(
     words = (
         word_symbol_table(df, text_col).coalesce(4).localCheckpoint(eager=True)
     )
-    if words.limit(max_driver_vocab + 1).count() <= max_driver_vocab:
-        table = [
-            (list(r["syms"]), int(r["wc"]))
-            for r in words.select("syms", "wc").collect()
-        ]
+    # one bounded fetch decides the route: at most one row past the cap
+    fetched = words.select("syms", "wc").limit(max_driver_vocab + 1).collect()
+    if len(fetched) <= max_driver_vocab:
+        table = [(list(r["syms"]), int(r["wc"])) for r in fetched]
         return _driver_merge_loop(table, num_merges)
     merges: list[tuple[str, str, int]] = []
     for _ in range(num_merges):

@@ -109,8 +109,8 @@ def exact_percentile_bounds(
     would degenerate the cumulative window into exactly the single-task
     O(n) sort this function replaced, so the distinct table is
     materialized through an O(``max_distinct``) limit-probe (the
-    ≤-cap slice IS the complete frequency table when the probe passes —
-    the ``_dense_admission`` pattern) and, above the cap, the boundaries
+    ≤-cap slice IS the complete frequency table when the probe passes)
+    and, above the cap, the boundaries
     come from ``percentile_approx`` (Greenwald-Khanna: deterministic,
     mergeable, rank error ≤ n/``approx_accuracy`` hard-bounded, single
     codegen'd aggregate — the docstring escape hatch made automatic).

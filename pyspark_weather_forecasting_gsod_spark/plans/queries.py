@@ -4730,52 +4730,59 @@ def ml_feature_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query("ml_regression_metrics", None)  # training loop → rows-only
-def ml_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _events_fit_frame(spark: SparkSession, sf_dir: str, label_col: str) -> DataFrame:
+    """The featurized events frame, cached PROJECTED to the fit columns
+    (fit + split + every evaluator action otherwise replay the window +
+    pipeline lineage from the scan, and LR's fit is multi-pass) plus the
+    80/20 ``split`` tag: an md5 bucket of ``event_id``
+    (``operators.sampling.hash_split``), as ``ml_kfold_cv``'s folds and the
+    GSOD split, so membership is a pure function of the row and no
+    featurization change moves it."""
     from ..ml.features import assemble_features
-    from ..ml.models import evaluate_regression, seeded_split, train_linear_regression
+    from ..operators.sampling import hash_split
 
-    df = _events_feature_frame(spark, sf_dir)
-    # cache the featurized frame PROJECTED to the fit columns (r12, gsod
-    # item-4 pattern): fit + split + every evaluator action otherwise
-    # replays the window + pipeline lineage from the scan, and LR's fit
-    # is multi-pass; projection preserves rows so split membership and
-    # metrics are unchanged
+    df = _events_feature_frame(spark, sf_dir, keep_key=True)
     feat = assemble_features(
         df, categorical=["event_type"], numerical=["value", "hour", "dow"]
-    ).select("features", "next_value").persist()
-    try:
-        train, test = seeded_split(feat)
-        model = train_linear_regression(train, "next_value")
-        metrics = evaluate_regression(model.transform(test), "next_value")
-    finally:
-        feat.unpersist()
-    rows = [(k, round(v, 4)) for k, v in sorted(metrics.items())]
+    )
+    return hash_split(feat, "event_id").select("features", label_col, "split").persist()
+
+
+def _metric_rows(spark: SparkSession, metrics: dict) -> DataFrame:
     from ..session import local_rows_df
 
+    rows = [(k, round(v, 4)) for k, v in sorted(metrics.items())]
     return local_rows_df(spark, rows, "metric string, value double")
+
+
+@query("ml_regression_metrics", None)  # training loop → rows-only
+def ml_regression_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..ml.models import evaluate_regression, train_linear_regression
+
+    feat = _events_fit_frame(spark, sf_dir, "next_value")
+    try:
+        model = train_linear_regression(feat.filter("split = 'train'"), "next_value")
+        metrics = evaluate_regression(
+            model.transform(feat.filter("split = 'test'")), "next_value"
+        )
+    finally:
+        feat.unpersist()
+    return _metric_rows(spark, metrics)
 
 
 @query("ml_classification_metrics", None)  # training loop → rows-only
 def ml_classification_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..ml.features import assemble_features
-    from ..ml.models import evaluate_classification, seeded_split, train_gbt_classifier
+    from ..ml.models import evaluate_classification, train_gbt_classifier
 
-    df = _events_feature_frame(spark, sf_dir)
-    # fit-column projection before the cache — see ml_regression_metrics
-    feat = assemble_features(
-        df, categorical=["event_type"], numerical=["value", "hour", "dow"]
-    ).select("features", "went_up").persist()
+    feat = _events_fit_frame(spark, sf_dir, "went_up")
     try:
-        train, test = seeded_split(feat)
-        model = train_gbt_classifier(train, "went_up", max_iter=5)
-        metrics = evaluate_classification(model.transform(test), "went_up")
+        model = train_gbt_classifier(feat.filter("split = 'train'"), "went_up", max_iter=5)
+        metrics = evaluate_classification(
+            model.transform(feat.filter("split = 'test'")), "went_up"
+        )
     finally:
         feat.unpersist()
-    rows = [(k, round(v, 4)) for k, v in sorted(metrics.items())]
-    from ..session import local_rows_df
-
-    return local_rows_df(spark, rows, "metric string, value double")
+    return _metric_rows(spark, metrics)
 
 
 @query("gsod_pipeline_e2e", None)  # composite pipeline → rows-only

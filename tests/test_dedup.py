@@ -78,11 +78,13 @@ def test_connected_components_min_label(spark):
     assert got == {(1, 1), (2, 1), (3, 1), (7, 7), (9, 7)}
 
 
-def test_connected_components_driver_regime_equals_distributed(spark):
+def test_connected_components_driver_regime_equals_distributed(spark, monkeypatch):
     """r11: bounded graphs route to the driver-side vectorized union-find
-    regime (probe-gated Arrow collect). Both regimes must return the
-    identical labeling — mixed shape (chain + clique + 2-cycle + huge
-    ids) exercises pointer jumping and the min-representative rule."""
+    regime (one ``limit(cap + 1)`` Arrow fetch decides and feeds it). Both
+    regimes must return the identical labeling — mixed shape (chain +
+    clique + 2-cycle + huge ids) exercises pointer jumping and the
+    min-representative rule. A fetch one row past the cap falls through
+    to the distributed loop."""
     import pyspark_weather_forecasting_gsod_spark.ext.dedup as D
 
     big = 2**61
@@ -101,6 +103,18 @@ def test_connected_components_driver_regime_equals_distributed(spark):
     assert drv == dist and drv
     # and the driver regime actually ran (diagnostic rounds are vectorized)
     assert D.LAST_CC_ROUNDS >= 1
+
+    solved = []
+    solve = D._cc_driver_solve
+    monkeypatch.setattr(
+        D, "_cc_driver_solve", lambda spark, pdf: solved.append(len(pdf)) or solve(spark, pdf)
+    )
+    at_cap = {(r.node, r.comp) for r in D.connected_components(edges, driver_max_edges=len(rows)).collect()}
+    past_cap = {
+        (r.node, r.comp)
+        for r in D.connected_components(edges, driver_max_edges=len(rows) - 1).collect()
+    }
+    assert at_cap == past_cap == dist and solved == [len(rows)]
 
 
 def test_connected_components_high_diameter_chain(spark):
@@ -944,34 +958,38 @@ def test_ngram_best_match_tiered_exact_parity(spark, sf_dir):
 
 
 def test_dense_admission_probe_matches_full_decision(spark):
-    """The cheapened admission probes (raw-count doc bound, sample-first
-    vocab reject) must reach the SAME decision as probing the full corpus:
+    """The standalone dense guard's cheap sample probe and the auto
+    routers' one-pass admission must reach the SAME decision:
 
     * a >sample corpus with a Zipf-huge vocabulary is rejected by the
-      sample alone (monotone: sample distinct > cap proves full > cap);
+      sample alone (monotone: sample distinct > cap proves full > cap),
+      and the full frequency pass rejects it too;
     * a >sample corpus drawn from a tiny shingle universe passes the
-      sample AND the exact full probe, so dense is admitted;
-    * docs shorter than n tokens inflate the raw count but only ever
-      raise the upper bound — never flip an admit into a wrong reject
-      at these sizes, and the dense guard stays sound.
+      sample AND the full pass, so dense is admitted;
+    * docs shorter than n tokens carry no shingles: the admission counts
+      exactly the shingle-bearing docs, and the routed output equals the
+      plain inverted-index output.
     """
     from pyspark.sql import Row
 
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
         _dense_admission,
+        _sample_vocab_exceeds,
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_auto,
+        shingle_arrays,
     )
 
-    # 2,500 docs (> sample_docs=2,000), every doc a unique bigram universe
+    # 2,500 docs (> the 2,000-doc sample), every doc a unique bigram universe
     big_vocab = spark.createDataFrame(
         [Row(doc_id=i, text=f"tok{i}a tok{i}b tok{i}c tok{i}d") for i in range(2500)]
     )
-    admit, n_docs, vidx, arrs = _dense_admission(
+    assert _sample_vocab_exceeds(big_vocab, "doc_id", "text", 2, 4096)
+    admit, n_docs, n_vocab, vidx, arrs, freq = _dense_admission(
         big_vocab, "doc_id", "text", 2, 200_000, 4096
     )
-    # sample-probe reject happens BEFORE the corpus-wide pass: no arrs
-    assert not admit and n_docs == 2500 and vidx is None and arrs is None
+    assert not admit and n_docs == 2500 and n_vocab == 7500 and vidx is None
+    assert freq.count() == n_vocab
 
     # 2,500 docs over a ~10-token universe: sample passes, full probe passes
     words = [f"w{k}" for k in range(10)]
@@ -981,20 +999,17 @@ def test_dense_admission_probe_matches_full_decision(spark):
             for i in range(2500)
         ]
     )
-    admit, n_docs, vidx, arrs = _dense_admission(
+    assert not _sample_vocab_exceeds(tiny_vocab, "doc_id", "text", 2, 4096)
+    admit, n_docs, n_vocab, vidx, arrs, freq = _dense_admission(
         tiny_vocab, "doc_id", "text", 2, 200_000, 4096
     )
     assert admit and n_docs == 2500
-    # on admit the probe hands back the complete shingle->column index
+    # on admit the corpus carries the complete shingle->column index
     vrows = vidx.collect()
-    assert len(vrows) == len({r.shingle for r in vrows})
+    assert len(vrows) == len({r.shingle for r in vrows}) == n_vocab
     assert sorted(r["__idx"] for r in vrows) == list(range(len(vrows)))
-    # ...and the materialized corpus-wide shingle pass (r12): one row per
+    # ...the materialized corpus-wide shingle pass: one row per
     # shingle-bearing doc, values identical to a fresh shingle_arrays run
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        shingle_arrays,
-    )
-
     want_arrs = {
         (r.doc_id, tuple(sorted(r.shingles)))
         for r in shingle_arrays(tiny_vocab, "doc_id", "text", 2).collect()
@@ -1003,23 +1018,29 @@ def test_dense_admission_probe_matches_full_decision(spark):
         (r.doc_id, tuple(sorted(r.shingles))) for r in arrs.collect()
     }
     assert got_arrs == want_arrs
+    # ...and each shingle's document frequency
+    df_want: dict[str, int] = {}
+    for _, sh in want_arrs:
+        for x in sh:
+            df_want[x] = df_want.get(x, 0) + 1
+    assert {r.shingle: r["__df"] for r in freq.collect()} == df_want
     # a caller-handed arrs frame is passed through and reused, not rebuilt
-    admit2, n2, vidx2, arrs2 = _dense_admission(
+    admit2, n2, _, _, arrs2, _ = _dense_admission(
         tiny_vocab, "doc_id", "text", 2, 200_000, 4096, arrs=arrs
     )
-    assert admit2 and arrs2 is arrs
+    assert admit2 and n2 == 2500 and arrs2 is arrs
 
-    # short docs (< n tokens) are counted by the raw probe but dropped by
-    # shingling: admission must hold and the routed output must equal the
-    # plain inverted-index output
+    # short docs (< n tokens) are dropped by shingling, so only the 20
+    # shingle-bearing docs count; the routed output must equal the plain
+    # inverted-index output
     mixed = spark.createDataFrame(
         [Row(doc_id=i, text="red blue green yellow" if i % 2 else "solo")
          for i in range(40)]
     )
-    admit, n_docs, vidx, arrs = _dense_admission(
+    admit, n_docs, n_vocab, vidx, arrs, freq = _dense_admission(
         mixed, "doc_id", "text", 2, 200_000, 4096
     )
-    assert admit and n_docs == 40 and vidx is not None and arrs is not None
+    assert admit and n_docs == 20 and n_vocab == 3 and vidx is not None
 
     def key(rows):
         return {(r.doc_a, r.doc_b, r.common, round(r.jaccard, 9)) for r in rows}
@@ -1027,6 +1048,124 @@ def test_dense_admission_probe_matches_full_decision(spark):
     want = key(ngram_jaccard_pairs(mixed, "doc_id", "text", n=2, min_jaccard=0.5).collect())
     got = key(ngram_jaccard_pairs_auto(mixed, "doc_id", "text", n=2, min_jaccard=0.5).collect())
     assert got == want and want
+
+
+def _zipf_docs(spark, path, n_docs: int = 300, seed: int = 1):
+    """A seeded Zipf-vocabulary corpus (20k words, s = 1.1, 30-80 words a
+    doc) with planted near-copies (one word replaced): its word 3-gram
+    universe is far past the dense cap, the prefix route's regime. It is
+    read back from one parquet file at ``path``, so the planner sees a
+    file-sized scan, as for any corpus on storage."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    cdf = np.cumsum(np.arange(1, 20_001, dtype=float) ** -1.1)
+    cdf /= cdf[-1]
+
+    def draw(k):
+        return np.minimum(np.searchsorted(cdf, rng.random(k)), 19_999)
+
+    texts = []
+    while len(texts) < n_docs:
+        base = draw(int(rng.integers(30, 81)))
+        texts.append(" ".join(f"w{i}" for i in base))
+        if rng.random() < 0.3:
+            copy = base.copy()
+            copy[int(rng.integers(len(base)))] = draw(1)[0]
+            texts.append(" ".join(f"w{i}" for i in copy))
+    spark.createDataFrame(
+        list(enumerate(texts[:n_docs])), "doc_id long, text string"
+    ).coalesce(1).write.parquet(str(path))
+    return spark.read.parquet(str(path)).localCheckpoint(eager=True)
+
+
+def test_auto_routes_through_public_entries_once(spark, monkeypatch, tmp_path):
+    """Each auto router decides from its one admission pass and calls the
+    module-level strategy entry exactly once with the prepared corpus: the
+    prefix entry on a Zipf corpus, the dense entry on a small universe.
+    Both routes equal the inverted index, for Jaccard and containment."""
+    from pyspark.sql import Row
+
+    from pyspark_weather_forecasting_gsod_spark.ext import dedup
+
+    calls: list[str] = []
+
+    def counted(name):
+        fn = getattr(dedup, name)
+
+        def wrapper(*args, **kwargs):
+            assert kwargs.get("_corpus") is not None
+            calls.append(name)
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(dedup, name, wrapper)
+
+    for m in ("jaccard", "containment"):
+        for route in ("prefix", "dense"):
+            counted(f"ngram_{m}_pairs_{route}")
+
+    def rows(frame):
+        return {(r[0], r[1], r[2], round(r[3], 9)) for r in frame.collect()}
+
+    zipf = _zipf_docs(spark, tmp_path / "zipf.parquet")
+    words = [f"w{k}" for k in range(8)]
+    small = spark.createDataFrame(
+        [Row(doc_id=i, text=" ".join(words[i % 4 : i % 4 + 3 + i % 3])) for i in range(60)]
+    )
+    for docs, route in ((zipf, "prefix"), (small, "dense")):
+        for m, auto, plain, t in (
+            ("jaccard", dedup.ngram_jaccard_pairs_auto, dedup.ngram_jaccard_pairs, 0.5),
+            ("containment", dedup.ngram_containment_pairs_auto,
+             dedup.ngram_containment_pairs, 0.6),
+        ):
+            calls.clear()
+            got = rows(auto(docs, "doc_id", "text", 3, t))
+            assert calls == [f"ngram_{m}_pairs_{route}"], (m, route, calls)
+            assert got == rows(plain(docs, "doc_id", "text", 3, t)) and got, (m, route)
+
+
+def _jobs_in_group(spark, group: str, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_neardup_pairs_and_components_job_count(spark, tmp_path):
+    """Pairs → components on a Zipf corpus with a handed shingle
+    checkpoint: one frequency checkpoint both routes the auto router and
+    ranks the prefix kernel, so the auto pairs plus their checkpoint stay
+    within 7 Spark jobs (separate admission probes and a re-aggregated
+    frequency table ran 12); a bounded edge list is fetched once to decide
+    and solve on the driver, so components plus their collect run 1 job
+    (a count probe before the fetch ran 4)."""
+    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
+        connected_components,
+        ngram_jaccard_pairs_auto,
+        shingle_arrays,
+    )
+
+    docs = _zipf_docs(spark, tmp_path / "zipf.parquet")
+    arrs = shingle_arrays(docs, "doc_id", "text", 3).localCheckpoint(eager=True)
+    pairs, pair_jobs = _jobs_in_group(
+        spark,
+        "test-neardup-pairs-job-count",
+        lambda: ngram_jaccard_pairs_auto(
+            docs, "doc_id", "text", n=3, min_jaccard=0.5, _arrs=arrs
+        ).localCheckpoint(eager=True),
+    )
+    comp, cc_jobs = _jobs_in_group(
+        spark,
+        "test-neardup-cc-job-count",
+        lambda: connected_components(pairs).collect(),
+    )
+    assert pairs.count() > 0 and comp
+    assert pair_jobs <= 7, pair_jobs
+    assert cc_jobs <= 1, cc_jobs
 
 
 def test_prefix_size_filter_identical_on_skewed_lengths(spark):

@@ -1,7 +1,8 @@
 """Isolated per-query measurement + plan capture (guide §1).
 
 Runs the named declared queries in a fresh session with the bench's
-environment (48g heap, local[$SPARK_GRAFT_CPUS], JVM warm-up pass), times
+environment (box-sized heap, local[$SPARK_GRAFT_CPUS] defaulting to the
+cores this process may run on, JVM warm-up pass), times
 each with the noop sink, and, only when ``--tag`` is given, writes
 ``explain("formatted")`` to ``plans/<plandir>/<name>_<tag>.txt`` so plan
 claims are auditable.
@@ -34,8 +35,11 @@ def main() -> None:
     ap.add_argument("--plandir", default="r12", help="subdir of plans/ for --tag output")
     args = ap.parse_args()
 
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from perfbench import box
+
+    # the bench's box-sized defaults (bench.py, perfbench/box.py)
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", f"{box.heap_mib(box.mem_total_mib())}m")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(box.cpus()))
 
     from pyspark.sql import functions as F
 
