@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..report import record
 from ..session import local_rows_df
 from .text import normalize_text
 
@@ -183,7 +184,10 @@ def _is_bounded(df: DataFrame, max_rows: int = 1_000_000) -> bool:
 # the dense block BLAS (``_dense_pair_blocks``). A ``_Measure`` row holds all
 # a measure changes: its score, its output columns and orientation, and its
 # prefix candidate rule. ``ngram_{jaccard,containment}_pairs{,_prefix,
-# _dense,_auto}`` and ``exact_cross_jaccard`` are thin calls into the core.
+# _dense,_auto}`` and ``exact_cross_jaccard`` are thin calls into the core;
+# both auto entries share one router (``_auto_pairs``), which first tries
+# the prefix algorithm on the driver (``_driver_pairs``) for a bounded
+# corpus.
 #
 # The banded near-dup paths filter, then verify: ``_band_pairs`` turns
 # (band_no, bucket) tables into candidate pairs, and ``_index_pairs``
@@ -485,6 +489,7 @@ def _dense_admission(
     max_rows: int,
     max_vocab: int,
     arrs: DataFrame | None = None,
+    counted: tuple | None = None,
 ) -> _Corpus:
     """Prepare the corpus and decide the dense regime in one pass.
 
@@ -503,15 +508,24 @@ def _dense_admission(
     sample-vocab probes) belong to the standalone dense entries, the one
     caller they save a full pass for. In the Zipf regime the table holds
     the whole vocabulary, one row per distinct shingle.
+
+    ``counted`` is (docs, pandas (shingle, __df) table) from a driver
+    fetch that already held the whole corpus (``_driver_pairs``); the
+    table is shipped as a local frame and no counting pass runs.
     """
     arrs = _prepared(df, id_col, text_col, n, arrs)
-    docs_obs, vocab_obs = Observation(), Observation()
-    freq = (
-        _shingle_freq(arrs.observe(docs_obs, F.count(F.lit(1)).alias("n")))
-        .observe(vocab_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_docs, n_vocab = docs_obs.get["n"], vocab_obs.get["n"]
+    if counted is None:
+        docs_obs, vocab_obs = Observation(), Observation()
+        freq = (
+            _shingle_freq(arrs.observe(docs_obs, F.count(F.lit(1)).alias("n")))
+            .observe(vocab_obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint(eager=True)
+        )
+        n_docs, n_vocab = docs_obs.get["n"], vocab_obs.get["n"]
+    else:
+        n_docs, table = counted
+        freq = arrs.sparkSession.createDataFrame(table, "shingle string, __df long")
+        n_vocab = len(table)
     admit = (
         _integral_id_dtype(df, id_col) and n_docs <= max_rows and n_vocab <= max_vocab
     )
@@ -719,6 +733,213 @@ def _dense_pair_blocks(
     return both.groupBy("ba", "bb").applyInPandas(block_common, out_schema)
 
 
+# The auto routers' driver regime, with caps measured against the Spark
+# routes (see ``ngram_jaccard_pairs_auto``): _DRIVER_MAX_POSTINGS bounds
+# the driver's memory (the driver still wins on time past it), and past
+# _DRIVER_MAX_WORK the Python candidate enumeration and verify lose to
+# the dense kernel on hot small-universe corpora. A postings cap of 0
+# switches the regime off (tests pin the Spark routes that way).
+_DRIVER_MAX_POSTINGS = 1_000_000
+_DRIVER_MAX_WORK = 1_000_000
+_DRIVER_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
+
+
+def _driver_pairs(
+    arrs: DataFrame, id_col: str, m: _Measure, t: float, probes: dict
+) -> tuple:
+    """``_prefix_pairs`` run on the driver: (pairs, None), or (None,
+    counted) when the corpus is not small enough for it. ``0 < t <= 1``
+    and an id type that orders the same in Python as in Spark (integral or
+    string) are the caller's preconditions.
+
+    One Spark job fetches the (id, size, shingle) postings, at most one row
+    past ``_DRIVER_MAX_POSTINGS``; a full fetch is the whole corpus, so the
+    fetch is the decision and driver memory stays bounded by the cap
+    whatever the document lengths. NULL ids are dropped before the fetch,
+    as every Spark kernel's joins drop them; duplicate ids return (None,
+    None), since shingles regrouped by id would merge the two documents.
+
+    Then the prefix algorithm, in numpy: document frequencies, rarest-first
+    prefixes of ``|S| - ceil(t·|S|) + 1`` shingles, and the measure's
+    candidate rule (Jaccard: prefix × prefix and the AllPairs length
+    filter; containment: prefix × full postings). The candidate work — Σ
+    C(|prefix posting|, 2), or Σ |prefix posting|·|posting| — is known
+    exactly before any pair is built, and past ``_DRIVER_MAX_WORK`` this
+    returns no pairs. Candidates are verified by set intersection and
+    scored and oriented by the measure, as ``_dense_pair_blocks`` does.
+    The pairs are a local frame with the Spark routes' columns and types.
+
+    ``counted`` is (docs, pandas (shingle, __df) table) when the fetch held
+    the whole corpus under unique ids but the work bound tripped, so the
+    fall-through need not count the corpus again; else None. ``probes``
+    receives the postings and work read against their caps."""
+    import numpy as np
+    import pandas as pd
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
+
+    cap = _DRIVER_MAX_POSTINGS
+    # Arrow end to end: the shingle strings are dictionary-encoded without
+    # a Python object per posting, and ids sort in Arrow's byte order,
+    # which is Spark's string order
+    tbl = (
+        arrs.filter(F.col(id_col).isNotNull())
+        .select(
+            F.col(id_col).alias("id"),
+            F.size("shingles").alias("sz"),
+            F.explode_outer("shingles").alias("shingle"),
+        )
+        .limit(cap + 1)
+        .toArrow()
+    )
+    probes["postings"] = (tbl.num_rows, cap)
+    if tbl.num_rows > cap:
+        return None, None
+    # index order is id order, so a < b on indices is doc_a < doc_b
+    enc = pc.dictionary_encode(tbl.column("id")).combine_chunks()
+    order = pc.sort_indices(enc.dictionary).to_numpy()
+    ids = enc.dictionary.take(order).to_numpy(zero_copy_only=False)
+    doc = np.argsort(order)[enc.indices.to_numpy()]
+    # explode_outer keeps a shingle-less doc as one row: one row per
+    # shingle, or one, for each id unless two documents share it
+    rows = np.bincount(doc, minlength=len(ids))[doc]
+    if np.any(rows != np.maximum(tbl.column("sz").to_numpy(), 1)):
+        return None, None
+    shingles = tbl.column("shingle")
+    enc = pc.dictionary_encode(pc.drop_null(shingles)).combine_chunks()
+    sh, vocab = enc.indices.to_numpy().astype(np.int64), enc.dictionary
+    doc = doc[shingles.is_valid().to_numpy()]
+    dfreq = np.bincount(sh, minlength=len(vocab))
+    rank = np.empty(len(vocab), dtype=np.int64)
+    rank[np.argsort(dfreq, kind="stable")] = np.arange(len(vocab))
+    # postings by (doc, rank): each doc's shingles rarest first
+    o = np.argsort(doc * len(vocab) + rank[sh])
+    doc, sh = doc[o], sh[o]
+    sz = np.bincount(doc, minlength=len(ids))
+    start = np.cumsum(sz) - sz
+    pos = np.arange(len(doc)) - start[doc]
+    # the -1e-9 keeps ceil from rounding an exact product up (as in
+    # _prefix_pairs): a longer prefix is safe, a shorter one is not
+    plen = sz - np.ceil(sz * t - 1e-9).astype(np.int64) + 1
+    pre = pos < plen[doc]
+    pdoc, psh = doc[pre], sh[pre]
+    pcount = np.bincount(psh, minlength=len(vocab))
+    if m.candidates is _prefix_x_prefix:
+        work = int((pcount * (pcount - 1) // 2).sum())
+    else:
+        work = int((pcount * dfreq).sum())
+    probes.update(
+        work=(work, _DRIVER_MAX_WORK), n_docs=int((sz > 0).sum()), n_vocab=len(vocab)
+    )
+    if work > _DRIVER_MAX_WORK:
+        table = pd.DataFrame({"shingle": vocab.to_numpy(zero_copy_only=False), "__df": dfreq})
+        return None, (len(ids), table)
+
+    def expand(starts, counts):
+        # the index ranges [start, start + count), concatenated
+        rep = np.repeat(starts - (np.cumsum(counts) - counts), counts)
+        return rep + np.arange(int(counts.sum()))
+
+    if m.candidates is _prefix_x_prefix:
+        # prefix postings by (shingle, doc); each pairs with the later
+        # members of its shingle's group
+        o = np.argsort(psh * len(ids) + pdoc)
+        pdoc, psh = pdoc[o], psh[o]
+        gend = np.cumsum(pcount)[psh]
+        after = gend - np.arange(len(pdoc)) - 1
+        left = np.repeat(np.arange(len(pdoc)), after)
+        a, b = pdoc[left], pdoc[expand(np.arange(len(pdoc)) + 1, after)]
+        keep = (sz[b] >= sz[a] * t - 1e-9) & (sz[a] >= sz[b] * t - 1e-9)
+        a, b = a[keep], b[keep]
+    else:
+        # each prefix posting meets the shingle's full posting list
+        o = np.argsort(sh, kind="stable")
+        fdoc = doc[o]
+        fstart = np.cumsum(dfreq) - dfreq
+        p = np.repeat(pdoc, dfreq[psh])
+        q = fdoc[expand(fstart[psh], dfreq[psh])]
+        keep = p != q
+        a, b = np.minimum(p[keep], q[keep]), np.maximum(p[keep], q[keep])
+    key = np.unique(a.astype(np.int64) * len(ids) + b)
+    a, b = key // len(ids), key % len(ids)
+    # sets only for docs in some candidate pair, a small share on a Zipf corpus
+    sets = {
+        d: frozenset(sh[start[d] : start[d] + sz[d]].tolist())
+        for d in np.unique(np.concatenate([a, b])).tolist()
+    }
+    common = np.fromiter(
+        (len(sets[i] & sets[j]) for i, j in zip(a.tolist(), b.tolist())),
+        dtype=np.int64,
+        count=len(a),
+    )
+    sa, sb = sz[a], sz[b]
+    score = m.score(common, sa, sb, np.minimum)
+    keep = score >= t
+    lo, hi = m.orient(ids[a][keep], ids[b][keep], sa[keep], sb[keep], np.where)
+    (lo_col, hi_col), id_type = m.cols, arrs.select(id_col).schema[0].dataType
+    schema = T.StructType(
+        [
+            T.StructField(lo_col, id_type),
+            T.StructField(hi_col, id_type),
+            T.StructField("common", T.LongType()),
+            T.StructField(m.name, T.DoubleType()),
+        ]
+    )
+    out = pd.DataFrame(
+        {lo_col: lo, hi_col: hi, "common": common[keep], m.name: score[keep]}
+    )
+    return arrs.sparkSession.createDataFrame(out, schema), None
+
+
+def _auto_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    m: _Measure,
+    t: float,
+    max_rows: int,
+    max_vocab: int,
+    arrs: DataFrame | None,
+) -> DataFrame:
+    """The body of both auto routers: driver, else dense, else prefix.
+
+    The driver regime (``_driver_pairs``) is tried first for thresholds in
+    (0, 1] and integral or string ids; it reads ``arrs``, or a lazy
+    checkpoint of the shingle pass when none is handed, so a corpus solved
+    there runs one Spark job and a fall-through reads the arrays that job
+    computed. Otherwise ``_dense_admission`` prepares the corpus and the
+    public dense or prefix entry gets it; a threshold outside (0, 1]
+    therefore raises (or, on a dense admit above 1, returns no pairs)
+    exactly as those entries do."""
+    op, probes, counted = f"ngram_{m.name}_pairs_auto", {}, None
+    if (
+        _DRIVER_MAX_POSTINGS
+        and 0.0 < float(t) <= 1.0
+        and _id_dtype(df, id_col) in _DRIVER_ID_TYPES
+    ):
+        if arrs is None:
+            arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=False)
+        pairs, counted = _driver_pairs(arrs, id_col, m, float(t), probes)
+        if pairs is not None:
+            record(op, "driver", **probes)
+            return pairs
+        # a small universe's table is cheaper to ship than to recount
+        if counted is not None and len(counted[1]) > max_vocab:
+            counted = None
+    corpus = _dense_admission(
+        df, id_col, text_col, n, max_rows, max_vocab, arrs=arrs, counted=counted
+    )
+    probes.update(n_docs=(corpus.n_docs, max_rows), n_vocab=(corpus.n_vocab, max_vocab))
+    route = "dense" if corpus.admit else "prefix"
+    record(op, route, **probes)
+    # looked up by name at call time, so a wrapped entry sees the call
+    entry = globals()[f"ngram_{m.name}_pairs_{route}"]
+    if corpus.admit:
+        return entry(df, id_col, text_col, n, t, max_rows, max_vocab, _corpus=corpus)
+    return entry(df, id_col, text_col, n, t, _corpus=corpus)
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -814,10 +1035,22 @@ def ngram_jaccard_pairs_auto(
     _arrs: DataFrame | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard with automatic strategy selection: the same
-    output contract as ``ngram_jaccard_pairs``/_prefix/_dense (all three
-    pytest-verified identical), choosing the cost regime from one
-    materialized shingle-frequency pass (``_dense_admission``):
+    output contract as ``ngram_jaccard_pairs``/_prefix/_dense (all
+    pytest-verified identical), in three regimes:
 
+    * **driver** (``_driver_pairs``): one fetch of at most
+      ``_DRIVER_MAX_POSTINGS`` + 1 (id, size, shingle) rows decides; when
+      it holds the whole corpus and the exact prefix candidate work is
+      within ``_DRIVER_MAX_WORK``, the prefix algorithm runs in numpy on
+      the driver and the pairs come back as a local frame. Measured
+      against the Spark prefix route on Zipf corpora (t = 0.5, min of 3,
+      4 cores): 300 docs 0.10 vs 0.49 s, 10k docs (528k postings) 0.19
+      vs 0.93 s, 30k (1.59M) 0.57 vs 2.55 s, so the 1M-postings cap is
+      the driver memory bound (≈200 MiB at 1.06M postings), not a time
+      crossover; past it the wasted fetch costs 0.19 s. On hot
+      small-universe corpora the candidate work crosses over near 1.4M
+      (Jaccard) and 2M (containment) against the dense route, hence the
+      1M work cap;
     * integral id AND ≤ ``max_rows`` shingle-bearing docs AND shingle
       universe ≤ ``max_vocab`` → **dense** (block BLAS; every posting is
       hot in a small universe, so inverted indexes degenerate — measured
@@ -826,26 +1059,21 @@ def ngram_jaccard_pairs_auto(
       rare-shingle prefixes keep hot postings out of the candidate join —
       and it handles any id type).
 
-    The prepared corpus (shingle arrays, frequency table, counts) is handed
-    to whichever public strategy entry wins: the prefix kernel ranks by the
-    same frequency table that decided the route, and the dense kernel
-    indexes its columns from it. The plain inverted index remains
+    Past the driver regime, one materialized shingle-frequency pass
+    (``_dense_admission``) decides, and the prepared corpus (shingle
+    arrays, frequency table, counts) is handed to whichever public
+    strategy entry wins: the prefix kernel ranks by the same frequency
+    table that decided the route, and the dense kernel indexes its columns
+    from it. The route taken and its probes go to the ``spark_graft``
+    logger (``report.record``). The plain inverted index remains
     available by name for corpora known to have uniformly short posting
     lists. ``_arrs`` lets a caller that already holds a checkpointed
     ``shingle_arrays(df, id_col, text_col, n)`` frame share it (the
     incremental clustering query shares one between this enumeration and
     its endpoint-class split).
     """
-    corpus = _dense_admission(
-        df, id_col, text_col, n, max_rows, max_vocab, arrs=_arrs
-    )
-    if corpus.admit:
-        return ngram_jaccard_pairs_dense(
-            df, id_col, text_col, n, min_jaccard, max_rows, max_vocab,
-            _corpus=corpus,
-        )
-    return ngram_jaccard_pairs_prefix(
-        df, id_col, text_col, n, min_jaccard, _corpus=corpus
+    return _auto_pairs(
+        df, id_col, text_col, n, _JACCARD, min_jaccard, max_rows, max_vocab, _arrs
     )
 
 
@@ -1306,9 +1534,10 @@ def connected_components(
       — paying one distributed join + agg + localCheckpoint PER ROUND for
       those (measured: 7-round chain CC 5.5 s, 6-round post-deletion
       re-cluster 7.0 s at sf0.1) was pure scheduling overhead. Same
-      bounded-collect doctrine as the BPE driver merge loop and the
-      ≤max_exact quantile slices. Set ``driver_max_edges=0`` to pin the
-      distributed loop (tests do).
+      bounded-collect doctrine as the BPE driver merge loop, the
+      ≤max_exact quantile slices, ``cosine_allpairs`` and the near-dup
+      auto routers' driver regime (``_driver_pairs``). Set
+      ``driver_max_edges=0`` to pin the distributed loop (tests do).
     * **distributed loop** otherwise: iterative min-label propagation;
       each round every node takes the min of its own and its neighbors'
       labels; converges in O(graph diameter) rounds, with label-of-label
@@ -1329,7 +1558,8 @@ def connected_components(
 
     Diagnostics: the module-level ``LAST_CC_ROUNDS`` is set to the number
     of propagation rounds the last call took (scale rehearsals log it;
-    not part of the result contract).
+    not part of the result contract), and the regime is reported through
+    ``report.record`` with the fetched edge count against the cap.
     """
     global LAST_CC_ROUNDS
     # persist the directed edge list FIRST: the undirected union references
@@ -1338,15 +1568,19 @@ def connected_components(
     und = edges.select(
         F.col(src).cast("long").alias("a"), F.col(dst).cast("long").alias("b")
     ).persist()
+    fetched = None
     if driver_max_edges:
         # Arrow: two int64 columns, at most one row past the cap
         pdf = und.limit(driver_max_edges + 1).toPandas()
+        fetched = (len(pdf), driver_max_edges)
         # NULL endpoints (non-integral ids cast to long) would need the
         # distributed loop's NULL-propagation semantics — don't guess,
         # fall through to the loop for those
         if len(pdf) <= driver_max_edges and not pdf.isnull().values.any():
             und.unpersist()
+            record("connected_components", "driver", edges=fetched)
             return _cc_driver_solve(edges.sparkSession, pdf)
+    record("connected_components", "distributed", edges=fetched)
     adj = und.union(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).distinct().persist()
@@ -2341,24 +2575,18 @@ def ngram_containment_pairs_auto(
     max_vocab: int = 4096,
     _arrs: DataFrame | None = None,
 ) -> DataFrame:
-    """Containment with the same regime selection as
-    ``ngram_jaccard_pairs_auto`` (one ``_dense_admission`` frequency pass)
-    picking **dense** (small universe — every posting hot; the sf1
-    rehearsal measured the inverted index at 239× the sf0.1 wall on 10×
-    docs of a ~1k-bigram universe) or **prefix** (Zipf universe at scale,
-    any id type). The prepared corpus is handed to whichever strategy
-    entry wins, so the frequency table that routed is the one the prefix
-    kernel ranks by."""
-    corpus = _dense_admission(
-        df, id_col, text_col, n, max_rows, max_vocab, arrs=_arrs
-    )
-    if corpus.admit:
-        return ngram_containment_pairs_dense(
-            df, id_col, text_col, n, min_containment, max_rows, max_vocab,
-            _corpus=corpus,
-        )
-    return ngram_containment_pairs_prefix(
-        df, id_col, text_col, n, min_containment, _corpus=corpus
+    """Containment with the same three regimes as
+    ``ngram_jaccard_pairs_auto``: **driver** for a corpus within the
+    postings cap whose prefix × full-postings work is within the work cap,
+    else one ``_dense_admission`` frequency pass picking **dense** (small
+    universe — every posting hot; the sf1 rehearsal measured the inverted
+    index at 239× the sf0.1 wall on 10× docs of a ~1k-bigram universe) or
+    **prefix** (Zipf universe at scale, any id type). The prepared corpus
+    is handed to whichever strategy entry wins, so the frequency table
+    that routed is the one the prefix kernel ranks by."""
+    return _auto_pairs(
+        df, id_col, text_col, n, _CONTAINMENT, min_containment, max_rows, max_vocab,
+        _arrs,
     )
 
 

@@ -338,14 +338,18 @@ def test_property_jaccard_strategies_match_brute_force(spark):
     check()
 
 
-def test_auto_jaccard_selects_and_matches(spark, sf_dir):
+def test_auto_jaccard_selects_and_matches(spark, sf_dir, monkeypatch):
     """auto must equal the strategy-specific outputs on both sides of its
-    decision boundary (dense regime here; prefix regime forced via caps)."""
+    decision boundary (dense regime here; prefix regime forced via caps).
+    The driver regime is switched off so both Spark routes run."""
+    from pyspark_weather_forecasting_gsod_spark.ext import dedup
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
         ngram_jaccard_pairs,
         ngram_jaccard_pairs_auto,
     )
     from pyspark_weather_forecasting_gsod_spark.sources.io import load_table
+
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
 
     docs = load_table(spark, sf_dir, "documents")
 
@@ -1050,12 +1054,10 @@ def test_dense_admission_probe_matches_full_decision(spark):
     assert got == want and want
 
 
-def _zipf_docs(spark, path, n_docs: int = 300, seed: int = 1):
+def _zipf_texts(n_docs: int = 300, seed: int = 1) -> list[str]:
     """A seeded Zipf-vocabulary corpus (20k words, s = 1.1, 30-80 words a
     doc) with planted near-copies (one word replaced): its word 3-gram
-    universe is far past the dense cap, the prefix route's regime. It is
-    read back from one parquet file at ``path``, so the planner sees a
-    file-sized scan, as for any corpus on storage."""
+    universe is far past the dense cap."""
     import numpy as np
 
     rng = np.random.default_rng(seed)
@@ -1073,8 +1075,15 @@ def _zipf_docs(spark, path, n_docs: int = 300, seed: int = 1):
             copy = base.copy()
             copy[int(rng.integers(len(base)))] = draw(1)[0]
             texts.append(" ".join(f"w{i}" for i in copy))
+    return texts[:n_docs]
+
+
+def _zipf_docs(spark, path, n_docs: int = 300, seed: int = 1):
+    """``_zipf_texts`` as (doc_id long, text), read back from one parquet
+    file at ``path``, so the planner sees a file-sized scan, as for any
+    corpus on storage."""
     spark.createDataFrame(
-        list(enumerate(texts[:n_docs])), "doc_id long, text string"
+        list(enumerate(_zipf_texts(n_docs, seed))), "doc_id long, text string"
     ).coalesce(1).write.parquet(str(path))
     return spark.read.parquet(str(path)).localCheckpoint(eager=True)
 
@@ -1083,11 +1092,13 @@ def test_auto_routes_through_public_entries_once(spark, monkeypatch, tmp_path):
     """Each auto router decides from its one admission pass and calls the
     module-level strategy entry exactly once with the prepared corpus: the
     prefix entry on a Zipf corpus, the dense entry on a small universe.
-    Both routes equal the inverted index, for Jaccard and containment."""
+    Both routes equal the inverted index, for Jaccard and containment. The
+    driver regime is switched off: both corpora are small enough for it."""
     from pyspark.sql import Row
 
     from pyspark_weather_forecasting_gsod_spark.ext import dedup
 
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
     calls: list[str] = []
 
     def counted(name):
@@ -1135,14 +1146,16 @@ def _jobs_in_group(spark, group: str, fn):
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_neardup_pairs_and_components_job_count(spark, tmp_path):
+def test_neardup_pairs_and_components_job_count(spark, tmp_path, monkeypatch):
     """Pairs → components on a Zipf corpus with a handed shingle
-    checkpoint: one frequency checkpoint both routes the auto router and
-    ranks the prefix kernel, so the auto pairs plus their checkpoint stay
-    within 7 Spark jobs (separate admission probes and a re-aggregated
-    frequency table ran 12); a bounded edge list is fetched once to decide
-    and solve on the driver, so components plus their collect run 1 job
-    (a count probe before the fetch ran 4)."""
+    checkpoint. The driver regime decides and solves from one postings
+    fetch, so the auto pairs plus their checkpoint run 2 Spark jobs. With
+    the driver regime off, one frequency checkpoint both routes the auto
+    router and ranks the prefix kernel, within 7 jobs (separate admission
+    probes and a re-aggregated frequency table ran 12). A bounded edge
+    list is fetched once to decide and solve on the driver, so components
+    plus their collect run 1 job (a count probe before the fetch ran 4)."""
+    from pyspark_weather_forecasting_gsod_spark.ext import dedup
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
         connected_components,
         ngram_jaccard_pairs_auto,
@@ -1151,21 +1164,255 @@ def test_neardup_pairs_and_components_job_count(spark, tmp_path):
 
     docs = _zipf_docs(spark, tmp_path / "zipf.parquet")
     arrs = shingle_arrays(docs, "doc_id", "text", 3).localCheckpoint(eager=True)
-    pairs, pair_jobs = _jobs_in_group(
-        spark,
-        "test-neardup-pairs-job-count",
-        lambda: ngram_jaccard_pairs_auto(
-            docs, "doc_id", "text", n=3, min_jaccard=0.5, _arrs=arrs
-        ).localCheckpoint(eager=True),
-    )
+
+    def pairs_jobs(group):
+        return _jobs_in_group(
+            spark,
+            group,
+            lambda: ngram_jaccard_pairs_auto(
+                docs, "doc_id", "text", n=3, min_jaccard=0.5, _arrs=arrs
+            ).localCheckpoint(eager=True),
+        )
+
+    pairs, driver_jobs = pairs_jobs("test-neardup-pairs-driver-job-count")
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
+        spark_pairs, pair_jobs = pairs_jobs("test-neardup-pairs-job-count")
     comp, cc_jobs = _jobs_in_group(
         spark,
         "test-neardup-cc-job-count",
         lambda: connected_components(pairs).collect(),
     )
     assert pairs.count() > 0 and comp
+    assert sorted(pairs.collect()) == sorted(spark_pairs.collect())
+    assert driver_jobs <= 2, driver_jobs
     assert pair_jobs <= 7, pair_jobs
     assert cc_jobs <= 1, cc_jobs
+
+
+def test_in_memory_corpus_pairs_job_count(spark):
+    """A corpus built with ``createDataFrame`` carries no size statistics,
+    so the Spark prefix kernel's joins plan without broadcasts and its
+    auto pairs plus checkpoint ran 10 jobs on a 300-doc Zipf corpus. Below
+    the driver caps the plan never runs: one postings fetch decides and
+    solves, and the checkpoint of the local result is the second job."""
+    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
+        ngram_jaccard_pairs,
+        ngram_jaccard_pairs_auto,
+        shingle_arrays,
+    )
+
+    docs = spark.createDataFrame(
+        list(enumerate(_zipf_texts())), "doc_id long, text string"
+    )
+    arrs = shingle_arrays(docs, "doc_id", "text", 3).localCheckpoint(eager=True)
+    pairs, jobs = _jobs_in_group(
+        spark,
+        "test-in-memory-pairs-job-count",
+        lambda: ngram_jaccard_pairs_auto(
+            docs, "doc_id", "text", n=3, min_jaccard=0.5, _arrs=arrs
+        ).localCheckpoint(eager=True),
+    )
+    want = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, min_jaccard=0.5)
+    assert sorted(pairs.collect()) == sorted(want.collect()) and pairs.count()
+    assert jobs <= 2, jobs
+
+
+def _routed(caplog, fn):
+    """``fn()`` and the (operator, route, probes) it reported."""
+    import logging
+
+    caplog.clear()
+    with caplog.at_level(logging.INFO, logger="spark_graft"):
+        out = fn()
+    return out, [
+        (r.operator, r.route, r.probes) for r in caplog.records if r.name == "spark_graft"
+    ]
+
+
+def test_routes_are_reported(spark, caplog, monkeypatch, tmp_path):
+    """The pair routers and connected_components report the route they
+    took and the probes that decided it, against their caps."""
+    from pyspark.sql import Row
+
+    from pyspark_weather_forecasting_gsod_spark.ext import dedup
+
+    zipf = _zipf_docs(spark, tmp_path / "zipf.parquet")
+    pairs, routes = _routed(
+        caplog, lambda: dedup.ngram_jaccard_pairs_auto(zipf, "doc_id", "text", 3, 0.5)
+    )
+    [(op, route, probes)] = routes
+    assert (op, route) == ("ngram_jaccard_pairs_auto", "driver")
+    assert probes["postings"][1] == dedup._DRIVER_MAX_POSTINGS
+    assert 0 < probes["postings"][0] <= probes["postings"][1]
+    assert 0 < probes["work"][0] <= probes["work"][1] == dedup._DRIVER_MAX_WORK
+    assert probes["n_docs"] == 300 and probes["n_vocab"] > 0
+
+    _, routes = _routed(caplog, lambda: dedup.connected_components(pairs))
+    assert routes == [("connected_components", "driver", {"edges": (pairs.count(), 1_000_000)})]
+    _, routes = _routed(
+        caplog, lambda: dedup.connected_components(pairs, driver_max_edges=0).collect()
+    )
+    assert routes == [("connected_components", "distributed", {"edges": None})]
+
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
+    words = [f"w{k}" for k in range(8)]
+    small = spark.createDataFrame(
+        [Row(doc_id=i, text=" ".join(words[i % 4 : i % 4 + 5])) for i in range(40)]
+    )
+    for docs, route in ((small, "dense"), (zipf, "prefix")):
+        _, routes = _routed(
+            caplog,
+            lambda: dedup.ngram_containment_pairs_auto(docs, "doc_id", "text", 3, 0.6),
+        )
+        [(op, got, probes)] = routes
+        assert (op, got) == ("ngram_containment_pairs_auto", route)
+        assert probes["n_docs"][1] == 200_000 and probes["n_vocab"][1] == 4096
+        assert (probes["n_vocab"][0] <= 4096) == (route == "dense")
+
+
+def _skewed_texts() -> list[str]:
+    """Full docs plus truncations to 1/2, 1/4 and 1/8 of their length over a
+    64-word cycle: heavy length skew, many overlapping pairs."""
+    words = [f"tok{i}" for i in range(64)]
+    texts = []
+    for d in range(12):
+        base = [words[(d * 7 + i) % 64] for i in range(48)]
+        texts += [" ".join(base[: max(4, 48 // frac)]) for frac in (1, 2, 4, 8)]
+    return texts
+
+
+def test_driver_route_matches_inverted_index(spark, caplog, monkeypatch, tmp_path):
+    """The driver regime's rows equal the inverted-index reference on a
+    Zipf corpus and a skewed-length corpus, for long and string ids, both
+    measures and t in {0.3, 0.5, 0.8, 1.0}; its schema equals the Spark
+    routes' schema, ids keep their type, and an empty result keeps it."""
+    from pyspark.sql import functions as F
+
+    from pyspark_weather_forecasting_gsod_spark.ext import dedup
+
+    def as_ids(frame, ids):
+        if ids == "string":
+            return frame.select(
+                F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"), "text"
+            )
+        return frame.select(F.col("doc_id").cast(ids), "text")
+
+    zipf = _zipf_docs(spark, tmp_path / "zipf.parquet")
+    skewed = spark.createDataFrame(list(enumerate(_skewed_texts())), "doc_id long, text string")
+    measures = (
+        (dedup.ngram_jaccard_pairs_auto, dedup.ngram_jaccard_pairs),
+        (dedup.ngram_containment_pairs_auto, dedup.ngram_containment_pairs),
+    )
+    for name, corpus, n in (("zipf", zipf, 3), ("skewed", skewed, 2)):
+        for ids in ("long", "string"):
+            docs = as_ids(corpus, ids)
+            for auto, plain in measures:
+                # the reference at the lowest threshold holds every higher one
+                ref = [tuple(r) for r in plain(docs, "doc_id", "text", n, 0.3).collect()]
+                for t in (0.3, 0.5, 0.8, 1.0):
+                    out, routes = _routed(caplog, lambda: auto(docs, "doc_id", "text", n, t))
+                    assert [r[1] for r in routes] == ["driver"], (name, ids, t, routes)
+                    got = sorted(tuple(r) for r in out.collect())
+                    assert got == sorted(r for r in ref if r[3] >= t), (name, ids, auto.__name__, t)
+                    assert got or t == 1.0, (name, ids, auto.__name__, t)
+    for ids in ("long", "int", "string"):
+        docs = as_ids(zipf, ids)
+        # no pair of these three docs reaches t = 1
+        few = as_ids(zipf.filter(F.col("doc_id") < 3), ids)
+        for auto, _ in measures:
+            with monkeypatch.context() as mp:
+                mp.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
+                spark_schema = auto(docs, "doc_id", "text", 3, 0.5).schema
+            empty = auto(few, "doc_id", "text", 3, 1.0)
+            assert empty.schema == auto(docs, "doc_id", "text", 3, 0.5).schema == spark_schema
+            assert empty.count() == 0
+
+
+def test_driver_route_null_and_duplicate_ids(spark, caplog, monkeypatch):
+    """NULL ids are dropped, as the Spark kernels drop them; duplicate ids
+    fall through to the Spark routes, whose rows the router then returns."""
+    from pyspark_weather_forecasting_gsod_spark.ext import dedup
+
+    texts = _skewed_texts()
+    nulls = spark.createDataFrame(
+        [(None if i % 5 == 0 else i, s) for i, s in enumerate(texts)], "doc_id long, text string"
+    )
+    for auto, plain in (
+        (dedup.ngram_jaccard_pairs_auto, dedup.ngram_jaccard_pairs),
+        (dedup.ngram_containment_pairs_auto, dedup.ngram_containment_pairs),
+    ):
+        out, routes = _routed(caplog, lambda: auto(nulls, "doc_id", "text", 2, 0.4))
+        got = sorted(tuple(r) for r in out.collect())
+        assert [r[1] for r in routes] == ["driver"]
+        assert got == sorted(tuple(r) for r in plain(nulls, "doc_id", "text", 2, 0.4).collect())
+        assert got and all(r[0] is not None and r[1] is not None for r in got)
+
+    dups = spark.createDataFrame(
+        [(i % 40, s) for i, s in enumerate(texts)], "doc_id long, text string"
+    )
+    for auto in (dedup.ngram_jaccard_pairs_auto, dedup.ngram_containment_pairs_auto):
+        out, routes = _routed(caplog, lambda: auto(dups, "doc_id", "text", 2, 0.4))
+        [(_, route, probes)] = routes
+        assert route in ("dense", "prefix") and "work" not in probes, routes
+        with monkeypatch.context() as mp:
+            mp.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
+            want = auto(dups, "doc_id", "text", 2, 0.4)
+        assert sorted(out.collect()) == sorted(want.collect())
+
+
+def test_auto_threshold_outside_unit_interval_unchanged(spark):
+    """The driver regime takes only thresholds in (0, 1]; others reach the
+    Spark routes, which raise (or, for a dense admit above 1, find no
+    pairs) as before."""
+    import pytest
+
+    from pyspark.sql import functions as F
+
+    from pyspark_weather_forecasting_gsod_spark.ext import dedup
+
+    docs = spark.createDataFrame(list(enumerate(_skewed_texts())), "doc_id long, text string")
+    sdocs = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
+    for m in ("jaccard", "containment"):
+        auto = getattr(dedup, f"ngram_{m}_pairs_auto")
+        with pytest.raises(ValueError, match=f"dense {m} requires min_{m} > 0"):
+            auto(docs, "doc_id", "text", 2, 0.0)
+        assert auto(docs, "doc_id", "text", 2, 1.5).count() == 0
+        for t in (0.0, 1.5):
+            with pytest.raises(ValueError, match=f"requires 0 < min_{m} <= 1"):
+                auto(sdocs, "doc_id", "text", 2, t)
+
+
+def test_driver_work_bound_falls_through(spark, caplog):
+    """A hot small-universe corpus (300 docs of 200 words over 15 words)
+    is within the postings cap but past the candidate-work bound, so the
+    router falls through: dense for long ids, prefix for string ids, with
+    the fetch's frequency table handed over. Rows equal the dense and
+    prefix strategies run on their own."""
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    from pyspark_weather_forecasting_gsod_spark.ext import dedup
+
+    rng = np.random.default_rng(0)
+    texts = []
+    for i in range(300):
+        # every tenth doc is fresh; the nine after it are near-copies
+        w = rng.integers(0, 15, 200) if i % 10 == 0 else w.copy()
+        w[rng.integers(0, 200, 4)] = rng.integers(0, 15, 4)
+        texts.append(" ".join(f"w{k}" for k in w))
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    sdocs = docs.select(F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"), "text")
+    for d, route in ((docs, "dense"), (sdocs, "prefix")):
+        for m, t in (("jaccard", 0.5), ("containment", 0.8)):
+            auto = getattr(dedup, f"ngram_{m}_pairs_auto")
+            out, routes = _routed(caplog, lambda: auto(d, "doc_id", "text", 2, t))
+            [(_, got, probes)] = routes
+            assert got == route and probes["work"][0] > probes["work"][1], routes
+            assert probes["postings"][0] <= probes["postings"][1]
+            want = getattr(dedup, f"ngram_{m}_pairs_{route}")(d, "doc_id", "text", 2, t)
+            rows = sorted(tuple(r) for r in out.collect())
+            assert rows == sorted(tuple(r) for r in want.collect()) and rows, (m, route)
 
 
 def test_prefix_size_filter_identical_on_skewed_lengths(spark):
