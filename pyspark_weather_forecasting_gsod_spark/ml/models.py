@@ -117,17 +117,14 @@ def evaluate_regression(
     SStot comes from ``var_pop`` (Spark's numerically stable
     central-moment accumulator) instead of the cancellation-prone
     Σy² − (Σy)²/n identity — still ONE aggregate pass."""
-    from pyspark.sql import functions as F
+    from ..operators.sql_text import quote_ident
 
-    e = F.col(prediction_col) - F.col(label_col)
-    y = F.col(label_col)
-    row = predictions.filter(
-        F.col(label_col).isNotNull() & F.col(prediction_col).isNotNull()
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(e * e).alias("sse"),
-        F.sum(F.abs(e)).alias("sae"),
-        F.var_pop(y).alias("vy"),
+    y, p = quote_ident(label_col), quote_ident(prediction_col)
+    row = predictions.filter(f"{y} IS NOT NULL AND {p} IS NOT NULL").selectExpr(
+        "count(1) AS n",
+        f"sum(({p} - {y}) * ({p} - {y})) AS sse",
+        f"sum(abs({p} - {y})) AS sae",
+        f"var_pop({y}) AS vy",
     ).collect()[0]
     n = row["n"] or 0
     if n == 0:

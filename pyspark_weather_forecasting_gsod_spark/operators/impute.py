@@ -28,6 +28,8 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .sql_text import quote_ident, window_sql
+
 
 def _order_cols(order_by: Sequence[str]):
     return [F.col(c) for c in order_by]
@@ -41,6 +43,26 @@ def _ordered_out(cols: list[str], out_col: str, filled) -> list:
     if out_col in cols:
         return [filled.alias(out_col) if c == out_col else F.col(c) for c in cols]
     return [F.col(c) for c in cols] + [filled.alias(out_col)]
+
+
+def _projection_sql(columns: Sequence[str], replaced: dict[str, str]) -> list[str]:
+    """``columns`` in order as SQL text, each name in ``replaced`` computed
+    by its expression text instead of passed through."""
+    return [
+        f"{replaced[c]} AS {quote_ident(c)}" if c in replaced else quote_ident(c)
+        for c in columns
+    ]
+
+
+def _global_median_fill(work: DataFrame, df: DataFrame, cur: dict[str, str]) -> DataFrame:
+    """``work`` projected to ``df``'s columns, where each column named in
+    ``cur`` is its expression ``cur[c]`` over ``work``, with the residue
+    filled by the exact median of ``df``'s column (a 1-row broadcast)."""
+    gmed = {c: quote_ident(f"__gmed_{c}") for c in cur}
+    medians = df.selectExpr(*[f"median({quote_ident(c)}) AS {gmed[c]}" for c in cur])
+    fills = {c: f"coalesce({cur[c]}, {gmed[c]})" for c in cur}
+    return work.join(F.broadcast(medians)).selectExpr(*_projection_sql(df.columns, fills))
+
 
 def impute_with_group_median(
     df: DataFrame,
@@ -230,37 +252,27 @@ def proximity_impute_fixed_schedule(
     it adds no exchange.
     """
     columns = [column] if isinstance(column, str) else list(column)
-    cur: dict[str, F.Column] = {c: F.col(c) for c in columns}
+    cur = {c: quote_ident(c) for c in columns}
     work = df.repartition(
         int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")), group_by
     )
     for i, n in enumerate(schedule):
-        w = (
-            Window.partitionBy(group_by)
-            .orderBy(*_order_cols(order_by))
-            .rowsBetween(-n, n)
-        )
-        # ONE withColumns projection per pass (not one per column): each
-        # DataFrame transformation re-analyzes the whole deepening tree, so
+        over = window_sql(group_by, order_by, rows=(-n, n))
+        # ONE projection per pass (not one per column): each DataFrame
+        # transformation re-analyzes the whole deepening tree, so
         # per-column withColumn made driver-side analysis quadratic in
         # (passes × columns) — measured seconds at the gsod pipeline depth
-        work = work.withColumns(
-            {
-                f"__prox_{i}_{c}": F.when(
-                    cur[c].isNull(), F.avg(cur[c]).over(w)
-                ).otherwise(cur[c])
+        nxt = {c: quote_ident(f"__prox_{i}_{c}") for c in columns}
+        work = work.selectExpr(
+            "*",
+            *[
+                f"CASE WHEN {cur[c]} IS NULL THEN avg({cur[c]}) OVER ({over}) "
+                f"ELSE {cur[c]} END AS {nxt[c]}"
                 for c in columns
-            }
+            ],
         )
-        cur = {c: F.col(f"__prox_{i}_{c}") for c in columns}
-    gmed = df.agg(*[F.median(c).alias(f"__gmed_{c}") for c in columns])
-    exprs = []
-    for name in df.columns:
-        if name in cur:
-            exprs.append(F.coalesce(cur[name], F.col(f"__gmed_{name}")).alias(name))
-        else:
-            exprs.append(F.col(name))
-    return work.join(F.broadcast(gmed)).select(*exprs)
+        cur = nxt
+    return _global_median_fill(work, df, cur)
 
 
 def seasonal_median_impute(
@@ -323,25 +335,21 @@ def seasonal_median_impute_multi(
     in-place (``out_col == column``), pytest-asserted equal to the
     sequential chain."""
     cols = list(columns)
-    mo = F.month(F.col(date_col))
-    seasonal = df.groupBy(F.col(group_by), mo.alias("__mo")).agg(
-        *[F.median(c).alias(f"__smed_{c}") for c in cols]
+    mo = f"month({quote_ident(date_col)})"
+    smed = {c: quote_ident(f"__smed_{c}") for c in cols}
+    seasonal = df.groupBy(F.expr(quote_ident(group_by)), F.expr(f"{mo} AS __mo")).agg(
+        *[F.expr(f"median({quote_ident(c)}) AS {smed[c]}") for c in cols]
     )
-    fact = df.withColumn("__mo", mo)
+    fact = df.selectExpr("*", f"{mo} AS __mo")
     joined = fact.join(F.broadcast(seasonal), on=[group_by, "__mo"], how="left")
-    merged = joined.withColumns(
-        {c: F.coalesce(F.col(c), F.col(f"__smed_{c}")) for c in cols}
-    ).drop("__mo", *[f"__smed_{c}" for c in cols])
+    # a USING join outputs its key first, then the other fact columns
+    merged = joined.selectExpr(*_projection_sql(
+        [group_by, *(c for c in df.columns if c != group_by)],
+        {c: f"coalesce({quote_ident(c)}, {smed[c]})" for c in cols},
+    ))
     if fallback is not None:
         return fallback(merged)
-    gmed = df.agg(*[F.median(c).alias(f"__gmed_{c}") for c in cols])
-    exprs = [
-        F.coalesce(F.col(c), F.col(f"__gmed_{c}")).alias(c)
-        if c in cols
-        else F.col(c)
-        for c in df.columns
-    ]
-    return merged.join(F.broadcast(gmed)).select(*exprs)
+    return _global_median_fill(merged, df, {c: quote_ident(c) for c in cols})
 
 
 def forward_fill(

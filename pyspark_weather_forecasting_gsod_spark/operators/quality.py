@@ -19,18 +19,21 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .sql_text import quote_ident, sql_literal
+
 # Predicate-style sentinel spec: column -> either a literal sentinel value
 # (reference style: exact equality, ipynb:246) or a Column predicate for
 # range-style sentinels ("anything above the physical max is a bad read").
 SentinelSpec = Mapping[str, object]
 
 
-def _sentinel_predicate(col: str, spec: object) -> Column:
+def _sentinel_predicate(col: str, spec: object) -> str | Column:
+    """SQL text for a literal sentinel, a Column for a predicate spec."""
     if isinstance(spec, Column):
         return spec
     if callable(spec):
-        return spec(F.col(col))
-    return F.col(col) == F.lit(spec)
+        return spec(F.col(quote_ident(col)))
+    return f"{quote_ident(col)} = {sql_literal(spec)}"
 
 
 def normalize_sentinels(df: DataFrame, sentinels: SentinelSpec) -> DataFrame:
@@ -38,16 +41,32 @@ def normalize_sentinels(df: DataFrame, sentinels: SentinelSpec) -> DataFrame:
 
     Reference: ipynb:239-247 (`when(col(c) == sentinel, None).otherwise(col(c))`
     per column). Single projection here: Catalyst sees one Project node, the
-    rewrite is codegen'd with the scan, and no lineage blowup occurs.
+    rewrite is codegen'd with the scan, and no lineage blowup occurs. The
+    projection is SQL text (``operators.sql_text``); a Column or callable
+    spec keeps its Column, and then each text item becomes one ``F.expr``.
     """
-    exprs = []
+    exprs: list[str | Column] = []
     for name in df.columns:
-        if name in sentinels:
-            pred = _sentinel_predicate(name, sentinels[name])
-            exprs.append(F.when(pred, F.lit(None)).otherwise(F.col(name)).alias(name))
+        q = quote_ident(name)
+        if name not in sentinels:
+            exprs.append(q)
+            continue
+        pred = _sentinel_predicate(name, sentinels[name])
+        if isinstance(pred, Column):
+            exprs.append(F.when(pred, F.lit(None)).otherwise(F.col(q)).alias(name))
         else:
-            exprs.append(F.col(name))
-    return df.select(*exprs)
+            exprs.append(f"CASE WHEN {pred} THEN NULL ELSE {q} END AS {q}")
+    if all(isinstance(e, str) for e in exprs):
+        return df.selectExpr(*exprs)
+    return df.select(*[F.expr(e) if isinstance(e, str) else e for e in exprs])
+
+
+def census_sql(columns: list[str]) -> list[str]:
+    """``n_rows`` plus ``null_<col>`` per column, as aggregate SQL text."""
+    return ["count(1) AS n_rows"] + [
+        f"sum(CAST({quote_ident(c)} IS NULL AS BIGINT)) AS {quote_ident('null_' + c)}"
+        for c in columns
+    ]
 
 
 def missing_census(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -61,11 +80,7 @@ def missing_census(df: DataFrame, columns: list[str] | None = None) -> DataFrame
 
     Returns one row: ``n_rows`` plus ``null_<col>`` per column.
     """
-    cols = columns or df.columns
-    aggs = [F.count(F.lit(1)).alias("n_rows")] + [
-        F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}") for c in cols
-    ]
-    return df.agg(*aggs)
+    return df.selectExpr(*census_sql(columns or df.columns))
 
 
 def mad_outlier_flags(

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .guards import assert_no_order_tie
+from .sql_text import sql_literal
 
 HEX = "0123456789abcdef"
 
@@ -46,6 +47,16 @@ def hash_bucket(key: Column, buckets: int = 100, hex_chars: int = 4) -> Column:
     mod to stay uniform (4 chars for percent splits, 6+ for ppm rates)."""
     h = F.substring(F.md5(key.cast("string").cast("binary")), 1, hex_chars)
     return F.conv(h, 16, 10).cast("long") % buckets
+
+
+def hash_bucket_sql(key_sql: str, buckets: int = 100, hex_chars: int = 4) -> str:
+    """``hash_bucket`` as SQL text over the SQL expression ``key_sql``, for
+    projections built as text (``operators.sql_text``); the same
+    expression, so the same buckets."""
+    return (
+        f"CAST(conv(substring(md5(CAST(CAST({key_sql} AS STRING) AS BINARY)), "
+        f"1, {sql_literal(hex_chars)}), 16, 10) AS BIGINT) % {sql_literal(buckets)}"
+    )
 
 
 def hash_split(

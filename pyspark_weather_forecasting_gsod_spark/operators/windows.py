@@ -24,6 +24,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.window import WindowSpec
 
+from .sql_text import quote_ident, sql_literal, window_sql
+
 
 def keyed_window(group_by: str | Sequence[str], order_by: str | Sequence[str]) -> WindowSpec:
     group_cols = [group_by] if isinstance(group_by, str) else list(group_by)
@@ -52,31 +54,31 @@ def lead_labels(
     ``max_gap_seconds`` is the timestamp-grain variant: labels are nulled
     when the next observation is more than the gap away.
     """
-    w = keyed_window(group_by, order_by)
-    out = df
-    exprs: list[Column] = [F.col(c) for c in df.columns]
+    over = window_sql(group_by, order_by)
     gap_ok = None
-    if calendar_strict:
-        dc = date_col or (order_by if isinstance(order_by, str) else order_by[0])
-        gap_ok = F.datediff(F.lead(dc, 1).over(w), F.col(dc)) == 1
-    elif max_gap_seconds is not None:
-        dc = date_col or (order_by if isinstance(order_by, str) else order_by[0])
-        gap_us = F.unix_micros(F.lead(dc, 1).over(w)) - F.unix_micros(F.col(dc))
-        # scale BEFORE rounding: int() truncation lost up to 1 µs and
-        # rejected an observation exactly at the allowed gap (r08 review)
-        gap_ok = gap_us <= int(round(max_gap_seconds * 1_000_000))
+    if calendar_strict or max_gap_seconds is not None:
+        dc = quote_ident(
+            date_col or (order_by if isinstance(order_by, str) else order_by[0])
+        )
+        nxt = f"lead({dc}, 1) OVER ({over})"
+        if calendar_strict:
+            gap_ok = f"datediff({nxt}, {dc}) = 1"
+        else:
+            # scale BEFORE rounding: int() truncation lost up to 1 µs and
+            # rejected an observation exactly at the allowed gap (r08 review)
+            limit = sql_literal(int(round(max_gap_seconds * 1_000_000)))
+            gap_ok = f"unix_micros({nxt}) - unix_micros({dc}) <= {limit}"
+    exprs = ["*"]
     for src, label in labels.items():
-        led = F.lead(src, 1).over(w)
+        led = f"lead({quote_ident(src)}, 1) OVER ({over})"
         if gap_ok is not None:
-            led = F.when(gap_ok, led)
-        exprs.append(led.alias(label))
-    out = out.select(*exprs)
+            led = f"CASE WHEN {gap_ok} THEN {led} END"
+        exprs.append(f"{led} AS {quote_ident(label)}")
+    out = df.selectExpr(*exprs)
     if drop_null_labels:
-        pred = None
-        for label in labels.values():
-            c = F.col(label).isNotNull()
-            pred = c if pred is None else (pred & c)
-        out = out.filter(pred)
+        out = out.filter(
+            " AND ".join(f"{quote_ident(lab)} IS NOT NULL" for lab in labels.values())
+        )
     return out
 
 

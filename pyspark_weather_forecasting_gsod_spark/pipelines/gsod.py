@@ -38,8 +38,8 @@ from ..operators.impute import (
     seasonal_median_impute_multi,
     zero_impute,
 )
-from ..operators.quality import normalize_sentinels
-from ..operators.sampling import hash_bucket
+from ..operators.quality import census_sql, normalize_sentinels
+from ..operators.sampling import hash_bucket_sql
 from ..operators.windows import lead_labels
 
 # The reference's sentinel map (ipynb:239-243).
@@ -261,12 +261,7 @@ def run_gsod_pipeline(
     census_obs = Observation("census")
     labels = {"max": "next_day_max", "rain_drizzle": "next_day_rain"}
     both = lead_labels(
-        imputed.observe(
-            census_obs,
-            F.count(F.lit(1)).alias("n_rows"),
-            *[F.sum(F.col(c).isNull().cast("long")).alias(f"null_{c}")
-              for c in MEASURES],
-        ),
+        imputed.observe(census_obs, *map(F.expr, census_sql(MEASURES))),
         group_by="stn", order_by="date", labels=labels, drop_null_labels=False,
     ).localCheckpoint(eager=True)
     _mark("impute_sec")
@@ -277,10 +272,10 @@ def run_gsod_pipeline(
     # The 80/20 split is a pure function of the (stn, date) key, so its
     # membership does not depend on partition layout or row order.
     labeled = both.dropna(subset=list(labels.values())).withColumns({
-        "next_day_rain": F.col("next_day_rain").cast("double"),
-        "is_train": hash_bucket(
-            F.concat_ws("|", F.col("stn"), F.col("date").cast("string"))
-        ) < 80,
+        "next_day_rain": F.expr("CAST(next_day_rain AS DOUBLE)"),
+        "is_train": F.expr(
+            hash_bucket_sql("concat_ws('|', stn, CAST(date AS STRING))") + " < 80"
+        ),
     })
 
     # One cached frame of exactly the fit columns and the split flag feeds
@@ -294,12 +289,12 @@ def run_gsod_pipeline(
     # memory in a default-heap driver, where persisted blocks are evicted
     # instead. The cache keeps the checkpoint's partitioning, so the fit
     # and eval passes run one task per impute window partition.
-    featurized = featurize(labeled).select(
+    featurized = featurize(labeled).selectExpr(
         "features", "next_day_max", "next_day_rain", "is_train"
     ).persist()
     _mark("feature_fit_sec")
-    train = featurized.filter(F.col("is_train"))
-    test = featurized.filter(~F.col("is_train"))
+    train = featurized.filter("is_train")
+    test = featurized.filter("NOT is_train")
     try:
         lr = train_linear_regression(train, "next_day_max")
         _mark("lr_fit_sec")

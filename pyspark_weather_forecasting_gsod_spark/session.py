@@ -26,6 +26,18 @@ _RUNTIME_CONF = {
 }
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``$SPARK_DRIVER_MEMORY`` is unset: 8g,
+    capped at half of MemTotal so a small box keeps room for the Python
+    side and the OS; 8g when MemTotal cannot be read."""
+    try:
+        with open(meminfo, encoding="ascii") as fh:
+            kib = next(int(ln.split()[1]) for ln in fh if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "8g"
+    return f"{min(8192, kib // 2048)}m"
+
+
 def get_spark(
     app_name: str = "gsod-engine",
     master: str | None = None,
@@ -72,7 +84,10 @@ def get_spark(
         .master(master)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
     for k, v in _RUNTIME_CONF.items():
         builder = builder.config(k, v)

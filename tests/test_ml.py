@@ -285,6 +285,41 @@ def test_gsod_fast_pipeline_job_count(spark):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
 
 
+def test_gsod_fast_pipeline_py4j_round_trip_budget(spark, monkeypatch):
+    """Building the fast pipeline's plans stays within 2,000 py4j round
+    trips per run. The operators on its path write each projection as SQL
+    text in one call; built as Column trees (a JVM call per ``F.col``,
+    ``alias``, ``when``, ``over``, plus a call-site capture on each) the
+    same run made ~5,200. Only the calling thread's commands count: py4j's
+    finalizer thread sends the deletes of whatever garbage earlier code
+    left, 250-700 of them during one run of this test."""
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from pyspark_weather_forecasting_gsod_spark.pipelines.gsod import (
+        run_gsod_pipeline,
+        weather_fixture,
+    )
+
+    if not hasattr(spark, "_jvm"):
+        pytest.skip("Spark Connect: no py4j gateway")
+    wx = weather_fixture(spark, 12, 120).localCheckpoint(eager=True)
+    calls = [0]
+    send = ClientServerConnection.send_command
+    caller = threading.get_ident()
+
+    def counting(self, command, *args, **kwargs):
+        if threading.get_ident() == caller:
+            calls[0] += 1
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    run_gsod_pipeline(wx, fast=True, with_classifier=False)
+    monkeypatch.undo()
+    assert 0 < calls[0] <= 2000, calls[0]
+
+
 def test_gsod_regression_design_is_full_rank_and_equivalent(spark, monkeypatch):
     """The GSOD LR fit solves the normal equations by Cholesky (0
     iterations) on 16 features, and its test-side predictions equal those

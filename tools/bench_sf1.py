@@ -136,8 +136,11 @@ def main() -> None:
     from pyspark_weather_forecasting_gsod_spark.session import get_spark
     from pyspark_weather_forecasting_gsod_spark.sources.io import load_table
 
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    from perfbench import box
+
+    # the bench's box-sized defaults (bench.py, perfbench/box.py)
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", f"{box.heap_mib(box.mem_total_mib())}m")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(box.cpus()))
     spark = get_spark("gsod-engine-bench-sf1", master=f"local[{cpus}]")
 
     if "--rebuild" in sys.argv or not os.path.isdir(
@@ -172,8 +175,8 @@ def main() -> None:
         spark.catalog.clearCache()
         # localCheckpoint blocks are freed by the ContextCleaner only after
         # the driver-side refs are GC'd; across a multi-query rehearsal in
-        # one 48g JVM they accumulate until a full-GC pause exceeds the
-        # 10 s RPC timeout and the scheduler dies (observed r10: zipf pass
+        # one JVM they accumulate until a full-GC pause exceeds the 10 s
+        # RPC timeout and the scheduler dies (observed r10 on a 48g heap: zipf pass
         # crashed with 'Cannot find endpoint: CoarseGrainedScheduler' after
         # two checkpoint-heavy queries). Nudge both collectors between
         # queries — cheap next to any rehearsal wall.
