@@ -6,10 +6,12 @@ design:
   * exact dedup — hash-aggregate on a fingerprint column; one shuffle keyed
     by the fingerprint, no driver data.
   * n-gram set similarity (Jaccard, containment) — EXACT pairwise scores
-    from one core of three kernels (inverted shingle index, rarest-first
-    prefix filter, dense block BLAS) plus an auto router; never a cross
-    join. The inverted index costs Σ_posting |posting|², so it is for
-    capped/small corpora or as the verification stage after LSH banding.
+    from one entry, ``set_similarity_pairs`` over a prepared
+    ``ShingleCorpus``, routing to one of four kernels (inverted shingle
+    index, prefix filter on the driver or in Spark, dense block BLAS);
+    never a cross join. The inverted index costs Σ_posting |posting|², so
+    it is for capped/small corpora or as the verification stage after LSH
+    banding.
   * MinHash+LSH — the 100 TB path: shingle → minhash signature (permutation
     hashes of xxhash64 values) → band buckets → candidate join inside
     buckets only → exact Jaccard verification of candidates. Fully
@@ -44,9 +46,9 @@ def widen_for_fanout(df: DataFrame, target: int | None = None) -> DataFrame:
     partitions) would serialize it on one core while 31 idle; at real scale
     the scan is already ≥ the core count and this is a no-op (no shuffle).
 
-    Narrowness is decided WITHOUT an RDD probe (r05 VERDICT: the old
-    ``df.rdd.getNumPartitions()`` forced a logical→RDD plan conversion —
-    incompatible with Spark Connect and opaque to AQE). Instead:
+    Narrowness is decided WITHOUT an RDD probe: ``df.rdd.getNumPartitions()``
+    forces a logical→RDD plan conversion, which Spark Connect does not
+    support and AQE cannot see through. Instead:
 
     - file-backed frame with fewer files than ``target`` → narrow scan
       (each file yields ≥1 split, so < target files can mean < target
@@ -148,9 +150,8 @@ def _is_bounded(df: DataFrame, max_rows: int = 1_000_000) -> bool:
     provably bounded (1M rows ≈ 16 MB of (long, long)) and degrades to the
     hint-free join — AQE may still convert — beyond.
 
-    Memoized per DataFrame OBJECT (r11, VERDICT r10 #7): each probe is an
-    eager limit-count job, so builders invoked repeatedly on the same
-    frame (interactive loops over ngram_* on one corpus) would otherwise
+    Memoized per DataFrame OBJECT: each probe is an eager limit-count
+    job, so builders invoked repeatedly on the same frame would otherwise
     re-execute identical lineage every call. Keyed by ``id(df)`` with a
     weakref finalizer evicting on garbage collection — eviction runs
     before CPython can reuse the id, so stale hits are impossible. A
@@ -176,18 +177,22 @@ def _is_bounded(df: DataFrame, max_rows: int = 1_000_000) -> bool:
 
 
 # ---------------------------------------------------------------------------
-# Exact n-gram set similarity: one core, two measures.
+# Exact n-gram set similarity: one entry, two measures.
 #
-# Three kernels, each written once, read checkpointed ``shingle_arrays``
-# frames: the inverted index (``_index_pairs``, the reference the others are
-# tested against), the rarest-first prefix filter (``_prefix_pairs``) and
-# the dense block BLAS (``_dense_pair_blocks``). A ``_Measure`` row holds all
-# a measure changes: its score, its output columns and orientation, and its
-# prefix candidate rule. ``ngram_{jaccard,containment}_pairs{,_prefix,
-# _dense,_auto}`` and ``exact_cross_jaccard`` are thin calls into the core;
-# both auto entries share one router (``_auto_pairs``), which first tries
-# the prefix algorithm on the driver (``_driver_pairs``) for a bounded
-# corpus.
+# ``set_similarity_pairs(corpus, measure, threshold, against=None)`` is the
+# one public entry. Its input is a ``ShingleCorpus``, prepared once by
+# ``shingle_corpus`` and passed as a value: the checkpointed
+# ``shingle_arrays`` frame together with the id column and n it was built
+# with, so every route, and every caller sharing the corpus, reads one
+# shingle pass. A ``_Measure`` row holds all a measure changes: its score,
+# its output columns and orientation, and its prefix candidate rule.
+#
+# Four kernels, each written once over the corpus arrays: the inverted
+# index (``_index_pairs``, the reference the others are tested against),
+# the prefix algorithm on the driver (``_driver_pairs``), the rarest-first
+# prefix filter in Spark (``_prefix_pairs``) and the dense block BLAS
+# (``_dense_pairs``). The router picks one from the threshold and from
+# what the corpus holds, and reports the route through ``report.record``.
 #
 # The banded near-dup paths filter, then verify: ``_band_pairs`` turns
 # (band_no, bucket) tables into candidate pairs, and ``_index_pairs``
@@ -197,6 +202,40 @@ def _is_bounded(df: DataFrame, max_rows: int = 1_000_000) -> bool:
 # Hamming distance; the tiered best match's tier 2 is ``_index_pairs`` over
 # the docs tier 1 left unmatched.
 # ---------------------------------------------------------------------------
+
+
+class ShingleCorpus(NamedTuple):
+    """A shingled corpus, prepared once: ``arrs`` is a checkpointed
+    ``shingle_arrays(df, id_col, text_col, n)`` frame and ``id_col`` and
+    ``n`` are the ones it was built with. They travel together, so no call
+    can name an id column or n that disagrees with the arrays it reads. A
+    frame that is already checkpointed becomes a corpus as
+    ``ShingleCorpus(arrs, id_col, n)``, which runs no Spark job."""
+
+    arrs: DataFrame
+    id_col: str
+    n: int
+
+
+def shingle_corpus(
+    df: DataFrame, id_col: str, text_col: str = "text", n: int = 3
+) -> ShingleCorpus:
+    """Shingle ``df`` once for any number of set-similarity calls. The
+    checkpoint is lazy, so building runs no Spark job: the first job that
+    reads the arrays (the driver route's postings fetch, say) fills it, and
+    every later read, a fall-through route included, reuses it. A
+    checkpoint, not a persist: the kernels return frames that stay lazy
+    over it, so no unpersist could pair with a persist here."""
+    arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=False)
+    return ShingleCorpus(arrs, id_col, n)
+
+
+def _same_shingling(corpus: ShingleCorpus, id_col: str, n: int, op: str) -> None:
+    if (corpus.id_col, corpus.n) != (id_col, n):
+        raise ValueError(
+            f"{op}: the corpus is shingled by ({corpus.id_col}, n={corpus.n}), "
+            f"not ({id_col}, n={n})"
+        )
 
 
 def _prefix_x_prefix(
@@ -248,7 +287,7 @@ class _Measure(NamedTuple):
     ``score`` and ``orient`` run on Spark Columns and on numpy arrays alike
     (``least``/``where`` name the backend's elementwise min and select)."""
 
-    name: str  # score column; the entry points are ngram_{name}_pairs*
+    name: str  # the measure's name in set_similarity_pairs, and its score column
     cols: tuple[str, str]  # output id columns
     score: Callable  # (common, |a|, |b|, least) -> score
     orient: Callable  # (a, b, |a|, |b|, where) -> output ids, given a < b
@@ -276,6 +315,7 @@ _CONTAINMENT = _Measure(
     ),
     candidates=_prefix_x_full,
 )
+_MEASURES = {m.name: m for m in (_JACCARD, _CONTAINMENT)}
 
 
 def _when(cond, x, y):
@@ -291,19 +331,6 @@ def _scored(pairs: DataFrame, m: _Measure, t: float, sz_a, sz_b) -> DataFrame:
         .filter(F.col(m.name) >= t)
         .select(lo.alias(m.cols[0]), hi.alias(m.cols[1]), "common", m.name)
     )
-
-
-def _prepared(
-    df: DataFrame, id_col: str, text_col: str, n: int, arrs: DataFrame | None = None
-) -> DataFrame:
-    """The shingle arrays a kernel reads: ``arrs`` when the caller hands
-    over an eager ``shingle_arrays(df, id_col, text_col, n)`` checkpoint,
-    else one shingle pass materialized here. A checkpoint, not a persist:
-    the kernels return frames that stay lazy over it, so no unpersist could
-    pair with a persist inside the function."""
-    if arrs is not None:
-        return arrs
-    return shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=True)
 
 
 def _index_pairs(
@@ -393,13 +420,7 @@ def _shingle_freq(arrs: DataFrame) -> DataFrame:
 
 
 def _prefix_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    m: _Measure,
-    t: float,
-    corpus: _Corpus | None = None,
+    corpus: ShingleCorpus, m: _Measure, t: float, freq: DataFrame
 ) -> DataFrame:
     """Rarest-first prefix kernel (AllPairs/PPJoin, Bayardo et al.,
     WWW'07): the inverted index's output at a fraction of its cost when
@@ -412,20 +433,11 @@ def _prefix_pairs(
     prefixes, so the candidate join never touches hot posting lists (the
     Σ|posting|² blowup, measured 10× on 2-gram shingles at sf0.1).
     Candidates are verified exactly with one JVM ``array_intersect`` per
-    pair. Plan: one window rank per doc over the frequency table, one
+    pair. Plan: one window rank per doc over the frequency table ``freq``
+    (the corpus's (shingle, __df) table, the one that routed), one
     candidate equi-join, one verify join carrying arrays for candidates
-    only; nothing quadratic in the corpus. A prepared ``corpus`` supplies
-    both the shingle arrays and the frequency table (the auto routers'
-    admission pass); without one, the arrays are materialized here and the
-    frequency aggregate stays part of the plan."""
-    t = float(t)
-    if not 0.0 < t <= 1.0:
-        raise ValueError(f"prefix filtering requires 0 < min_{m.name} <= 1")
-    if corpus is None:
-        arrs = _prepared(df, id_col, text_col, n)
-        freq = _shingle_freq(arrs)
-    else:
-        arrs, freq = corpus.arrs, corpus.freq
+    only; nothing quadratic in the corpus. ``0 < t <= 1``."""
+    arrs, id_col = corpus.arrs, corpus.id_col
     sh = arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
     wrk = Window.partitionBy(id_col).orderBy("__df", "shingle")
     wsz = Window.partitionBy(id_col)
@@ -467,106 +479,42 @@ def _integral_id_dtype(df: DataFrame, id_col: str) -> bool:
     return _id_dtype(df, id_col) in ("tinyint", "smallint", "int", "bigint")
 
 
-class _Corpus(NamedTuple):
-    """A shingled corpus, prepared once: the auto routers build it in
-    ``_dense_admission`` and hand it to whichever kernel wins, so neither
-    the shingle pass nor the frequency aggregate runs twice."""
+def _shingle_counts(arrs: DataFrame, counted: tuple | None) -> tuple:
+    """(freq, n_docs, n_vocab): the checkpointed (shingle, __df) document
+    frequencies, the shingle-bearing docs (rows of ``arrs``) and the
+    distinct shingles (rows of ``freq``), which decide the dense route.
 
-    # dense regime: integral ids, ≤ max_rows docs, ≤ max_vocab shingles
-    admit: bool
-    n_docs: int  # shingle-bearing docs (rows of arrs)
-    n_vocab: int  # distinct shingles (rows of freq)
-    vidx: DataFrame | None  # (shingle, __idx) column index; set iff admit
-    arrs: DataFrame  # checkpointed shingle_arrays(df, id_col, text_col, n)
-    freq: DataFrame  # checkpointed (shingle, __df) document frequencies
-
-
-def _dense_admission(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    max_rows: int,
-    max_vocab: int,
-    arrs: DataFrame | None = None,
-    counted: tuple | None = None,
-) -> _Corpus:
-    """Prepare the corpus and decide the dense regime in one pass.
-
-    The shingle arrays (``arrs`` when the caller hands over an eager
-    ``shingle_arrays(df, id_col, text_col, n)`` checkpoint, else one
-    materialized here) feed one ``(shingle, __df)`` frequency aggregate,
-    materialized by an eager localCheckpoint whose job also counts, through
-    two ``DataFrame.observe`` counters, the shingle-bearing docs and the
-    vocabulary. Dense is admitted for integral ids, ≤ ``max_rows`` docs
-    and ≤ ``max_vocab`` shingles; the column index is then the frequency
-    table's shingles in sorted order.
-
-    Either route reads the frequency table: the prefix kernel ranks
-    shingles by it, so a rejected corpus has paid for nothing the prefix
-    path would not compute anyway. The cheap early rejects (raw-count and
-    sample-vocab probes) belong to the standalone dense entries, the one
-    caller they save a full pass for. In the Zipf regime the table holds
-    the whole vocabulary, one row per distinct shingle.
+    One eager localCheckpoint materializes the frequency aggregate, and
+    its job also counts both through two ``DataFrame.observe`` counters.
+    Either Spark route reads the table: the prefix kernel ranks shingles
+    by it and the dense kernel indexes its columns from it, so a corpus
+    the dense route rejects has paid for nothing the prefix route would
+    not compute anyway. In the Zipf regime the table holds the whole
+    vocabulary, one row per distinct shingle.
 
     ``counted`` is (docs, pandas (shingle, __df) table) from a driver
     fetch that already held the whole corpus (``_driver_pairs``); the
-    table is shipped as a local frame and no counting pass runs.
-    """
-    arrs = _prepared(df, id_col, text_col, n, arrs)
-    if counted is None:
-        docs_obs, vocab_obs = Observation(), Observation()
-        freq = (
-            _shingle_freq(arrs.observe(docs_obs, F.count(F.lit(1)).alias("n")))
-            .observe(vocab_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_docs, n_vocab = docs_obs.get["n"], vocab_obs.get["n"]
-    else:
+    table is shipped as a local frame and no counting pass runs."""
+    if counted is not None:
         n_docs, table = counted
         freq = arrs.sparkSession.createDataFrame(table, "shingle string, __df long")
-        n_vocab = len(table)
-    admit = (
-        _integral_id_dtype(df, id_col) and n_docs <= max_rows and n_vocab <= max_vocab
+        return freq, n_docs, len(table)
+    docs_obs, vocab_obs = Observation(), Observation()
+    freq = (
+        _shingle_freq(arrs.observe(docs_obs, F.count(F.lit(1)).alias("n")))
+        .observe(vocab_obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
     )
-    vidx = None
-    if admit:
-        vidx = freq.select(
-            "shingle", (F.row_number().over(Window.orderBy("shingle")) - 1).alias("__idx")
-        )
-    return _Corpus(admit, n_docs, n_vocab, vidx, arrs, freq)
+    return freq, docs_obs.get["n"], vocab_obs.get["n"]
 
 
-_VOCAB_SAMPLE_DOCS = 2_000
-
-
-def _sample_vocab_exceeds(
-    df: DataFrame, id_col: str, text_col: str, n: int, max_vocab: int
-) -> bool:
-    """True when the first ``_VOCAB_SAMPLE_DOCS`` docs alone hold more than
-    ``max_vocab`` distinct shingles. The distinct count is monotone in the
-    corpus, so a True PROVES the full corpus exceeds the cap too: the
-    Zipf-vocabulary regime is rejected without a full map pass."""
-    return (
-        shingle_arrays(df.limit(_VOCAB_SAMPLE_DOCS), id_col, text_col, n)
-        .select(F.explode("shingles").alias("shingle"))
-        .distinct()
-        .limit(max_vocab + 1)
-        .count()
-        > max_vocab
-    )
-
-
-def _dense_pair_blocks(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    t: float,
-    max_rows: int,
-    max_vocab: int,
+def _dense_pairs(
+    corpus: ShingleCorpus,
     m: _Measure,
-    corpus: _Corpus | None = None,
+    t: float,
+    freq: DataFrame,
+    n_docs: int,
+    n_vocab: int,
 ) -> DataFrame:
     """Dense block-BLAS kernel, for a small shingle UNIVERSE: there every
     posting list is hot, so the inverted index and prefix filtering both
@@ -582,75 +530,34 @@ def _dense_pair_blocks(
     are exact (set sizes ≪ 2^53). The quadratic pair loop is inherent to
     exact all-pairs; BLAS makes it ~vector-width·cores parallel.
 
-    Guards, each raising with a pointer to the prefix path: ``t > 0``, an
-    integral id column (ids are packed into int64 matrices), ≤
-    ``max_rows`` docs and ≤ ``max_vocab`` distinct shingles. The auto
-    routers hand their admitted ``corpus`` over, so no probe runs here.
-    Called without one, the cheap rejects run first: a raw-row
-    ``limit(max_rows + 1)`` count (shingling only ever drops rows, so it
-    bounds the shingle-bearing docs from above) and the sample-vocab probe
-    (``_sample_vocab_exceeds``); only a corpus passing both pays for
-    ``_dense_admission``'s full pass.
+    Only the router calls it, on a corpus it admitted: integral ids (they
+    are packed into int64 matrices; a cast of a string id gives NULLs that
+    collapse every row into one block), ``0 < t <= 1``, at most
+    ``_DENSE_MAX_ROWS`` docs and ``_DENSE_MAX_VOCAB`` distinct shingles.
+    The column index is ``freq``'s shingles in sorted order.
     """
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    t = float(t)
-    alt = f"ngram_{m.name}_pairs_prefix"
-    if t <= 0.0:
-        # at t=0 the dense path would emit zero-overlap pairs the inverted
-        # index never materializes — keep the outputs identical. (A t=0 /
-        # common≥1 dense mode for unthresholded enumeration was measured
-        # and REJECTED: with output ≈ all pairs, Arrow-serializing the pair
-        # rows out of the Python worker costs 3× the JVM inverted-index
-        # join+agg — dense only wins when the threshold keeps output small.)
-        raise ValueError(f"dense {m.name} requires min_{m.name} > 0")
-    if not _integral_id_dtype(df, id_col):
-        # a cast('long') on a string id yields NULLs that collapse every
-        # row into one block and crash densify in the Python worker; the
-        # inverted index and prefix paths handle any id type
-        raise ValueError(
-            f"dense {m.name} requires an integral id column "
-            f"({id_col} is {_id_dtype(df, id_col)}); use {alt}"
-        )
-    rows_error = ValueError(
-        f"dense {m.name} is guarded at {max_rows} docs; use "
-        f"{alt} or a sampled audit subset"
+    id_col, vsize = corpus.id_col, n_vocab
+    vidx = freq.select(
+        "shingle", (F.row_number().over(Window.orderBy("shingle")) - 1).alias("__idx")
     )
-    vocab_error = ValueError(
-        f"dense {m.name} is guarded at {max_vocab} distinct shingles "
-        f"(the universe is no longer 'small'); use {alt}"
-    )
-    if corpus is None:
-        n_raw = df.limit(max_rows + 1).count()
-        if n_raw > max_rows:
-            raise rows_error
-        # a corpus no larger than the sample is decided by the full pass
-        if n_raw > _VOCAB_SAMPLE_DOCS and _sample_vocab_exceeds(
-            df, id_col, text_col, n, max_vocab
-        ):
-            raise vocab_error
-        corpus = _dense_admission(df, id_col, text_col, n, max_rows, max_vocab)
-    if corpus.n_docs > max_rows:
-        raise rows_error
-    if not corpus.admit:
-        raise vocab_error
-    vsize = corpus.n_vocab
     # block count scales with the corpus so per-task memory stays bounded:
     # the C = A @ B.T common-count matrix is (rows/B)² float64 per task, so
-    # a FIXED B=8 at the 200k-doc guard limit would allocate 25k² ≈ 5 GB.
+    # a FIXED B=8 at the 200k-doc admission cap would allocate 25k² ≈ 5 GB.
     # Capping block rows at ~4096 bounds C (and each densified side) at
     # ~134 MB; block-pair task count grows as B²/2 (all independent) and
     # shuffle as O(N·B) — the right trade for an exact all-pairs path.
-    n_blocks = max(8, -(-corpus.n_docs // 4096))
+    n_blocks = max(8, -(-n_docs // 4096))
     block_pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
 
     # per-doc index lists, built ONCE and materialized: both matmul roles
     # read this table
     tagged = (
         corpus.arrs.select(F.col(id_col), F.explode("shingles").alias("shingle"))
-        .join(F.broadcast(corpus.vidx), "shingle")
+        .join(F.broadcast(vidx), "shingle")
         .groupBy(id_col)
         .agg(F.collect_list("__idx").alias("__idxs"))
         .select(F.col(id_col).cast("long").alias("id"), "__idxs")
@@ -661,7 +568,7 @@ def _dense_pair_blocks(
     )
     # one-slice local frame: the default parallelization spun 32 pickle
     # slices for ~36 rows per kernel invocation (see session.local_rows_df)
-    pair_df = local_rows_df(df.sparkSession, block_pairs, "ba int, bb int")
+    pair_df = local_rows_df(corpus.arrs.sparkSession, block_pairs, "ba int, bb int")
     # role-tagged self-UNION instead of a two-sided cogroup: joining the
     # same checkpointed table twice into cogroup trips the ambiguous-self-
     # join analyzer; a union is unambiguous and needs only ONE grouped
@@ -733,19 +640,19 @@ def _dense_pair_blocks(
     return both.groupBy("ba", "bb").applyInPandas(block_common, out_schema)
 
 
-# The auto routers' driver regime, with caps measured against the Spark
-# routes (see ``ngram_jaccard_pairs_auto``): _DRIVER_MAX_POSTINGS bounds
-# the driver's memory (the driver still wins on time past it), and past
-# _DRIVER_MAX_WORK the Python candidate enumeration and verify lose to
-# the dense kernel on hot small-universe corpora. A postings cap of 0
-# switches the regime off (tests pin the Spark routes that way).
+# The driver regime, with caps measured against the Spark routes (see
+# ``set_similarity_pairs``): _DRIVER_MAX_POSTINGS bounds the driver's
+# memory (the driver still wins on time past it), and past
+# _DRIVER_MAX_WORK the Python candidate enumeration and verify lose to the
+# dense kernel on hot small-universe corpora. A postings cap of 0 switches
+# the regime off (tests pin the Spark routes that way).
 _DRIVER_MAX_POSTINGS = 1_000_000
 _DRIVER_MAX_WORK = 1_000_000
 _DRIVER_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
 
 
 def _driver_pairs(
-    arrs: DataFrame, id_col: str, m: _Measure, t: float, probes: dict
+    corpus: ShingleCorpus, m: _Measure, t: float, probes: dict
 ) -> tuple:
     """``_prefix_pairs`` run on the driver: (pairs, None), or (None,
     counted) when the corpus is not small enough for it. ``0 < t <= 1``
@@ -766,7 +673,7 @@ def _driver_pairs(
     C(|prefix posting|, 2), or Σ |prefix posting|·|posting| — is known
     exactly before any pair is built, and past ``_DRIVER_MAX_WORK`` this
     returns no pairs. Candidates are verified by set intersection and
-    scored and oriented by the measure, as ``_dense_pair_blocks`` does.
+    scored and oriented by the measure, as ``_dense_pairs`` does.
     The pairs are a local frame with the Spark routes' columns and types.
 
     ``counted`` is (docs, pandas (shingle, __df) table) when the fetch held
@@ -778,7 +685,7 @@ def _driver_pairs(
     import pyarrow.compute as pc
     from pyspark.sql import types as T
 
-    cap = _DRIVER_MAX_POSTINGS
+    arrs, id_col, cap = corpus.arrs, corpus.id_col, _DRIVER_MAX_POSTINGS
     # Arrow end to end: the shingle strings are dictionary-encoded without
     # a Python object per posting, and ids sort in Arrow's byte order,
     # which is Spark's string order
@@ -891,190 +798,142 @@ def _driver_pairs(
     return arrs.sparkSession.createDataFrame(out, schema), None
 
 
-def _auto_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    m: _Measure,
-    t: float,
-    max_rows: int,
-    max_vocab: int,
-    arrs: DataFrame | None,
-) -> DataFrame:
-    """The body of both auto routers: driver, else dense, else prefix.
+# Caps of the routes the threshold alone does not bound. At threshold 0
+# the inverted index enumerates every pair sharing a shingle, Σ|posting|²
+# work that no threshold prunes. The dense route's caps bound its
+# per-task memory (see ``_dense_pairs``) and keep it to the small shingle
+# universe where it wins. Tests pin them with monkeypatch.
+_INDEX_MAX_DOCS = 200_000
+_DENSE_MAX_ROWS = 200_000
+_DENSE_MAX_VOCAB = 4096
 
-    The driver regime (``_driver_pairs``) is tried first for thresholds in
-    (0, 1] and integral or string ids; it reads ``arrs``, or a lazy
-    checkpoint of the shingle pass when none is handed, so a corpus solved
-    there runs one Spark job and a fall-through reads the arrays that job
-    computed. Otherwise ``_dense_admission`` prepares the corpus and the
-    public dense or prefix entry gets it; a threshold outside (0, 1]
-    therefore raises (or, on a dense admit above 1, returns no pairs)
-    exactly as those entries do."""
-    op, probes, counted = f"ngram_{m.name}_pairs_auto", {}, None
-    if (
-        _DRIVER_MAX_POSTINGS
-        and 0.0 < float(t) <= 1.0
-        and _id_dtype(df, id_col) in _DRIVER_ID_TYPES
-    ):
-        if arrs is None:
-            arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=False)
-        pairs, counted = _driver_pairs(arrs, id_col, m, float(t), probes)
+
+def set_similarity_pairs(
+    corpus: ShingleCorpus,
+    measure: str,
+    threshold: float,
+    against: ShingleCorpus | None = None,
+) -> DataFrame:
+    """Exact n-gram set-similarity pairs of a prepared corpus: every pair
+    of documents whose ``measure`` is at least ``threshold``.
+
+    ``measure`` is ``"jaccard"``, returning (doc_a, doc_b, common,
+    jaccard) with doc_a < doc_b, or ``"containment"`` (Broder's
+    ``|A∩B| / min(|A|,|B|)``), returning (doc_small, doc_big, common,
+    containment) with the smaller set as the contained side and ties to
+    the lower id. ``threshold`` is in [0, 1]; anything else raises. Every
+    route returns the same rows, and each call reports the route it took
+    and the probes that decided it through ``report.record``:
+
+    * ``against`` given → **cross**: the inverted index between the two
+      corpora, doc_a from ``corpus`` and doc_b from ``against`` (the
+      containment columns orient by size as above). Both corpora must be
+      shingled alike.
+    * ``threshold == 0`` → **index**: every pair sharing a shingle, by the
+      inverted index. That is Σ|posting|² work, so a corpus of more than
+      ``_INDEX_MAX_DOCS`` shingle-bearing docs raises. The other kernels
+      need a positive threshold: at 0 the dense kernel would emit the
+      zero-overlap pairs the index never materializes, and a dense mode
+      for unthresholded enumeration was measured at 3× the index's join
+      and aggregate, output being ≈ all pairs.
+    * ``0 < threshold <= 1``, integral or string ids → **driver**
+      (``_driver_pairs``) when one fetch of at most
+      ``_DRIVER_MAX_POSTINGS`` + 1 (id, size, shingle) rows holds the
+      whole corpus and the exact prefix candidate work is within
+      ``_DRIVER_MAX_WORK``: the prefix algorithm runs in numpy and the
+      pairs come back as a local frame. Measured against the Spark prefix
+      route on Zipf corpora (t = 0.5, min of 3, 4 cores): 300 docs 0.10
+      vs 0.49 s, 10k docs (528k postings) 0.19 vs 0.93 s, 30k (1.59M)
+      0.57 vs 2.55 s, so the 1M-postings cap is the driver memory bound
+      (≈200 MiB at 1.06M postings), not a time crossover; past it the
+      wasted fetch costs 0.19 s. On hot small-universe corpora the
+      candidate work crosses over near 1.4M (Jaccard) and 2M
+      (containment) against the dense route, hence the 1M work cap.
+    * otherwise integral ids, ≤ ``_DENSE_MAX_ROWS`` shingle-bearing docs
+      and ≤ ``_DENSE_MAX_VOCAB`` distinct shingles → **dense** (block
+      BLAS: in a small universe every posting is hot and the inverted
+      index degenerates, measured 6.7× slower);
+    * otherwise → **prefix** (AllPairs filtering in Spark: on a Zipf
+      vocabulary the rare-shingle prefixes keep hot postings out of the
+      candidate join, and it handles any id type).
+
+    Past the driver regime one frequency pass (``_shingle_counts``)
+    decides between dense and prefix, and the kernel that wins reads the
+    same table, or the driver fetch's table when the work bound tripped
+    on a small universe.
+    """
+    m = _MEASURES.get(measure)
+    if m is None:
+        raise ValueError(
+            f"set_similarity_pairs: measure {measure!r} is not one of {sorted(_MEASURES)}"
+        )
+    t = float(threshold)
+    if not 0.0 <= t <= 1.0:
+        raise ValueError(
+            f"set_similarity_pairs: threshold {threshold!r} is outside [0, 1]"
+        )
+    op, arrs, id_col = "set_similarity_pairs", corpus.arrs, corpus.id_col
+    if against is not None:
+        _same_shingling(against, id_col, corpus.n, op)
+        record(op, "cross", measure=m.name)
+        return _index_pairs(arrs, against.arrs, id_col, m, t)
+    if t == 0.0:
+        n_docs = arrs.limit(_INDEX_MAX_DOCS + 1).count()
+        record(op, "index", measure=m.name, n_docs=(n_docs, _INDEX_MAX_DOCS))
+        if n_docs > _INDEX_MAX_DOCS:
+            raise ValueError(
+                f"set_similarity_pairs: threshold 0 enumerates every pair sharing "
+                f"a shingle, and the corpus has more than {_INDEX_MAX_DOCS} docs "
+                "(_INDEX_MAX_DOCS); use a threshold in (0, 1], ngram_best_match "
+                "(1-NN edges) or minhash_lsh_pairs (banded)"
+            )
+        return _index_pairs(arrs, arrs, id_col, m, 0.0)
+    probes, counted = {"measure": m.name}, None
+    if _DRIVER_MAX_POSTINGS and _id_dtype(arrs, id_col) in _DRIVER_ID_TYPES:
+        pairs, counted = _driver_pairs(corpus, m, t, probes)
         if pairs is not None:
             record(op, "driver", **probes)
             return pairs
         # a small universe's table is cheaper to ship than to recount
-        if counted is not None and len(counted[1]) > max_vocab:
+        if counted is not None and len(counted[1]) > _DENSE_MAX_VOCAB:
             counted = None
-    corpus = _dense_admission(
-        df, id_col, text_col, n, max_rows, max_vocab, arrs=arrs, counted=counted
+    freq, n_docs, n_vocab = _shingle_counts(arrs, counted)
+    dense = (
+        _integral_id_dtype(arrs, id_col)
+        and n_docs <= _DENSE_MAX_ROWS
+        and n_vocab <= _DENSE_MAX_VOCAB
     )
-    probes.update(n_docs=(corpus.n_docs, max_rows), n_vocab=(corpus.n_vocab, max_vocab))
-    route = "dense" if corpus.admit else "prefix"
-    record(op, route, **probes)
-    # looked up by name at call time, so a wrapped entry sees the call
-    entry = globals()[f"ngram_{m.name}_pairs_{route}"]
-    if corpus.admit:
-        return entry(df, id_col, text_col, n, t, max_rows, max_vocab, _corpus=corpus)
-    return entry(df, id_col, text_col, n, t, _corpus=corpus)
-
-
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    min_jaccard: float = 0.0,
-    max_docs: int | None = 200_000,
-) -> DataFrame:
-    """Exact pairwise n-gram Jaccard for all pairs sharing ≥1 shingle.
-
-    Returns (doc_a, doc_b, common, jaccard) with doc_a < doc_b. The
-    inverted-index join means cost concentrates in hot shingles — at scale,
-    run after LSH banding (``minhash_lsh_pairs``) or cap the corpus slice.
-    This is the reference the prefix and dense strategies are tested
-    against.
-
-    ``max_docs`` is a limit-probe guard (the same pattern as the dense
-    path's ``max_rows``): with ``min_jaccard == 0.0`` this enumerates EVERY
-    pair sharing a shingle — Σ|posting|² work that no threshold bounds — so
-    corpora larger than ``max_docs`` raise with a pointer to the bounded
-    alternatives (``ngram_jaccard_pairs_prefix``/``_auto`` for thresholded
-    sweeps, ``ngram_best_match`` for 1-NN edges, ``minhash_lsh_pairs`` for
-    uncapped scale). Pass ``max_docs=None`` only when the caller has
-    already bounded the input (e.g. a post-LSH candidate slice).
-    """
-    if max_docs is not None:
-        probed = df.select(id_col).limit(max_docs + 1).count()
-        if probed > max_docs:
-            raise ValueError(
-                f"ngram_jaccard_pairs: corpus exceeds max_docs={max_docs} "
-                f"(limit-probe saw >{max_docs} rows); the unthresholded "
-                "inverted-index join is Σ|posting|² and not output-"
-                "proportional at this size. Use ngram_jaccard_pairs_auto "
-                "(thresholded), ngram_best_match (1-NN edges), or "
-                "minhash_lsh_pairs (banded), or pass max_docs=None for a "
-                "pre-bounded slice."
-            )
-    arrs = _prepared(df, id_col, text_col, n)
-    return _index_pairs(arrs, arrs, id_col, _JACCARD, min_jaccard)
-
-
-def ngram_jaccard_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    min_jaccard: float = 0.5,
-    _corpus: _Corpus | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard self-join with AllPairs/PPJoin prefix filtering
-    and the AllPairs length filter (``_prefix_pairs``): output identical
-    to ``ngram_jaccard_pairs`` at a fraction of the cost when shingles have
-    hot posting lists. Requires ``0 < min_jaccard <= 1``. ``_corpus`` is
-    the auto router's prepared corpus: its shingle arrays and frequency
-    table replace a fresh shingle pass and the kernel's own frequency
-    aggregate."""
-    return _prefix_pairs(df, id_col, text_col, n, _JACCARD, min_jaccard, _corpus)
-
-
-def ngram_jaccard_pairs_dense(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    min_jaccard: float = 0.5,
-    max_rows: int = 200_000,
-    max_vocab: int = 4096,
-    _corpus: _Corpus | None = None,
-) -> DataFrame:
-    """Exact n-gram Jaccard via dense bitset intersection — the right plan
-    when the shingle UNIVERSE is small (block BLAS; see
-    ``_dense_pair_blocks`` for the decomposition, guards and memory
-    bounds). Requires an integral id column; guards at ``max_rows`` docs /
-    ``max_vocab`` distinct shingles with a pointer to
-    ``ngram_jaccard_pairs_prefix`` (Zipf vocab at scale) or a sampled
-    audit subset. Output is identical to ``ngram_jaccard_pairs``
-    (doc_a, doc_b, common, jaccard), pytest-verified. ``_corpus`` is the
-    auto router's admission result."""
-    return _dense_pair_blocks(
-        df, id_col, text_col, n, min_jaccard, max_rows, max_vocab,
-        _JACCARD, _corpus,
+    probes.update(
+        n_docs=(n_docs, _DENSE_MAX_ROWS), n_vocab=(n_vocab, _DENSE_MAX_VOCAB)
     )
+    record(op, "dense" if dense else "prefix", **probes)
+    if dense:
+        return _dense_pairs(corpus, m, t, freq, n_docs, n_vocab)
+    return _prefix_pairs(corpus, m, t, freq)
 
 
+# Kept only until a benchmark change moves perfbench to
+# set_similarity_pairs: perfbench/workloads.py calls
+# ngram_jaccard_pairs_auto, and perfbench/tracing.py resolves the _dense
+# and _prefix names to count their calls. Nothing else may call them.
 def ngram_jaccard_pairs_auto(
     df: DataFrame,
     id_col: str,
     text_col: str = "text",
     n: int = 3,
     min_jaccard: float = 0.5,
-    max_rows: int = 200_000,
-    max_vocab: int = 4096,
     _arrs: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard with automatic strategy selection: the same
-    output contract as ``ngram_jaccard_pairs``/_prefix/_dense (all
-    pytest-verified identical), in three regimes:
+    """``set_similarity_pairs(corpus, "jaccard", min_jaccard)``, the corpus
+    being ``_arrs`` when handed, else shingled from ``df``."""
+    if _arrs is None:
+        corpus = shingle_corpus(df, id_col, text_col, n)
+    else:
+        corpus = ShingleCorpus(_arrs, id_col, n)
+    return set_similarity_pairs(corpus, "jaccard", min_jaccard)
 
-    * **driver** (``_driver_pairs``): one fetch of at most
-      ``_DRIVER_MAX_POSTINGS`` + 1 (id, size, shingle) rows decides; when
-      it holds the whole corpus and the exact prefix candidate work is
-      within ``_DRIVER_MAX_WORK``, the prefix algorithm runs in numpy on
-      the driver and the pairs come back as a local frame. Measured
-      against the Spark prefix route on Zipf corpora (t = 0.5, min of 3,
-      4 cores): 300 docs 0.10 vs 0.49 s, 10k docs (528k postings) 0.19
-      vs 0.93 s, 30k (1.59M) 0.57 vs 2.55 s, so the 1M-postings cap is
-      the driver memory bound (≈200 MiB at 1.06M postings), not a time
-      crossover; past it the wasted fetch costs 0.19 s. On hot
-      small-universe corpora the candidate work crosses over near 1.4M
-      (Jaccard) and 2M (containment) against the dense route, hence the
-      1M work cap;
-    * integral id AND ≤ ``max_rows`` shingle-bearing docs AND shingle
-      universe ≤ ``max_vocab`` → **dense** (block BLAS; every posting is
-      hot in a small universe, so inverted indexes degenerate — measured
-      6.7×);
-    * otherwise → **prefix** (AllPairs filtering; on a Zipf vocabulary the
-      rare-shingle prefixes keep hot postings out of the candidate join —
-      and it handles any id type).
 
-    Past the driver regime, one materialized shingle-frequency pass
-    (``_dense_admission``) decides, and the prepared corpus (shingle
-    arrays, frequency table, counts) is handed to whichever public
-    strategy entry wins: the prefix kernel ranks by the same frequency
-    table that decided the route, and the dense kernel indexes its columns
-    from it. The route taken and its probes go to the ``spark_graft``
-    logger (``report.record``). The plain inverted index remains
-    available by name for corpora known to have uniformly short posting
-    lists. ``_arrs`` lets a caller that already holds a checkpointed
-    ``shingle_arrays(df, id_col, text_col, n)`` frame share it (the
-    incremental clustering query shares one between this enumeration and
-    its endpoint-class split).
-    """
-    return _auto_pairs(
-        df, id_col, text_col, n, _JACCARD, min_jaccard, max_rows, max_vocab, _arrs
-    )
+ngram_jaccard_pairs_dense = ngram_jaccard_pairs_prefix = ngram_jaccard_pairs_auto
 
 
 def ngram_best_match(
@@ -1093,11 +952,11 @@ def ngram_best_match(
     """Per-document best match (1-NN by EXACT n-gram Jaccard; ties broken
     by smallest partner id): (doc_a, doc_b, common, jaccard), one row per
     doc_a with ≥1 candidate partner. This is the bounded constructor for
-    best-match graphs (deletion-aware clustering, chain-shaped CC tests) —
-    the job the unthresholded ``ngram_jaccard_pairs(min_jaccard=0.0)``
-    call used to do with no guard.
+    best-match graphs (deletion-aware clustering, chain-shaped CC tests),
+    which ``set_similarity_pairs`` at threshold 0 builds only below its
+    corpus cap.
 
-    Router (same probe/guard pattern as ``ngram_jaccard_pairs_auto``):
+    Router (one limit-probe decides):
 
     * corpus ≤ ``max_exact_docs`` (limit-probe, O(k)) → **exact**: every
       pair sharing ≥1 shingle is scored, so the returned row is provably
@@ -1122,10 +981,10 @@ def ngram_best_match(
     deletion clustering, without the unthresholded Σ|posting|² join:
 
     * tier 1: ALL pairs with jaccard ≥ ``tier_jaccard`` via the exact
-      threshold auto-router (``ngram_jaccard_pairs_auto`` — dense
-      block-BLAS on tiny-universe corpora, lossless AllPairs prefix
-      filtering on Zipf ones; all strategies provably identical to full
-      enumeration at the threshold). Routing matters here: raw prefix
+      threshold router (``set_similarity_pairs`` — dense block-BLAS on
+      tiny-universe corpora, lossless AllPairs prefix filtering on Zipf
+      ones; all routes provably identical to full enumeration at the
+      threshold). Routing matters here: raw prefix
       filtering DEGENERATES on a small uniform shingle universe (every
       "rare" gram still has a hot posting — measured: the sf1 clumped
       corpus ran >10 min where the routed dense pass takes ~100 s). A doc
@@ -1174,19 +1033,17 @@ def ngram_best_match(
     if regime is None:
         probed = df.select(id_col).limit(max_exact_docs + 1).count()
         regime = "exact" if probed <= max_exact_docs else "banded"
+    # one corpus-wide shingle checkpoint: each leg below reads the arrays
+    # more than once, and tier 1's router takes it as its corpus, so the
+    # shingle regex runs once per call
+    arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=True)
     if regime == "exact":
         # the JVM inverted index, not the dense block-BLAS core: unthresholded
         # output is ≈ every overlapping pair (2.6M rows at sf0.1), and Arrow
         # serialization out of the Python worker costs ~3× the join + agg
-        # (5.2 s vs 1.7 s); dense wins only when a threshold keeps it small
-        pairs = ngram_jaccard_pairs(
-            df, id_col, text_col, n, min_jaccard=0.0, max_docs=None
-        )
-        return _best_match_tail(pairs)
-    # one corpus-wide shingle checkpoint: each leg below reads the arrays
-    # more than once, and tier 1's router takes it in place of its own
-    # admission pass, so the shingle regex runs once per call
-    arrs = shingle_arrays(df, id_col, text_col, n).localCheckpoint(eager=True)
+        # (5.2 s vs 1.7 s); dense wins only when a threshold keeps it small.
+        # max_exact_docs bounds the corpus, so no index cap applies
+        return _best_match_tail(_index_pairs(arrs, arrs, id_col, _JACCARD, 0.0))
     if regime == "banded":
         sig = minhash_signatures(arrs, id_col, num_hashes, seed)
         bucket = minhash_band_buckets(sig, id_col, num_hashes, bands)
@@ -1196,10 +1053,10 @@ def ngram_best_match(
                 candidates=_band_pairs(bucket, id_col),
             )
         )
-    # tier 1: exact thresholded pairs via the dense/prefix auto-router,
-    # checkpointed because the matched ids and the final union both read it
-    t1 = ngram_jaccard_pairs_auto(
-        df, id_col, text_col, n, min_jaccard=tier_jaccard, _arrs=arrs
+    # tier 1: exact thresholded pairs via the router, checkpointed because
+    # the matched ids and the final union both read it
+    t1 = set_similarity_pairs(
+        ShingleCorpus(arrs, id_col, n), "jaccard", tier_jaccard
     ).localCheckpoint(eager=True)
     matched = (
         t1.select(F.col("doc_a").alias(id_col))
@@ -1317,7 +1174,7 @@ def minhash_lsh_pairs(
     bands: int = 8,
     min_jaccard: float = 0.5,
     seed: int = 42,
-    _arrs: DataFrame | None = None,
+    corpus: ShingleCorpus | None = None,
 ) -> DataFrame:
     """MinHash + banded LSH near-dup detection, exact-Jaccard verified.
 
@@ -1327,16 +1184,20 @@ def minhash_lsh_pairs(
     controlled by bands/rows-per-band (8 bands × 4 rows ≈ s-curve threshold
     ~0.5), and verification touches only candidates.
 
-    ``_arrs``: a caller that already holds a materialized
-    ``shingle_arrays(df, id_col, text_col, n)`` frame — e.g. a query that
-    also runs the exact truth companion over the same corpus — hands it
-    in; the signature pass reads the materialized arrays instead of
-    re-running the regex, and candidate verification becomes a semi-join
-    over them instead of a second raw-doc regex pass. A self-built corpus
-    pass stays lazy: materializing every shingle array upfront costs more
-    than the lazy pipeline when nothing else reuses it (+2 s at sf0.1).
+    ``corpus``: a caller that already holds a ``ShingleCorpus`` of ``df``
+    shingled by (``id_col``, ``n``) — e.g. a query that also runs the
+    exact truth companion over the same corpus — hands it in; the
+    signature pass reads its arrays instead of re-running the regex, and
+    candidate verification becomes a semi-join over them instead of a
+    second raw-doc regex pass. Without one the shingle pass stays lazy:
+    materializing every shingle array upfront costs more than the lazy
+    pipeline when nothing else reuses it (+2 s at sf0.1).
     """
-    arrs = _arrs if _arrs is not None else shingle_arrays(df, id_col, text_col, n)
+    if corpus is not None:
+        _same_shingling(corpus, id_col, n, "minhash_lsh_pairs")
+        arrs = corpus.arrs
+    else:
+        arrs = shingle_arrays(df, id_col, text_col, n)
     sig = minhash_signatures(arrs, id_col, num_hashes, seed)
     bucket = minhash_band_buckets(sig, id_col, num_hashes, bands)
     # the candidate pairs, not the corpus, are what gets materialized: the
@@ -1351,8 +1212,8 @@ def minhash_lsh_pairs(
     # verify reads the CANDIDATE docs' arrays only (the raw docs are
     # semi-joined before the regex), four times over — checkpointed, and
     # candidate-proportional so the checkpoint is bounded
-    if _arrs is not None:
-        cand_arrs = _arrs.join(cand_ids, on=id_col, how="left_semi")
+    if corpus is not None:
+        cand_arrs = arrs.join(cand_ids, on=id_col, how="left_semi")
     else:
         cand_arrs = shingle_arrays(
             df.join(cand_ids, on=id_col, how="left_semi"), id_col, text_col, n
@@ -1497,7 +1358,7 @@ def _cc_driver_solve(spark, pdf) -> DataFrame | None:
             break
         labels = new
     if not converged:
-        # mirror the distributed loop's failure semantics (r11 ADVICE #2):
+        # mirror the distributed loop's failure semantics:
         # unreachable with pointer jumping (log2(diameter) << backstop),
         # but silently returning unconverged labels would be wrong clusters
         raise RuntimeError(
@@ -1544,8 +1405,8 @@ def connected_components(
       pointer jumping from round 3 making that O(log diameter). The eager
       per-round Σcomp comparison is the convergence check — labels only
       ever decrease, so the exact decimal sum is a fixpoint witness; one
-      agg over the round's persisted output where a labels⨝new join +
-      count used to run (r11, guide §2.4: a full join removed per round);
+      agg over the round's persisted output, where a labels⨝new join +
+      count would cost a shuffle and a full join per round;
       same driver-loop pattern as the reference's ProximityMedian
       (ipynb:872). Labels are re-persisted per round and
       localCheckpoint'ed periodically so lineage stays bounded.
@@ -1596,8 +1457,8 @@ def connected_components(
     # min-propagation only ever DECREASES labels, so Σcomp strictly
     # decreases until (and only until) the fixpoint — comparing sums
     # replaces the old per-round labels⨝new join + count with one agg
-    # over the already-persisted round output (guide §2.4: one shuffle
-    # and a full join removed per round). decimal(38,0) keeps the sum
+    # over the already-persisted round output (one shuffle and a full
+    # join fewer per round). decimal(38,0) keeps the sum
     # exact at any node-id magnitude (a long sum could wrap).
     def _label_sum(frame: DataFrame):
         return frame.agg(
@@ -1724,7 +1585,7 @@ def simhash_neardup_pairs(
     join → distinct candidates → refine candidates only, never all-pairs.
     """
     # eager localCheckpoint, not persist: returned frame is lazy over sim
-    # (no paired unpersist possible); see the note in ngram_jaccard_pairs.
+    # (no paired unpersist possible); see the note in shingle_corpus.
     sim = simhash64(df, id_col, text_col).localCheckpoint(eager=True)
     candidates = _band_pairs(simhash_band_buckets(sim, id_col, band_bits), id_col)
     fa = sim.select(F.col(id_col).alias("doc_a"), F.col("simhash").alias("__fp_a"))
@@ -1965,38 +1826,6 @@ def neardup_probe(
     return out
 
 
-def exact_cross_jaccard(
-    batch: DataFrame,
-    store: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    min_jaccard: float = 0.5,
-    _batch_arrs: DataFrame | None = None,
-    _store_arrs: DataFrame | None = None,
-) -> DataFrame:
-    """EXACT n-gram Jaccard pairs BETWEEN two corpora (batch id × store id,
-    never within either side) via the inverted-index join — the ground
-    truth ``neardup_probe``'s recall gate measures against. Same cost
-    regime as ``ngram_jaccard_pairs``: fine at gate scale, post-LSH or
-    sampled (``similarity.sampled_pair_audit``) at 100 TB.
-
-    ``_batch_arrs``/``_store_arrs``: a caller that already holds an
-    eagerly materialized ``shingle_arrays(side, id_col, text_col, n)``
-    frame passes it here so that side's shingle pass is not re-run.
-
-    Returns (bid, sid, jaccard), materialized: the pair set is
-    threshold-bounded and callers read it more than once."""
-    pairs = _index_pairs(
-        _prepared(batch, id_col, text_col, n, _batch_arrs),
-        _prepared(store, id_col, text_col, n, _store_arrs),
-        id_col, _JACCARD, min_jaccard,
-    )
-    return pairs.select(
-        F.col("doc_a").alias("bid"), F.col("doc_b").alias("sid"), "jaccard"
-    ).localCheckpoint(eager=True)
-
-
 def update_components(
     labels: DataFrame,
     new_edges: DataFrame,
@@ -2023,8 +1852,8 @@ def update_components(
     the labels of nodes incident to the new edges — each of which must
     exist as a node labeled with itself, else this raises. (Untouched
     components pass through unchanged, so their labels cannot make THIS
-    update wrong; r06 review replaced a fixed-512 sample that was either
-    unbounded or partition-biased with this exact, batch-bounded check.)
+    update wrong; a fixed-size sample of the labels would be either
+    unbounded or partition-biased, this check is exact and batch-bounded.)
 
     Correctness rests on component contraction: every old component
     collapses to its representative (already the min member id), each new
@@ -2039,7 +1868,7 @@ def update_components(
     Cost: two broadcast-or-shuffle label lookups on the new edges + CC
     over a graph whose size is O(|new edges|) — independent of the
     accumulated corpus. Returns the full updated (node, comp) table."""
-    # materialize the batch ONCE (r11, guide §1.2): it is O(|new edges|)
+    # materialize the batch ONCE: it is O(|new edges|)
     # by the function's own contract, and it is consumed by BOTH the
     # validation probe and the contraction — callers usually pass a lazy
     # pair-enumeration plan (e.g. the incremental query's dense-BLAS
@@ -2134,10 +1963,10 @@ def remove_nodes(
     comp_col: str = "comp",
     max_iter: int = 50,
 ) -> DataFrame:
-    """Deletion support for incremental connected components (r05 VERDICT
-    ask #5): remove a set of documents (takedown, re-filter) from a
-    clustered corpus and return labels equal to a FULL recompute over the
-    surviving edge set — without re-traversing it.
+    """Deletion support for incremental connected components: remove a
+    set of documents (takedown, re-filter) from a clustered corpus and
+    return labels equal to a FULL recompute over the surviving edge set —
+    without re-traversing it.
 
     Additions only ever MERGE components (``update_components``'s
     contraction); deletions can SPLIT them, which contraction cannot
@@ -2384,7 +2213,7 @@ def edit_distance_pairs(
     VLDB'01) generates candidates from each string's rarest grams only,
     then one ``levenshtein()`` call verifies each candidate. The
     fuzzy-matching sibling of the exact set-similarity joins
-    (`ngram_jaccard_pairs_*`): entity/name resolution, typo-tolerant
+    (``set_similarity_pairs``): entity/name resolution, typo-tolerant
     record linkage, near-identical ID sweeps.
 
     Completeness argument (why the prefix never loses a true pair): one
@@ -2518,99 +2347,3 @@ def edit_distance_pairs(
         )
         verified = verified.unionByName(dense)
     return verified
-
-
-def ngram_containment_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    min_containment: float = 0.8,
-) -> DataFrame:
-    """Asymmetric n-gram CONTAINMENT pairs: ``|A∩B| / |A|`` — the
-    subset-duplication detector symmetric Jaccard structurally misses
-    (a document wholly quoted inside a much larger one has Jaccard
-    ≈ |A|/|B| → 0 but containment 1.0; Broder's original resemblance/
-    containment pair, and the reason extraction pipelines dedup chunks
-    against full documents with containment, not Jaccard).
-
-    Same inverted-shingle-index kernel and cost regime as
-    ``ngram_jaccard_pairs`` (post-LSH or capped slices at 100 TB).
-    Returns (doc_small, doc_big, common, containment): the SMALLER set is
-    the contained side; ties by id. Only the small-in-big containment is
-    reported (big-in-small is bounded above by it)."""
-    arrs = _prepared(df, id_col, text_col, n)
-    return _index_pairs(arrs, arrs, id_col, _CONTAINMENT, min_containment)
-
-
-def ngram_containment_pairs_dense(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    min_containment: float = 0.8,
-    max_rows: int = 200_000,
-    max_vocab: int = 4096,
-    _corpus: _Corpus | None = None,
-) -> DataFrame:
-    """``ngram_containment_pairs`` via dense bitset intersection — the
-    small-shingle-universe regime (``_dense_pair_blocks``: the same block
-    BLAS kernel, guards and integral-id precondition as
-    ``ngram_jaccard_pairs_dense``; only the score and orientation
-    differ). Output contract matches the inverted index (doc_small,
-    doc_big, common, containment), pytest-verified identical."""
-    return _dense_pair_blocks(
-        df, id_col, text_col, n, min_containment, max_rows, max_vocab,
-        _CONTAINMENT, _corpus,
-    )
-
-
-def ngram_containment_pairs_auto(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    min_containment: float = 0.8,
-    max_rows: int = 200_000,
-    max_vocab: int = 4096,
-    _arrs: DataFrame | None = None,
-) -> DataFrame:
-    """Containment with the same three regimes as
-    ``ngram_jaccard_pairs_auto``: **driver** for a corpus within the
-    postings cap whose prefix × full-postings work is within the work cap,
-    else one ``_dense_admission`` frequency pass picking **dense** (small
-    universe — every posting hot; the sf1 rehearsal measured the inverted
-    index at 239× the sf0.1 wall on 10× docs of a ~1k-bigram universe) or
-    **prefix** (Zipf universe at scale, any id type). The prepared corpus
-    is handed to whichever strategy entry wins, so the frequency table
-    that routed is the one the prefix kernel ranks by."""
-    return _auto_pairs(
-        df, id_col, text_col, n, _CONTAINMENT, min_containment, max_rows, max_vocab,
-        _arrs,
-    )
-
-
-def ngram_containment_pairs_prefix(
-    df: DataFrame,
-    id_col: str,
-    text_col: str = "text",
-    n: int = 3,
-    min_containment: float = 0.8,
-    _corpus: _Corpus | None = None,
-) -> DataFrame:
-    """``ngram_containment_pairs`` with prefix filtering adapted to the
-    ASYMMETRIC containment constraint (``_prefix_pairs``): identical
-    output, a fraction of the candidates (sf1 rehearsal finding: the plain
-    inverted-index join ran 239× the sf0.1 wall at 10× the docs, because
-    candidate pairs grow with Σ|posting|², not with output size).
-
-    ``C(A,B) = |A∩B| / min(|A|,|B|) ≥ t`` forces the SMALLER set S to
-    share ≥ ``ceil(t·|S|)`` elements with the other side, so S must hit it
-    within its first ``|S| - ceil(t·|S|) + 1`` rarest shingles; those
-    prefixes join the FULL posting index (not prefix × prefix as for
-    Jaccard). Requires ``0 < min_containment <= 1``. ``_corpus`` is as
-    for ``ngram_jaccard_pairs_prefix``.
-    """
-    return _prefix_pairs(
-        df, id_col, text_col, n, _CONTAINMENT, min_containment, _corpus
-    )

@@ -885,7 +885,7 @@ def cosine_allpairs_blocked(
     block_pairs = [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)]
 
     # one lineage, role-tagged self-UNION (same shape as
-    # ext.dedup._dense_pair_blocks): the corpus subtree runs once and the
+    # ext.dedup._dense_pairs): the corpus subtree runs once and the
     # union needs one grouped exchange; the block function splits roles
     tagged = (
         corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))

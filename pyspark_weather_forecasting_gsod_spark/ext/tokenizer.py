@@ -144,7 +144,7 @@ def bpe_train(
     Deterministic: the argmax pair each round is (count DESC, a ASC,
     b ASC) — no RNG, no partition-order dependence (counts are exact).
 
-    Auto-routed like ``ngram_jaccard_pairs_auto``: the corpus pass always
+    Routed like ``ext.dedup.set_similarity_pairs``: the corpus pass always
     reduces to the (word, count, symbols) table first; when that table is
     ≤ ``max_driver_vocab`` rows (one fetch of at most
     ``max_driver_vocab + 1`` rows decides it, never a full count) the

@@ -669,10 +669,10 @@ def neardup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Rows-only (band buckets are xxhash64), but the output carries doc-level
     ``recall_vs_exact`` / ``n_false_positive`` measured in-query against
-    the EXACT batch↔store Jaccard join (``exact_cross_jaccard``) —
-    verification is exact, so false positives are structurally 0 and the
-    pytest gate asserts it."""
-    from ..ext.dedup import exact_cross_jaccard, neardup_probe
+    the EXACT batch↔store Jaccard join (``set_similarity_pairs`` with
+    ``against=``) — verification is exact, so false positives are
+    structurally 0 and the pytest gate asserts it."""
+    from ..ext.dedup import neardup_probe, set_similarity_pairs, shingle_corpus
 
     docs = _t(spark, sf_dir, "documents")
     batch = docs.filter(F.col("source").isin(*_BATCH_SOURCES))
@@ -681,10 +681,15 @@ def neardup_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed = neardup_probe(
         spark, idx, batch, "doc_id", min_jaccard=0.5
     ).localCheckpoint(eager=True)
+    # materialized: the summary below reads the flagged batch docs twice
     exact_docs = (
-        exact_cross_jaccard(batch, store, "doc_id", min_jaccard=0.5)
-        .select(F.col("bid").alias("doc_id"))
+        set_similarity_pairs(
+            shingle_corpus(batch, "doc_id"), "jaccard", 0.5,
+            against=shingle_corpus(store, "doc_id"),
+        )
+        .select(F.col("doc_a").alias("doc_id"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
     flagged = probed.filter(F.col("best_match").isNotNull()).select("doc_id")
     hit = flagged.withColumn("__f", F.lit(1))

@@ -1527,13 +1527,15 @@ def rollup_reuse_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact bigram-Jaccard near-dup pairs on a 1/10 corpus slice (the
     inverted-index exact path; minhash_neardup is the uncapped scale path).
-    The unthresholded call is now limit-probe-guarded (``max_docs``,
-    r06 VERDICT #2): past 200k docs it raises with a pointer to the
-    banded/prefix alternatives instead of running Σ|posting|² work."""
-    from ..ext.dedup import ngram_jaccard_pairs
+    At threshold 0 the router's index route is limit-probe-guarded: past
+    200k docs it raises with a pointer to the banded/prefix alternatives
+    instead of running Σ|posting|² work."""
+    from ..ext.dedup import set_similarity_pairs, shingle_corpus
 
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=2)
+    pairs = set_similarity_pairs(
+        shingle_corpus(docs, "doc_id", "text", n=2), "jaccard", 0.0
+    )
     return (
         pairs.orderBy(F.round("jaccard", 9).desc(), "doc_a", "doc_b")
         .limit(20)
@@ -1594,19 +1596,20 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     algorithm end-to-end against a declarative fixpoint."""
     from ..ext.dedup import (
         connected_components,
-        ngram_jaccard_pairs_auto,
+        set_similarity_pairs,
+        shingle_corpus,
         widen_for_fanout,
     )
 
     # widen the narrow scan: the pair join's shingle hashing and
     # bucket-pair counting are the CPU cost here, and this query makes one
-    # heavy pass (unlike the LSH pipeline's many small stages). The AUTO
+    # heavy pass (unlike the LSH pipeline's many small stages). The
     # router picks the pair strategy per regime (this corpus's ~1k-bigram
     # universe routes dense; Zipf universes at scale route prefix) —
     # all strategies pytest-identical, so the oracle is unchanged.
     docs = widen_for_fanout(_t(spark, sf_dir, "documents"))
-    pairs = ngram_jaccard_pairs_auto(
-        docs, "doc_id", "text", n=2, min_jaccard=0.5
+    pairs = set_similarity_pairs(
+        shingle_corpus(docs, "doc_id", "text", n=2), "jaccard", 0.5
     )
     return connected_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
@@ -1634,28 +1637,27 @@ def neardup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     neardup_clusters checks against), so a hash match proves
     incremental == full recompute, edge for edge.
 
-    r12 enumeration sharing (guide §1.2 — the r11 VERDICT's top task):
-    this query must build the store labeling from scratch, so the
-    store-internal pair enumeration — the dominant side — runs regardless;
-    the three separate enumerations it used to run (store-internal pairs,
-    batch-internal pairs, batch×store cross-jaccard: two dense-kernel
-    invocations + one inverted-index join, each re-shingling its side)
-    are EXACTLY a partition of the thresholded pairs of store ∪ batch.
-    ONE auto-routed enumeration over the half corpus (fed by one shared
-    shingle checkpoint) is computed and split by endpoint class: both
-    ends store → the store clustering; any end batch → the update batch.
+    Enumeration sharing: this query must build the store labeling from
+    scratch, so the store-internal pair enumeration — the dominant side —
+    runs regardless; the three separate enumerations (store-internal
+    pairs, batch-internal pairs, batch×store cross pairs, each
+    re-shingling its side) are EXACTLY a partition of the thresholded
+    pairs of store ∪ batch. ONE routed enumeration over the half corpus
+    (fed by one shingle corpus) is computed and split by endpoint class:
+    both ends store → the store clustering; any end batch → the update
+    batch.
     Every edge set is exact at the same threshold, so the split is
     provably the same three sets (hash-checked end-to-end by the
     closure oracle). ``update_components`` still updates by contraction
     at O(|new edges|) cost — the incremental capability under test; the
     genuinely delta-cost enumeration path (probe an EXISTING store
     without re-enumerating it) is ``neardup_index_probe`` /
-    ``dedup_increment``'s job, and ``exact_cross_jaccard`` remains the
-    operator behind the probe's recall gate."""
+    ``dedup_increment``'s job, and ``set_similarity_pairs(...,
+    against=...)`` remains the operator behind the probe's recall gate."""
     from ..ext.dedup import (
         connected_components,
-        ngram_jaccard_pairs_auto,
-        shingle_arrays,
+        set_similarity_pairs,
+        shingle_corpus,
         update_components,
         widen_for_fanout,
     )
@@ -1664,16 +1666,13 @@ def neardup_clusters_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 2 == 0)
     )
     # ONE shingle pass, ONE pair enumeration for the whole half corpus
-    # (before: the store was shingled 3× — admission probe, dense kernel,
-    # cross join — and three pair jobs ran; measured phase walls at
-    # sf0.1: store 3.3 s + batch 2.3 s + cross 1.5 s, mostly per-kernel
-    # fixed cost). The pair set is materialized once; the endpoint-class
-    # filters below are map-only over that checkpoint.
-    arrs = shingle_arrays(docs, "doc_id", "text", 2).localCheckpoint(
-        eager=True
-    )
-    pairs = ngram_jaccard_pairs_auto(
-        docs, "doc_id", "text", n=2, min_jaccard=0.5, _arrs=arrs
+    # (three separate enumerations shingle the store 3× and run three pair
+    # jobs; measured phase walls at sf0.1: store 3.3 s + batch 2.3 s +
+    # cross 1.5 s, mostly per-kernel fixed cost). The pair set is
+    # materialized once; the endpoint-class filters below are map-only
+    # over that checkpoint.
+    pairs = set_similarity_pairs(
+        shingle_corpus(docs, "doc_id", "text", 2), "jaccard", 0.5
     ).localCheckpoint(eager=True)
     a_batch = F.col("doc_a") % 10 == 0
     b_batch = F.col("doc_b") % 10 == 0
@@ -1830,13 +1829,14 @@ def neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..ext.dedup import (
         connected_components,
-        ngram_jaccard_pairs_auto,
+        set_similarity_pairs,
+        shingle_corpus,
         widen_for_fanout,
     )
 
     docs = widen_for_fanout(_t(spark, sf_dir, "documents"))
-    pairs = ngram_jaccard_pairs_auto(
-        docs, "doc_id", "text", n=2, min_jaccard=0.5
+    pairs = set_similarity_pairs(
+        shingle_corpus(docs, "doc_id", "text", n=2), "jaccard", 0.5
     )
     comp = connected_components(pairs, "doc_a", "doc_b").select(
         F.col("node").alias("doc_id"), F.col("comp").alias("component")
@@ -1890,15 +1890,16 @@ def split_leakage_audit_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-proven to zero the cross cell. Oracle: the shared CC CTE
     constant's edge set + the identical md5 split buckets."""
     from ..ext.dedup import (
-        ngram_jaccard_pairs_auto,
+        set_similarity_pairs,
+        shingle_corpus,
         split_leakage_audit,
         widen_for_fanout,
     )
     from ..operators.sampling import hash_split
 
     docs = widen_for_fanout(_t(spark, sf_dir, "documents"))
-    pairs = ngram_jaccard_pairs_auto(
-        docs, "doc_id", "text", n=2, min_jaccard=0.5
+    pairs = set_similarity_pairs(
+        shingle_corpus(docs, "doc_id", "text", n=2), "jaccard", 0.5
     )
     splits = hash_split(
         _t(spark, sf_dir, "documents").select("doc_id"), "doc_id"
@@ -2012,32 +2013,26 @@ def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Above ``_AUDIT_CUTOVER_DOCS`` the truth side routes through
     ``sampled_pair_audit`` — the 100 TB audit shape — so the companion
     never re-introduces the quadratic term the LSH path exists to avoid
-    (r08 VERDICT #2; previously the exact truth was 80 s of the sf1
-    wall). Gate SFs stay on the full exact denominator."""
+    (the full exact truth measured 80 s of the sf1 wall). Gate SFs stay
+    on the full exact denominator."""
     from ..ext.dedup import (
         minhash_lsh_pairs,
-        ngram_jaccard_pairs_auto,
-        shingle_arrays,
+        set_similarity_pairs,
+        shingle_corpus,
     )
     from ..ext.similarity import pair_recall_summary, sampled_pair_audit
 
     docs = _t(spark, sf_dir, "documents")
     at_scale = _route_recall_truth(docs, "doc_id")
     # ONE corpus shingle pass shared by the LSH pipeline (signatures +
-    # candidate verification) and the gate-scale exact truth companion
-    # (r12, guide §1.2): below the audit cutover BOTH consumers need the
-    # full corpus's arrays, so the checkpoint replaces three regex passes
-    # (signature projection, candidate semi-join re-shingle, dense-kernel
-    # arrs). At scale the truth side is a sampled audit (its own slice),
-    # so the full-corpus materialization would serve only the LSH pipe —
-    # r07 measured that as a net loss; keep the lazy pipe there.
-    arrs = (
-        None
-        if at_scale
-        else shingle_arrays(docs, "doc_id", "text", 2).localCheckpoint(
-            eager=True
-        )
-    )
+    # candidate verification) and the gate-scale exact truth companion:
+    # below the audit cutover BOTH consumers need the full corpus's
+    # arrays, so the corpus replaces three regex passes (signature
+    # projection, candidate semi-join re-shingle, dense-kernel arrays). At
+    # scale the truth side is a sampled audit (its own slice), so a
+    # full-corpus materialization would serve only the LSH pipe, measured
+    # as a net loss there; keep the lazy pipe.
+    corpus = None if at_scale else shingle_corpus(docs, "doc_id", "text", 2)
     # 8 bands × 4 rows: s-curve threshold (1/8)^(1/4) ≈ 0.59 — random pairs
     # (jaccard ≈ 0.06 here) collide with p ≈ 1e-4, true near-dups (≥0.9)
     # with p ≈ 0.9998, so candidate volume stays ~linear in corpus size.
@@ -2045,30 +2040,27 @@ def minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # LSH pipeline doesn't re-run for each of its two references below
     approx = minhash_lsh_pairs(
         docs, "doc_id", "text", n=2, num_hashes=32, bands=8, min_jaccard=0.5,
-        _arrs=arrs,
+        corpus=corpus,
     ).localCheckpoint(eager=True)
     if at_scale:
-        # auto, not pinned dense (r09 self-review): a 10% sample of a
-        # real Zipf corpus exceeds the dense vocab cap, where pinned
-        # dense RAISES — auto routes prefix there, dense here, exact
-        # either way
+        # routed, not pinned dense: a 10% sample of a real Zipf corpus
+        # exceeds the dense vocab cap, where the router takes prefix;
+        # exact either way
         summary = sampled_pair_audit(
             docs.select("doc_id", "text"),
             "doc_id",
             approx,
-            lambda sd: ngram_jaccard_pairs_auto(
-                sd, "doc_id", "text", n=2, min_jaccard=0.5
+            lambda sd: set_similarity_pairs(
+                shingle_corpus(sd, "doc_id", "text", n=2), "jaccard", 0.5
             ),
             sample_pct=_AUDIT_SAMPLE_PCT,
         )
     else:
-        # exact ground truth over the shared checkpoint: this corpus's
-        # 2-gram universe is tiny (~900 shingles), so the router admits
-        # the dense-BLAS kernel, the regime where the inverted index
-        # degenerates (every posting hot, measured 6.7× slower)
-        exact = ngram_jaccard_pairs_auto(
-            docs, "doc_id", "text", n=2, min_jaccard=0.5, _arrs=arrs
-        )
+        # exact ground truth over the shared corpus: this corpus's 2-gram
+        # universe is tiny (~900 shingles), where the inverted index
+        # degenerates (every posting hot, measured 6.7× slower); the
+        # router takes the driver or the dense-BLAS kernel there
+        exact = set_similarity_pairs(corpus, "jaccard", 0.5)
         summary = pair_recall_summary(approx, exact, "doc_a", "doc_b")
     return approx.crossJoin(
         F.broadcast(summary.select("recall_vs_exact", "n_false_positive"))
@@ -2085,12 +2077,12 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     below the Jaccard truth threshold — SimHash's documented precision
     tradeoff (it approximates token-multiset cosine, not Jaccard), reported
     rather than hidden. Above ``_AUDIT_CUTOVER_DOCS`` the Jaccard truth
-    routes through ``sampled_pair_audit`` (r08 VERDICT #2 — the exact
-    companion was 105 s of the sf1 wall); gate SFs keep the full exact
+    routes through ``sampled_pair_audit`` (the full exact companion
+    measured 105 s of the sf1 wall); gate SFs keep the full exact
     denominator."""
     from ..ext.dedup import (
-        ngram_jaccard_pairs_auto,
-        ngram_jaccard_pairs_dense,
+        set_similarity_pairs,
+        shingle_corpus,
         simhash64,
         simhash_neardup_pairs,
     )
@@ -2102,23 +2094,18 @@ def simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     detected = simhash_neardup_pairs(docs, "doc_id", max_hamming=6).localCheckpoint(
         eager=True
     )
+    def truth_pairs(sd: DataFrame) -> DataFrame:
+        # routed exact truth — see minhash_neardup for the regimes
+        return set_similarity_pairs(
+            shingle_corpus(sd, "doc_id", "text", n=2), "jaccard", 0.7
+        )
+
     if _route_recall_truth(docs, "doc_id"):
-        # auto, not pinned dense — see minhash_neardup (r09 self-review)
         summary = sampled_pair_audit(
-            docs,
-            "doc_id",
-            detected,
-            lambda sd: ngram_jaccard_pairs_auto(
-                sd, "doc_id", "text", n=2, min_jaccard=0.7
-            ),
-            sample_pct=_AUDIT_SAMPLE_PCT,
+            docs, "doc_id", detected, truth_pairs, sample_pct=_AUDIT_SAMPLE_PCT
         )
     else:
-        # dense-BLAS exact truth — see minhash_neardup for the regime
-        # rationale
-        truth = ngram_jaccard_pairs_dense(
-            docs, "doc_id", "text", n=2, min_jaccard=0.7
-        )
+        truth = truth_pairs(docs)
         summary = pair_recall_summary(detected, truth, "doc_a", "doc_b")
     summary = summary.select(
         F.col("recall_vs_exact").alias("neardup_recall_vs_jaccard"),
@@ -4011,22 +3998,20 @@ def cusum_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ngram_containment_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment near-dup pairs
-    (ext/dedup.py::ngram_containment_pairs_prefix), promoted to a declared
-    query over the full corpus: |A∩B|/|A|
-    catches a document wholly quoted inside a larger one, which symmetric
-    Jaccard structurally misses (Broder's containment). Served by the
-    auto-router (ext/dedup.py::ngram_containment_pairs_auto — the
-    containment twin of the Jaccard regime trio, all pytest-identical):
-    the sf1 rehearsal measured the plain inverted index at 239x the sf0.1
-    wall on 10x docs of this ~1k-bigram universe (Σ|posting|² candidate
-    growth with every posting hot), the regime the dense block-BLAS path
-    exists for; a Zipf universe at scale routes to the asymmetric
-    smaller-side AllPairs prefix join instead."""
-    from ..ext.dedup import ngram_containment_pairs_auto
+    (ext/dedup.py::set_similarity_pairs, measure "containment") over the
+    full corpus: |A∩B|/|A| catches a document wholly quoted inside a
+    larger one, which symmetric Jaccard structurally misses (Broder's
+    containment). The router's routes are pytest-identical: the sf1
+    rehearsal measured the plain inverted index at 239x the sf0.1 wall on
+    10x docs of this ~1k-bigram universe (Σ|posting|² candidate growth
+    with every posting hot), the regime the dense block-BLAS path exists
+    for; a Zipf universe at scale routes to the asymmetric smaller-side
+    AllPairs prefix join instead."""
+    from ..ext.dedup import set_similarity_pairs, shingle_corpus
 
     docs = _t(spark, sf_dir, "documents")
-    pairs = ngram_containment_pairs_auto(
-        docs, "doc_id", "text", n=2, min_containment=0.5
+    pairs = set_similarity_pairs(
+        shingle_corpus(docs, "doc_id", "text", n=2), "containment", 0.5
     )
     return (
         pairs.orderBy(

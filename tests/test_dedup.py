@@ -1,14 +1,48 @@
 """Dedup extension operators (ext/dedup.py)."""
 
+import pytest
 from pyspark.sql import Row
 
+from pyspark_weather_forecasting_gsod_spark.ext import dedup
 from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
+    ShingleCorpus,
     exact_dedup_by_fingerprint,
     minhash_lsh_pairs,
-    ngram_jaccard_pairs,
+    set_similarity_pairs,
+    shingle_corpus,
     simhash64,
     word_shingles,
 )
+
+# module caps that pin set_similarity_pairs to one route where the
+# threshold and corpus leave it a choice
+_PINS = {
+    "driver": {"_DRIVER_MAX_WORK": 10**12},
+    "dense": {"_DRIVER_MAX_POSTINGS": 0, "_DENSE_MAX_VOCAB": 10**9},
+    "prefix": {"_DRIVER_MAX_POSTINGS": 0, "_DENSE_MAX_VOCAB": 0},
+}
+
+
+def _pinned(route, fn):
+    """``fn()`` with the router's caps set so that it takes ``route``."""
+    with pytest.MonkeyPatch.context() as mp:
+        for name, value in _PINS[route].items():
+            mp.setattr(dedup, name, value)
+        return fn()
+
+
+def _rows(frame):
+    return sorted((r[0], r[1], r[2], round(r[3], 9)) for r in frame.collect())
+
+
+def _reference(corpus, measure, t, against=None):
+    """The inverted index's rows, the reference every route must equal."""
+    right = corpus.arrs if against is None else against.arrs
+    return _rows(
+        dedup._index_pairs(
+            corpus.arrs, right, corpus.id_col, dedup._MEASURES[measure], t
+        )
+    )
 
 
 def _docs(spark):
@@ -31,7 +65,9 @@ def test_word_shingles_counts_and_short_docs(spark):
 
 
 def test_ngram_jaccard_exact_and_near(spark):
-    pairs = ngram_jaccard_pairs(_docs(spark), "doc_id", "text", n=3)
+    pairs = set_similarity_pairs(
+        shingle_corpus(_docs(spark), "doc_id", "text", n=3), "jaccard", 0.0
+    )
     got = {(r.doc_a, r.doc_b): r.jaccard for r in pairs.collect()}
     assert got[(1, 2)] == 1.0
     # doc3 shares trigrams 'a b c'..'e f g' (5 of 6) with doc1: 5/(6+6-5)
@@ -218,73 +254,30 @@ def test_dedup_increment_publish_back_is_idempotent(spark):
 
 
 def test_exact_jaccard_variants_agree(spark, sf_dir):
-    """The three exact n-gram Jaccard strategies (inverted index, AllPairs
-    prefix filtering, dense-BLAS bitmap) must produce identical pair sets —
-    same algorithm contract, different cost regimes."""
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_dense,
-        ngram_jaccard_pairs_prefix,
-    )
+    """The exact n-gram Jaccard routes (driver prefix filtering, Spark
+    prefix filtering, dense-BLAS bitmap) must produce the inverted index's
+    pair set — same algorithm contract, different cost regimes."""
     from pyspark_weather_forecasting_gsod_spark.sources.io import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-
-    def key(rows):
-        return {(r.doc_a, r.doc_b, r.common, round(r.jaccard, 9)) for r in rows}
-
-    for n, t, mv in [(2, 0.5, 4096), (2, 0.7, 4096), (3, 0.3, 100_000)]:
-        naive = key(
-            ngram_jaccard_pairs(docs, "doc_id", "text", n=n, min_jaccard=t).collect()
-        )
-        prefix = key(
-            ngram_jaccard_pairs_prefix(
-                docs, "doc_id", "text", n=n, min_jaccard=t
-            ).collect()
-        )
-        dense = key(
-            ngram_jaccard_pairs_dense(
-                docs, "doc_id", "text", n=n, min_jaccard=t, max_vocab=mv
-            ).collect()
-        )
-        assert naive == prefix, (n, t, len(naive), len(prefix))
-        assert naive == dense, (n, t, len(naive), len(dense))
+    for n, t in [(2, 0.5), (2, 0.7), (3, 0.3)]:
+        corpus = shingle_corpus(docs, "doc_id", "text", n=n)
+        naive = _reference(corpus, "jaccard", t)
+        for route in ("driver", "prefix", "dense"):
+            got = _pinned(
+                route, lambda: _rows(set_similarity_pairs(corpus, "jaccard", t))
+            )
+            assert got == naive, (n, t, route, len(naive), len(got))
         assert naive, "degenerate test: no pairs found"
 
 
-def test_dense_jaccard_guards_raise(spark, sf_dir):
-    import pytest as _pytest
-
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_jaccard_pairs_dense,
-    )
-    from pyspark_weather_forecasting_gsod_spark.sources.io import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    with _pytest.raises(ValueError, match="docs"):
-        ngram_jaccard_pairs_dense(docs, "doc_id", max_rows=3)
-    with _pytest.raises(ValueError, match="shingles"):
-        ngram_jaccard_pairs_dense(docs, "doc_id", n=3, max_vocab=16)
-    with _pytest.raises(ValueError, match="min_jaccard"):
-        ngram_jaccard_pairs_dense(docs, "doc_id", min_jaccard=0.0)
-
-
 def test_property_jaccard_strategies_match_brute_force(spark):
-    """Property: on randomized small-vocab corpora, all three exact
-    strategies agree with a pure-Python brute force — an oracle
-    independent of every Spark expression involved — for both measures:
-    Jaccard, and containment (smaller set is the contained side, ties go
-    to the lower id)."""
+    """Property: on randomized small-vocab corpora, the inverted index and
+    every thresholded route agree with a pure-Python brute force — an
+    oracle independent of every Spark expression involved — for both
+    measures: Jaccard, and containment (smaller set is the contained side,
+    ties go to the lower id)."""
     from hypothesis import given, settings, strategies as st
-
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_containment_pairs,
-        ngram_containment_pairs_dense,
-        ngram_containment_pairs_prefix,
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_dense,
-        ngram_jaccard_pairs_prefix,
-    )
 
     word = st.sampled_from(["aa", "bb", "cc", "dd"])
     doc = st.lists(word, min_size=2, max_size=12).map(" ".join)
@@ -294,77 +287,52 @@ def test_property_jaccard_strategies_match_brute_force(spark):
     def check(texts, t):
         rows = [(i, s) for i, s in enumerate(texts)]
         df = spark.createDataFrame(rows, "doc_id long, text string")
+        corpus = shingle_corpus(df, "doc_id", "text", n=2)
 
         def shingles(s):
             w = s.split()
             return {" ".join(w[i : i + 2]) for i in range(len(w) - 1)}
 
         sets = {i: shingles(s) for i, s in rows if len(s.split()) >= 2}
-        want, want_c = set(), set()
+        want = {"jaccard": [], "containment": []}
         for a in sets:
             for b in sets:
                 if a < b:
                     inter = len(sets[a] & sets[b])
                     union = len(sets[a] | sets[b])
                     if union and inter / union >= t:
-                        want.add((a, b, inter, round(inter / union, 9)))
+                        want["jaccard"].append((a, b, inter, round(inter / union, 9)))
                     small, big = (a, b) if len(sets[a]) <= len(sets[b]) else (b, a)
                     if inter / len(sets[small]) >= t:
-                        want_c.add(
+                        want["containment"].append(
                             (small, big, inter, round(inter / len(sets[small]), 9))
                         )
 
-        for fn in (
-            ngram_jaccard_pairs,
-            ngram_jaccard_pairs_prefix,
-            ngram_jaccard_pairs_dense,
-        ):
-            got = {
-                (r.doc_a, r.doc_b, r.common, round(r.jaccard, 9))
-                for r in fn(df, "doc_id", "text", n=2, min_jaccard=t).collect()
-            }
-            assert got == want, (fn.__name__, t, texts)
-        for fn in (
-            ngram_containment_pairs,
-            ngram_containment_pairs_prefix,
-            ngram_containment_pairs_dense,
-        ):
-            got = {
-                (r.doc_small, r.doc_big, r.common, round(r.containment, 9))
-                for r in fn(df, "doc_id", "text", n=2, min_containment=t).collect()
-            }
-            assert got == want_c, (fn.__name__, t, texts)
+        for m in ("jaccard", "containment"):
+            assert _reference(corpus, m, t) == sorted(want[m]), (m, t, texts)
+            for route in ("driver", "prefix", "dense"):
+                got = _pinned(route, lambda: _rows(set_similarity_pairs(corpus, m, t)))
+                assert got == sorted(want[m]), (m, route, t, texts)
 
     check()
 
 
 def test_auto_jaccard_selects_and_matches(spark, sf_dir, monkeypatch):
-    """auto must equal the strategy-specific outputs on both sides of its
-    decision boundary (dense regime here; prefix regime forced via caps).
-    The driver regime is switched off so both Spark routes run."""
-    from pyspark_weather_forecasting_gsod_spark.ext import dedup
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_auto,
-    )
+    """The router must equal the inverted index on both sides of its
+    dense/prefix boundary (dense regime here; prefix regime forced by the
+    vocabulary cap). The driver regime is switched off so both Spark
+    routes run."""
     from pyspark_weather_forecasting_gsod_spark.sources.io import load_table
 
     monkeypatch.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
 
-    docs = load_table(spark, sf_dir, "documents")
-
-    def key(rows):
-        return {(r.doc_a, r.doc_b, r.common, round(r.jaccard, 9)) for r in rows}
-
-    want = key(ngram_jaccard_pairs(docs, "doc_id", "text", n=2, min_jaccard=0.5).collect())
-    dense_route = key(
-        ngram_jaccard_pairs_auto(docs, "doc_id", "text", n=2, min_jaccard=0.5).collect()
+    corpus = shingle_corpus(
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=2
     )
-    prefix_route = key(
-        ngram_jaccard_pairs_auto(
-            docs, "doc_id", "text", n=2, min_jaccard=0.5, max_vocab=16
-        ).collect()
-    )
+    want = _reference(corpus, "jaccard", 0.5)
+    dense_route = _rows(set_similarity_pairs(corpus, "jaccard", 0.5))
+    monkeypatch.setattr(dedup, "_DENSE_MAX_VOCAB", 16)
+    prefix_route = _rows(set_similarity_pairs(corpus, "jaccard", 0.5))
     assert dense_route == want and prefix_route == want and want
 
 
@@ -407,11 +375,6 @@ def test_strip_duplicated_spans_fully_duplicated_doc_empties(spark):
 
 
 def test_containment_catches_subset_docs_jaccard_misses(spark):
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_containment_pairs,
-        ngram_jaccard_pairs,
-    )
-
     chunk = "alpha beta gamma delta epsilon zeta"
     filler = " ".join(f"w{i} w{i+1} w{i+2}" for i in range(0, 60, 3))
     big = chunk + " " + filler
@@ -419,16 +382,17 @@ def test_containment_catches_subset_docs_jaccard_misses(spark):
         [(1, chunk), (2, big), (3, "totally different words here entirely now")],
         ["doc_id", "text"],
     )
+    corpus = shingle_corpus(docs, "doc_id")
     cont = {
         (r["doc_small"], r["doc_big"]): r["containment"]
-        for r in ngram_containment_pairs(docs, "doc_id", min_containment=0.8).collect()
+        for r in set_similarity_pairs(corpus, "containment", 0.8).collect()
     }
     # the chunk is fully contained in the big doc
     assert (1, 2) in cont and cont[(1, 2)] == 1.0
     # symmetric Jaccard at the same strictness misses it
     jac = {
         (r["doc_a"], r["doc_b"])
-        for r in ngram_jaccard_pairs(docs, "doc_id", min_jaccard=0.8).collect()
+        for r in set_similarity_pairs(corpus, "jaccard", 0.8).collect()
     }
     assert (1, 2) not in jac
     # unrelated doc matches nothing
@@ -443,7 +407,6 @@ def test_split_leakage_audit_component_split_zeroes_leakage(spark):
 
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
         connected_components,
-        ngram_jaccard_pairs,
         split_leakage_audit,
     )
     from pyspark_weather_forecasting_gsod_spark.operators.sampling import hash_split
@@ -457,7 +420,9 @@ def test_split_leakage_audit_component_split_zeroes_leakage(spark):
             " j -> concat('w', CAST(id DIV 2 AS STRING), '_', j)))"
         ).alias("text"),
     )
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=2, min_jaccard=0.5)
+    pairs = set_similarity_pairs(
+        shingle_corpus(docs, "doc_id", "text", n=2), "jaccard", 0.5
+    )
     assert pairs.count() == 30
 
     # row-level split: some pair must straddle the boundary (md5 of the
@@ -720,64 +685,35 @@ def test_remove_nodes_removing_representative_relabels(spark):
 
 
 def test_containment_prefix_matches_inverted_index(spark, sf_dir):
-    """The asymmetric-prefix-filtered containment join must produce the
-    identical pair set as the plain inverted index (same contract as the
-    three exact Jaccard strategies) — sf1 rehearsal finding follow-up."""
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_containment_pairs,
-        ngram_containment_pairs_dense,
-        ngram_containment_pairs_prefix,
-    )
+    """The asymmetric-prefix-filtered containment join (and the dense
+    route) must produce the identical pair set as the plain inverted index
+    (same contract as the exact Jaccard routes) — sf1 rehearsal finding
+    follow-up."""
     from pyspark_weather_forecasting_gsod_spark.sources.io import load_table
 
     docs = load_table(spark, sf_dir, "documents")
-
-    def key(rows):
-        return {
-            (r.doc_small, r.doc_big, r.common, round(r.containment, 9))
-            for r in rows
-        }
-
     for n, t in [(2, 0.5), (2, 0.8), (3, 0.3)]:
-        base = key(
-            ngram_containment_pairs(
-                docs, "doc_id", "text", n=n, min_containment=t
-            ).collect()
-        )
-        pref = key(
-            ngram_containment_pairs_prefix(
-                docs, "doc_id", "text", n=n, min_containment=t
-            ).collect()
-        )
-        dense = key(
-            ngram_containment_pairs_dense(
-                docs, "doc_id", "text", n=n, min_containment=t,
-                max_vocab=100_000,
-            ).collect()
-        )
-        assert base == pref, (n, t, len(base), len(pref))
-        assert base == dense, (n, t, len(base), len(dense))
+        corpus = shingle_corpus(docs, "doc_id", "text", n=n)
+        base = _reference(corpus, "containment", t)
+        for route in ("prefix", "dense"):
+            got = _pinned(
+                route, lambda: _rows(set_similarity_pairs(corpus, "containment", t))
+            )
+            assert got == base, (n, t, route, len(base), len(got))
         assert base, "degenerate test: no pairs found"
 
 
-def test_dense_paths_require_integral_ids_and_auto_routes_strings(spark):
-    """r06 review fix: the dense BLAS paths pack ids into int64 matrices;
-    a string id used to be cast('long') into NULLs that collapsed every
-    row into one block and crashed densify. Dense must now refuse
-    non-integral ids up front, and the auto routers must send string-id
-    corpora down the prefix path (which handles any id type) and still
-    return the correct pairs."""
-    import pytest as _pytest
+def test_dense_paths_require_integral_ids_and_auto_routes_strings(
+    spark, caplog, monkeypatch
+):
+    """The dense BLAS route packs ids into int64 matrices; a string id
+    cast('long') becomes NULLs that collapse every row into one block and
+    crash densify. So the router admits dense for integral ids only: a
+    string-id corpus of a tiny universe goes down the prefix path (which
+    handles any id type) and still returns the correct pairs."""
     from pyspark.sql import Row
 
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_containment_pairs_auto,
-        ngram_containment_pairs_dense,
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_auto,
-        ngram_jaccard_pairs_dense,
-    )
-
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
     docs = spark.createDataFrame(
         [
             Row(doc_id=f"doc-{i:03d}", text=("red blue green yellow " * 3)
@@ -785,22 +721,14 @@ def test_dense_paths_require_integral_ids_and_auto_routes_strings(spark):
             for i in range(8)
         ]
     )
-    with _pytest.raises(ValueError, match="integral id"):
-        ngram_jaccard_pairs_dense(docs, "doc_id", n=2)
-    with _pytest.raises(ValueError, match="integral id"):
-        ngram_containment_pairs_dense(docs, "doc_id", n=2)
-
-    def key(rows):
-        return {(r.doc_a, r.doc_b, r.common, round(r.jaccard, 9)) for r in rows}
-
-    want = key(ngram_jaccard_pairs(docs, "doc_id", "text", n=2, min_jaccard=0.5).collect())
-    got = key(ngram_jaccard_pairs_auto(docs, "doc_id", "text", n=2, min_jaccard=0.5).collect())
-    assert got == want and want
-    # containment auto on string ids: must not crash, must emit the
+    corpus = shingle_corpus(docs, "doc_id", "text", n=2)
+    got, routes = _routed(caplog, lambda: _rows(set_similarity_pairs(corpus, "jaccard", 0.5)))
+    [(_, route, probes)] = routes
+    assert route == "prefix" and probes["n_vocab"][0] <= probes["n_vocab"][1]
+    assert got == _reference(corpus, "jaccard", 0.5) and got
+    # containment on string ids: must not crash, must emit the
     # wholly-contained even/odd sibling pairs
-    cont = ngram_containment_pairs_auto(
-        docs, "doc_id", "text", n=2, min_containment=0.8
-    ).collect()
+    cont = set_similarity_pairs(corpus, "containment", 0.8).collect()
     assert cont and all(isinstance(r.doc_small, str) for r in cont)
 
 
@@ -828,19 +756,55 @@ def test_update_components_validates_touched_comps_exactly(spark):
         update_components(nulled, spark.createDataFrame([(1, 2)], ["doc_a", "doc_b"]))
 
 
-def test_ngram_jaccard_pairs_max_docs_guard_fires(spark):
-    """r06 VERDICT #2: the unthresholded inverted-index path must refuse
-    corpora past the limit-probe bound instead of running Σ|posting|²
-    work; max_docs=None keeps the pre-bounded-slice escape hatch."""
-    import pytest
+def test_dense_jaccard_guards_raise(spark, caplog, monkeypatch):
+    """The dense route's guards: past ``_DENSE_MAX_ROWS`` docs or
+    ``_DENSE_MAX_VOCAB`` distinct shingles the router declines the dense
+    kernel and takes the prefix route, reporting the tripped cap. At
+    threshold 0, where the dense kernel would emit zero-overlap pairs, it
+    takes the inverted index, whose doc cap raises. Every route's rows
+    equal the inverted index's."""
+    words = [f"w{k}" for k in range(8)]
+    docs = spark.createDataFrame(
+        [Row(doc_id=i, text=" ".join(words[i % 4 : i % 4 + 3 + i % 3])) for i in range(60)]
+    )
+    corpus = shingle_corpus(docs, "doc_id", "text", 3)
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
+    want = _reference(corpus, "jaccard", 0.5)
+    for cap, value, route in (
+        (None, None, "dense"),
+        ("_DENSE_MAX_ROWS", 3, "prefix"),
+        ("_DENSE_MAX_VOCAB", 2, "prefix"),
+    ):
+        with monkeypatch.context() as mp:
+            if cap is not None:
+                mp.setattr(dedup, cap, value)
+            got, routes = _routed(
+                caplog, lambda: _rows(set_similarity_pairs(corpus, "jaccard", 0.5))
+            )
+        [(_, taken, probes)] = routes
+        assert taken == route, (cap, taken)
+        if cap is not None:
+            probe = probes["n_docs" if cap == "_DENSE_MAX_ROWS" else "n_vocab"]
+            assert probe[1] == value < probe[0], (cap, probe)
+        assert got == want and got, cap
+    got, routes = _routed(caplog, lambda: _rows(set_similarity_pairs(corpus, "jaccard", 0.0)))
+    assert [r[1] for r in routes] == ["index"]
+    assert got == _reference(corpus, "jaccard", 0.0)
+    monkeypatch.setattr(dedup, "_INDEX_MAX_DOCS", 3)
+    with pytest.raises(ValueError, match="_INDEX_MAX_DOCS"):
+        set_similarity_pairs(corpus, "jaccard", 0.0)
 
-    docs = _docs(spark)
-    with pytest.raises(ValueError, match="max_docs"):
-        ngram_jaccard_pairs(docs, "doc_id", "text", n=3, max_docs=2).collect()
-    # escape hatch: explicit None skips the probe entirely
-    assert ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3, max_docs=None
-    ).count() > 0
+
+def test_index_route_docs_guard_fires(spark, monkeypatch):
+    """At threshold 0 the inverted index enumerates every pair sharing a
+    shingle, Σ|posting|² work no threshold bounds: past
+    ``_INDEX_MAX_DOCS`` shingle-bearing docs the router raises instead of
+    running it, naming the cap."""
+    corpus = shingle_corpus(_docs(spark), "doc_id", "text", n=3)
+    assert set_similarity_pairs(corpus, "jaccard", 0.0).count() > 0
+    monkeypatch.setattr(dedup, "_INDEX_MAX_DOCS", 2)
+    with pytest.raises(ValueError, match="_INDEX_MAX_DOCS"):
+        set_similarity_pairs(corpus, "jaccard", 0.0)
 
 
 def test_ngram_best_match_exact_semantics(spark):
@@ -893,15 +857,13 @@ def test_ngram_best_match_router_and_banded_parity(spark, sf_dir):
     # every banded row is an exactly scored pair: its common count and
     # jaccard are the full enumeration's, in either orientation
     full = set()
-    for r in ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=2, min_jaccard=0.0, max_docs=None
+    for r in set_similarity_pairs(
+        shingle_corpus(docs, "doc_id", "text", n=2), "jaccard", 0.0
     ).collect():
         full.add((r.doc_a, r.doc_b, r.common, r.jaccard))
         full.add((r.doc_b, r.doc_a, r.common, r.jaccard))
     missing = [r for r in banded_rows if tuple(r) not in full]
     assert not missing, missing[:5]
-    import pytest
-
     with pytest.raises(ValueError, match="force"):
         ngram_best_match(docs, "doc_id", force="bogus")
 
@@ -961,41 +923,37 @@ def test_ngram_best_match_tiered_exact_parity(spark, sf_dir):
     assert 4 not in micro and 5 not in micro
 
 
-def test_dense_admission_probe_matches_full_decision(spark):
-    """The standalone dense guard's cheap sample probe and the auto
-    routers' one-pass admission must reach the SAME decision:
+def test_dense_admission_probe_matches_full_decision(spark, caplog, monkeypatch):
+    """The router's one frequency pass counts what decides the dense
+    route, and the route follows:
 
-    * a >sample corpus with a Zipf-huge vocabulary is rejected by the
-      sample alone (monotone: sample distinct > cap proves full > cap),
-      and the full frequency pass rejects it too;
-    * a >sample corpus drawn from a tiny shingle universe passes the
-      sample AND the full pass, so dense is admitted;
-    * docs shorter than n tokens carry no shingles: the admission counts
+    * a corpus with a Zipf-huge vocabulary counts past the vocabulary cap
+      and routes prefix;
+    * a corpus drawn from a tiny shingle universe routes dense, and the
+      pass's frequency table is each shingle's document frequency;
+    * docs shorter than n tokens carry no shingles: the pass counts
       exactly the shingle-bearing docs, and the routed output equals the
       plain inverted-index output.
     """
-    from pyspark.sql import Row
+    from pyspark_weather_forecasting_gsod_spark.ext.dedup import shingle_arrays
 
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        _dense_admission,
-        _sample_vocab_exceeds,
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_auto,
-        shingle_arrays,
-    )
+    monkeypatch.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
 
-    # 2,500 docs (> the 2,000-doc sample), every doc a unique bigram universe
+    def route(corpus):
+        _, routes = _routed(caplog, lambda: set_similarity_pairs(corpus, "jaccard", 0.5))
+        [(_, got, probes)] = routes
+        return got, probes["n_docs"][0], probes["n_vocab"][0]
+
+    # 2,500 docs, every doc a unique bigram universe
     big_vocab = spark.createDataFrame(
         [Row(doc_id=i, text=f"tok{i}a tok{i}b tok{i}c tok{i}d") for i in range(2500)]
     )
-    assert _sample_vocab_exceeds(big_vocab, "doc_id", "text", 2, 4096)
-    admit, n_docs, n_vocab, vidx, arrs, freq = _dense_admission(
-        big_vocab, "doc_id", "text", 2, 200_000, 4096
-    )
-    assert not admit and n_docs == 2500 and n_vocab == 7500 and vidx is None
-    assert freq.count() == n_vocab
+    big = shingle_corpus(big_vocab, "doc_id", "text", 2)
+    freq, n_docs, n_vocab = dedup._shingle_counts(big.arrs, None)
+    assert (n_docs, n_vocab) == (2500, 7500) and freq.count() == n_vocab
+    assert route(big) == ("prefix", 2500, 7500)
 
-    # 2,500 docs over a ~10-token universe: sample passes, full probe passes
+    # 2,500 docs over a ~10-token universe
     words = [f"w{k}" for k in range(10)]
     tiny_vocab = spark.createDataFrame(
         [
@@ -1003,55 +961,41 @@ def test_dense_admission_probe_matches_full_decision(spark):
             for i in range(2500)
         ]
     )
-    assert not _sample_vocab_exceeds(tiny_vocab, "doc_id", "text", 2, 4096)
-    admit, n_docs, n_vocab, vidx, arrs, freq = _dense_admission(
-        tiny_vocab, "doc_id", "text", 2, 200_000, 4096
-    )
-    assert admit and n_docs == 2500
-    # on admit the corpus carries the complete shingle->column index
-    vrows = vidx.collect()
-    assert len(vrows) == len({r.shingle for r in vrows}) == n_vocab
-    assert sorted(r["__idx"] for r in vrows) == list(range(len(vrows)))
-    # ...the materialized corpus-wide shingle pass: one row per
-    # shingle-bearing doc, values identical to a fresh shingle_arrays run
+    tiny = shingle_corpus(tiny_vocab, "doc_id", "text", 2)
+    got, n_docs, n_vocab = route(tiny)
+    assert got == "dense" and n_docs == 2500
+    # the corpus is the shingle pass: one row per shingle-bearing doc,
+    # values identical to a fresh shingle_arrays run
     want_arrs = {
         (r.doc_id, tuple(sorted(r.shingles)))
         for r in shingle_arrays(tiny_vocab, "doc_id", "text", 2).collect()
     }
     got_arrs = {
-        (r.doc_id, tuple(sorted(r.shingles))) for r in arrs.collect()
+        (r.doc_id, tuple(sorted(r.shingles))) for r in tiny.arrs.collect()
     }
     assert got_arrs == want_arrs
-    # ...and each shingle's document frequency
+    # ...and the frequency table holds each shingle's document frequency
     df_want: dict[str, int] = {}
     for _, sh in want_arrs:
         for x in sh:
             df_want[x] = df_want.get(x, 0) + 1
+    freq, _, n_vocab2 = dedup._shingle_counts(tiny.arrs, None)
     assert {r.shingle: r["__df"] for r in freq.collect()} == df_want
-    # a caller-handed arrs frame is passed through and reused, not rebuilt
-    admit2, n2, _, _, arrs2, _ = _dense_admission(
-        tiny_vocab, "doc_id", "text", 2, 200_000, 4096, arrs=arrs
-    )
-    assert admit2 and n2 == 2500 and arrs2 is arrs
+    assert n_vocab == n_vocab2 == len(df_want)
 
     # short docs (< n tokens) are dropped by shingling, so only the 20
     # shingle-bearing docs count; the routed output must equal the plain
     # inverted-index output
-    mixed = spark.createDataFrame(
-        [Row(doc_id=i, text="red blue green yellow" if i % 2 else "solo")
-         for i in range(40)]
+    mixed = shingle_corpus(
+        spark.createDataFrame(
+            [Row(doc_id=i, text="red blue green yellow" if i % 2 else "solo")
+             for i in range(40)]
+        ),
+        "doc_id", "text", 2,
     )
-    admit, n_docs, n_vocab, vidx, arrs, freq = _dense_admission(
-        mixed, "doc_id", "text", 2, 200_000, 4096
-    )
-    assert admit and n_docs == 20 and n_vocab == 3 and vidx is not None
-
-    def key(rows):
-        return {(r.doc_a, r.doc_b, r.common, round(r.jaccard, 9)) for r in rows}
-
-    want = key(ngram_jaccard_pairs(mixed, "doc_id", "text", n=2, min_jaccard=0.5).collect())
-    got = key(ngram_jaccard_pairs_auto(mixed, "doc_id", "text", n=2, min_jaccard=0.5).collect())
-    assert got == want and want
+    assert route(mixed) == ("dense", 20, 3)
+    got = _rows(set_similarity_pairs(mixed, "jaccard", 0.5))
+    assert got == _reference(mixed, "jaccard", 0.5) and got
 
 
 def _zipf_texts(n_docs: int = 300, seed: int = 1) -> list[str]:
@@ -1088,51 +1032,96 @@ def _zipf_docs(spark, path, n_docs: int = 300, seed: int = 1):
     return spark.read.parquet(str(path)).localCheckpoint(eager=True)
 
 
-def test_auto_routes_through_public_entries_once(spark, monkeypatch, tmp_path):
-    """Each auto router decides from its one admission pass and calls the
-    module-level strategy entry exactly once with the prepared corpus: the
-    prefix entry on a Zipf corpus, the dense entry on a small universe.
-    Both routes equal the inverted index, for Jaccard and containment. The
-    driver regime is switched off: both corpora are small enough for it."""
-    from pyspark.sql import Row
+def test_set_similarity_routes_equal_inverted_index(spark, caplog, tmp_path):
+    """One identity table: every route of ``set_similarity_pairs`` —
+    driver, dense, prefix, index at threshold 0, cross via ``against=`` —
+    returns the inverted index's rows for both measures, and the route is
+    the one the ``spark_graft`` record names. String ids never route
+    dense."""
+    from pyspark.sql import functions as F
 
-    from pyspark_weather_forecasting_gsod_spark.ext import dedup
+    zipf = shingle_corpus(_zipf_docs(spark, tmp_path / "zipf.parquet"), "doc_id", "text", 3)
+    words = [f"w{k}" for k in range(8)]
+    small_docs = spark.createDataFrame(
+        [Row(doc_id=i, text=" ".join(words[i % 4 : i % 4 + 3 + i % 3])) for i in range(60)]
+    )
+    small = shingle_corpus(small_docs, "doc_id", "text", 3)
+    strings = shingle_corpus(
+        small_docs.select(
+            F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"), "text"
+        ),
+        "doc_id", "text", 3,
+    )
+    batch = ShingleCorpus(zipf.arrs.filter(F.col("doc_id") % 3 == 0), "doc_id", 3)
+    store = ShingleCorpus(zipf.arrs.filter(F.col("doc_id") % 3 != 0), "doc_id", 3)
+    table = (
+        # (corpus, threshold, against, pin, route the record names)
+        (zipf, 0.5, None, None, "driver"),
+        (strings, 0.5, None, None, "driver"),
+        (small, 0.5, None, "dense", "dense"),
+        (zipf, 0.5, None, "prefix", "prefix"),
+        (strings, 0.5, None, "dense", "prefix"),
+        (small, 0.0, None, "dense", "index"),
+        (zipf, 0.0, None, None, "index"),
+        (batch, 0.3, store, None, "cross"),
+    )
+    for corpus, t, against, pin, want_route in table:
+        for m in ("jaccard", "containment"):
 
+            def run():
+                return _routed(
+                    caplog, lambda: _rows(set_similarity_pairs(corpus, m, t, against))
+                )
+
+            got, routes = run() if pin is None else _pinned(pin, run)
+            [(op, route, probes)] = routes
+            case = (want_route, pin, m, t)
+            assert (op, route, probes["measure"]) == ("set_similarity_pairs", want_route, m), case
+            assert got == _reference(corpus, m, t, against) and got, case
+
+
+def test_auto_routes_through_public_entries_once(spark, caplog, monkeypatch, tmp_path):
+    """Each public entry decides from its one admission pass and runs the
+    chosen kernel exactly once: the prefix kernel on a Zipf corpus, the
+    dense kernel on a small universe, for both measures through
+    ``set_similarity_pairs`` and for Jaccard through the
+    ``ngram_jaccard_pairs_auto`` shim. Each call reports one route and its
+    rows equal the inverted index's. The driver regime is switched off:
+    both corpora are small enough for it."""
     monkeypatch.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
     calls: list[str] = []
 
-    def counted(name):
+    def counted(name, route):
         fn = getattr(dedup, name)
 
         def wrapper(*args, **kwargs):
-            assert kwargs.get("_corpus") is not None
-            calls.append(name)
+            calls.append(route)
             return fn(*args, **kwargs)
 
         monkeypatch.setattr(dedup, name, wrapper)
 
-    for m in ("jaccard", "containment"):
-        for route in ("prefix", "dense"):
-            counted(f"ngram_{m}_pairs_{route}")
-
-    def rows(frame):
-        return {(r[0], r[1], r[2], round(r[3], 9)) for r in frame.collect()}
-
-    zipf = _zipf_docs(spark, tmp_path / "zipf.parquet")
+    counted("_prefix_pairs", "prefix")
+    counted("_dense_pairs", "dense")
+    zipf_docs = _zipf_docs(spark, tmp_path / "zipf.parquet")
     words = [f"w{k}" for k in range(8)]
-    small = spark.createDataFrame(
+    small_docs = spark.createDataFrame(
         [Row(doc_id=i, text=" ".join(words[i % 4 : i % 4 + 3 + i % 3])) for i in range(60)]
     )
-    for docs, route in ((zipf, "prefix"), (small, "dense")):
-        for m, auto, plain, t in (
-            ("jaccard", dedup.ngram_jaccard_pairs_auto, dedup.ngram_jaccard_pairs, 0.5),
-            ("containment", dedup.ngram_containment_pairs_auto,
-             dedup.ngram_containment_pairs, 0.6),
-        ):
+    for docs, route in ((zipf_docs, "prefix"), (small_docs, "dense")):
+        corpus = shingle_corpus(docs, "doc_id", "text", 3)
+        entries = [
+            (m, t, lambda m=m, t=t: set_similarity_pairs(corpus, m, t))
+            for m, t in (("jaccard", 0.5), ("containment", 0.6))
+        ] + [
+            ("jaccard", 0.5,
+             lambda: dedup.ngram_jaccard_pairs_auto(docs, "doc_id", "text", 3, 0.5)),
+        ]
+        for m, t, entry in entries:
             calls.clear()
-            got = rows(auto(docs, "doc_id", "text", 3, t))
-            assert calls == [f"ngram_{m}_pairs_{route}"], (m, route, calls)
-            assert got == rows(plain(docs, "doc_id", "text", 3, t)) and got, (m, route)
+            got, routes = _routed(caplog, lambda: _rows(entry()))
+            assert calls == [route], (m, route, calls)
+            assert [r[1] for r in routes] == [route], (m, route, routes)
+            assert got == _reference(corpus, m, t) and got, (m, route)
 
 
 def _jobs_in_group(spark, group: str, fn):
@@ -1155,23 +1144,20 @@ def test_neardup_pairs_and_components_job_count(spark, tmp_path, monkeypatch):
     probes and a re-aggregated frequency table ran 12). A bounded edge
     list is fetched once to decide and solve on the driver, so components
     plus their collect run 1 job (a count probe before the fetch ran 4)."""
-    from pyspark_weather_forecasting_gsod_spark.ext import dedup
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
         connected_components,
-        ngram_jaccard_pairs_auto,
         shingle_arrays,
     )
 
     docs = _zipf_docs(spark, tmp_path / "zipf.parquet")
     arrs = shingle_arrays(docs, "doc_id", "text", 3).localCheckpoint(eager=True)
+    corpus = ShingleCorpus(arrs, "doc_id", 3)
 
     def pairs_jobs(group):
         return _jobs_in_group(
             spark,
             group,
-            lambda: ngram_jaccard_pairs_auto(
-                docs, "doc_id", "text", n=3, min_jaccard=0.5, _arrs=arrs
-            ).localCheckpoint(eager=True),
+            lambda: set_similarity_pairs(corpus, "jaccard", 0.5).localCheckpoint(eager=True),
         )
 
     pairs, driver_jobs = pairs_jobs("test-neardup-pairs-driver-job-count")
@@ -1196,25 +1182,19 @@ def test_in_memory_corpus_pairs_job_count(spark):
     auto pairs plus checkpoint ran 10 jobs on a 300-doc Zipf corpus. Below
     the driver caps the plan never runs: one postings fetch decides and
     solves, and the checkpoint of the local result is the second job."""
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_auto,
-        shingle_arrays,
-    )
+    from pyspark_weather_forecasting_gsod_spark.ext.dedup import shingle_arrays
 
     docs = spark.createDataFrame(
         list(enumerate(_zipf_texts())), "doc_id long, text string"
     )
     arrs = shingle_arrays(docs, "doc_id", "text", 3).localCheckpoint(eager=True)
+    corpus = ShingleCorpus(arrs, "doc_id", 3)
     pairs, jobs = _jobs_in_group(
         spark,
         "test-in-memory-pairs-job-count",
-        lambda: ngram_jaccard_pairs_auto(
-            docs, "doc_id", "text", n=3, min_jaccard=0.5, _arrs=arrs
-        ).localCheckpoint(eager=True),
+        lambda: set_similarity_pairs(corpus, "jaccard", 0.5).localCheckpoint(eager=True),
     )
-    want = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, min_jaccard=0.5)
-    assert sorted(pairs.collect()) == sorted(want.collect()) and pairs.count()
+    assert _rows(pairs) == _reference(corpus, "jaccard", 0.5) and pairs.count()
     assert jobs <= 2, jobs
 
 
@@ -1231,18 +1211,12 @@ def _routed(caplog, fn):
 
 
 def test_routes_are_reported(spark, caplog, monkeypatch, tmp_path):
-    """The pair routers and connected_components report the route they
+    """The pair router and connected_components report the route they
     took and the probes that decided it, against their caps."""
-    from pyspark.sql import Row
-
-    from pyspark_weather_forecasting_gsod_spark.ext import dedup
-
-    zipf = _zipf_docs(spark, tmp_path / "zipf.parquet")
-    pairs, routes = _routed(
-        caplog, lambda: dedup.ngram_jaccard_pairs_auto(zipf, "doc_id", "text", 3, 0.5)
-    )
+    zipf = shingle_corpus(_zipf_docs(spark, tmp_path / "zipf.parquet"), "doc_id", "text", 3)
+    pairs, routes = _routed(caplog, lambda: set_similarity_pairs(zipf, "jaccard", 0.5))
     [(op, route, probes)] = routes
-    assert (op, route) == ("ngram_jaccard_pairs_auto", "driver")
+    assert (op, route) == ("set_similarity_pairs", "driver")
     assert probes["postings"][1] == dedup._DRIVER_MAX_POSTINGS
     assert 0 < probes["postings"][0] <= probes["postings"][1]
     assert 0 < probes["work"][0] <= probes["work"][1] == dedup._DRIVER_MAX_WORK
@@ -1260,13 +1234,12 @@ def test_routes_are_reported(spark, caplog, monkeypatch, tmp_path):
     small = spark.createDataFrame(
         [Row(doc_id=i, text=" ".join(words[i % 4 : i % 4 + 5])) for i in range(40)]
     )
-    for docs, route in ((small, "dense"), (zipf, "prefix")):
+    for corpus, route in ((shingle_corpus(small, "doc_id"), "dense"), (zipf, "prefix")):
         _, routes = _routed(
-            caplog,
-            lambda: dedup.ngram_containment_pairs_auto(docs, "doc_id", "text", 3, 0.6),
+            caplog, lambda: set_similarity_pairs(corpus, "containment", 0.6)
         )
         [(op, got, probes)] = routes
-        assert (op, got) == ("ngram_containment_pairs_auto", route)
+        assert (op, got, probes["measure"]) == ("set_similarity_pairs", route, "containment")
         assert probes["n_docs"][1] == 200_000 and probes["n_vocab"][1] == 4096
         assert (probes["n_vocab"][0] <= 4096) == (route == "dense")
 
@@ -1289,8 +1262,6 @@ def test_driver_route_matches_inverted_index(spark, caplog, monkeypatch, tmp_pat
     routes' schema, ids keep their type, and an empty result keeps it."""
     from pyspark.sql import functions as F
 
-    from pyspark_weather_forecasting_gsod_spark.ext import dedup
-
     def as_ids(frame, ids):
         if ids == "string":
             return frame.select(
@@ -1300,99 +1271,102 @@ def test_driver_route_matches_inverted_index(spark, caplog, monkeypatch, tmp_pat
 
     zipf = _zipf_docs(spark, tmp_path / "zipf.parquet")
     skewed = spark.createDataFrame(list(enumerate(_skewed_texts())), "doc_id long, text string")
-    measures = (
-        (dedup.ngram_jaccard_pairs_auto, dedup.ngram_jaccard_pairs),
-        (dedup.ngram_containment_pairs_auto, dedup.ngram_containment_pairs),
-    )
-    for name, corpus, n in (("zipf", zipf, 3), ("skewed", skewed, 2)):
+    measures = ("jaccard", "containment")
+    for name, frame, n in (("zipf", zipf, 3), ("skewed", skewed, 2)):
         for ids in ("long", "string"):
-            docs = as_ids(corpus, ids)
-            for auto, plain in measures:
-                # the reference at the lowest threshold holds every higher one
-                ref = [tuple(r) for r in plain(docs, "doc_id", "text", n, 0.3).collect()]
+            corpus = shingle_corpus(as_ids(frame, ids), "doc_id", "text", n)
+            for m in measures:
+                # the reference at the lowest threshold holds every higher
+                # one; rows compare unrounded, as both sides divide the
+                # same integers
+                ref = dedup._index_pairs(
+                    corpus.arrs, corpus.arrs, "doc_id", dedup._MEASURES[m], 0.3
+                ).collect()
                 for t in (0.3, 0.5, 0.8, 1.0):
-                    out, routes = _routed(caplog, lambda: auto(docs, "doc_id", "text", n, t))
+                    out, routes = _routed(caplog, lambda: set_similarity_pairs(corpus, m, t))
                     assert [r[1] for r in routes] == ["driver"], (name, ids, t, routes)
                     got = sorted(tuple(r) for r in out.collect())
-                    assert got == sorted(r for r in ref if r[3] >= t), (name, ids, auto.__name__, t)
-                    assert got or t == 1.0, (name, ids, auto.__name__, t)
+                    assert got == sorted(tuple(r) for r in ref if r[3] >= t), (name, ids, m, t)
+                    assert got or t == 1.0, (name, ids, m, t)
     for ids in ("long", "int", "string"):
-        docs = as_ids(zipf, ids)
+        corpus = shingle_corpus(as_ids(zipf, ids), "doc_id", "text", 3)
         # no pair of these three docs reaches t = 1
-        few = as_ids(zipf.filter(F.col("doc_id") < 3), ids)
-        for auto, _ in measures:
+        few = shingle_corpus(as_ids(zipf.filter(F.col("doc_id") < 3), ids), "doc_id", "text", 3)
+        for m in measures:
             with monkeypatch.context() as mp:
                 mp.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
-                spark_schema = auto(docs, "doc_id", "text", 3, 0.5).schema
-            empty = auto(few, "doc_id", "text", 3, 1.0)
-            assert empty.schema == auto(docs, "doc_id", "text", 3, 0.5).schema == spark_schema
+                spark_schema = set_similarity_pairs(corpus, m, 0.5).schema
+            empty = set_similarity_pairs(few, m, 1.0)
+            assert empty.schema == set_similarity_pairs(corpus, m, 0.5).schema == spark_schema
             assert empty.count() == 0
 
 
 def test_driver_route_null_and_duplicate_ids(spark, caplog, monkeypatch):
     """NULL ids are dropped, as the Spark kernels drop them; duplicate ids
     fall through to the Spark routes, whose rows the router then returns."""
-    from pyspark_weather_forecasting_gsod_spark.ext import dedup
-
     texts = _skewed_texts()
-    nulls = spark.createDataFrame(
-        [(None if i % 5 == 0 else i, s) for i, s in enumerate(texts)], "doc_id long, text string"
+    nulls = shingle_corpus(
+        spark.createDataFrame(
+            [(None if i % 5 == 0 else i, s) for i, s in enumerate(texts)],
+            "doc_id long, text string",
+        ),
+        "doc_id", "text", 2,
     )
-    for auto, plain in (
-        (dedup.ngram_jaccard_pairs_auto, dedup.ngram_jaccard_pairs),
-        (dedup.ngram_containment_pairs_auto, dedup.ngram_containment_pairs),
-    ):
-        out, routes = _routed(caplog, lambda: auto(nulls, "doc_id", "text", 2, 0.4))
+    for m in ("jaccard", "containment"):
+        out, routes = _routed(caplog, lambda: set_similarity_pairs(nulls, m, 0.4))
         got = sorted(tuple(r) for r in out.collect())
         assert [r[1] for r in routes] == ["driver"]
-        assert got == sorted(tuple(r) for r in plain(nulls, "doc_id", "text", 2, 0.4).collect())
+        want = dedup._index_pairs(
+            nulls.arrs, nulls.arrs, "doc_id", dedup._MEASURES[m], 0.4
+        ).collect()
+        assert got == sorted(tuple(r) for r in want)
         assert got and all(r[0] is not None and r[1] is not None for r in got)
 
-    dups = spark.createDataFrame(
-        [(i % 40, s) for i, s in enumerate(texts)], "doc_id long, text string"
+    dups = shingle_corpus(
+        spark.createDataFrame(
+            [(i % 40, s) for i, s in enumerate(texts)], "doc_id long, text string"
+        ),
+        "doc_id", "text", 2,
     )
-    for auto in (dedup.ngram_jaccard_pairs_auto, dedup.ngram_containment_pairs_auto):
-        out, routes = _routed(caplog, lambda: auto(dups, "doc_id", "text", 2, 0.4))
+    for m in ("jaccard", "containment"):
+        out, routes = _routed(caplog, lambda: set_similarity_pairs(dups, m, 0.4))
         [(_, route, probes)] = routes
         assert route in ("dense", "prefix") and "work" not in probes, routes
         with monkeypatch.context() as mp:
             mp.setattr(dedup, "_DRIVER_MAX_POSTINGS", 0)
-            want = auto(dups, "doc_id", "text", 2, 0.4)
+            want = set_similarity_pairs(dups, m, 0.4)
         assert sorted(out.collect()) == sorted(want.collect())
 
 
-def test_auto_threshold_outside_unit_interval_unchanged(spark):
-    """The driver regime takes only thresholds in (0, 1]; others reach the
-    Spark routes, which raise (or, for a dense admit above 1, find no
-    pairs) as before."""
-    import pytest
-
+def test_auto_threshold_outside_unit_interval_unchanged(spark, caplog):
+    """One threshold rule, whatever the id type (a dense-admissible long-id
+    corpus and a string-id one): a threshold outside [0, 1] raises naming
+    it, 0 takes the inverted index, and an unknown measure raises."""
     from pyspark.sql import functions as F
-
-    from pyspark_weather_forecasting_gsod_spark.ext import dedup
 
     docs = spark.createDataFrame(list(enumerate(_skewed_texts())), "doc_id long, text string")
     sdocs = docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text")
-    for m in ("jaccard", "containment"):
-        auto = getattr(dedup, f"ngram_{m}_pairs_auto")
-        with pytest.raises(ValueError, match=f"dense {m} requires min_{m} > 0"):
-            auto(docs, "doc_id", "text", 2, 0.0)
-        assert auto(docs, "doc_id", "text", 2, 1.5).count() == 0
-        for t in (0.0, 1.5):
-            with pytest.raises(ValueError, match=f"requires 0 < min_{m} <= 1"):
-                auto(sdocs, "doc_id", "text", 2, t)
+    for frame in (docs, sdocs):
+        corpus = shingle_corpus(frame, "doc_id", "text", 2)
+        for m in ("jaccard", "containment"):
+            for t in (1.5, -0.25):
+                with pytest.raises(ValueError, match=f"threshold {t} is outside"):
+                    set_similarity_pairs(corpus, m, t)
+            out, routes = _routed(caplog, lambda: _rows(set_similarity_pairs(corpus, m, 0.0)))
+            assert [r[1] for r in routes] == ["index"]
+            assert out == _reference(corpus, m, 0.0) and out
+        with pytest.raises(ValueError, match="measure 'cosine'"):
+            set_similarity_pairs(corpus, "cosine", 0.5)
 
 
 def test_driver_work_bound_falls_through(spark, caplog):
     """A hot small-universe corpus (300 docs of 200 words over 15 words)
     is within the postings cap but past the candidate-work bound, so the
     router falls through: dense for long ids, prefix for string ids, with
-    the fetch's frequency table handed over. Rows equal the dense and
-    prefix strategies run on their own."""
+    the fetch's frequency table handed over. Rows equal the inverted
+    index's."""
     import numpy as np
     from pyspark.sql import functions as F
-
-    from pyspark_weather_forecasting_gsod_spark.ext import dedup
 
     rng = np.random.default_rng(0)
     texts = []
@@ -1404,15 +1378,14 @@ def test_driver_work_bound_falls_through(spark, caplog):
     docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     sdocs = docs.select(F.concat(F.lit("d"), F.col("doc_id").cast("string")).alias("doc_id"), "text")
     for d, route in ((docs, "dense"), (sdocs, "prefix")):
+        corpus = shingle_corpus(d, "doc_id", "text", 2)
         for m, t in (("jaccard", 0.5), ("containment", 0.8)):
-            auto = getattr(dedup, f"ngram_{m}_pairs_auto")
-            out, routes = _routed(caplog, lambda: auto(d, "doc_id", "text", 2, t))
+            out, routes = _routed(caplog, lambda: set_similarity_pairs(corpus, m, t))
             [(_, got, probes)] = routes
             assert got == route and probes["work"][0] > probes["work"][1], routes
             assert probes["postings"][0] <= probes["postings"][1]
-            want = getattr(dedup, f"ngram_{m}_pairs_{route}")(d, "doc_id", "text", 2, t)
-            rows = sorted(tuple(r) for r in out.collect())
-            assert rows == sorted(tuple(r) for r in want.collect()) and rows, (m, route)
+            rows = _rows(out)
+            assert rows == _reference(corpus, m, t) and rows, (m, route)
 
 
 def test_prefix_size_filter_identical_on_skewed_lengths(spark):
@@ -1423,11 +1396,6 @@ def test_prefix_size_filter_identical_on_skewed_lengths(spark):
     reference."""
     from pyspark.sql import Row
 
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_jaccard_pairs,
-        ngram_jaccard_pairs_prefix,
-    )
-
     words = [f"tok{i}" for i in range(64)]
     rows = []
     for d in range(12):
@@ -1436,36 +1404,24 @@ def test_prefix_size_filter_identical_on_skewed_lengths(spark):
             rows.append(
                 Row(doc_id=d * 4 + k, text=" ".join(base[: max(4, 48 // frac)]))
             )
-    docs = spark.createDataFrame(rows)
-
-    def key(out):
-        return {
-            (r.doc_a, r.doc_b, r.common, round(r.jaccard, 9))
-            for r in out.collect()
-        }
-
-    truth = key(ngram_jaccard_pairs(docs, "doc_id", "text", n=2, min_jaccard=0.4))
-    filtered = key(
-        ngram_jaccard_pairs_prefix(docs, "doc_id", "text", n=2, min_jaccard=0.4)
+    corpus = shingle_corpus(spark.createDataFrame(rows), "doc_id", "text", n=2)
+    truth = _reference(corpus, "jaccard", 0.4)
+    filtered = _pinned(
+        "prefix", lambda: _rows(set_similarity_pairs(corpus, "jaccard", 0.4))
     )
     assert filtered == truth and truth
 
 
 def test_shared_arrs_handover_identical_outputs(spark):
-    """r12 single-pass handover: routing a caller-materialized
-    ``shingle_arrays`` checkpoint through the auto router and
-    ``exact_cross_jaccard`` must change NOTHING about the outputs —
-    the handed frame is the same map-only projection, materialized once.
-    Covers both auto regimes (dense via tiny universe, prefix via a
-    non-integral id that rejects admission before the vocab probe ever
-    runs — arrs still handed to the prefix path)."""
-    from pyspark.sql import Row, functions as F
+    """A corpus made from a caller-materialized ``shingle_arrays``
+    checkpoint must change NOTHING about the outputs against one
+    ``shingle_corpus`` builds — the handed frame is the same map-only
+    projection, materialized once. Covers the dense-admissible and the
+    string-id regimes, the cross route with one or both sides handed
+    over, and the checks that a corpus is shingled as the call says."""
+    from pyspark.sql import functions as F
 
-    from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        exact_cross_jaccard,
-        ngram_jaccard_pairs_auto,
-        shingle_arrays,
-    )
+    from pyspark_weather_forecasting_gsod_spark.ext.dedup import shingle_arrays
 
     words = [f"w{k}" for k in range(12)]
     docs = spark.createDataFrame(
@@ -1474,86 +1430,46 @@ def test_shared_arrs_handover_identical_outputs(spark):
             for i in range(60)
         ]
     )
-    arrs = shingle_arrays(docs, "doc_id", "text", 2).localCheckpoint(
-        eager=True
-    )
-
-    def key(rows):
-        return {(r.doc_a, r.doc_b, r.common, round(r.jaccard, 9)) for r in rows}
-
-    plain = key(
-        ngram_jaccard_pairs_auto(
-            docs, "doc_id", "text", n=2, min_jaccard=0.3
-        ).collect()
-    )
-    shared = key(
-        ngram_jaccard_pairs_auto(
-            docs, "doc_id", "text", n=2, min_jaccard=0.3, _arrs=arrs
-        ).collect()
-    )
-    assert shared == plain and plain
-
-    # prefix regime: string ids reject dense admission; the handed arrs
-    # must still be consumed by the prefix path with identical output
     sdocs = docs.select(
         F.concat(F.lit("d"), F.col("doc_id")).alias("doc_id"), "text"
     )
-    sarrs = shingle_arrays(sdocs, "doc_id", "text", 2).localCheckpoint(
-        eager=True
-    )
-    p_plain = key(
-        ngram_jaccard_pairs_auto(
-            sdocs, "doc_id", "text", n=2, min_jaccard=0.3
-        ).collect()
-    )
-    p_shared = key(
-        ngram_jaccard_pairs_auto(
-            sdocs, "doc_id", "text", n=2, min_jaccard=0.3, _arrs=sarrs
-        ).collect()
-    )
-    assert p_shared == p_plain and p_plain
 
-    # cross-jaccard with one or both sides handed over
+    def handed(frame):
+        arrs = shingle_arrays(frame, "doc_id", "text", 2).localCheckpoint(eager=True)
+        return ShingleCorpus(arrs, "doc_id", 2)
+
+    for frame in (docs, sdocs):
+        built = shingle_corpus(frame, "doc_id", "text", 2)
+        plain = _rows(set_similarity_pairs(built, "jaccard", 0.3))
+        shared = _rows(set_similarity_pairs(handed(frame), "jaccard", 0.3))
+        assert shared == plain and plain
+
+    # cross pairs with one or both sides handed over
     batch = docs.filter(F.col("doc_id") % 3 == 0)
     store = docs.filter(F.col("doc_id") % 3 != 0)
-    b_arrs = shingle_arrays(batch, "doc_id", "text", 2).localCheckpoint(
-        eager=True
-    )
-    s_arrs = shingle_arrays(store, "doc_id", "text", 2).localCheckpoint(
-        eager=True
-    )
 
-    def ckey(rows):
-        return {(r.bid, r.sid, round(r.jaccard, 9)) for r in rows}
+    def cross(b, s):
+        return _rows(set_similarity_pairs(b, "jaccard", 0.3, against=s))
 
-    c_plain = ckey(
-        exact_cross_jaccard(
-            batch, store, "doc_id", "text", n=2, min_jaccard=0.3
-        ).collect()
-    )
-    c_shared = ckey(
-        exact_cross_jaccard(
-            batch, store, "doc_id", "text", n=2, min_jaccard=0.3,
-            _batch_arrs=b_arrs, _store_arrs=s_arrs,
-        ).collect()
-    )
-    c_half = ckey(
-        exact_cross_jaccard(
-            batch, store, "doc_id", "text", n=2, min_jaccard=0.3,
-            _store_arrs=s_arrs,
-        ).collect()
-    )
+    c_plain = cross(shingle_corpus(batch, "doc_id", "text", 2), shingle_corpus(store, "doc_id", "text", 2))
+    c_shared = cross(handed(batch), handed(store))
+    c_half = cross(shingle_corpus(batch, "doc_id", "text", 2), handed(store))
     assert c_shared == c_plain == c_half and c_plain
+
+    # a corpus shingled otherwise than the call says is refused
+    with pytest.raises(ValueError, match="shingled by"):
+        set_similarity_pairs(handed(batch), "jaccard", 0.3, against=shingle_corpus(store, "doc_id"))
+    with pytest.raises(ValueError, match="shingled by"):
+        minhash_lsh_pairs(docs, "doc_id", n=3, corpus=handed(docs))
 
 
 def test_neardup_probe_against_index(spark, tmp_path):
     """A batch probed against a ``build_neardup_index`` store: an exact
     copy reports its store doc at 1.0 (the smaller store id on a tie), a
     doc sharing no shingle reports NULLs, and every reported best is an
-    exactly scored pair of ``exact_cross_jaccard``."""
+    exactly scored cross pair of ``set_similarity_pairs``."""
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
         build_neardup_index,
-        exact_cross_jaccard,
         neardup_probe,
     )
 
@@ -1586,9 +1502,10 @@ def test_neardup_probe_against_index(spark, tmp_path):
     assert got[101].n_candidates >= 2  # both copies were candidates
     assert got[102].best_match is None and got[102].best_jaccard is None
     exact = {
-        (r.bid, r.sid): round(r.jaccard, 6)
-        for r in exact_cross_jaccard(
-            batch, store, "doc_id", min_jaccard=0.5
+        (r.doc_a, r.doc_b): round(r.jaccard, 6)
+        for r in set_similarity_pairs(
+            shingle_corpus(batch, "doc_id"), "jaccard", 0.5,
+            against=shingle_corpus(store, "doc_id"),
         ).collect()
     }
     reported = [r for r in got.values() if r.best_match is not None]

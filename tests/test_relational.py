@@ -596,3 +596,36 @@ def test_exact_percentile_bounds_cardinality_guard(spark):
         F.expr("percentile(v, array(0.25D, 0.5D, 0.75D))")
     ).first()[0]
     assert exact == builtin
+
+
+def test_exact_percentile_bounds_reports_route(spark, caplog):
+    """The switch to percentile_approx above ``max_distinct`` is reported:
+    ``approx`` with the distinct count past a small cap, ``exact`` within
+    the default cap, each read against the cap through the ``spark_graft``
+    route record."""
+    import logging
+
+    from pyspark.sql import functions as F
+
+    from pyspark_weather_forecasting_gsod_spark.operators.quantiles import (
+        exact_percentile_bounds,
+    )
+
+    vals = spark.range(500).select((F.col("id") * 1.0).alias("v"))
+
+    def routes(**kw):
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="spark_graft"):
+            exact_percentile_bounds(vals, "v", [0.5], **kw).first()
+        return [
+            (r.operator, r.route, r.probes)
+            for r in caplog.records
+            if r.name == "spark_graft"
+        ]
+
+    assert routes(max_distinct=100) == [
+        ("exact_percentile_bounds", "approx", {"distinct": (101, 100)})
+    ]
+    assert routes() == [
+        ("exact_percentile_bounds", "exact", {"distinct": (500, 4_000_000)})
+    ]

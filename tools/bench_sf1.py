@@ -1,6 +1,6 @@
 """Scale rehearsal at sf1 for the regime routers (r05 VERDICT ask #6).
 
-The regime routers (``ngram_jaccard_pairs_auto``'s dense/prefix probes,
+The regime routers (``set_similarity_pairs``' driver/dense/prefix routes,
 ``bpe_train``'s 100k-vocab driver/distributed cutover, ``semantic_dedup``'s
 giant-cell split guard) document crossover points that BENCH only ever
 exercised at sf0.1. This tool synthesizes an sf1-scale corpus (10x sf0.1,
@@ -20,6 +20,7 @@ Usage:  python tools/bench_sf1.py [--rebuild]
 from __future__ import annotations
 
 import json
+import logging
 import os
 import sys
 import time
@@ -206,30 +207,37 @@ def main() -> None:
         .save()
     )
 
-    # --- router 1: ngram_jaccard_pairs_auto (dense vs prefix probes) ----
+    # --- router 1: set_similarity_pairs (driver / dense / prefix) --------
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-        ngram_jaccard_pairs_auto,
-        shingle_arrays,
+        set_similarity_pairs,
+        shingle_corpus,
     )
 
-    if not only or "jaccard_auto" in only:  # r08: no probes in subset mode
-        vocab_probe = (
-            shingle_arrays(docs, "doc_id", "text", 3)
-            .select(F.explode("shingles").alias("s"))
-            .distinct()
-            .limit(4097)
-            .count()
-        )
-        routes["jaccard_auto"] = (
-            f"corpus={n_docs} vocab_probe={'>4096' if vocab_probe > 4096 else vocab_probe}"
-            f" -> {'prefix' if (n_docs > 200_000 or vocab_probe > 4096) else 'dense'}"
-        )
-        timed(
-            "jaccard_auto",
-            lambda: ngram_jaccard_pairs_auto(
-                docs, "doc_id", "text", n=3, min_jaccard=0.8
-            ).count(),
-        )
+    def timed_route(name: str, fn) -> None:
+        """``timed``, with the route the pair router reported (its
+        ``spark_graft`` record, probes against caps) as ``routes[name]``."""
+        seen: list[logging.LogRecord] = []
+        handler = logging.Handler()
+        handler.emit = seen.append
+        log = logging.getLogger("spark_graft")
+        level = log.level
+        log.addHandler(handler)
+        log.setLevel(logging.INFO)
+        try:
+            timed(name, fn)
+        finally:
+            log.removeHandler(handler)
+            log.setLevel(level)
+        for rec in seen:
+            if rec.operator == "set_similarity_pairs":
+                routes[name] = f"corpus={n_docs} {rec.getMessage()}" + routes.get(name, "")
+
+    timed_route(
+        "jaccard_auto",
+        lambda: set_similarity_pairs(
+            shingle_corpus(docs, "doc_id", "text", 3), "jaccard", 0.8
+        ).count(),
+    )
 
     # --- router 2: bpe_train (driver loop vs distributed fold) ----------
     from pyspark_weather_forecasting_gsod_spark.ext.tokenizer import (
@@ -426,8 +434,8 @@ def main() -> None:
             )
         zipf = spark.read.parquet(zipf_path)
         n_zipf = zipf.count()
-        t1_probe = ngram_jaccard_pairs_auto(
-            zipf, "doc_id", "text", n=2, min_jaccard=0.5
+        t1_probe = set_similarity_pairs(
+            shingle_corpus(zipf, "doc_id", "text", 2), "jaccard", 0.5
         )
         n_t1_docs = (
             t1_probe.select(F.col("doc_a").alias("doc_id"))
@@ -476,7 +484,9 @@ def main() -> None:
     # filter, and the wall of the filtered prefix join.
     if not only or "prefix_skewed_sizefilter" in only:
         from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
-            ngram_jaccard_pairs_prefix,
+            _JACCARD,
+            _prefix_pairs,
+            _shingle_freq,
             word_shingles,
         )
         from pyspark.sql import Window as _W
@@ -546,12 +556,14 @@ def main() -> None:
             .count()
         )
         out_counts = {}
+        # the Spark prefix kernel itself, whatever the router would pick
+        skew_corpus = shingle_corpus(skew, "doc_id", "text", 2)
         timed(
             "prefix_skewed_sizefilter",
             lambda: out_counts.__setitem__(
                 "flt",
-                ngram_jaccard_pairs_prefix(
-                    skew, "doc_id", "text", n=2, min_jaccard=t
+                _prefix_pairs(
+                    skew_corpus, _JACCARD, t, _shingle_freq(skew_corpus.arrs)
                 ).count(),
             ),
         )
