@@ -310,9 +310,7 @@ def main() -> None:
         )
 
         run_gsod_pipeline(
-            weather_fixture(s, n_stations=20, n_days=30),
-            fast=True,
-            with_classifier=False,
+            weather_fixture(s, n_stations=20, n_days=30), with_classifier=False
         )
 
     code_warmups = {"gsod_pipeline_e2e": _warm_gsod}

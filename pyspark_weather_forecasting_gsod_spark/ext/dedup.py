@@ -156,13 +156,17 @@ def _is_bounded(df: DataFrame, max_rows: int = 1_000_000) -> bool:
     weakref finalizer evicting on garbage collection — eviction runs
     before CPython can reuse the id, so stale hits are impossible. A
     RECREATED frame (new object, same lineage) probes again by design:
-    object identity is the only safe proxy for "same data" here."""
+    object identity is the only safe proxy for "same data" here. A probe
+    that came back within cap c also answers every cap ≥ c."""
     import weakref
 
     key = id(df)
     per = _BOUNDED_MEMO.get(key)
-    if per is not None and max_rows in per:
-        return per[max_rows]
+    if per is not None:
+        if max_rows in per:
+            return per[max_rows]
+        if any(ok and c <= max_rows for c, ok in per.items()):
+            return True
     res = df.limit(max_rows + 1).count() <= max_rows
     if per is None:
         per = _BOUNDED_MEMO[key] = {}
@@ -380,9 +384,11 @@ def _index_pairs(
     rs = ls if right is left else sizes(right)
     za = ls.select(F.col(id_col).alias("doc_a"), F.col("sz").alias("sz_a"))
     zb = rs.select(F.col(id_col).alias("doc_b"), F.col("sz").alias("sz_b"))
-    # probe-gated broadcast (see _is_bounded); the self-join's two views
-    # share one size table, so one memoized probe covers both
-    if _is_bounded(ls) and _is_bounded(rs):
+    # probe-gated broadcast (see _is_bounded). A size table has its
+    # arrays' row count, so the probe is keyed on the arrays, which the
+    # caller's corpus keeps across calls (the per-call size frames are new
+    # objects), and the self-join's two views share one probe
+    if _is_bounded(left) and _is_bounded(right):
         za, zb = F.broadcast(za), F.broadcast(zb)
     return _scored(
         common.join(za, on="doc_a").join(zb, on="doc_b"),
@@ -878,9 +884,11 @@ def set_similarity_pairs(
         record(op, "cross", measure=m.name)
         return _index_pairs(arrs, against.arrs, id_col, m, t)
     if t == 0.0:
-        n_docs = arrs.limit(_INDEX_MAX_DOCS + 1).count()
-        record(op, "index", measure=m.name, n_docs=(n_docs, _INDEX_MAX_DOCS))
-        if n_docs > _INDEX_MAX_DOCS:
+        # memoized on the corpus's arrays, and within this cap it also
+        # decides _index_pairs' broadcast probe, so a repeat call runs none
+        bounded = _is_bounded(arrs, _INDEX_MAX_DOCS)
+        record(op, "index", measure=m.name, docs_within=(bounded, _INDEX_MAX_DOCS))
+        if not bounded:
             raise ValueError(
                 f"set_similarity_pairs: threshold 0 enumerates every pair sharing "
                 f"a shingle, and the corpus has more than {_INDEX_MAX_DOCS} docs "

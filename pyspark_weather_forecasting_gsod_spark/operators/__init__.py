@@ -1,10 +1,7 @@
 from .quality import missing_census, normalize_sentinels  # noqa: F401
 from .impute import (  # noqa: F401
-    fixed_proximity_impute,
     impute_with_group_median,
     proximity_impute_fixed_schedule,
-    proximity_mean_impute,
-    run_impute_strategy,
     seasonal_median_impute,
     zero_impute,
 )

@@ -1,6 +1,6 @@
 """Imputation operators — the heart of the reference's capability surface.
 
-Reference equivalents (SURVEY.md §2.10):
+Reference equivalents (SURVEY.md §2.10), one operator per strategy:
   * C2 ``MedianImputer`` — ipynb:784-838: per-group median fill with global
     median fallback. The reference collects all group medians to a Python
     dict on the driver and re-applies them through a row-at-a-time UDF
@@ -8,17 +8,19 @@ Reference equivalents (SURVEY.md §2.10):
     is a broadcast left join + ``coalesce``: fully distributed, no UDF, and
     the reference's FloatType downcast quirk (ipynb:822) is NOT replicated.
   * C3 ``ProximityMedian`` — ipynb:843-896: fill NULL with the mean of the
-    ±N surrounding rows (same group, ordered), N doubling until no nulls
-    remain or a cap, then a global fallback. ROWS frames (observation-based,
-    not calendar-based) exactly as the reference; a calendar-true variant is
-    available via ``range_based=True``.
+    ±N surrounding rows (same group, ordered) over a fixed list of passes,
+    then the exact global median for the residue
+    (``proximity_impute_fixed_schedule``). ROWS frames (observation-based,
+    not calendar-based) exactly as the reference; ``schedule=(7, 14, 28)``
+    is the reference's doubling.
   * C4 ``ImputeTempWithSeasonalMedian`` — ipynb:899-938: fill NULL with the
-    (group, month) median via groupBy + join-back, residue falling through to
-    the proximity chain.
+    (group, month) median via one aggregate + broadcast join-back, residue
+    falling through to the proximity chain (``seasonal_median_impute``).
   * C5 zero-impute — ipynb:953: ``na.fill({'prcp': 0})``.
-  * C6 strategy runner — ipynb:947-956, 1066-1067: ordered column→transform
-    map. The reference's loop re-executes the entire uncached lineage every
-    iteration (1,462+ stages, ipynb:1752); ours caches between steps.
+  * C6 strategy order — ipynb:947-956: the reference loops over an ordered
+    column→transform map and re-executes the whole uncached lineage every
+    iteration (1,462+ stages, ipynb:1752). ``pipelines/gsod.py`` composes
+    the same order as one lazy plan over these operators, materialized once.
 """
 
 from __future__ import annotations
@@ -105,122 +107,6 @@ def impute_with_group_median(
     return joined.select(*_ordered_out(df.columns, out_col, filled))
 
 
-def proximity_mean_impute(
-    df: DataFrame,
-    column: str,
-    group_by: str,
-    order_by: str | Sequence[str],
-    initial_num_rows: int = 7,
-    max_rows: int = 30,
-    fallback: str = "median",
-    range_based: bool = False,
-    out_col: str | None = None,
-) -> DataFrame:
-    """Fill NULLs with the mean of the ±N surrounding observations in the same
-    group (ordered), doubling N until no NULLs remain or ``max_rows`` is hit;
-    the residue is filled with a global median (or mean).
-
-    Reference: ipynb:843-896. Semantics preserved exactly: ROWS frames (the
-    "next" observation, not the next calendar unit — reference caveat at
-    SURVEY.md §2.5), doubling schedule 7→14→28 capped at ``max_rows``, global
-    fallback for rows whose whole frame is NULL. Two deliberate deviations,
-    both documented: the declared fallback uses exact ``median`` instead of
-    ``approxQuantile(relativeError=0.001)`` (ipynb:879 — sketch output is
-    config-dependent, unsuitable for oracle checks), and each iteration runs
-    on a **cached** frame so lineage does not grow superlinearly (the
-    reference re-executes all prior iterations' plans every pass,
-    ipynb:1066-1067 / 1752).
-
-    ``range_based=True`` switches to a calendar-true RANGE frame over the
-    (single) order column's day offset — the variant the reference's own
-    comments wish for.
-    """
-    order_cols = [order_by] if isinstance(order_by, str) else list(order_by)
-    out_col = out_col or column
-    work = df
-    if out_col != column:
-        work = work.withColumn(out_col, F.col(column))
-
-    num = initial_num_rows
-    # Eager convergence loop, as in the reference — but each iteration caches
-    # its input and unpersists the previous one, so iteration i's plan does
-    # not contain iterations 0..i-1.
-    cached: list[DataFrame] = []
-    while True:
-        work = work.persist()
-        cached.append(work)
-        remaining = work.filter(F.col(out_col).isNull()).count()
-        if remaining == 0 or num > max_rows:
-            break
-        if range_based:
-            days = F.datediff(F.col(order_cols[0]), F.lit("1970-01-01"))
-            w = (
-                Window.partitionBy(group_by)
-                .orderBy(days)
-                .rangeBetween(-num, num)
-            )
-        else:
-            w = (
-                Window.partitionBy(group_by)
-                .orderBy(*_order_cols(order_cols))
-                .rowsBetween(-num, num)
-            )
-        work = work.withColumn(
-            out_col,
-            F.when(F.col(out_col).isNull(), F.avg(out_col).over(w)).otherwise(
-                F.col(out_col)
-            ),
-        )
-        num *= 2
-
-    if remaining > 0:
-        fb = F.median(out_col) if fallback == "median" else F.avg(out_col)
-        fb_df = work.agg(fb.alias("__fb"))
-        work = (
-            work.join(F.broadcast(fb_df))
-            .select(
-                *[c for c in work.columns],
-                F.coalesce(F.col(out_col), F.col("__fb")).alias("__filled"),
-            )
-            .drop(out_col, "__fb")
-            .withColumnRenamed("__filled", out_col)
-        )
-    result = work.select(*df.columns) if out_col == column else work
-    # Materialization happens lazily downstream; free intermediate caches of
-    # earlier iterations but keep the last (it feeds the result plan; the
-    # ContextCleaner reclaims it once the plan is no longer referenced).
-    for c in cached[:-1]:
-        c.unpersist()
-    return result
-
-
-def fixed_proximity_impute(
-    df: DataFrame,
-    column: str,
-    group_by: str,
-    order_by: Sequence[str],
-    num_rows: int,
-    out_col: str | None = None,
-) -> DataFrame:
-    """One deterministic proximity pass (±num_rows frame mean) + exact global
-    median for the residue. This is the oracle-checkable declared variant of
-    ``proximity_mean_impute`` — no data-dependent loop, same frame semantics.
-    """
-    out_col = out_col or column
-    w = (
-        Window.partitionBy(group_by)
-        .orderBy(*_order_cols(order_by))
-        .rowsBetween(-num_rows, num_rows)
-    )
-    frame_mean = F.avg(column).over(w)
-    gmed = df.agg(F.median(column).alias("__gmed"))
-    filled = df.withColumn("__frame", F.when(F.col(column).isNull(), frame_mean))
-    out_expr = F.coalesce(F.col(column), F.col("__frame"), F.col("__gmed"))
-    return filled.join(F.broadcast(gmed)).select(
-        *_ordered_out(df.columns, out_col, out_expr)
-    )
-
-
 def proximity_impute_fixed_schedule(
     df: DataFrame,
     column: str | Sequence[str],
@@ -228,12 +114,15 @@ def proximity_impute_fixed_schedule(
     order_by: Sequence[str],
     schedule: Sequence[int] = (2, 4),
 ) -> DataFrame:
-    """The doubling-schedule proximity imputer with a FIXED pass list — the
-    reference's exact per-pass semantics (each pass's frame averages over the
-    previous pass's partially-filled column, ipynb:863-875) but without the
-    data-dependent eager convergence counts, so the whole chain is one lazy
-    plan (and SQL-expressible for the oracle). Residue → exact global
-    median.
+    """Fill NULLs with the mean of the ±n surrounding observations in the
+    same group, one pass per ``n`` in ``schedule``: each pass's frame
+    averages over the previous pass's partially-filled column, the
+    reference's per-pass semantics (ipynb:863-875), and ``(7, 14, 28)`` is
+    its doubling. The pass list is fixed instead of stopping when a count
+    reads zero, so the whole chain is one lazy plan (and SQL-expressible
+    for the oracle). The residue takes the exact global median of the
+    input column; the reference takes ``approxQuantile`` over the
+    partly filled one (ipynb:879).
 
     Accepts MULTIPLE columns: all of them impute through the SAME window
     specs, so Catalyst plans one exchange + one sort per pass no matter how
@@ -277,64 +166,26 @@ def proximity_impute_fixed_schedule(
 
 def seasonal_median_impute(
     df: DataFrame,
-    column: str,
+    column: str | Sequence[str],
     group_by: str,
     date_col: str,
-    out_col: str | None = None,
     fallback: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
-    """Fill NULLs with the exact median for (group, month-of-``date_col``);
-    rows in all-NULL (group, month) cells fall through to ``fallback`` (the
-    proximity chain in the reference, ipynb:933-935) or, if none is given, to
-    the global median.
+    """Fill NULLs in ``column`` (one name or a list) in place with the exact
+    median of its (group, month-of-``date_col``) cell; rows in all-NULL
+    cells fall through to ``fallback`` (the proximity chain in the
+    reference, ipynb:933-935) or, if none is given, to the global median.
 
     Reference: ipynb:899-938 — groupBy(stn, month(date)) median, left-outer
-    join back on a **computed expression key** (J1, ipynb:921), when-merge.
-    The month key is computed once into the fact side so the join is a plain
-    two-key equi-join (hashable, broadcastable); the agg side is
-    |groups|×12 rows → broadcast.
-    """
-    out_col = out_col or column
-    mo = F.month(F.col(date_col))
-    seasonal = (
-        df.groupBy(F.col(group_by), mo.alias("__mo"))
-        .agg(F.median(column).alias("__smed"))
-    )
-    fact = df.withColumn("__mo", mo)
-    joined = fact.join(F.broadcast(seasonal), on=[group_by, "__mo"], how="left")
-    merged = joined.withColumn(
-        out_col,
-        F.coalesce(F.col(column) if out_col != column else F.col(out_col), F.col("__smed")),
-    ).drop("__mo", "__smed")
-    if fallback is not None:
-        return fallback(merged)
-    gmed = df.agg(F.median(column).alias("__gmed"))
-    out_expr = F.coalesce(F.col(out_col), F.col("__gmed"))
-    return merged.join(F.broadcast(gmed)).select(
-        *_ordered_out(merged.columns, out_col, out_expr)
-    )
-
-
-def seasonal_median_impute_multi(
-    df: DataFrame,
-    columns: Sequence[str],
-    group_by: str,
-    date_col: str,
-    fallback: Callable[[DataFrame], DataFrame] | None = None,
-) -> DataFrame:
-    """Multi-column ``seasonal_median_impute`` (r11, guide §1.2/§2.3):
-    per-column output PROVABLY identical to chaining the single-column
-    imputer once per column — each stage only ever reads and writes its
-    own column, so the (group, month) medians and every residue are
-    column-independent — but all columns share ONE (group, month)
-    aggregate pass, ONE broadcast join, and (via a multi-column
-    ``fallback`` such as ``proximity_impute_fixed_schedule``) one shared
-    window-exchange chain, where the chained form paid one full
-    agg + join + fallback chain per column (the gsod pipeline's two
-    seasonal stages, measured as separate checkpoint rounds). Fill is
-    in-place (``out_col == column``), pytest-asserted equal to the
-    sequential chain."""
-    cols = list(columns)
+    join back on a computed expression key (J1, ipynb:921), when-merge. The
+    month key is computed once into the fact side, so the join is a plain
+    two-key equi-join, and the aggregate side is |groups|×12 rows, so it is
+    broadcast. Each column reads and writes only itself, so every column's
+    output equals that of a one-column call, while all columns share one
+    aggregate pass, one broadcast join and, through a multi-column
+    ``fallback`` such as ``proximity_impute_fixed_schedule``, one window
+    chain."""
+    cols = [column] if isinstance(column, str) else list(column)
     mo = f"month({quote_ident(date_col)})"
     smed = {c: quote_ident(f"__smed_{c}") for c in cols}
     seasonal = df.groupBy(F.expr(quote_ident(group_by)), F.expr(f"{mo} AS __mo")).agg(
@@ -342,10 +193,9 @@ def seasonal_median_impute_multi(
     )
     fact = df.selectExpr("*", f"{mo} AS __mo")
     joined = fact.join(F.broadcast(seasonal), on=[group_by, "__mo"], how="left")
-    # a USING join outputs its key first, then the other fact columns
+    # in the input's column order (a USING join outputs its key first)
     merged = joined.selectExpr(*_projection_sql(
-        [group_by, *(c for c in df.columns if c != group_by)],
-        {c: f"coalesce({quote_ident(c)}, {smed[c]})" for c in cols},
+        df.columns, {c: f"coalesce({quote_ident(c)}, {smed[c]})" for c in cols}
     ))
     if fallback is not None:
         return fallback(merged)
@@ -447,23 +297,3 @@ def zero_impute(df: DataFrame, columns: dict[str, float]) -> DataFrame:
     """Constant fill (reference C5, ipynb:953: ``na.fill({'prcp': 0})`` —
     "no report means no rain")."""
     return df.na.fill(columns)
-
-
-def run_impute_strategy(
-    df: DataFrame,
-    strategy: dict[str, Callable[[DataFrame], DataFrame]],
-    checkpoint_every: int = 0,
-) -> DataFrame:
-    """Apply an ordered column→imputer map (reference C6, ipynb:947-956).
-
-    Order matters: already-imputed columns feed later windowed imputers,
-    exactly as in the reference. ``checkpoint_every`` > 0 truncates lineage
-    every N steps via ``localCheckpoint`` — at 100 TB an un-truncated
-    30-step lineage makes every downstream stage replay the whole chain on
-    any task retry.
-    """
-    for i, (col, fn) in enumerate(strategy.items()):
-        df = fn(df)
-        if checkpoint_every and (i + 1) % checkpoint_every == 0:
-            df = df.localCheckpoint(eager=False)
-    return df

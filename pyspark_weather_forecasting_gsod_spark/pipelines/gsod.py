@@ -21,7 +21,7 @@ from __future__ import annotations
 import math
 
 from pyspark.ml.feature import VectorAssembler
-from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..ml.models import (
@@ -32,14 +32,12 @@ from ..ml.models import (
 )
 from ..operators.impute import (
     proximity_impute_fixed_schedule,
-    proximity_mean_impute,
-    run_impute_strategy,
     seasonal_median_impute,
-    seasonal_median_impute_multi,
     zero_impute,
 )
 from ..operators.quality import census_sql, normalize_sentinels
 from ..operators.sampling import hash_bucket_sql
+from ..operators.sql_text import quote_ident, sql_literal
 from ..operators.windows import lead_labels
 
 # The reference's sentinel map (ipynb:239-243).
@@ -102,110 +100,86 @@ def gsod_csv_schema():
     return T.StructType(fields)
 
 
-def _u(seed: int, *cols: Column | str) -> Column:
-    """Deterministic uniform [0,1): hash-based, partitioning-independent
-    (unlike F.rand, whose stream depends on partition layout)."""
-    return F.pmod(F.xxhash64(F.lit(seed), *cols), F.lit(1_000_000)) / 1_000_000.0
+def _u(seed: int, *cols: str) -> str:
+    """SQL text of a deterministic uniform [0,1): hash-based and
+    partitioning-independent (unlike rand(), whose stream depends on the
+    partition layout). ``cols`` are SQL expression texts."""
+    return (
+        f"(pmod(xxhash64({sql_literal(seed)}, {', '.join(cols)}), 1000000)"
+        " / 1000000.0D)"
+    )
 
 
 def weather_fixture(
     spark: SparkSession, n_stations: int = 50, n_days: int = 200, seed: int = 42
 ) -> DataFrame:
     """GSOD-shaped synthetic table, one row per (stn, date), sentinel-encoded
-    missing values, FIXTURES.md §A pathological cases baked in."""
-    base = spark.range(n_stations * n_days).select(
-        (F.col("id") / n_days).cast("long").alias("stn_idx"),
-        F.pmod(F.col("id"), F.lit(n_days)).alias("day_idx"),
+    missing values, FIXTURES.md §A pathological cases baked in.
+
+    The ~150 column expressions are SQL text (``operators/sql_text.py``),
+    one ``selectExpr`` for all of them: built as Column trees they cost
+    ~3,000 py4j round trips per call."""
+    lit = sql_literal
+    base = spark.range(n_stations * n_days).selectExpr(
+        f"CAST(id / {lit(n_days)} AS BIGINT) AS stn_idx",
+        f"pmod(id, {lit(n_days)}) AS day_idx",
     )
-    day = F.col("day_idx")
-    stn = F.col("stn_idx")
-    date = F.date_add(F.lit("2023-01-01").cast("date"), day.cast("int"))
-    seasonal = 50.0 + 30.0 * F.sin(day * (2.0 * math.pi / 365.0)) - (stn % 20) * 0.8
+    date = "date_add(CAST('2023-01-01' AS DATE), CAST(day_idx AS INT))"
+    seasonal = (
+        f"(((sin(day_idx * {lit(2.0 * math.pi / 365.0)}) * 30.0D) + 50.0D)"
+        " - ((stn_idx % 20) * 0.8D))"
+    )
 
-    def measure(name: str, center: Column, spread: float, sentinel: float, miss: Column):
-        noise = (_u(seed, stn, day, F.lit(name)) - 0.5) * (2 * spread)
-        val = F.round(center + noise, 2)
-        return F.when(miss, F.lit(sentinel)).otherwise(val).alias(name)
+    def u(seed_: int, name: str) -> str:
+        return _u(seed_, "stn_idx", "day_idx", lit(name))
 
-    miss_base = {c: _u(seed + 1, stn, day, F.lit(c)) for c in GSOD_SENTINELS}
     # pathological: station 0's visib entirely sentinel; (station 1, month 2)
     # all-sentinel for max/min (forces seasonal→fallback chain)
     miss = {
-        c: (u < 0.08) if c not in ("sndp", "gust") else (u < 0.9)
-        for c, u in miss_base.items()
+        c: f"({u(seed + 1, c)} < {lit(0.9 if c in ('sndp', 'gust') else 0.08)})"
+        for c in GSOD_SENTINELS
     }
-    miss["visib"] = miss["visib"] | (stn == 0)
-    feb = F.month(date) == 2
-    miss["max"] = miss["max"] | ((stn == 1) & feb)
-    miss["min"] = miss["min"] | ((stn == 1) & feb)
+    miss["visib"] = f"({miss['visib']} OR (stn_idx = 0))"
+    for c in ("max", "min"):
+        miss[c] = f"({miss[c]} OR ((stn_idx = 1) AND (month({date}) = 2)))"
 
-    df = base.select(
-        F.lpad(stn.cast("string"), 6, "0").alias("stn"),
-        F.lit(99999).alias("wban"),
-        date.alias("date"),
-        F.year(date).alias("year"),
-        F.month(date).alias("mo"),
-        F.dayofmonth(date).alias("da"),
-        measure("temp", seasonal, 8.0, 9999.9, miss["temp"]),
-        measure("dewp", seasonal - 10.0, 8.0, 9999.9, miss["dewp"]),
-        measure("slp", F.lit(1013.0), 15.0, 9999.9, miss["slp"]),
-        measure("stp", F.lit(990.0), 15.0, 9999.9, miss["stp"]),
-        measure("max", seasonal + 10.0, 6.0, 9999.9, miss["max"]),
-        measure("min", seasonal - 10.0, 6.0, 9999.9, miss["min"]),
-        measure("visib", F.lit(9.0), 5.0, 999.9, miss["visib"]),
-        measure("wdsp", F.lit(8.0), 6.0, 999.9, miss["wdsp"]),
-        measure("mxpsd", F.lit(15.0), 8.0, 999.9, miss["mxpsd"]),
-        measure("gust", F.lit(22.0), 10.0, 999.9, miss["gust"]),
-        measure("sndp", F.lit(4.0), 3.0, 999.9, miss["sndp"]),
-        F.when(miss["prcp"], F.lit(99.99))
-        .otherwise(F.round(F.greatest(_u(seed, stn, day, F.lit("prcp")) * 2.0 - 1.5, F.lit(0.0)), 2))
-        .alias("prcp"),
-        *[F.lit(12).alias(f"count_{c}") for c in ("temp", "dewp", "slp", "stp", "visib", "wdsp")],
-        *[F.lit(None).cast("string").alias(c) for c in ("flag_max", "flag_min", "flag_prcp")],
-        *[
-            (_u(seed + 2, stn, day, F.lit(c)) < 0.2).cast("int").alias(c)
-            for c in INDICATORS
-        ],
+    def measure(name: str, center: str, spread: float) -> str:
+        noise = f"(({u(seed, name)} - 0.5D) * {lit(2 * spread)})"
+        return (
+            f"CASE WHEN {miss[name]} THEN {lit(GSOD_SENTINELS[name])} "
+            f"ELSE round(({center} + {noise}), 2) END AS {quote_ident(name)}"
+        )
+
+    df = base.selectExpr(
+        "lpad(CAST(stn_idx AS STRING), 6, '0') AS stn",
+        "99999 AS wban",
+        f"{date} AS `date`",
+        f"year({date}) AS `year`",
+        f"month({date}) AS mo",
+        f"dayofmonth({date}) AS da",
+        measure("temp", seasonal, 8.0),
+        measure("dewp", f"({seasonal} - 10.0D)", 8.0),
+        measure("slp", "1013.0D", 15.0),
+        measure("stp", "990.0D", 15.0),
+        measure("max", f"({seasonal} + 10.0D)", 6.0),
+        measure("min", f"({seasonal} - 10.0D)", 6.0),
+        measure("visib", "9.0D", 5.0),
+        measure("wdsp", "8.0D", 6.0),
+        measure("mxpsd", "15.0D", 8.0),
+        measure("gust", "22.0D", 10.0),
+        measure("sndp", "4.0D", 3.0),
+        f"CASE WHEN {miss['prcp']} THEN 99.99D ELSE "
+        f"round(greatest((({u(seed, 'prcp')} * 2.0D) - 1.5D), 0.0D), 2) END AS prcp",
+        *[f"12 AS count_{c}" for c in ("temp", "dewp", "slp", "stp", "visib", "wdsp")],
+        *[f"CAST(NULL AS STRING) AS {c}" for c in ("flag_max", "flag_min", "flag_prcp")],
+        *[f"CAST(({u(seed + 2, c)} < 0.2D) AS INT) AS {c}" for c in INDICATORS],
     )
     # per-station date gaps (row-vs-calendar lead caveat) + a single-row station
-    gaps = _u(seed + 3, F.col("stn"), F.col("da"), F.col("mo")) < 0.05
-    last = F.lpad(F.lit(n_stations - 1).cast("string"), 6, "0")
-    return df.filter(~gaps | (F.col("da") == 1)).filter(
-        (F.col("stn") != last) | ((F.col("mo") == 1) & (F.col("da") == 1))
+    gaps = f"({_u(seed + 3, 'stn', 'da', 'mo')} < 0.05D)"
+    last = f"lpad(CAST({lit(n_stations - 1)} AS STRING), 6, '0')"
+    return df.filter(f"(NOT {gaps}) OR (da = 1)").filter(
+        f"(stn != {last}) OR ((mo = 1) AND (da = 1))"
     )
-
-
-def gsod_impute_strategy(fast: bool = False):
-    """The reference's ordered strategy dict (ipynb:947-956): proximity for
-    visib/wdsp/mxpsd, zero for prcp, seasonal(+proximity fallback) for
-    max/min."""
-    prox_args = dict(initial_num_rows=7, max_rows=30)
-    if fast:
-        prox_args = dict(initial_num_rows=4, max_rows=8)
-
-    def prox(col):
-        return lambda d: proximity_mean_impute(
-            d, col, group_by="stn", order_by="date", **prox_args
-        )
-
-    def seasonal(col):
-        return lambda d: seasonal_median_impute(
-            d, col, group_by="stn", date_col="date",
-            fallback=lambda m: proximity_mean_impute(
-                m, col, group_by="stn", order_by="date", **prox_args
-            ),
-        )
-
-    return {
-        "visib": prox("visib"),
-        "wdsp": prox("wdsp"),
-        "mxpsd": prox("mxpsd"),
-        "prcp": lambda d: zero_impute(d, {"prcp": 0.0}),
-        "max": seasonal("max"),
-        "min": seasonal("min"),
-        "temp": prox("temp"),
-        "stp": prox("stp"),
-    }
 
 
 def featurize(labeled: DataFrame) -> DataFrame:
@@ -215,13 +189,23 @@ def featurize(labeled: DataFrame) -> DataFrame:
 
 
 def run_gsod_pipeline(
-    df: DataFrame, fast: bool = False, with_classifier: bool = True
+    df: DataFrame, fast: bool = True, with_classifier: bool = True
 ) -> dict[str, object]:
     """Full reference pipeline. Returns the imputed frame, the null census
     row, train/eval metrics, and a per-phase wall-clock breakdown
     (``timings``) so bench regressions decompose to a named stage instead
-    of one opaque number (VERDICT r04 What's-wrong #1)."""
+    of one opaque number (VERDICT r04 What's-wrong #1).
+
+    ``fast`` remains for callers that pass ``fast=True``, the one impute
+    plan there is; any other value raises."""
     import time as _time
+
+    if fast is not True:
+        raise ValueError(
+            f"run_gsod_pipeline: fast={fast!r}: the staged impute chain was "
+            "removed; the one-checkpoint plan (fast=True, the default) is the "
+            "only one"
+        )
 
     timings: dict[str, float] = {}
     _t0 = _time.time()
@@ -234,23 +218,20 @@ def run_gsod_pipeline(
 
     norm = normalize_sentinels(df, GSOD_SENTINELS)
     slim = norm.drop(*GSOD_DROPS)
-    if fast:
-        # One lazy plan. Every imputed column reads and writes only itself,
-        # so all seven proximity columns can share the seasonal stage's
-        # fallback window chain and each value still equals what the
-        # ordered strategy computes.
-        imputed = seasonal_median_impute_multi(
-            zero_impute(slim, {"prcp": 0.0}), ["max", "min"],
-            group_by="stn", date_col="date",
-            fallback=lambda m: proximity_impute_fixed_schedule(
-                m, ["visib", "wdsp", "mxpsd", "max", "min", "temp", "stp"],
-                group_by="stn", order_by=["date"], schedule=(4, 8),
-            ),
-        )
-    else:
-        imputed = run_impute_strategy(
-            slim, gsod_impute_strategy(fast), checkpoint_every=3
-        )
+    # The reference's ordered strategy (ipynb:947-956): proximity for
+    # visib/wdsp/mxpsd, zero for prcp, seasonal with a proximity fallback
+    # for max/min, proximity for temp/stp. One lazy plan: every imputed
+    # column reads and writes only itself, so all seven proximity columns
+    # share the seasonal stage's fallback window chain and each value
+    # still equals what the ordered strategy computes.
+    imputed = seasonal_median_impute(
+        zero_impute(slim, {"prcp": 0.0}), ["max", "min"],
+        group_by="stn", date_col="date",
+        fallback=lambda m: proximity_impute_fixed_schedule(
+            m, ["visib", "wdsp", "mxpsd", "max", "min", "temp", "stp"],
+            group_by="stn", order_by=["date"], schedule=(4, 8),
+        ),
+    )
 
     # One checkpoint suffices: every branch of the plan (the (stn, month)
     # and global-median aggregates, the window chain) reads the same input,

@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.impute import (
-    fixed_proximity_impute,
     impute_with_group_median,
+    proximity_impute_fixed_schedule,
     seasonal_median_impute,
 )
 from ..operators.quality import missing_census, normalize_sentinels
@@ -438,10 +438,8 @@ def impute_seasonal_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# C3 (W2 + A2): proximity imputation, declared deterministic variant —
-# one ±4-row frame-mean pass + exact global median residue (the iterative
-# doubling variant is operators.impute.proximity_mean_impute; its convergence
-# loop is data-dependent so it is exercised in pytest, not the oracle).
+# C3 (W2 + A2): proximity imputation — one ±4-row frame-mean pass + exact
+# global median residue (``impute_proximity_doubling`` runs two passes).
 # ---------------------------------------------------------------------------
 @query(
     "impute_proximity_events",
@@ -475,8 +473,8 @@ def impute_proximity_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").alias("v"),
         F.col("value").isNull().cast("long").alias("was_null"),
     )
-    imputed = fixed_proximity_impute(
-        base, "v", group_by="user_id", order_by=["ts", "event_id"], num_rows=4
+    imputed = proximity_impute_fixed_schedule(
+        base, "v", group_by="user_id", order_by=["ts", "event_id"], schedule=(4,)
     )
     return imputed.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -3076,8 +3074,6 @@ def impute_proximity_doubling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's doubling schedule (±2 then ±4, each pass averaging
     over the previous pass's partially-filled column, ipynb:863-875) as ONE
     lazy plan — oracle-checked end-to-end."""
-    from ..operators.impute import proximity_impute_fixed_schedule
-
     norm = _events_normalized(spark, sf_dir)
     base = norm.select("event_id", "user_id", "ts", F.col("value").alias("v"))
     filled = proximity_impute_fixed_schedule(
@@ -4784,7 +4780,7 @@ def gsod_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tune(spark)
     wx = weather_fixture(spark, n_stations=1000, n_days=365)
-    out = run_gsod_pipeline(wx, fast=True, with_classifier=False)
+    out = run_gsod_pipeline(wx, with_classifier=False)
     rows = [("census_" + k, float(v)) for k, v in sorted(out["census"].items())]
     rows += [("reg_" + k, round(float(v), 4)) for k, v in sorted(out["regression"].items())]
     # per-phase wall clock: makes any future bench drift decompose to a

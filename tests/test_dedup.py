@@ -1605,13 +1605,41 @@ def test_edit_distance_prefix_dedup_ships_no_strings(spark):
     assert (0, 1) in got and all(a < b for a, b in got)
 
 
+def test_index_route_probes_once_per_corpus(spark):
+    """At threshold 0 the docs guard's limit-count also decides the size
+    tables' broadcast (a probe within the 200k cap answers the 1M one),
+    and the probe is memoized on the corpus's arrays: the first call runs
+    one probe (the guard plus a separate probe on a per-call size frame
+    ran 4 jobs on every call) and a repeat call runs none. The size tables
+    are still broadcast."""
+    docs = spark.createDataFrame(
+        [(i, " ".join(f"w{(i * 7 + j) % 50}" for j in range(12))) for i in range(200)],
+        "doc_id long, text string",
+    )
+    corpus = shingle_corpus(docs, "doc_id", "text", 3)
+    first, first_jobs = _jobs_in_group(
+        spark, "test-index-route-first",
+        lambda: set_similarity_pairs(corpus, "jaccard", 0.0),
+    )
+    again, again_jobs = _jobs_in_group(
+        spark, "test-index-route-again",
+        lambda: set_similarity_pairs(corpus, "jaccard", 0.0),
+    )
+    assert 0 < first_jobs < 4, first_jobs
+    assert again_jobs == 0, again_jobs
+    for pairs in (first, again):
+        assert "BroadcastHashJoin" in pairs._jdf.queryExecution().executedPlan().toString()
+    assert sorted(first.collect()) == sorted(again.collect()) and first.count()
+
+
 def test_is_bounded_probe_memoized_per_dataframe_object(spark):
     """r11 (VERDICT r10 #7): _is_bounded runs an eager limit-count job per
     call, so repeated invocations on the SAME DataFrame object must hit a
     memo instead of re-executing the lineage. Proven by poisoning the memo
     entry after the first probe: a second call returning the poisoned
-    value can only have come from the cache. A new object over the same
-    data must re-probe (object identity is the contract)."""
+    value can only have come from the cache. A probe within a cap answers
+    every larger cap without a new slot. A new object over the same data
+    must re-probe (object identity is the contract)."""
     from pyspark_weather_forecasting_gsod_spark.ext.dedup import (
         _BOUNDED_MEMO,
         _is_bounded,
@@ -1622,8 +1650,13 @@ def test_is_bounded_probe_memoized_per_dataframe_object(spark):
     assert _BOUNDED_MEMO[id(df)][100] is True
     _BOUNDED_MEMO[id(df)][100] = False  # poison: detect any cache hit
     assert _is_bounded(df, max_rows=100) is False
-    # distinct max_rows → distinct memo slot, fresh probe
+    _BOUNDED_MEMO[id(df)][100] = True
+    # a smaller cap is not answered by a probe within the larger one:
+    # fresh probe
     assert _is_bounded(df, max_rows=5) is False
+    assert _BOUNDED_MEMO[id(df)][5] is False
+    # within cap 100 answers every cap ≥ 100 without a new slot
+    assert _is_bounded(df, max_rows=1000) is True and 1000 not in _BOUNDED_MEMO[id(df)]
     # a recreated frame (new object) probes fresh, not the poisoned slot
     df2 = spark.range(10).toDF("doc_id")
     assert _is_bounded(df2, max_rows=100) is True

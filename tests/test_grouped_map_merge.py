@@ -78,7 +78,7 @@ def test_gsod_pipeline_from_csv(spark, scratch):
     back = read_csv(spark, csv_dir, schema)
     assert back.count() == wx.count()
     assert back.schema == schema  # no inference drift — stn stays string
-    out = run_gsod_pipeline(back, fast=True, with_classifier=False)
+    out = run_gsod_pipeline(back, with_classifier=False)
     assert all(v == 0 for k, v in out["census"].items() if k.startswith("null_"))
 
 

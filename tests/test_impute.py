@@ -2,8 +2,8 @@
 
 Covers the reference's documented behaviors: per-group median with global
 fallback, proximity frame math with the doubling schedule and frame-edge
-cases, seasonal (group, month) medians with fallback chaining, zero fill, and
-ordered strategy application. Property tests assert the reference's own
+cases, seasonal (group, month) medians with fallback chaining, and zero
+fill. Property tests assert the reference's own
 acceptance criterion (post-imputation null census == 0, ipynb:1128-1152) and
 that imputation never modifies non-null values.
 """
@@ -15,11 +15,8 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from pyspark_weather_forecasting_gsod_spark.operators.impute import (
-    fixed_proximity_impute,
     impute_with_group_median,
     proximity_impute_fixed_schedule,
-    proximity_mean_impute,
-    run_impute_strategy,
     seasonal_median_impute,
     zero_impute,
 )
@@ -57,7 +54,7 @@ def test_proximity_frame_mean_fills_from_neighbors(spark):
         for i, val in enumerate([10.0, None, 20.0, 30.0, 40.0])
     ]
     df = spark.createDataFrame(rows)
-    out = fixed_proximity_impute(df, "v", "stn", ["date"], num_rows=1)
+    out = proximity_impute_fixed_schedule(df, "v", "stn", ["date"], schedule=(1,))
     got = {r.date.day: r.v for r in out.collect()}
     # day 2's ±1 frame = {10, None, 20} → mean 15
     assert got[2] == 15.0
@@ -71,7 +68,7 @@ def test_proximity_all_null_frame_falls_back_to_global_median(spark):
         Row(stn="b", date=D(2023, 1, 2), v=8.0),
     ]
     df = spark.createDataFrame(rows)
-    out = fixed_proximity_impute(df, "v", "stn", ["date"], num_rows=1)
+    out = proximity_impute_fixed_schedule(df, "v", "stn", ["date"], schedule=(1,))
     got = {(r.stn, r.date.day): r.v for r in out.collect()}
     assert got[("a", 1)] == 6.0  # global median of {4, 8}
 
@@ -86,8 +83,8 @@ def test_proximity_doubling_schedule_converges(spark):
         Row(stn="a", date=D(2023, 1, 4), v=24.0),
     ]
     df = spark.createDataFrame(rows)
-    out = proximity_mean_impute(
-        df, "v", group_by="stn", order_by="date", initial_num_rows=1, max_rows=8
+    out = proximity_impute_fixed_schedule(
+        df, "v", group_by="stn", order_by=["date"], schedule=(1, 2, 4, 8)
     )
     got = {r.date.day: r.v for r in out.collect()}
     assert got[3] == 12.0 and got[4] == 24.0
@@ -103,8 +100,8 @@ def test_proximity_residue_uses_global_median_fallback(spark):
         Row(stn="b", date=D(2023, 1, 2), v=15.0),
     ]
     df = spark.createDataFrame(rows)
-    out = proximity_mean_impute(
-        df, "v", group_by="stn", order_by="date", initial_num_rows=1, max_rows=1
+    out = proximity_impute_fixed_schedule(
+        df, "v", group_by="stn", order_by=["date"], schedule=(1,)
     )
     got = {(r.stn, r.date.day): r.v for r in out.collect()}
     assert got[("a", 1)] == 10.0  # global median
@@ -126,16 +123,11 @@ def test_seasonal_median_impute_with_monthly_groups(spark):
     assert got[("b", 2, 1)] == 100.0
 
 
-def test_seasonal_median_impute_multi_equals_sequential_chain(spark):
-    """r11: the fused multi-column seasonal imputer must reproduce the
-    sequential single-column chain bit for bit — both with the default
-    global-median residue and with a shared proximity fallback (the gsod
-    fast path's shape), including all-NULL (group, month) cells."""
-    from pyspark_weather_forecasting_gsod_spark.operators.impute import (
-        proximity_impute_fixed_schedule,
-        seasonal_median_impute_multi,
-    )
-
+def test_seasonal_median_impute_columns_equal_one_column_chain(spark):
+    """A multi-column call reproduces a chain of one-column calls bit for
+    bit — both with the default global-median residue and with a shared
+    proximity fallback (the gsod pipeline's shape), including all-NULL
+    (group, month) cells."""
     rows = [
         Row(stn="a", date=D(2023, 1, 1), x=10.0, y=None),
         Row(stn="a", date=D(2023, 1, 5), x=None, y=2.0),
@@ -154,12 +146,13 @@ def test_seasonal_median_impute_multi_equals_sequential_chain(spark):
     # default residue: global median per column
     seq = seasonal_median_impute(df, "x", group_by="stn", date_col="date")
     seq = seasonal_median_impute(seq, "y", group_by="stn", date_col="date")
-    multi = seasonal_median_impute_multi(
+    multi = seasonal_median_impute(
         df, ["x", "y"], group_by="stn", date_col="date"
     )
     assert key(multi) == key(seq)
+    assert multi.columns == df.columns
 
-    # shared proximity fallback (gsod fast-path shape)
+    # shared proximity fallback (gsod pipeline shape)
     def prox1(c):
         return lambda m: proximity_impute_fixed_schedule(
             m, c, group_by="stn", order_by=["date"], schedule=(2, 4)
@@ -171,7 +164,7 @@ def test_seasonal_median_impute_multi_equals_sequential_chain(spark):
     seq_fb = seasonal_median_impute(
         seq_fb, "y", group_by="stn", date_col="date", fallback=prox1("y")
     )
-    multi_fb = seasonal_median_impute_multi(
+    multi_fb = seasonal_median_impute(
         df, ["x", "y"], group_by="stn", date_col="date",
         fallback=lambda m: proximity_impute_fixed_schedule(
             m, ["x", "y"], group_by="stn", order_by=["date"], schedule=(2, 4)
@@ -179,9 +172,14 @@ def test_seasonal_median_impute_multi_equals_sequential_chain(spark):
     )
     assert key(multi_fb) == key(seq_fb)
     assert multi_fb.columns == df.columns
+    # the input's column order holds when the group key is not first
+    moved = df.select("date", "x", "stn", "y")
+    for fb in (None, prox1("x")):
+        out = seasonal_median_impute(moved, "x", group_by="stn", date_col="date", fallback=fb)
+        assert out.columns == moved.columns
 
-    # r12: EXTRA fallback columns untouched by the seasonal stage (the
-    # gsod fast path folds its trailing temp/stp proximity stage into the
+    # EXTRA fallback columns untouched by the seasonal stage (the gsod
+    # pipeline folds its trailing temp/stp proximity stage into the
     # seasonal fallback) must equal running that proximity stage
     # separately AFTER the seasonal chain — per-column independence.
     rows2 = [
@@ -194,14 +192,14 @@ def test_seasonal_median_impute_multi_equals_sequential_chain(spark):
     def key2(frame):
         return sorted((r.stn, r.date, r.x, r.y, r.z) for r in frame.collect())
 
-    fused = seasonal_median_impute_multi(
+    fused = seasonal_median_impute(
         df2, ["x", "y"], group_by="stn", date_col="date",
         fallback=lambda m: proximity_impute_fixed_schedule(
             m, ["x", "y", "z"], group_by="stn", order_by=["date"],
             schedule=(2, 4),
         ),
     )
-    separate = seasonal_median_impute_multi(
+    separate = seasonal_median_impute(
         df2, ["x", "y"], group_by="stn", date_col="date",
         fallback=lambda m: proximity_impute_fixed_schedule(
             m, ["x", "y"], group_by="stn", order_by=["date"], schedule=(2, 4)
@@ -220,20 +218,6 @@ def test_zero_impute(spark):
     assert sorted(r.prcp for r in out.collect()) == [0.0, 1.5]
 
 
-def test_strategy_runner_applies_in_order(spark):
-    # order matters: the reference imputes visib-family first so later
-    # windowed imputers see filled values (ipynb:947-956).
-    df = spark.createDataFrame([Row(stn="a", x=None, y=None), Row(stn="a", x=2.0, y=4.0)])
-    strategy = {
-        "x": lambda d: zero_impute(d, {"x": 0.0}),
-        # y's imputer reads x — proves x ran first
-        "y": lambda d: d.withColumn("y", F.coalesce(F.col("y"), F.col("x") + 1)),
-    }
-    out = run_impute_strategy(df, strategy)
-    got = sorted((r.x, r.y) for r in out.collect())
-    assert got == [(0.0, 1.0), (2.0, 4.0)]
-
-
 def test_post_imputation_census_is_zero_on_events(spark, sf_dir):
     """The reference's acceptance criterion (ipynb:1128-1152) on real data."""
     from pyspark_weather_forecasting_gsod_spark.operators.quality import missing_census, normalize_sentinels
@@ -242,9 +226,9 @@ def test_post_imputation_census_is_zero_on_events(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "value")
     norm = normalize_sentinels(ev, {"value": lambda c: c > 250.0})
     assert norm.filter(F.col("value").isNull()).count() > 0
-    imputed = proximity_mean_impute(
+    imputed = proximity_impute_fixed_schedule(
         norm, "value", group_by="user_id", order_by=["ts", "event_id"],
-        initial_num_rows=2, max_rows=4,
+        schedule=(2, 4),
     )
     row = missing_census(imputed, ["value"]).collect()[0]
     assert row.null_value == 0

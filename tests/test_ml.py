@@ -200,7 +200,7 @@ def test_gsod_pipeline_end_to_end(spark):
     from pyspark_weather_forecasting_gsod_spark.pipelines.gsod import run_gsod_pipeline, weather_fixture
 
     wx = weather_fixture(spark, n_stations=20, n_days=90)
-    out = run_gsod_pipeline(wx, fast=True, with_classifier=False)
+    out = run_gsod_pipeline(wx, with_classifier=False)
     assert all(v == 0 for k, v in out["census"].items() if k.startswith("null_"))
     # next_day_max is seasonal+noise: R² should be clearly positive
     assert out["regression"]["r2"] > 0.5
@@ -219,7 +219,7 @@ def test_gsod_fast_pipeline_equals_staged_impute_chain(spark, monkeypatch):
 
     from pyspark_weather_forecasting_gsod_spark.operators.impute import (
         proximity_impute_fixed_schedule,
-        seasonal_median_impute_multi,
+        seasonal_median_impute,
         zero_impute,
     )
     from pyspark_weather_forecasting_gsod_spark.operators.quality import normalize_sentinels
@@ -229,7 +229,7 @@ def test_gsod_fast_pipeline_equals_staged_impute_chain(spark, monkeypatch):
     fit_inputs = []
     _record(monkeypatch, G, "featurize", fit_inputs)
     wx = G.weather_fixture(spark, 12, 120)
-    out = G.run_gsod_pipeline(wx, fast=True, with_classifier=False)
+    out = G.run_gsod_pipeline(wx, with_classifier=False)
 
     def prox(d, cols):
         return proximity_impute_fixed_schedule(
@@ -238,7 +238,7 @@ def test_gsod_fast_pipeline_equals_staged_impute_chain(spark, monkeypatch):
 
     slim = normalize_sentinels(wx, G.GSOD_SENTINELS).drop(*G.GSOD_DROPS)
     staged = zero_impute(prox(slim, ["visib", "wdsp", "mxpsd"]), {"prcp": 0.0})
-    staged = seasonal_median_impute_multi(
+    staged = seasonal_median_impute(
         staged, ["max", "min"], group_by="stn", date_col="date",
         fallback=lambda m: prox(m, ["max", "min", "temp", "stp"]),
     )
@@ -278,33 +278,22 @@ def test_gsod_fast_pipeline_job_count(spark):
     group = "test-gsod-fast-pipeline-job-count"
     sc.setJobGroup(group, "gsod fast pipeline job count")
     try:
-        run_gsod_pipeline(wx, fast=True, with_classifier=False)
+        run_gsod_pipeline(wx, with_classifier=False)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 10
 
 
-def test_gsod_fast_pipeline_py4j_round_trip_budget(spark, monkeypatch):
-    """Building the fast pipeline's plans stays within 2,000 py4j round
-    trips per run. The operators on its path write each projection as SQL
-    text in one call; built as Column trees (a JVM call per ``F.col``,
-    ``alias``, ``when``, ``over``, plus a call-site capture on each) the
-    same run made ~5,200. Only the calling thread's commands count: py4j's
+def _calling_thread_round_trips(monkeypatch, fn) -> int:
+    """py4j commands ``fn()`` sends from the calling thread. py4j's
     finalizer thread sends the deletes of whatever garbage earlier code
-    left, 250-700 of them during one run of this test."""
+    left, 250-700 of them during one pipeline run, so other threads'
+    commands do not count."""
     import threading
 
     from py4j.clientserver import ClientServerConnection
 
-    from pyspark_weather_forecasting_gsod_spark.pipelines.gsod import (
-        run_gsod_pipeline,
-        weather_fixture,
-    )
-
-    if not hasattr(spark, "_jvm"):
-        pytest.skip("Spark Connect: no py4j gateway")
-    wx = weather_fixture(spark, 12, 120).localCheckpoint(eager=True)
     calls = [0]
     send = ClientServerConnection.send_command
     caller = threading.get_ident()
@@ -314,10 +303,87 @@ def test_gsod_fast_pipeline_py4j_round_trip_budget(spark, monkeypatch):
             calls[0] += 1
         return send(self, command, *args, **kwargs)
 
-    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
-    run_gsod_pipeline(wx, fast=True, with_classifier=False)
-    monkeypatch.undo()
-    assert 0 < calls[0] <= 2000, calls[0]
+    with monkeypatch.context() as mp:
+        mp.setattr(ClientServerConnection, "send_command", counting)
+        fn()
+    return calls[0]
+
+
+def test_gsod_fast_pipeline_py4j_round_trip_budget(spark, monkeypatch):
+    """Building the fast pipeline's plans stays within 2,000 py4j round
+    trips per run. The operators on its path write each projection as SQL
+    text in one call; built as Column trees (a JVM call per ``F.col``,
+    ``alias``, ``when``, ``over``, plus a call-site capture on each) the
+    same run made ~5,200. Only the calling thread's commands count."""
+    from pyspark_weather_forecasting_gsod_spark.pipelines.gsod import (
+        run_gsod_pipeline,
+        weather_fixture,
+    )
+
+    if not hasattr(spark, "_jvm"):
+        pytest.skip("Spark Connect: no py4j gateway")
+    wx = weather_fixture(spark, 12, 120).localCheckpoint(eager=True)
+    calls = _calling_thread_round_trips(
+        monkeypatch, lambda: run_gsod_pipeline(wx, with_classifier=False)
+    )
+    assert 0 < calls <= 2000, calls
+
+
+def test_weather_fixture_py4j_round_trip_budget(spark, monkeypatch):
+    """The fixture writes its ~150 column expressions as SQL text: building
+    it takes at most 200 round trips (measured 50). As Column trees it took
+    ~3,060, paid by every GSOD test and every ``gsod_pipeline_e2e`` run."""
+    from pyspark_weather_forecasting_gsod_spark.pipelines.gsod import weather_fixture
+
+    if not hasattr(spark, "_jvm"):
+        pytest.skip("Spark Connect: no py4j gateway")
+    calls = _calling_thread_round_trips(
+        monkeypatch, lambda: weather_fixture(spark, 30, 365, seed=7)
+    )
+    assert 0 < calls <= 200, calls
+
+
+def test_gsod_pipeline_rejects_staged_impute_chain(spark):
+    """The one-checkpoint impute plan is the only one: any ``fast`` other
+    than True raises instead of silently running something else."""
+    from pyspark_weather_forecasting_gsod_spark.pipelines.gsod import (
+        run_gsod_pipeline,
+        weather_fixture,
+    )
+
+    wx = weather_fixture(spark, 3, 10)
+    for fast in (False, None):
+        with pytest.raises(ValueError, match="staged impute chain was removed"):
+            run_gsod_pipeline(wx, fast=fast)
+
+
+def test_gsod_pipeline_classifier_leg(spark, monkeypatch):
+    """The reference's rain classifier (M8): with ``with_classifier`` the
+    pipeline trains a GBT on exactly the ``is_train`` rows of the featurized
+    frame and reports accuracy, areaUnderROC and areaUnderPR, each in
+    [0, 1], plus its phase wall."""
+    from pyspark_weather_forecasting_gsod_spark.pipelines import gsod as G
+
+    fit_inputs, gbt_trains = [], []
+    _record(monkeypatch, G, "featurize", fit_inputs)
+    _record(monkeypatch, G, "train_gbt_classifier", gbt_trains)
+    out = G.run_gsod_pipeline(G.weather_fixture(spark, 12, 120))
+    clf = out["classification"]
+    assert set(clf) == {"accuracy", "areaUnderROC", "areaUnderPR"}
+    assert all(0.0 <= v <= 1.0 for v in clf.values()), clf
+    assert "clf_fit_eval_sec" in out["timings"]
+
+    (labeled,), (train,) = fit_inputs, gbt_trains
+
+    def rows(frame):
+        return sorted(
+            (tuple(r.features.toArray()), r.next_day_max, r.next_day_rain)
+            for r in frame.select("features", "next_day_max", "next_day_rain").collect()
+        )
+
+    want = rows(G.featurize(labeled).filter("is_train"))
+    assert rows(train) == want and want
+    assert len(want) < labeled.count()
 
 
 def test_gsod_regression_design_is_full_rank_and_equivalent(spark, monkeypatch):
@@ -342,7 +408,7 @@ def test_gsod_regression_design_is_full_rank_and_equivalent(spark, monkeypatch):
 
     monkeypatch.setattr(G, "train_linear_regression", recording_fit)
     wx = G.weather_fixture(spark, 12, 120)
-    G.run_gsod_pipeline(wx, fast=True, with_classifier=False)
+    G.run_gsod_pipeline(wx, with_classifier=False)
     (labeled,), (model,) = labeled_in, models
     assert model.summary.totalIterations == 0
     assert len(model.coefficients) == 16
@@ -389,7 +455,7 @@ def test_gsod_pipeline_split_is_layout_independent(spark, monkeypatch):
     try:
         for n in (1, 7):
             spark.conf.set("spark.sql.shuffle.partitions", str(n))
-            G.run_gsod_pipeline(wx.repartition(n), fast=True, with_classifier=False)
+            G.run_gsod_pipeline(wx.repartition(n), with_classifier=False)
             labeled, train, test = fit_inputs[-1], trains[-1], tests[-1]
             sides = {}
             for flag, frame in ((True, train), (False, test)):
@@ -432,7 +498,7 @@ def test_gsod_pipeline_from_csv_end_to_end(spark, tmp_path):
         "string", "int", "date", "double",
     }
     assert back.count() == wx.count()
-    out = run_gsod_pipeline(back, fast=True, with_classifier=False)
+    out = run_gsod_pipeline(back, with_classifier=False)
     assert all(v == 0 for k, v in out["census"].items() if k.startswith("null_"))
     assert out["regression"]["r2"] > 0.5
     assert out["regression"]["rmse"] < 20.0

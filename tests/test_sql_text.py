@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark_weather_forecasting_gsod_spark.ml.models import evaluate_regression
 from pyspark_weather_forecasting_gsod_spark.operators.impute import (
     proximity_impute_fixed_schedule,
-    seasonal_median_impute_multi,
+    seasonal_median_impute,
 )
 from pyspark_weather_forecasting_gsod_spark.operators.quality import (
     missing_census,
@@ -151,7 +151,7 @@ def test_proximity_fixed_schedule_on_quoted_name(spark):
 
 def test_seasonal_multi_on_quoted_names(spark):
     df = _clean(spark)
-    out = seasonal_median_impute_multi(df, ["a b"], group_by="max", date_col="date")
+    out = seasonal_median_impute(df, ["a b"], group_by="max", date_col="date")
     assert out.schema == df.schema
     rows = _py_frame()
     glob = statistics.median(x[2] for x in rows if x[2] is not None)

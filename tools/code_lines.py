@@ -7,15 +7,17 @@ multi-line token spans all count, so a wrapped call or a multi-line
 string argument counts every line it covers. This is the number the
 ROADMAP's "the package's line count should fall" is measured in.
 
-Usage: python tools/code_lines.py path.py [path.py ...]
-Prints one "<count>  <path>" line per file, then a total when given more
-than one file.
+Usage: python tools/code_lines.py path [path ...]
+A path is a Python file or a directory, which stands for every ``*.py``
+file under it. Prints one "<count>  <path>" line per file, then a total
+when there is more than one file.
 """
 
 from __future__ import annotations
 
 import sys
 import tokenize
+from pathlib import Path
 
 _SKIP = {tokenize.COMMENT, tokenize.NL, tokenize.ENCODING}
 # layout tokens carry no code, but they mark where statements start and end
@@ -42,9 +44,22 @@ def code_lines(path: str) -> int:
     return len(lines)
 
 
+def python_files(paths: list[str]) -> list[str]:
+    """``paths`` with each directory replaced by its ``*.py`` files, in
+    sorted order."""
+    files: list[str] = []
+    for p in paths:
+        if Path(p).is_dir():
+            files += sorted(str(f) for f in Path(p).rglob("*.py"))
+        else:
+            files.append(p)
+    return files
+
+
 def main(paths: list[str]) -> None:
     if not paths:
         sys.exit(__doc__)
+    paths = python_files(paths)
     total = 0
     for p in paths:
         n = code_lines(p)
