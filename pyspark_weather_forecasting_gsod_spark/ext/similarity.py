@@ -2,10 +2,12 @@
 
 North-star extension (BASELINE.json). Three tiers:
 
-  * ``cosine_topk`` — exact brute-force top-k: broadcast the (small) query
-    set against the full corpus; dot products are JVM-side ``zip_with`` +
-    ``aggregate`` expressions (no Python). O(|Q|·N) — the correctness
-    baseline and fine whenever |Q| is bounded.
+  * ``cosine_topk`` — exact top-k: one numpy block kernel (float64
+    ``E @ Qᵀ / (‖E‖·‖Q‖)``, per-query top-k) at two placements. A bounded
+    query side and a corpus within the driver cap run in-process after one
+    Arrow fetch each; a larger corpus runs the kernel per Arrow batch in
+    ``mapInArrow`` and ``_rank_topk`` finishes. The correctness baseline
+    the ANN tiers are measured against.
   * ``brp_lsh_ann`` — MLlib BucketedRandomProjectionLSH approximate NN
     between a query set and the corpus (hash once, bucket-join, refine).
   * ``ivf_topk`` — inverted-file ANN: KMeans centroids (seeded), probe the
@@ -14,17 +16,21 @@ North-star extension (BASELINE.json). Three tiers:
     DataFrames. ``build_ivfpq_index`` adds PQ codes per cell; plain PQ is
     its one-cell case.
 
-Every exact cosine score is ``_cosine`` and every per-query cosine top-k
-is ``_rank_topk``, so all tiers share one score and one tie-break
-contract.
+The ANN tiers score their candidates with ``_cosine`` (the SQL
+``dot/(|a||b|)`` expression) and rank with ``_rank_topk``; the exact
+kernel ranks the same way in numpy, so every tier shares one score and
+one tie-break contract: round(cosine, 9) DESC, then id.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..report import record
 from ..session import local_rows_df
 
 DOT = (
@@ -65,6 +71,286 @@ def _rank_topk(pairs: DataFrame, k: int, cols: list[str]) -> DataFrame:
     )
 
 
+# ---------------------------------------------------------------------------
+# The exact cosine kernel. Vectors arrive as Arrow list columns and become
+# float64 matrices (``_vec_matrix``); one block of scores is one BLAS
+# matmul, ranked per query in numpy exactly as Spark ranks ``cos_raw``.
+# ---------------------------------------------------------------------------
+
+#: The exact top-k's placement rule (``_exact_topk``). A corpus of at most
+#: _TOPK_DRIVER_MAX_VALUES vector elements (rows × the query dimension)
+#: runs in-process; a larger one runs per Arrow batch in ``mapInArrow``.
+#: The cap is the measured crossover (local[4], 64-d float32 parquet, 20
+#: queries, k = 5, min of 3): in-process 0.37 / 0.73 / 0.85 / 1.23 /
+#: 1.41 s against mapInArrow 0.61 / 0.86 / 0.94 / 1.00 / 0.94 s at 10k /
+#: 50k / 100k / 150k / 200k rows, so 100k rows of 64-d. The driver's
+#: memory bound is further out: its RSS grows 28-33 B per element (the
+#: Arrow fetch plus the float64 matrix), ~200 MB at the cap.
+#: A cap of 0 sends every corpus to ``mapInArrow`` (tests pin the route
+#: that way). The query side is held by the driver and shipped to every
+#: task whatever the placement; past _TOPK_MAX_QUERIES rows it raises. At
+#: 10k queries a 10k-row Arrow batch already emits k candidate rows per
+#: row it reads, so a larger query side is no longer the small side.
+_TOPK_DRIVER_MAX_VALUES = 6_400_000
+_TOPK_MAX_QUERIES = 10_000
+#: (query, corpus) cells per score block: 32 MiB of float64 scores
+_BLOCK_CELLS = 1 << 22
+#: rank keys of a NULL score (below every number) and of no pair at all
+_NULL_KEY = -1e300
+_NO_PAIR = float("-inf")
+
+
+def _vec_lengths(vecs):
+    """Per row of an Arrow list column: its length, or -1 for a NULL vector
+    or one that holds a NULL element (either scores NULL against every
+    vector)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    lens = pc.fill_null(pc.list_value_length(vecs), -1).to_numpy().astype(np.int64)
+    child = vecs.values
+    if child.null_count:
+        offs = vecs.offsets.to_numpy()
+        seen = np.concatenate([[0], np.cumsum(child.is_null().to_numpy(zero_copy_only=False))])
+        lens[seen[offs[1:]] != seen[offs[:-1]]] = -1
+    return lens
+
+
+def _vec_matrix(vecs, dim: int, lens):
+    """An Arrow list<float|double> column as a float64 (rows, ``dim``)
+    matrix; float32 elements widen exactly. A row that is not a whole
+    ``dim``-vector (its ``lens``, from ``_vec_lengths``, ≠ ``dim``) is all
+    zeros, so its
+    norm is 0 and every cosine with it is NULL: the SQL formula's answer
+    for a NULL vector, a NULL element, or a length mismatch (``zip_with``
+    pads the shorter side with NULLs)."""
+    import numpy as np
+
+    n, offs = len(vecs), vecs.offsets.to_numpy()
+    whole = lens == dim
+    if whole.all():
+        # every row a whole dim-vector: the elements are one contiguous run
+        flat = vecs.values.slice(offs[0], n * dim).to_numpy(zero_copy_only=False)
+        return flat.astype(np.float64).reshape(n, dim)
+    M = np.zeros((n, dim))
+    rows = np.flatnonzero(whole)
+    if len(rows) and dim:
+        vals = vecs.values.to_numpy(zero_copy_only=False)
+        M[rows] = vals[offs[rows, None] + np.arange(dim)]
+    return M
+
+
+def _norms(M):
+    import numpy as np
+
+    return np.sqrt(np.einsum("ij,ij->i", M, M))
+
+
+class _QuerySide(NamedTuple):
+    """Fetched query vectors as the kernel reads them: ids and labels
+    (Arrow arrays, ``labels`` None without a label column) and, per vector
+    length, (length, query rows, float64 matrix, norms)."""
+
+    ids: object
+    labels: object
+    groups: list
+
+
+def _query_side(tab, id_col: str, vec_col: str, label_col: str | None) -> _QuerySide:
+    import numpy as np
+
+    vecs = tab.column(vec_col).combine_chunks()
+    lens = _vec_lengths(vecs)
+    groups = []
+    for dim in np.unique(lens[lens >= 0]).tolist():
+        rows = np.flatnonzero(lens == dim)
+        Q = _vec_matrix(vecs, dim, lens)[rows]
+        groups.append((dim, rows, Q, _norms(Q)))
+    labels = tab.column(label_col).combine_chunks() if label_col else None
+    return _QuerySide(tab.column(id_col).combine_chunks(), labels, groups)
+
+
+def _rank_key(cos, null):
+    """The key Spark sorts ``round(cos, 9) DESC`` by, as floats to sort
+    descending: the score in whole units of 1e-9, NaN above every number
+    (Spark orders NaN greatest) and NULL below every number.
+
+    Spark rounds the double's shortest decimal HALF_UP. Away from a half
+    the binary ``|cos|·1e9`` rounds the same way; within 1e-6 of one
+    (a few scores in a million) the decimal itself decides."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    import numpy as np
+
+    with np.errstate(invalid="ignore"):
+        y = np.abs(cos) * 1e9
+        key = np.copysign(np.floor(y + 0.5), cos)
+        near = np.abs(y - np.floor(y) - 0.5) < 1e-6
+    for i in np.flatnonzero(near):
+        d = Decimal(repr(float(cos[i]))).quantize(Decimal("1e-9"), ROUND_HALF_UP)
+        key[i] = float(d.scaleb(9))
+    key[np.isnan(cos)] = np.inf
+    key[null] = _NULL_KEY
+    return key
+
+
+def _candidates(cos, null, gone, k: int):
+    """(row, column) of the block entries that can be in their row's top
+    ``k``. Rounding to 9 dp moves a score by at most half of 1e-9, so
+    every score within 2e-9 of the row's k-th largest is kept, ties
+    included; NaN counts above every number and NULL below. ``gone``
+    marks the entries that are no pair at all."""
+    import numpy as np
+
+    raw = np.where(np.isnan(cos), np.inf, cos)
+    raw[null] = _NULL_KEY
+    raw[gone] = _NO_PAIR
+    keep = raw > _NO_PAIR
+    n = raw.shape[1]
+    if n > k:
+        keep &= raw >= np.partition(raw, n - k, axis=1)[:, n - k, None] - 2e-9
+    return np.nonzero(keep)
+
+
+def _keep_topk(qi, key, ids, k: int):
+    """Positions of each query's first ``k`` candidates by (key DESC, id)
+    and their ranks from 1, grouped by query row ``qi``."""
+    import numpy as np
+
+    _, id_rank = np.unique(ids, return_inverse=True)
+    order = np.lexsort((id_rank, -key, qi))
+    q = qi[order]
+    rk = np.arange(len(q)) - np.searchsorted(q, q)
+    return order[rk < k], rk[rk < k] + 1
+
+
+def _topk_kernel(qs: _QuerySide, c_ids, c_vecs, c_labels, k: int):
+    """Each query's top-``k`` corpus rows: (query row, corpus row, cosine,
+    NULL mask, rank) arrays, ranked by round(cosine, 9) DESC, then id.
+
+    Scores are float64 ``q·e / (‖q‖·‖e‖)``; a zero denominator is NULL
+    (``try_divide``), as are all the rows ``_vec_matrix`` zeroes. A pair
+    with equal ids, and with ``c_labels`` a pair whose labels are equal or
+    NULL, is no pair at all. The corpus is scored in blocks of
+    ``_BLOCK_CELLS`` and each block's candidates merge into the running
+    top-k, so memory is bounded by the block, not the corpus."""
+    import numpy as np
+
+    nq = len(qs.ids)
+    n = len(c_ids) if nq and k >= 1 else 0
+    nids = c_ids.to_numpy(zero_copy_only=False)
+    qids = qs.ids.to_numpy(zero_copy_only=False)
+    lens = _vec_lengths(c_vecs)
+    mats = {}
+    for dim, *_ in qs.groups:
+        M = _vec_matrix(c_vecs, dim, lens)
+        mats[dim] = (M, _norms(M))
+    if c_labels is not None:
+        ql = qs.labels.to_numpy(zero_copy_only=False)
+        q_ok = qs.labels.is_valid().to_numpy(zero_copy_only=False)
+        nl = c_labels.to_numpy(zero_copy_only=False)
+        n_ok = c_labels.is_valid().to_numpy(zero_copy_only=False)
+    best = (np.zeros(0, np.int64),) * 2 + (np.zeros(0), np.zeros(0), np.zeros(0, bool))
+    rk = np.zeros(0, np.int64)
+    step = max(1, _BLOCK_CELLS // max(nq, 1))
+    for lo in range(0, n, step):
+        hi = min(n, lo + step)
+        cos = np.full((nq, hi - lo), np.nan)
+        null = np.ones((nq, hi - lo), dtype=bool)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            for dim, rows, Q, qn in qs.groups:
+                M, cn = mats[dim]
+                den = qn[:, None] * cn[None, lo:hi]
+                cos[rows] = (Q @ M[lo:hi].T) / den
+                null[rows] = den == 0
+        gone = qids[:, None] == nids[None, lo:hi]
+        if c_labels is not None:
+            gone |= ~((ql[:, None] != nl[None, lo:hi]) & q_ok[:, None] & n_ok[None, lo:hi])
+        qi, cj = _candidates(cos, null, gone, k)
+        cos, null = cos[qi, cj], null[qi, cj]
+        block = (qi, cj + lo, _rank_key(cos, null), cos, null)
+        cand = [np.concatenate(p) for p in zip(best, block)]
+        sel, rk = _keep_topk(cand[0], cand[2], nids[cand[1]], k)
+        best = tuple(a[sel] for a in cand)
+    qi, ci, _, cos, null = best
+    return qi, ci, cos, null, rk
+
+
+def _exact_topk(
+    op: str,
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    label_col: str | None = None,
+) -> DataFrame:
+    """``_topk_kernel`` at its placement: (qid, [q_label,] nid, [n_label,]
+    cosine, rk), ids and labels in their own types, ``cosine`` Spark's
+    HALF_UP ``round(cos, 6)`` and ``rk`` an INT from 1.
+
+    One Arrow fetch takes the query side (NULL ids dropped; past
+    ``_TOPK_MAX_QUERIES`` rows it raises), a second the corpus, at most one
+    row past its cap. A corpus within the cap is scored in-process and the
+    result is a local relation: two Spark jobs, no join, no exchange. Past
+    the cap each Arrow batch of the corpus keeps its own per-query top-k
+    in ``mapInArrow``; every global top-k row is in its batch's top-k, so
+    ``_rank_topk`` over the union is exact. Either way the route is
+    reported through ``report.record``."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    cols = [id_col, vec_col] + ([label_col] if label_col else [])
+    q = queries.select(*cols).filter(F.col(id_col).isNotNull())
+    q_tab = q.limit(_TOPK_MAX_QUERIES + 1).toArrow()
+    if q_tab.num_rows > _TOPK_MAX_QUERIES:
+        raise ValueError(
+            f"{op}: the query side exceeds _TOPK_MAX_QUERIES="
+            f"{_TOPK_MAX_QUERIES} rows; the driver holds it and ships it to "
+            f"every task. Split the queries into batches, or search an IVF "
+            f"index (build_ivf_index/ivf_search)"
+        )
+    qs = _query_side(q_tab, id_col, vec_col, label_col)
+    c = corpus.select(*cols).filter(F.col(id_col).isNotNull())
+    cap = _TOPK_DRIVER_MAX_VALUES // max([g[0] for g in qs.groups] + [1])
+    c_tab = c.limit(cap + 1).toArrow()
+    in_process = c_tab.num_rows <= cap
+    record(
+        op,
+        "in_process" if in_process else "map_in_arrow",
+        corpus=(c_tab.num_rows, cap),
+        queries=(q_tab.num_rows, _TOPK_MAX_QUERIES),
+    )
+
+    out = [("qid", q, id_col)] + ([("q_label", q, label_col)] if label_col else [])
+    out += [("nid", c, id_col)] + ([("n_label", c, label_col)] if label_col else [])
+    names = [name for name, _, _ in out]
+    fields = [T.StructField(name, side.schema[src].dataType) for name, side, src in out]
+    fields.append(T.StructField("cos_raw", T.DoubleType()))
+
+    def pairs(ids, vecs, labels=None):
+        qi, ci, cos, null, rk = _topk_kernel(qs, ids, vecs, labels, k)
+        arrays = [qs.ids.take(qi)] + ([qs.labels.take(qi)] if label_col else [])
+        arrays += [ids.take(ci)] + ([labels.take(ci)] if label_col else [])
+        return arrays + [pa.array(cos, mask=null)], rk
+
+    if not in_process:
+        def score(batches):
+            for b in batches:
+                arrays, _ = pairs(*b.columns)
+                yield pa.RecordBatch.from_arrays(arrays, names=names + ["cos_raw"])
+
+        return _rank_topk(c.mapInArrow(score, T.StructType(fields)), k, names)
+    arrays, rk = pairs(*(col.combine_chunks() for col in c_tab.columns))
+    local = corpus.sparkSession.createDataFrame(
+        pa.Table.from_arrays(
+            arrays + [pa.array(rk, pa.int32())], names=names + ["cos_raw", "rk"]
+        ),
+        T.StructType(fields + [T.StructField("rk", T.IntegerType())]),
+    )
+    return local.select(*names, F.round("cos_raw", 6).alias("cosine"), "rk")
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -74,19 +360,12 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact cosine top-k of each query vector against the corpus.
 
-    Returns (qid, nid, cosine, rk). Queries are broadcast (they must be the
-    small side); ranking uses round(cosine, 9) with id tie-break so results
-    are deterministic across engines and runs. A zero vector scores NULL
-    and ranks last.
-    """
-    q = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qe"))
-    c = corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("ne"))
-    pairs = (
-        c.join(F.broadcast(q))
-        .filter(F.col("qid") != F.col("nid"))
-        .select("qid", "nid", _cosine("qe", "ne").alias("cos_raw"))
-    )
-    return _rank_topk(pairs, k, ["qid", "nid"])
+    Returns (qid, nid, cosine, rk). The query side must be bounded (see
+    ``_exact_topk`` for the placements). Ranking uses round(cosine, 9)
+    with id tie-break so results are deterministic across engines and
+    runs; a zero, NULL or differently sized vector scores NULL and ranks
+    last, and a query never ranks itself."""
+    return _exact_topk("cosine_topk", corpus, queries, k, id_col, vec_col)
 
 
 def hard_negatives_topk(
@@ -103,33 +382,18 @@ def hard_negatives_topk(
     training, reranker negatives) where "hard" means maximally similar yet
     wrong. Returns (qid, q_label, nid, n_label, cosine, rk).
 
-    Same contract as ``cosine_topk``: queries broadcast (they must be the
-    small side), deterministic ranking via round(cosine, 9) with id
-    tie-break. The label-mismatch predicate filters BEFORE the rank
-    window, so the per-query sort only sees negative candidates. Rows with
-    a NULL label (unlabeled) are never negatives — ``!=`` is NULL-reject
-    on either side — which is the safe default for mined training pairs.
+    Same contract and placements as ``cosine_topk``. The label mismatch
+    decides which pairs exist before any ranking, so a query ranks only
+    negative candidates. Rows with a NULL label (unlabeled) are never
+    negatives, on either side — the safe default for mined training pairs.
 
     At corpus scale, route candidate generation through ``ivf_search`` /
     ``brp_lsh_ann`` with an over-fetch factor and apply the same
     label-mismatch filter + exact re-rank to the candidates; this exact
     operator is the bounded-|Q| path and the recall oracle."""
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qe"),
-        F.col(label_col).alias("q_label"),
+    return _exact_topk(
+        "hard_negatives_topk", corpus, queries, k, id_col, vec_col, label_col
     )
-    c = corpus.select(
-        F.col(id_col).alias("nid"),
-        F.col(vec_col).alias("ne"),
-        F.col(label_col).alias("n_label"),
-    )
-    pairs = (
-        c.join(F.broadcast(q))
-        .filter((F.col("qid") != F.col("nid")) & (F.col("q_label") != F.col("n_label")))
-        .select("qid", "q_label", "nid", "n_label", _cosine("qe", "ne").alias("cos_raw"))
-    )
-    return _rank_topk(pairs, k, ["qid", "q_label", "nid", "n_label"])
 
 
 #: ``cosine_allpairs`` refuses corpora larger than this (driver-collect +
@@ -205,17 +469,22 @@ def cosine_allpairs(
     Returns (id_a, id_b, cosine) with id_a < id_b in the id column's own
     type, matching the ``dot/(|a||b|)`` formula bit-for-bit within
     round_digits. Rows with a NULL id never pair (as ``a.id < b.id`` drops
-    them in SQL).
+    them in SQL). The vectors must share one length, else it raises.
     """
     import numpy as np
-    import pandas as pd
 
     corpus = corpus.select(id_col, vec_col).filter(F.col(id_col).isNotNull())
     # one bounded fetch is both the guard and the driver matrix: the limit
     # stops the scan after max_rows+1 rows — O(max_rows) even on a 100 TB
     # corpus — and a fetch within the cap is the whole corpus
-    rows = corpus.limit(max_rows + 1).collect()
-    if len(rows) > max_rows:
+    tab = corpus.limit(max_rows + 1).toArrow()
+    fits = tab.num_rows <= max_rows
+    record(
+        "cosine_allpairs",
+        "broadcast" if fits else "refused",
+        corpus=(tab.num_rows, max_rows),
+    )
+    if not fits:
         raise ValueError(
             f"cosine_allpairs: corpus exceeds max_rows={max_rows} "
             f"(driver-collect + broadcast matrix would not fit); use "
@@ -223,8 +492,16 @@ def cosine_allpairs(
             f"semantic_dedup / the IVF index family for corpora this size"
         )
 
-    ids = pd.Series([r[0] for r in rows]).to_numpy()
-    M = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    vecs = tab.column(vec_col).combine_chunks()
+    lens = _vec_lengths(vecs)
+    dims = np.unique(lens[lens >= 0]).tolist()
+    if len(dims) > 1:
+        raise ValueError(
+            f"cosine_allpairs: the corpus holds vectors of {len(dims)} "
+            f"lengths ({dims[:4]}…); the matrix kernel needs one"
+        )
+    M = _vec_matrix(vecs, dims[0] if dims else 0, lens)
+    ids = tab.column(id_col).combine_chunks().to_numpy(zero_copy_only=False)
     bc = corpus.sparkSession.sparkContext.broadcast((ids, M))
 
     def gen(batches):

@@ -2168,9 +2168,9 @@ def hard_negatives_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ext/similarity.py::hard_negatives_topk): per query vector, the 5 most
     cosine-similar vectors with a DIFFERENT label — maximally similar yet
     wrong, the negatives that actually move a metric-learning loss. Exact
-    bounded-|Q| path (broadcast queries, label filter BEFORE the rank
-    window); at corpus scale candidates come from IVF/LSH with the same
-    filter + exact re-rank."""
+    bounded-|Q| path (the numpy top-k kernel; the label mismatch decides
+    which pairs exist before ranking); at corpus scale candidates come
+    from IVF/LSH with the same filter + exact re-rank."""
     from ..ext.similarity import hard_negatives_topk
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -2207,8 +2207,8 @@ def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("ann_lsh_topk", None)  # LSH bucketing approximate → rows-only
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BRP-LSH approximate top-k with an in-query recall gate: every row
-    carries its query's ``recall_vs_exact`` against the exact broadcast
-    top-k companion, so a bucketing regression surfaces in the output (and
+    carries its query's ``recall_vs_exact`` against the exact top-k
+    companion, so a bucketing regression surfaces in the output (and
     the pytest threshold) instead of passing a rows-only check."""
     from ..ext.similarity import brp_lsh_ann, cosine_topk, topk_recall
 

@@ -37,7 +37,13 @@ from .event_windows import tumbling_agg
 #: configured cap long before cluster scale.
 _STATE_TARGET_BYTES = 2 * 1024 * 1024
 #: micro-floor: keep a handful of state tasks so per-batch compute still
-#: parallelizes on tiny inputs; negligible against any real derivation
+#: parallelizes on tiny inputs. Below 6 MiB of events the size rule alone
+#: gives 1 partition. Measured against that at local[4] (p50 of 4
+#: alternating runs, floor 4 vs 1): at sf0.1 the pandas stateful operators
+#: halve (stateful totals 1.64 vs 3.17 s, top-k state 1.62 vs 3.16 s) and
+#: session windows gain 21% (1.36 vs 1.73 s); the JVM-only runners pay
+#: 10-30% for it at sf0.01 and sf0.1 (tumbling 0.82 vs 0.72 s, stream-stream
+#: join 2.18 vs 1.55 s, sliding 0.68 vs 0.53 s at sf0.1).
 _STATE_FLOOR = 4
 
 

@@ -2,6 +2,7 @@
 
 import math
 
+import pytest
 from pyspark.sql import Row
 
 from pyspark_weather_forecasting_gsod_spark.ext.similarity import (
@@ -44,6 +45,234 @@ def test_cosine_topk_excludes_self(spark):
     emb = _emb(spark)
     out = cosine_topk(emb, emb.filter("vec_id = 0"), k=10)
     assert 0 not in {r.nid for r in out.collect()}
+
+
+# --- the exact top-k kernel against the SQL path it replaced ------------
+
+
+def _sql_topk(corpus, queries, k, label_col=None):
+    """The reference: the exact top-k as SQL expressions — broadcast
+    queries, the ``DOT``/``NORM`` cosine (``_cosine``) and the rank window
+    (``_rank_topk``)."""
+    from pyspark.sql import functions as F
+
+    from pyspark_weather_forecasting_gsod_spark.ext.similarity import _cosine, _rank_topk
+
+    lab = [label_col] if label_col else []
+    q = queries.select(
+        F.col("vec_id").alias("qid"), F.col("embedding").alias("qe"),
+        *[F.col(c).alias("q_label") for c in lab],
+    )
+    c = corpus.select(
+        F.col("vec_id").alias("nid"), F.col("embedding").alias("ne"),
+        *[F.col(c).alias("n_label") for c in lab],
+    )
+    keep = F.col("qid") != F.col("nid")
+    if label_col:
+        keep &= F.col("q_label") != F.col("n_label")
+    cols = ["qid"] + ["q_label"] * bool(lab) + ["nid"] + ["n_label"] * bool(lab)
+    pairs = c.join(F.broadcast(q)).filter(keep).select(
+        *cols, _cosine("qe", "ne").alias("cos_raw")
+    )
+    return _rank_topk(pairs, k, cols)
+
+
+def _result(df):
+    """Schema and sorted rows, NaN as a string so that it compares."""
+    rows = [
+        tuple("NaN" if isinstance(x, float) and math.isnan(x) else x for x in r)
+        for r in df.collect()
+    ]
+    return df.dtypes, sorted(rows, key=repr)
+
+
+#: exact-cosine fixtures: vectors whose cosine with [1, 0] is exactly the
+#: first element (x² + y² rounds to 1.0). 0.1234565 is a 6-dp half
+#: (HALF_UP 0.123457, numpy's half-even 0.123456); 0.1000000005 ties
+#: 0.100000001 at 9 dp under HALF_UP only.
+_HALF_6DP = [0.1234565, 0.9923499849386556]
+_HALF_9DP = [0.1000000005, 0.994987437056368]
+_UP_9DP = [0.100000001, 0.9949874370061161]
+
+_TOPK_CASES = {
+    # float32 elements cast to double before the dot
+    "float32": (
+        "vec_id long, embedding array<float>",
+        [(i, [0.1 * i, 0.7, -0.3 * (i % 3), 1.0 / (i + 1)]) for i in range(12)],
+        [0, 5, 11],
+        4,
+    ),
+    # zero, NULL, NULL-element and shorter vectors score NULL and rank
+    # after every number; a length-3 query scores the length-3 vector; a
+    # NULL-vector query ranks every corpus row NULL, by id
+    "nulls_and_lengths": (
+        "vec_id long, embedding array<double>",
+        [
+            (0, [1.0, 0.0, 0.0, 0.0]),
+            (1, [2.0, 1.0, 0.0, 0.0]),
+            (2, [0.0, 0.0, 0.0, 0.0]),
+            (3, None),
+            (4, [1.0, None, 0.0, 0.0]),
+            (5, [1.0, 1.0, 1.0]),
+            (6, [0.5, 1.0, 0.0]),
+            (7, [-1.0, 0.0, 0.0, 0.5]),
+            (8, []),
+        ],
+        [0, 2, 3, 4, 6, 8],
+        10,
+    ),
+    # NaN scores where Spark orders NaN: above every number
+    "nan": (
+        "vec_id long, embedding array<float>",
+        [(0, [1.0, 0.0]), (1, [float("nan"), 1.0]), (2, [1.0, 1.0]), (3, [0.0, 1.0])],
+        [0, 3],
+        2,
+    ),
+    # a NULL id on either side and qid == nid produce no row; duplicate
+    # vectors tie and break by id
+    "ids_and_ties": (
+        "vec_id long, embedding array<double>",
+        [(None, [1.0, 0.0])]
+        + [(i, [1.0, float(i % 2)]) for i in range(6)]
+        + [(None, [1.0, 1.0])],
+        [None, 0, 1, 3],
+        3,
+    ),
+    # string ids rank in Spark's string order ("v10" < "v9")
+    "string_ids": (
+        "vec_id string, embedding array<double>",
+        [(f"v{i}", [1.0, float(i % 3)]) for i in range(12)],
+        ["v1", "v10", "v2"],
+        4,
+    ),
+    # k larger than the corpus
+    "k_past_corpus": (
+        "vec_id long, embedding array<double>",
+        [(i, [float(i), 1.0]) for i in range(5)],
+        [0, 4],
+        50,
+    ),
+    # Spark's HALF_UP at 6 dp (cosine) and at 9 dp (the rank key)
+    "half_up": (
+        "vec_id long, embedding array<double>",
+        [(0, [1.0, 0.0]), (1, _HALF_9DP), (2, _UP_9DP), (3, _HALF_6DP), (4, [0.0, 1.0])],
+        [0],
+        4,
+    ),
+}
+
+
+def _topk_frames(spark, case, labels=False):
+    from pyspark.sql import functions as F
+
+    schema, rows, qids, k = _TOPK_CASES[case]
+    if labels:
+        rows = [r + ([1, 2, None][i % 3],) for i, r in enumerate(rows)]
+        schema += ", label int"
+    # one partition: at the mapInArrow placement one batch holds the whole
+    # corpus, so its per-batch top-k is the selection under test
+    corpus = spark.createDataFrame(rows, schema).coalesce(1)
+    if None in qids:
+        queries = corpus.filter(F.col("vec_id").isin(qids[1:]) | F.col("vec_id").isNull())
+    else:
+        queries = corpus.filter(F.col("vec_id").isin(qids))
+    return corpus, queries, k
+
+
+@pytest.fixture(params=["in_process", "map_in_arrow"])
+def placement(request, monkeypatch):
+    """Each contract test runs at both placements; a driver cap of 0
+    sends every corpus to ``mapInArrow``. Score blocks of 4 cells make
+    the kernel merge its running top-k across blocks."""
+    from pyspark_weather_forecasting_gsod_spark.ext import similarity
+
+    monkeypatch.setattr(similarity, "_BLOCK_CELLS", 4)
+    if request.param == "map_in_arrow":
+        monkeypatch.setattr(similarity, "_TOPK_DRIVER_MAX_VALUES", 0)
+    return request.param
+
+
+@pytest.mark.parametrize("case", sorted(_TOPK_CASES))
+def test_cosine_topk_matches_sql_reference(spark, placement, case):
+    corpus, queries, k = _topk_frames(spark, case)
+    got = _result(cosine_topk(corpus, queries, k=k))
+    assert got == _result(_sql_topk(corpus, queries, k))
+    assert got[1]
+
+
+@pytest.mark.parametrize("case", sorted(_TOPK_CASES))
+def test_hard_negatives_topk_matches_sql_reference(spark, placement, case):
+    from pyspark_weather_forecasting_gsod_spark.ext.similarity import hard_negatives_topk
+
+    corpus, queries, k = _topk_frames(spark, case, labels=True)
+    got = _result(hard_negatives_topk(corpus, queries, k=k))
+    assert got == _result(_sql_topk(corpus, queries, k, "label"))
+
+
+def test_cosine_topk_rounds_half_up(spark, placement):
+    """The half_up case is sharp: HALF_UP at 6 dp, and the 9-dp tie ranks
+    the smaller id first, where half-even rounding would not."""
+    corpus, queries, k = _topk_frames(spark, "half_up")
+    got = [(r.nid, r.cosine, r.rk) for r in cosine_topk(corpus, queries, k=k).collect()]
+    assert sorted(got, key=lambda t: t[2]) == [
+        (3, 0.123457, 1), (1, 0.1, 2), (2, 0.1, 3), (4, 0.0, 4),
+    ]
+
+
+def test_cosine_topk_in_process_job_count(spark):
+    """Within the driver cap the exact top-k runs its two fetches and
+    nothing else before it returns; executing the local result runs no
+    join and no exchange."""
+    corpus, queries, k = _topk_frames(spark, "float32")
+    sc = spark.sparkContext
+    group = "test-cosine-topk-in-process-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        out = cosine_topk(corpus, queries, k=k)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Join" not in plan and "Window" not in plan
+
+
+def test_exact_similarity_routes_are_reported(spark, caplog, monkeypatch):
+    """Every exact top-k call reports its placement with the corpus and
+    query rows against their caps; ``cosine_allpairs`` reports its
+    collect-or-raise decision; a query side past its cap raises."""
+    import logging
+
+    from pyspark_weather_forecasting_gsod_spark.ext import similarity
+
+    corpus, queries, k = _topk_frames(spark, "float32", labels=True)
+
+    def routes(fn):
+        caplog.clear()
+        with caplog.at_level(logging.INFO, logger="spark_graft"):
+            fn()
+        return [(r.operator, r.route, r.probes) for r in caplog.records if r.name == "spark_graft"]
+
+    [(op, route, probes)] = routes(lambda: cosine_topk(corpus, queries, k=k))
+    cap = similarity._TOPK_DRIVER_MAX_VALUES // 4
+    assert (op, route) == ("cosine_topk", "in_process")
+    assert probes == {"corpus": (12, cap), "queries": (3, similarity._TOPK_MAX_QUERIES)}
+    monkeypatch.setattr(similarity, "_TOPK_DRIVER_MAX_VALUES", 0)
+    [(op, route, probes)] = routes(
+        lambda: similarity.hard_negatives_topk(corpus, queries, k=k)
+    )
+    assert (op, route, probes["corpus"]) == ("hard_negatives_topk", "map_in_arrow", (1, 0))
+
+    [(op, route, probes)] = routes(lambda: similarity.cosine_allpairs(_emb(spark), 0.9))
+    assert (op, route, probes) == ("cosine_allpairs", "broadcast", {"corpus": (5, similarity.ALLPAIRS_MAX_ROWS)})
+    with pytest.raises(ValueError, match="max_rows=3"):
+        routes(lambda: similarity.cosine_allpairs(_emb(spark), 0.9, max_rows=3))
+    assert [(r.route, r.probes) for r in caplog.records if r.name == "spark_graft"] == [
+        ("refused", {"corpus": (4, 3)})
+    ]
+
+    monkeypatch.setattr(similarity, "_TOPK_MAX_QUERIES", 2)
+    with pytest.raises(ValueError, match="_TOPK_MAX_QUERIES=2"):
+        cosine_topk(corpus, queries, k=k)
 
 
 def test_embedding_neardup_pairs_threshold(spark):

@@ -94,7 +94,7 @@ REASONS = {
     "image_resize_meta": "decode+resize in Arrow batches",
     "udtf_lateral_tokens": "Python UDTF lateral join coverage",
     "grouped_map_zscore": "applyInPandas grouped-map coverage",
-    "cosine_topk": "guarded driver-BLAS matmul; distributed twin is cosine_allpairs_blocked",
+    "cosine_topk": "two bounded Arrow fetches + the in-process numpy kernel (per Arrow batch in mapInArrow past the driver cap)",
     "embedding_neardup_blocked": "distributed block-cogroup matmul: exact all-pairs without collect",
     "embedding_covariance": "d x d Gramian via Arrow batches",
     "doc_embedding_join": "vector zip_with fold per pair",

@@ -78,9 +78,9 @@ AUDITS: dict[str, tuple[list[str], list[str], str]] = {
         "explode → two hash aggs + equi-join on term; n_docs scalar is a broadcast, never a cartesian row-multiply",
     ),
     "cosine_topk": (
-        ["WindowGroupLimit"],
-        ["CartesianProduct"],
-        "per-query top-k: rank-window with WindowGroupLimit pushdown — each partition keeps k rows before the shuffle, never a global sort",
+        ["LocalTableScan"],
+        ["CartesianProduct", "Exchange", "Join", "Window"],
+        "exact top-k within the driver cap: two bounded Arrow fetches feed the in-process numpy kernel, so the plan is the local result — no join, no exchange, no rank window (past the cap the kernel keeps each Arrow batch's top-k in mapInArrow and one rank window finishes)",
     ),
     "bucketed_join_revenue": (
         ["SortMergeJoin"],
@@ -123,9 +123,9 @@ AUDITS: dict[str, tuple[list[str], list[str], str]] = {
         "per-key OLS is ONE map-side-combinable hash agg of integer sufficient statistics — no window, no join, no per-group Python fit",
     ),
     "hard_negatives_topk": (
-        ["WindowGroupLimit"],
-        ["CartesianProduct", "SortMergeJoin"],
-        "same contract as cosine_topk: queries broadcast, label-mismatch filter BEFORE the rank window, WindowGroupLimit keeps k rows per partition pre-shuffle",
+        ["LocalTableScan"],
+        ["CartesianProduct", "Exchange", "Join", "Window"],
+        "same kernel and placements as cosine_topk, the label mismatch deciding which pairs exist before any ranking: within the driver cap the plan is the local result",
     ),
     "quota_mix_docs": (
         ["BroadcastHashJoin", "Window"],
